@@ -11,8 +11,9 @@ Semantics matched to the reference (file:line cites into /root/reference):
 - URL-kind router (web vs media) — src/database/operations.py:144-145,
   youtube_subtitles_extractor/youtube_processor.py:66-76.
 
-The canonicalizer is a vectorized pandas UDF (Arrow batches); every other
-predicate is pure Column expressions (JVM-side, whole-stage codegen).
+The canonicalizer is a vectorized Arrow UDF; ``admit_url`` fuses it with
+the malformed check and the host/path split for URL admission. The other
+predicates are pure Column expressions (JVM-side, whole-stage codegen).
 """
 
 from __future__ import annotations
@@ -22,10 +23,11 @@ from urllib.parse import urlparse, urlunparse
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf, pandas_udf
-from pyspark.sql.types import StringType
+from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 APPLE_DOCS_PREFIX = "https://developer.apple.com/documentation/"
 PERMANENT_ERROR_CODES = (403, 404, 410)
@@ -77,22 +79,55 @@ _SIMPLE_URL_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://([^/?#]*)([^?#]*)(?:\?[^#]*)?(?
 import re as _re
 
 _SIMPLE_URL_RE_C = _re.compile(_SIMPLE_URL_RE)
+# urlsplit deletes tab, CR and LF anywhere in the URL before parsing, so
+# rows holding one before the query must take the oracle itself
+_URLSPLIT_REMOVES = _re.compile(r"[\t\r\n]")
 
 
 def _canonicalize_slow(u: str) -> str:
     """Row-wise canonicalizer for rows outside the Arrow kernel's numpy
-    fast path (non-ASCII bytes, ';', odd shapes). Reproduces the
-    historical pandas kernel exactly: simple-shape rows (regex match, no
-    ';' in the path group) use the lower/rstrip formula; everything else
-    the urlparse oracle — so the total function is bit-identical to the
-    round-5 kernel on EVERY input."""
+    fast path (non-ASCII bytes, ';', tab/CR/LF, empty netloc, odd shapes).
+    Simple-shape rows (regex match, a netloc, no ';' in the path group, no
+    tab/CR/LF before the query) use the lower/rstrip formula; everything
+    else the urlparse oracle — so the total function equals
+    canonicalize_url_py."""
     m = _SIMPLE_URL_RE_C.match(u)
-    if m and ";" not in m.group(3):
+    if (
+        m and m.group(2) and ";" not in m.group(3)
+        and not _URLSPLIT_REMOVES.search(u, 0, m.end(3))
+    ):
         return (
             m.group(1).lower() + "://" + m.group(2).lower()
             + m.group(3).rstrip("/").lower()
         )
     return canonicalize_url_py(u)
+
+
+# with_host_and_path's scheme prefix, and its PATH_RE branch under Java
+# regex semantics: '.' stops at any of five line terminators and '$' also
+# matches before one final terminator (or a final CRLF)
+_SCHEME_PREFIX_RE = _re.compile(r"[a-z][a-z0-9+.\-]*://")
+_LINE_TERMS = ("\n", "\r", "\u0085", "\u2028", "\u2029")
+_JAVA_PATH_RE = _re.compile(
+    r"[a-z][a-z0-9+.\-]*://[^/]*(/[^\n\r\u0085\u2028\u2029]*)?"
+    r"(?:\r\n|[\n\r\u0085\u2028\u2029])?\Z"
+)
+
+
+def host_and_path_py(url: str) -> tuple[str, str]:
+    """Python twin of operators.politeness.with_host_and_path: host is the
+    text between the ``scheme://`` prefix and the next '/', path the rest;
+    rows holding a line terminator take the PATH_RE extraction. No
+    ``[a-z]``-led scheme prefix ⇒ ("", "")."""
+    m = _SCHEME_PREFIX_RE.match(url)
+    if m is None:
+        return "", ""
+    rest = url[m.end():]
+    host = rest.partition("/")[0]
+    if not any(t in url for t in _LINE_TERMS):
+        return host, rest[len(host):]
+    pm = _JAVA_PATH_RE.match(url)
+    return host, (pm.group(1) or "") if pm else ""
 
 
 # byte-class lookup tables for the Arrow kernel
@@ -120,145 +155,177 @@ def _first_per_row(positions: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarr
     return rows[first], positions[first]
 
 
+def _lower_slices(data: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> pa.Array:
+    """String array of lowercased ``data[start:end]`` byte slices."""
+    lens = ends - starts
+    cum = np.concatenate(([0], np.cumsum(lens)))
+    gather = np.repeat(starts - cum[:-1], lens) + np.arange(int(cum[-1]))
+    return pa.StringArray.from_buffers(
+        len(lens),
+        pa.py_buffer(cum.astype(np.int32).tobytes()),
+        pa.py_buffer(_TO_LOWER[data[gather]].tobytes()),
+    )
+
+
+class _Split:
+    """The canonicalizer's row split: fast rows (``fidx``) with their byte
+    bounds — scheme start, netloc start/end, canonical end — and the
+    remaining non-null rows (``hidx``) with their raw values."""
+
+    def __init__(self, arr: pa.Array):
+        if isinstance(arr, pa.ChunkedArray):
+            arr = (
+                arr.chunk(0)
+                if arr.num_chunks == 1
+                else pa.concat_arrays(arr.chunks)
+                if arr.num_chunks
+                else pa.array([], type=pa.string())
+            )
+        n = self.n = len(arr)
+        self.null_mask = arr.is_null().to_numpy(zero_copy_only=False)
+        if n == 0:
+            self.fidx = self.hidx = np.empty(0, dtype=np.int64)
+            self.start = self.netloc = self.netloc_end = self.end = self.fidx
+            self.hard = []
+            return
+        off_dtype = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+        offs = np.frombuffer(arr.buffers()[1], dtype=off_dtype)[
+            arr.offset : arr.offset + n + 1
+        ].astype(np.int64)
+        data = self.data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+        lo, hi = int(offs[0]), int(offs[-1])
+        view = data[lo:hi]
+
+        s, e = offs[:-1], offs[1:]
+
+        # first "://" per row (bounded inside the row)
+        if len(view) >= 3:
+            m = (view[:-2] == 58) & (view[1:-1] == 47) & (view[2:] == 47)
+            cand = np.flatnonzero(m) + lo
+        else:
+            cand = np.empty(0, dtype=np.int64)
+        crow = np.searchsorted(offs, cand, side="right") - 1
+        ok = cand + 3 <= e[crow]
+        cand, crow = cand[ok], crow[ok]
+        first = np.ones(len(crow), dtype=bool)
+        first[1:] = crow[1:] != crow[:-1]
+        colon = np.full(n, -1, dtype=np.int64)
+        colon[crow[first]] = cand[first]
+
+        # cut = first '?' or '#' per row (none can precede the colon on rows
+        # that pass the scheme check — '?'/'#' are not scheme chars)
+        cut = e.copy()
+        qrow, qpos = _first_per_row(np.flatnonzero((view == 63) | (view == 35)) + lo, offs)
+        cut[qrow] = qpos
+
+        has = colon >= 0
+        colon_c = np.where(has, colon, s)  # clamp for safe indexing
+        alpha_ok = np.zeros(n, dtype=bool)
+        nz = e > s
+        alpha_ok[nz] = _ALPHA[data[s[nz]]]
+
+        # ';' (urlparse params), tab/CR/LF (deleted by urlsplit) and
+        # non-ASCII bytes are rare: count-in-range via sparse position
+        # lists + searchsorted instead of full-buffer prefix sums
+        odd_pos = np.flatnonzero(
+            (view == 59) | (view == 9) | (view == 10) | (view == 13)
+        ) + lo
+        na_pos = np.flatnonzero(view >= 128) + lo
+        no_odd = np.searchsorted(odd_pos, cut) == np.searchsorted(odd_pos, s)
+        all_ascii = np.searchsorted(na_pos, cut) == np.searchsorted(na_pos, s)
+
+        # scheme charset check: gather just the scheme bytes (schemes are a
+        # few bytes per row; cap 64 — longer prefixes go to the slow path)
+        sch_len = colon_c - s
+        sidx = np.flatnonzero(has & (sch_len > 0) & (sch_len <= 64))
+        scheme_ok = np.zeros(n, dtype=bool)
+        if len(sidx):
+            L = sch_len[sidx]
+            cumL = np.concatenate(([0], np.cumsum(L)))
+            g = np.repeat(s[sidx] - cumL[:-1], L) + np.arange(int(cumL[-1]))
+            badcum = np.concatenate(([0], np.cumsum(~_SCHEME_OK[data[g]])))
+            scheme_ok[sidx] = badcum[cumL[1:]] == badcum[cumL[:-1]]
+
+        # netloc end = first '/' at/after colon+3 (else cut)
+        slashes = np.flatnonzero(view == 47) + lo
+        j = np.searchsorted(slashes, colon_c + 3, side="left")
+        j = np.minimum(j, max(len(slashes) - 1, 0))
+        ne = cut.copy()
+        if len(slashes):
+            sl = slashes[j]
+            in_row = (sl >= colon_c + 3) & (sl < cut)
+            ne = np.where(in_row, sl, cut)
+        # an empty netloc leaves the fast path: urlunparse then keeps '//'
+        # only for the schemes in urllib's uses_netloc
+        fast = (
+            ~self.null_mask & has & alpha_ok & scheme_ok & all_ascii & no_odd
+            & (ne > colon_c + 3)
+        )
+
+        # strip trailing '/' of the path, never past the netloc end: if the
+        # byte at cut-1 is a slash, rewind to the start of its run (slash
+        # runs derived from the sparse slash-position list)
+        if len(slashes):
+            brk = np.concatenate(([True], np.diff(slashes) != 1))
+            run_start = slashes[brk][np.cumsum(brk) - 1]  # per slash
+            ci = np.searchsorted(slashes, cut - 1, side="left")
+            cic = np.minimum(ci, len(slashes) - 1)
+            ends_in_slash = slashes[cic] == cut - 1
+            new_end = np.where(ends_in_slash, np.maximum(ne, run_start[cic]), cut)
+        else:
+            new_end = cut.copy()
+        new_end = np.maximum(np.minimum(new_end, cut), ne)
+
+        fidx = self.fidx = np.flatnonzero(fast)
+        self.start, self.netloc = s[fidx], colon_c[fidx] + 3
+        self.netloc_end, self.end = ne[fidx], new_end[fidx]
+        # hard rows: row-wise historical kernel (rare on real URL streams)
+        self.hidx = np.flatnonzero(~fast & ~self.null_mask)
+        self.hard = (
+            arr.take(pa.array(self.hidx, type=pa.int64())).to_pylist()
+            if len(self.hidx) else []
+        )
+
+    def fast_slices(self, starts: np.ndarray, ends: np.ndarray) -> pa.Array:
+        if len(self.fidx) == 0:
+            return pa.array([], type=pa.string())
+        return _lower_slices(self.data, starts, ends)
+
+    def combine(self, fast_arr: pa.Array, hard_vals: list) -> pa.Array:
+        """One output array in input row order: fast values at ``fidx``,
+        ``hard_vals`` at ``hidx``, null at null rows."""
+        n = self.n
+        if len(self.fidx) == n:
+            return fast_arr
+        combined = pa.concat_arrays([fast_arr, pa.array(hard_vals, type=pa.string())])
+        if len(combined) == 0:
+            return pa.nulls(n, pa.string())
+        perm = np.empty(n, dtype=np.int64)
+        perm[self.fidx] = np.arange(len(self.fidx))
+        perm[self.hidx] = len(self.fidx) + np.arange(len(self.hidx))
+        perm[self.null_mask] = 0  # masked out below
+        return combined.take(pa.array(perm, type=pa.int64(), mask=self.null_mask))
+
+
 def canonicalize_arrow(arr: pa.Array) -> pa.Array:
     """Byte-level vectorized canonicalizer over an Arrow string array.
 
     Fast path (pure numpy over the Arrow data buffer, no per-row Python):
     ASCII URLs of the common scheme://netloc/path[?query][#fragment]
-    shape with no ';' before the cut. For those the oracle semantics
-    collapse to: lowercase everything before the first '?'/'#', then
-    strip trailing '/' down to (not past) the netloc end. Everything
-    else — no '://', non-scheme chars before it, non-ASCII bytes, ';'
-    (urlparse params) — falls back row-wise to the urlparse oracle, so
-    output is identical to canonicalize_url_py for EVERY input
-    (differential-tested in tests/test_urls.py / test_properties.py).
+    shape with a netloc and no ';', tab, CR or LF before the cut. For those
+    the oracle semantics collapse to: lowercase everything before the
+    first '?'/'#', then strip trailing '/' down to (not past) the netloc
+    end. Everything else — no '://', non-scheme chars before it, non-ASCII
+    bytes, ';' (urlparse params), tab/CR/LF (deleted by urlsplit), an
+    empty netloc — falls back row-wise to the urlparse oracle, so output
+    is identical to canonicalize_url_py for EVERY input
+    (differential-tested in tests/test_urls.py / test_properties.py /
+    test_admit_urls.py).
     """
-    if isinstance(arr, pa.ChunkedArray):
-        arr = (
-            arr.chunk(0)
-            if arr.num_chunks == 1
-            else pa.concat_arrays(arr.chunks)
-            if arr.num_chunks
-            else pa.array([], type=pa.string())
-        )
-    n = len(arr)
-    if n == 0:
-        return pa.array([], type=pa.string())
-    off_dtype = np.int64 if pa.types.is_large_string(arr.type) else np.int32
-    offs = np.frombuffer(arr.buffers()[1], dtype=off_dtype)[
-        arr.offset : arr.offset + n + 1
-    ].astype(np.int64)
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    lo, hi = int(offs[0]), int(offs[-1])
-    view = data[lo:hi]
-    null_mask = arr.is_null().to_numpy(zero_copy_only=False)
-
-    s, e = offs[:-1], offs[1:]
-
-    # first "://" per row (bounded inside the row)
-    if len(view) >= 3:
-        m = (view[:-2] == 58) & (view[1:-1] == 47) & (view[2:] == 47)
-        cand = np.flatnonzero(m) + lo
-    else:
-        cand = np.empty(0, dtype=np.int64)
-    crow = np.searchsorted(offs, cand, side="right") - 1
-    ok = cand + 3 <= e[crow]
-    cand, crow = cand[ok], crow[ok]
-    first = np.ones(len(crow), dtype=bool)
-    first[1:] = crow[1:] != crow[:-1]
-    colon = np.full(n, -1, dtype=np.int64)
-    colon[crow[first]] = cand[first]
-
-    # cut = first '?' or '#' per row (none can precede the colon on rows
-    # that pass the scheme check — '?'/'#' are not scheme chars)
-    cut = e.copy()
-    qrow, qpos = _first_per_row(np.flatnonzero((view == 63) | (view == 35)) + lo, offs)
-    cut[qrow] = qpos
-
-    has = colon >= 0
-    colon_c = np.where(has, colon, s)  # clamp for safe indexing
-    alpha_ok = np.zeros(n, dtype=bool)
-    nz = e > s
-    alpha_ok[nz] = _ALPHA[data[s[nz]]]
-
-    # ';' and non-ASCII bytes are rare: count-in-range via sparse position
-    # lists + searchsorted instead of full-buffer prefix sums
-    semi_pos = np.flatnonzero(view == 59) + lo
-    na_pos = np.flatnonzero(view >= 128) + lo
-    no_semi = np.searchsorted(semi_pos, cut) == np.searchsorted(semi_pos, s)
-    all_ascii = np.searchsorted(na_pos, cut) == np.searchsorted(na_pos, s)
-
-    # scheme charset check: gather just the scheme bytes (schemes are a
-    # few bytes per row; cap 64 — longer prefixes go to the slow path)
-    sch_len = colon_c - s
-    sidx = np.flatnonzero(has & (sch_len > 0) & (sch_len <= 64))
-    scheme_ok = np.zeros(n, dtype=bool)
-    if len(sidx):
-        L = sch_len[sidx]
-        cumL = np.concatenate(([0], np.cumsum(L)))
-        g = np.repeat(s[sidx] - cumL[:-1], L) + np.arange(int(cumL[-1]))
-        badcum = np.concatenate(([0], np.cumsum(~_SCHEME_OK[data[g]])))
-        scheme_ok[sidx] = badcum[cumL[1:]] == badcum[cumL[:-1]]
-
-    fast = ~null_mask & has & alpha_ok & scheme_ok & all_ascii & no_semi
-
-    # netloc end = first '/' at/after colon+3 (else cut)
-    slashes = np.flatnonzero(view == 47) + lo
-    j = np.searchsorted(slashes, colon_c + 3, side="left")
-    j = np.minimum(j, max(len(slashes) - 1, 0))
-    ne = cut.copy()
-    if len(slashes):
-        sl = slashes[j]
-        in_row = (sl >= colon_c + 3) & (sl < cut)
-        ne = np.where(in_row, sl, cut)
-
-    # strip trailing '/' of the path, never past the netloc end: if the
-    # byte at cut-1 is a slash, rewind to the start of its run (slash
-    # runs derived from the sparse slash-position list)
-    if len(slashes):
-        brk = np.concatenate(([True], np.diff(slashes) != 1))
-        run_start = slashes[brk][np.cumsum(brk) - 1]  # per slash
-        ci = np.searchsorted(slashes, cut - 1, side="left")
-        cic = np.minimum(ci, len(slashes) - 1)
-        ends_in_slash = slashes[cic] == cut - 1
-        new_end = np.where(ends_in_slash, np.maximum(ne, run_start[cic]), cut)
-    else:
-        new_end = cut.copy()
-    new_end = np.maximum(np.minimum(new_end, cut), ne)
-
-    # build fast outputs: gather [s, new_end) per fast row, lowercased
-    fidx = np.flatnonzero(fast)
-    lens = np.where(fast, new_end - s, 0)[fidx]
-    total = int(lens.sum())
-    cum = np.concatenate(([0], np.cumsum(lens)))
-    gather = np.repeat(s[fidx] - cum[:-1], lens) + np.arange(total)
-    out_data = _TO_LOWER[data[gather]]
-    fast_arr = pa.StringArray.from_buffers(
-        len(fidx),
-        pa.py_buffer(cum.astype(np.int32).tobytes()),
-        pa.py_buffer(out_data.tobytes()),
+    sp = _Split(arr)
+    return sp.combine(
+        sp.fast_slices(sp.start, sp.end), [_canonicalize_slow(v) for v in sp.hard]
     )
-
-    # hard rows: row-wise historical kernel (rare on real URL streams)
-    hidx = np.flatnonzero(~fast & ~null_mask)
-    if len(hidx) == 0 and not null_mask.any():
-        if len(fidx) == n:
-            return fast_arr
-    hard_vals = [
-        _canonicalize_slow(v)
-        for v in arr.take(pa.array(hidx, type=pa.int64())).to_pylist()
-    ]
-    hard_arr = pa.array(hard_vals, type=pa.string())
-
-    combined = pa.concat_arrays([fast_arr, hard_arr.cast(pa.string())])
-    if len(combined) == 0:
-        return pa.nulls(n, pa.string())
-    perm = np.empty(n, dtype=np.int64)
-    perm[fidx] = np.arange(len(fidx))
-    perm[hidx] = len(fidx) + np.arange(len(hidx))
-    perm[null_mask] = 0  # masked out below
-    indices = pa.array(perm, type=pa.int64(), mask=null_mask)
-    return combined.take(indices)
 
 
 def canonicalize_batch(urls: pd.Series) -> pd.Series:
@@ -266,6 +333,54 @@ def canonicalize_batch(urls: pd.Series) -> pd.Series:
     kernel — kept as the differential-test surface)."""
     arr = pa.Array.from_pandas(urls, type=pa.string())
     return canonicalize_arrow(arr).to_pandas()
+
+
+def malformed_arrow(urls: pa.Array) -> pa.Array:
+    """is_malformed_py over an Arrow string array (True = reject); a null
+    URL is rejected too. ``count_substring`` counts non-overlapping
+    occurrences, as ``str.count`` does."""
+
+    def twice(token: str):
+        return pc.greater(pc.count_substring(urls, token), 1)
+
+    bad = pc.or_(twice("https://"), twice("http://"))
+    for flag in (
+        pc.match_substring(urls, "%ef%bb%bf"),
+        pc.match_substring(urls, "\ufeff"),
+        twice("/documentation/"),
+        pc.and_(
+            pc.match_substring(urls, "https:/"),
+            pc.invert(pc.starts_with(urls, "https://")),
+        ),
+        pc.greater(pc.utf8_length(urls), 200),
+        twice("developer.apple.com"),
+    ):
+        bad = pc.or_(bad, flag)
+    return pc.fill_null(bad, True)
+
+
+ADMIT_FIELDS = ("url", "host", "path", "malformed")
+
+
+def admit_arrow(arr: pa.Array) -> pa.StructArray:
+    """URL admission in one vectorised pass over raw hrefs:
+    ``struct(url, host, path, malformed)`` with ``url`` =
+    canonicalize_arrow, ``host``/``path`` = with_host_and_path of that
+    url and ``malformed`` = is_malformed_py of it (null href ⇒ null
+    url/host/path, malformed). Fast rows take host and path from the
+    canonicalizer's own byte bounds; the rest go through
+    host_and_path_py."""
+    sp = _Split(arr)
+    hard_urls = [_canonicalize_slow(v) for v in sp.hard]
+    hard_hp = [host_and_path_py(u) for u in hard_urls]
+    url = sp.combine(sp.fast_slices(sp.start, sp.end), hard_urls)
+    host = sp.combine(
+        sp.fast_slices(sp.netloc, sp.netloc_end), [h for h, _ in hard_hp]
+    )
+    path = sp.combine(sp.fast_slices(sp.netloc_end, sp.end), [p for _, p in hard_hp])
+    return pa.StructArray.from_arrays(
+        [url, host, path, malformed_arrow(url)], names=list(ADMIT_FIELDS)
+    )
 
 
 @arrow_udf(StringType())
@@ -285,6 +400,35 @@ canonicalize_url = _canonicalize_url_udf.asNondeterministic()
 # the optimizer's normal freedoms (column pruning under count, etc.)
 # are wanted. Same kernel, same values.
 canonicalize_url_det = _canonicalize_url_udf
+
+@arrow_udf(
+    StructType(
+        [StructField(f, StringType()) for f in ADMIT_FIELDS[:3]]
+        + [StructField("malformed", BooleanType())]
+    )
+)
+def _admit_url_udf(urls: pa.Array) -> pa.Array:
+    return admit_arrow(urls)
+
+
+# Non-deterministic for the same reason as canonicalize_url: admission
+# filters on the ``malformed`` field.
+admit_url = _admit_url_udf.asNondeterministic()
+
+
+def admit_urls(df: DataFrame, raw_col: str) -> DataFrame:
+    """``df`` plus the ``url``, ``host`` and ``path`` columns of each row
+    whose ``raw_col`` canonicalizes to a well-formed URL; other rows are
+    dropped. One admit_url pass replaces canonicalize_url →
+    ~is_malformed → with_host_and_path, and the robots predicate then
+    reads plain columns."""
+    a = F.col("__admit")
+    return (
+        df.withColumn("__admit", admit_url(F.col(raw_col)))
+        .where(~a["malformed"])
+        .withColumns({"url": a["url"], "host": a["host"], "path": a["path"]})
+        .drop("__admit")
+    )
 
 
 @pandas_udf(StringType())

@@ -8,9 +8,11 @@ asyncio worker-pool loop (src/crawler/core.py:224-449; SURVEY.md §3.1):
     filter on the corpus scan + broadcast join back)
   → span cleaning (P6) + render
   → error split (P4: dead / retry / fetched)
-  → link explode (P5) → canonicalize (P1) → malformed filter (P2)
+  → link explode (P5) → one Arrow admission pass: canonicalize (P1),
+    malformed flag (P2), host/path
   → robots filter (J6, generalizing the scope filter P3)
-  → bloom-prefiltered anti-join dedup (J3 / S2)
+  → anti-join dedup (J3 / S2), bloom-prefiltered past
+    probe_broadcast_threshold
   → snapshot commits: documents fast-append, frontier rewrite (stand-in
     for Iceberg MERGE), hosts charge, metrics append, checkpoint.
 
@@ -25,8 +27,10 @@ Scale notes (10^10 frontier / 1000 executors):
   ``salt = xxhash64(url) % salt_buckets`` — so one hot host spreads over
   many tasks while politeness accounting stays at host granularity
   (tokens are charged from per-host counts, not per-task);
-- the seen-set anti-join shuffles only bloom-HIT candidates; at a 1%
-  bloom FP rate, 99% of genuinely-new URLs skip the shuffle;
+- past probe_broadcast_threshold the seen set is scanned once with a
+  broadcast candidate probe, never shuffled; the bloom prefilter (built
+  once when the threshold is crossed, then maintained and checkpointed
+  each round) drops definitely-new candidates from that probe;
 - the pending frontier is merge-on-read (Iceberg v2 shape): a host-bucket-
   partitioned base + an append-only add/del delta; per-round commits are
   O(batch) equality-deletes + appends, the base is rewritten only by the
@@ -42,17 +46,13 @@ the surrounding plan is unchanged.
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mcp_crawl4ai_rag_spark.functions.markdown import clean_spans, render_spans_text
-from mcp_crawl4ai_rag_spark.functions.urls import (
-    canonicalize_url,
-    is_malformed,
-    is_permanent_error,
-)
+from mcp_crawl4ai_rag_spark.functions.urls import admit_urls, is_permanent_error
 from mcp_crawl4ai_rag_spark.operators.dedup import (
     BloomFilter,
     ShardedCuckoo,
@@ -70,7 +70,6 @@ from mcp_crawl4ai_rag_spark.operators.politeness import (
     build_robots_rules,
     compile_robots_predicate,
     robots_allowed,
-    with_host_and_path,
 )
 from mcp_crawl4ai_rag_spark.plans.snapshots import CrawlCheckpoint, SnapshotTable
 
@@ -116,6 +115,13 @@ def fetch_with_partition_sessions(
 
     The input should already be repartitioned by (host, salt) — politeness
     stays at host granularity while hot hosts spread across tasks.
+
+    Determinism: ``CrawlEngine.round`` runs several jobs over the cached
+    fetch output at once (stats, commits, link pipeline), and Spark may
+    compute a cached partition twice when two of them reach it first. A
+    session's result must therefore be a deterministic function of
+    (url, round), or the round's metrics and its committed rows can
+    describe different fetches.
     """
     from pyspark.sql.types import StructType
 
@@ -259,7 +265,8 @@ class CrawlEngine:
         self.host_buckets = host_buckets
         self.compact_every = compact_every
         # S10 seam: None → sandbox corpus broadcast join; a factory →
-        # fetch_with_partition_sessions (the production HTTP/browser shape)
+        # fetch_with_partition_sessions (the production HTTP/browser shape;
+        # its fetches must be deterministic per (url, round), see there)
         self.fetcher = fetcher
         # batches at or below this use the bounded window for link-seq
         # assignment; above it, the two-stage distributed rank
@@ -305,7 +312,11 @@ class CrawlEngine:
         self.seq_counter = 0
         self.versions: dict[str, int] = {}
         self._pool: ThreadPoolExecutor | None = None
-        self.seen_bloom = BloomFilter(bloom_bits) if use_bloom else None
+        # the bloom prefilter is read only in the probe-broadcast regime
+        # (seq_counter > probe_broadcast_threshold): it stays None below
+        # it, and round() builds it once from pending ∪ fetched when the
+        # threshold is first crossed (or after a resume above it)
+        self.seen_bloom: BloomFilter | None = None
         self.seen_cuckoo = ShardedCuckoo() if use_cuckoo else None
         # opt-in phase timing: when True, round() adds a "phases" dict
         # (driver-side wall seconds per materialization point) to its
@@ -349,8 +360,6 @@ class CrawlEngine:
             "is_dead_err": x_dead,
             "is_empty": x_empty,
             "outcome": x_outcome,
-            "canon_url": canonicalize_url(F.col("href")),
-            "url_ok": ~is_malformed(F.col("url")),
             "seq_in_round": (F.col("pop_rank") - 1).cast("int"),
             "links_agg": F.sum(
                 F.when(
@@ -459,9 +468,9 @@ class CrawlEngine:
         cls, spark: SparkSession, corpus: DataFrame, robots: DataFrame, workdir: str, **kw
     ) -> "CrawlEngine":
         """Rebuild an engine bit-for-bit from the last checkpoint: table
-        reads are pinned to the checkpointed snapshot versions, the bloom
-        bitmap reloads from its state file, counters restore (north rule
-        resume-mid-crawl)."""
+        reads are pinned to the checkpointed snapshot versions, counters
+        restore, and above probe_broadcast_threshold the bloom bitmap
+        reloads from its state file (north rule resume-mid-crawl)."""
         ck = CrawlCheckpoint(workdir).load()
         if ck is None:
             raise FileNotFoundError(f"no checkpoint under {workdir}")
@@ -484,31 +493,19 @@ class CrawlEngine:
         eng.round_id = ck["round_id"]
         eng.seq_counter = ck["seq_counter"]
         eng.versions = dict(ck["versions"])
-        if eng.use_bloom:
-            blob = None
+        if eng.use_bloom and eng.seq_counter > eng.probe_broadcast_threshold:
             p = ck.get("bloom_path")
+            blob = None
             if p and os.path.exists(p):
                 with open(p, "rb") as f:
                     blob = f.read()
+            # missing/corrupt filter state must NOT silently degrade to an
+            # empty bloom (new_urls treats misses as definitely-new →
+            # re-fetch of already-seen URLs): leave it None, and the next
+            # round rebuilds it exactly from the checkpointed pending ∪
+            # fetched
             if blob is not None and len(blob) * 8 == ck["bloom_bits"]:
                 eng.seen_bloom = BloomFilter.from_bytes(blob)
-            else:
-                # missing/corrupt filter state must NOT silently degrade to
-                # an empty bloom (new_urls treats misses as definitely-new →
-                # re-fetch of already-seen URLs). Rebuild exactly from the
-                # checkpointed seen set: pending ∪ fetched. The rebuilt bloom
-                # is a subset of the incremental one (no stale dead entries)
-                # — still a sound prefilter for the exact anti-join.
-                seen_hashes = (
-                    eng._read_pending()
-                    .select("url_hash")
-                    .unionByName(
-                        eng._read(eng.fetched_tbl, "frontier_fetched").select("url_hash")
-                    )
-                )
-                eng.seen_bloom = build_bloom(
-                    seen_hashes, "url_hash", ck["bloom_bits"], eng.seen_bloom.num_hashes
-                )
         if eng.use_cuckoo:
             p = ck.get("cuckoo_path")
             if p and os.path.exists(p):
@@ -566,11 +563,7 @@ class CrawlEngine:
         funnels through one task.
         """
         order_cols = order_cols or ["seed_idx"]
-        cand = (
-            seeds_df.withColumn("url", canonicalize_url(F.col("raw_url")))
-            .where(~is_malformed(F.col("url")))
-            .transform(with_host_and_path)
-        )
+        cand = admit_urls(seeds_df, "raw_url")
         w = Window.partitionBy("url").orderBy(*order_cols)
         cand = cand.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1)
         cand = robots_allowed(
@@ -605,8 +598,8 @@ class CrawlEngine:
         # materialize BEFORE fanning out: the two-stage rank's pinned
         # intermediate must be fully cached once so concurrent consumers
         # can't re-sample range boundaries into divergent seq orders.
-        # When the bloom is on, the materializing job doubles as its seed
-        # build (same fused shape as round(); one job instead of two).
+        # A live bloom (seeding an engine already past
+        # probe_broadcast_threshold) rides the same job, as in round().
         if self.seen_bloom is not None:
             _bf, n = build_bloom_with_count(
                 rows, "url_hash", self.seen_bloom.num_bits, self.seen_bloom.num_hashes
@@ -651,7 +644,6 @@ class CrawlEngine:
             "round int, scope string, key string, value long",
         )
         self.seq_counter = n
-        # bloom already folded in by the fused materialize above
         if self.seen_cuckoo is not None:
             self.seen_cuckoo = maintain_sharded_cuckoo(
                 self.spark, self.seen_cuckoo, rows.select("url_hash")
@@ -762,15 +754,29 @@ class CrawlEngine:
 
     # -- one BFS round --------------------------------------------------------
     # (seen-filter maintenance is fused into each path's materializing job:
-    # the bloom delta rides the count job — build_bloom_with_count — and the
-    # opt-in cuckoo runs its per-shard update pass at the old maintenance
-    # point. Both stay fully distributed: per-partition bitmaps OR-merged on
-    # the driver / per-shard updates in executor tasks; deletes first, so
-    # dead URLs leave the seen set before link insertion.)
+    # a live bloom's delta rides the count job — build_bloom_with_count —
+    # and the opt-in cuckoo runs its per-shard update pass at the old
+    # maintenance point. Both stay fully distributed: per-partition bitmaps
+    # OR-merged on the driver / per-shard updates in executor tasks;
+    # deletes first, so dead URLs leave the seen set before link
+    # insertion. The bloom is live only past probe_broadcast_threshold.)
+
+    def _build_seen_bloom(self, pending: DataFrame) -> BloomFilter:
+        """Bloom over the exact seen set, pending ∪ fetched — built once,
+        when new_urls first reads it (threshold crossed, or a resume above
+        it with its state file lost)."""
+        seen_hashes = pending.select("url_hash").unionByName(
+            self._read(self.fetched_tbl, "frontier_fetched").select("url_hash")
+        )
+        return build_bloom(seen_hashes, "url_hash", self.bloom_bits)
 
     def round(self) -> dict:
         """Run one crawl round; returns the round's metrics dict
-        (popped == 0 ⇒ frontier drained)."""
+        (popped == 0 ⇒ frontier drained).
+
+        A round that raises has joined every Spark job it submitted and
+        has not advanced the checkpoint; its in-memory state is then
+        stale, so continue with ``CrawlEngine.resume``."""
         import time as _time
 
         _t0 = _time.perf_counter()
@@ -781,6 +787,19 @@ class CrawlEngine:
         if self.round_id > 1:
             hosts = refill_hosts(hosts)
 
+        # round candidates are bounded; once the frontier outgrows the
+        # threshold, the seen-scan probe shape (no frontier shuffle or
+        # driver broadcast) is the only safe plan. The approximate
+        # prefilter follows the same dispatch: it pays only in that
+        # probe regime (shrinks the broadcast probe set before the full
+        # seen scan) — against a small anti-joinable seen set its two
+        # Python/Arrow probe passes are pure added stages (new_urls
+        # docstring measurements; ~0.85 s/round at bench batch sizes).
+        # Output is exact on both paths, so dispatch never changes it.
+        probe = self.seq_counter > self.probe_broadcast_threshold
+        if probe and self.use_bloom and self.seen_bloom is None:
+            self.seen_bloom = self._build_seen_bloom(pending)
+
         popped = budgeted_pop(pending, hosts, self.batch_size).cache()
         n_popped = popped.count()
         _ph["pop"] = _time.perf_counter() - _t0
@@ -789,19 +808,22 @@ class CrawlEngine:
             self.round_id -= 1
             return {"round": self.round_id + 1, "popped": 0}
 
-        # Size reduce-side parallelism to THIS round's data instead of the
-        # session constant: round work is bounded by the popped batch's
-        # link fan-out plus the live frontier (seq_counter), so tiny
-        # rounds otherwise schedule ~shuffle.partitions near-empty reduce
-        # tasks per exchange (measured 17.0 s -> ~12 s per 3-round crawl
-        # at batch_size=10). The clamp is data-derived and capped at the
-        # session value, so at cluster scale (large frontier / big
-        # batches) it returns the session setting unchanged.
-        _sess_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        _est_rows = max(self.seq_counter, n_popped * 256, 4096)
-        _round_parts = min(_sess_parts, max(1, -(-_est_rows // 4096)))
-        if _round_parts < _sess_parts:
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(_round_parts))
+        # Independent table commits overlap with the round's main-thread
+        # work (link pipeline, stats): each commit is a separate Spark job
+        # whose ~0.3-0.5 s of scheduling latency would otherwise serialize.
+        # Safe because every commit targets a distinct table (per-table
+        # version sequences — and thus all committed state — are identical
+        # to the serial schedule), all reads in this round pin versions
+        # captured before the corresponding submit, and the checkpoint is
+        # only written after every future is joined. Concurrent first
+        # actions may compute a cached `enriched` partition twice (Spark's
+        # cache doesn't block cross-job) — bounded by batch_size, never by
+        # frontier size, and harmless because a fetch is a deterministic
+        # function of (url, round): an injected ``fetcher`` must keep that
+        # contract, or the stats job and the commits could see different
+        # fetch results.
+        pool = self._commit_pool()
+        futures: list = []
         try:
             # fetch stage. Default (sandbox): corpus restricted to the popped
             # batch via broadcast semi join (an IN-list of thousands of literals
@@ -834,20 +856,6 @@ class CrawlEngine:
                 .cache()
             )
 
-            # Independent table commits overlap with the round's main-thread
-            # work (link pipeline, stats): each commit is a separate Spark job
-            # whose ~0.3-0.5 s of scheduling latency would otherwise serialize.
-            # Safe because every commit targets a distinct table (per-table
-            # version sequences — and thus all committed state — are identical
-            # to the serial schedule), all reads in this round pin versions
-            # captured before the corresponding submit, and the checkpoint is
-            # only written after every future is joined. Concurrent first
-            # actions may compute a cached `enriched` partition twice (Spark's
-            # cache doesn't block cross-job) — bounded by batch_size, never by
-            # frontier size.
-            pool = self._commit_pool()
-            futures: list = []
-
             # one stats pass: per-(host, outcome) counts + per-page-deduped
             # link totals (links_seen = Σ distinct hrefs of fetched pages —
             # identical to counting the exploded first-occurrence rows,
@@ -860,6 +868,7 @@ class CrawlEngine:
                 .agg(F.count("*").alias("n"), self._rx["links_agg"])
             )
             fut_stats = pool.submit(_stats_agg.collect)
+            futures.append(fut_stats)
 
             # documents fast-append (S4 content sink)
             docs = enriched.where(F.col("outcome") == "fetched").select(
@@ -877,18 +886,15 @@ class CrawlEngine:
             )
 
             if self.track_link_graph:
-                edges = (
+                edges = admit_urls(
                     enriched.where(F.col("outcome") == "fetched")
                     .select(
                         F.col("url").alias("src"),
                         F.explode_outer("out_links").alias("href"),
                     )
-                    .where(F.col("href").isNotNull())
-                    .withColumn("dst", self._rx["canon_url"])
-                    .where(~is_malformed(F.col("dst")))
-                    .select("src", "dst")
-                    .distinct()
-                )
+                    .where(F.col("href").isNotNull()),
+                    "href",
+                ).select("src", F.col("url").alias("dst")).distinct()
                 futures.append(
                     pool.submit(
                         self._commit, self.edges_tbl, "link_edges", edges,
@@ -896,7 +902,9 @@ class CrawlEngine:
                     )
                 )
 
-            # link pipeline (P5→P1→P2→J6→J3)
+            # link pipeline (P5→P1+P2→J6→J3): one admit_url pass yields the
+            # canonical url, its malformed flag and the host/path columns the
+            # compiled robots predicate reads
             links = (
                 enriched.where(F.col("outcome") == "fetched")
                 .select(
@@ -906,6 +914,10 @@ class CrawlEngine:
                 )
                 .where(F.col("href").isNotNull())
             )
+            admitted = robots_allowed(
+                admit_urls(links, "href"), prebuilt_rules=self._robots_rules,
+                compiled=self._robots_pred, try_compile=False,
+            )
             # Per-page link dedup (SO1) is algebraically FUSED into the global
             # first-discovery aggregate below: keeping min link_pos per
             # (pop_rank, href) then taking min(struct(pop_rank, link_pos))
@@ -914,25 +926,25 @@ class CrawlEngine:
             # can never win the min; same-page duplicates share depth). An
             # explicit row_number window here would shuffle the whole exploded
             # link set once more per round for no semantic effect — at 10^10
-            # scale that is the round's largest intermediate.
-            canon = links.withColumn("url", self._rx["canon_url"]).where(
-                self._rx["url_ok"]
-            )
-            first = canon.groupBy("url").agg(
-                F.min(F.struct("pop_rank", "link_pos", "depth")).alias("f")
+            # scale that is the round's largest intermediate. host rides in
+            # the struct behind the unique (pop_rank, link_pos): it is a
+            # function of url, and grouping by url alone keeps the url
+            # partitioning new_urls' dedup reuses.
+            first = admitted.groupBy("url").agg(
+                F.min(F.struct("pop_rank", "link_pos", "depth", "host")).alias("f")
             )
             cand = first.select(
                 "url",
+                F.col("f.host").alias("host"),
                 F.col("f.pop_rank").alias("pop_rank"),
                 F.col("f.link_pos").alias("link_pos"),
                 (F.col("f.depth") + 1).alias("depth"),
-            ).transform(with_host_and_path)
-            # cached: bounded by batch x out-degree, and read twice below (the
-            # seen-probe broadcast build + the final anti-join)
-            cand = robots_allowed(
-                cand, prebuilt_rules=self._robots_rules,
-                compiled=self._robots_pred, try_compile=False,
-            ).cache()
+            )
+            if probe:
+                # bounded by batch x out-degree, and the probe shape reads it
+                # twice (the seen-probe broadcast build + the final
+                # anti-join); the plain anti-join reads it once
+                cand = cand.cache()
 
             # seen set: pending' ∪ fetched ∪ this round's fetches — this round's
             # deaths have already left the set (simulator order: deletes happen
@@ -970,23 +982,13 @@ class CrawlEngine:
                 )
             )
 
-            # round candidates are bounded; once the frontier outgrows the
-            # threshold, the seen-scan probe shape (no frontier shuffle or
-            # driver broadcast) is the only safe plan. The approximate
-            # prefilter follows the same dispatch: it pays only in that
-            # probe regime (shrinks the broadcast probe set before the full
-            # seen scan) — against a small anti-joinable seen set its two
-            # Python/Arrow probe passes are pure added stages (new_urls
-            # docstring measurements; ~0.85 s/round at bench batch sizes).
-            # Output is exact on both paths, so dispatch never changes it.
-            _probe = self.seq_counter > self.probe_broadcast_threshold
             fresh = new_urls(
                 cand,
                 seen_urls,
-                bloom=self.seen_bloom if _probe else None,
-                cuckoo=self.seen_cuckoo if _probe else None,
+                bloom=self.seen_bloom if probe else None,
+                cuckoo=self.seen_cuckoo if probe else None,
                 spark=self.spark,
-                probe_broadcast=_probe,
+                probe_broadcast=probe,
             )
             # discovery-order seq assignment. Size-aware dispatch: a round's new
             # links are bounded by batch_size × out_degree, so small batches use
@@ -1111,8 +1113,9 @@ class CrawlEngine:
             _ph["metrics"] = _time.perf_counter() - _t
 
             _t = _time.perf_counter()
-            # bloom delta already folded in by the fused materialize above;
-            # only the (opt-in) cuckoo still needs its per-shard update pass
+            # a live bloom's delta is already folded in by the fused
+            # materialize above; only the (opt-in) cuckoo still needs its
+            # per-shard update pass
             if self.seen_cuckoo is not None:
                 self.seen_cuckoo = maintain_sharded_cuckoo(
                     self.spark,
@@ -1127,69 +1130,71 @@ class CrawlEngine:
             for fut in futures:
                 fut.result()
             _ph["commits_join"] = _time.perf_counter() - _t
-            if self.compact_every and self.round_id % self.compact_every == 0:
-                # bin-pack the append-only tables' per-round files (Iceberg
-                # rewrite_data_files, SnapshotTable.compact_tail): each table
-                # gains one small file per round, and fetched is re-read every
-                # round by the seen-side union — unfolded, reader file counts
-                # grow O(rounds) (the late-round drift measured in
-                # BENCH/BASELINE.md's 200k-page run). Tail-only fold ⇒
-                # amortized O(batch) per round; runs after the commit barrier
-                # so this round's appends are durable, before the checkpoint
-                # so the folded versions are the pinned ones.
-                _t = _time.perf_counter()
-                fold = [
-                    (self.fetched_tbl, "frontier_fetched"),
-                    (self.documents_tbl, "documents"),
-                    (self.metrics_tbl, "metrics"),
-                ]
-                if self.track_link_graph:
-                    fold.append((self.edges_tbl, "link_edges"))
-                for tbl, name in fold:
-                    info = tbl.compact_tail(
-                        self.spark, parent_version=self.versions.get(name)
-                    )
-                    if info is not None:
-                        self.versions[name] = info.version
-                _ph["compact_tail"] = _time.perf_counter() - _t
+        except BaseException:
+            # a failed round leaves none of its jobs running on the shared
+            # pool: drop what has not started, wait out the rest
+            for fut in futures:
+                fut.cancel()
+            wait(futures)
+            raise
+        if self.compact_every and self.round_id % self.compact_every == 0:
+            # bin-pack the append-only tables' per-round files (Iceberg
+            # rewrite_data_files, SnapshotTable.compact_tail): each table
+            # gains one small file per round, and fetched is re-read every
+            # round by the seen-side union — unfolded, reader file counts
+            # grow O(rounds) (the late-round drift measured in
+            # BENCH/BASELINE.md's 200k-page run). Tail-only fold ⇒
+            # amortized O(batch) per round; runs after the commit barrier
+            # so this round's appends are durable, before the checkpoint
+            # so the folded versions are the pinned ones.
             _t = _time.perf_counter()
-            self._save_checkpoint()
-            _ph["ckpt"] = _time.perf_counter() - _t
-            # long crawls would otherwise accumulate O(rounds) pending-table
-            # rewrites; keep a bounded time-travel window (checkpoint pins the
-            # current version, which is always retained)
-            if self.snapshot_keep:
-                _t = _time.perf_counter()
-                self.pending_tbl.expire_snapshots(keep=self.snapshot_keep)
-                self.pending_delta_tbl.expire_snapshots(keep=self.snapshot_keep)
-                self.hosts_tbl.expire_snapshots(keep=self.snapshot_keep)
-                # append-only tables: before compact_tail existed, expiry was a
-                # no-op here (every dir stayed referenced by the current
-                # manifest); now it GCs the folded-away per-round files
-                self.fetched_tbl.expire_snapshots(keep=self.snapshot_keep)
-                self.documents_tbl.expire_snapshots(keep=self.snapshot_keep)
-                self.metrics_tbl.expire_snapshots(keep=self.snapshot_keep)
-                if self.track_link_graph:
-                    self.edges_tbl.expire_snapshots(keep=self.snapshot_keep)
-                _ph["expire"] = _time.perf_counter() - _t
-            popped.unpersist()
-            enriched.unpersist()
-            new_rows.unpersist()
-            cand.unpersist()
-            if pinned is not None:
-                pinned.unpersist()
-            if self.profile_rounds:
-                _ph["total"] = _time.perf_counter() - _t0
-                _ph["other"] = _ph["total"] - sum(
-                    v for k, v in _ph.items() if k != "total"
+            fold = [
+                (self.fetched_tbl, "frontier_fetched"),
+                (self.documents_tbl, "documents"),
+                (self.metrics_tbl, "metrics"),
+            ]
+            if self.track_link_graph:
+                fold.append((self.edges_tbl, "link_edges"))
+            for tbl, name in fold:
+                info = tbl.compact_tail(
+                    self.spark, parent_version=self.versions.get(name)
                 )
-                m["phases"] = {k: round(v, 3) for k, v in _ph.items()}
-            return m
-        finally:
-            if _round_parts < _sess_parts:
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(_sess_parts)
-                )
+                if info is not None:
+                    self.versions[name] = info.version
+            _ph["compact_tail"] = _time.perf_counter() - _t
+        _t = _time.perf_counter()
+        self._save_checkpoint()
+        _ph["ckpt"] = _time.perf_counter() - _t
+        # long crawls would otherwise accumulate O(rounds) pending-table
+        # rewrites; keep a bounded time-travel window (checkpoint pins the
+        # current version, which is always retained)
+        if self.snapshot_keep:
+            _t = _time.perf_counter()
+            self.pending_tbl.expire_snapshots(keep=self.snapshot_keep)
+            self.pending_delta_tbl.expire_snapshots(keep=self.snapshot_keep)
+            self.hosts_tbl.expire_snapshots(keep=self.snapshot_keep)
+            # append-only tables: before compact_tail existed, expiry was a
+            # no-op here (every dir stayed referenced by the current
+            # manifest); now it GCs the folded-away per-round files
+            self.fetched_tbl.expire_snapshots(keep=self.snapshot_keep)
+            self.documents_tbl.expire_snapshots(keep=self.snapshot_keep)
+            self.metrics_tbl.expire_snapshots(keep=self.snapshot_keep)
+            if self.track_link_graph:
+                self.edges_tbl.expire_snapshots(keep=self.snapshot_keep)
+            _ph["expire"] = _time.perf_counter() - _t
+        popped.unpersist()
+        enriched.unpersist()
+        new_rows.unpersist()
+        cand.unpersist()
+        if pinned is not None:
+            pinned.unpersist()
+        if self.profile_rounds:
+            _ph["total"] = _time.perf_counter() - _t0
+            _ph["other"] = _ph["total"] - sum(
+                v for k, v in _ph.items() if k != "total"
+            )
+            m["phases"] = {k: round(v, 3) for k, v in _ph.items()}
+        return m
 
     def run(
         self,

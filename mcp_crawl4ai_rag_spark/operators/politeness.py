@@ -96,13 +96,19 @@ def compile_robots_predicate(
     startswith/rlike probes — whole-stage codegen, regexes compiled once,
     and no per-batch broadcast join.
 
-    Measured caveat: on a WIDE admission batch the join+fold path is
-    competitive (the broadcast join materializes host/path once, while a
-    bare filter lets Catalyst inline the host/path defining expressions
-    into every CASE branch — the p2 inlining trap), so robots_allowed
-    only takes this path when the caller opts in; the intended user is
-    the crawl round's small per-batch frame, where this removes one
-    broadcast join + interpreted fold per round.
+    Inlining trap: the predicate reads ``host`` and ``path`` once per
+    CASE branch, and Catalyst inlines whatever expressions define those
+    columns into every branch. With with_host_and_path's
+    regexp_extract/substring tree that made the crawl round's filter
+    outgrow Janino's 64 KB method limit: whole-stage codegen fell back
+    and the stage ran interpreted, once per round. Feed it columns that
+    come out of a UDF (functions.urls.admit_urls) or a join, which cannot
+    be inlined. On a WIDE admission batch built with with_host_and_path
+    the join+fold path stays competitive (the broadcast join
+    materializes host/path once), so robots_allowed only takes this path
+    when the caller opts in; the intended user is the crawl round's
+    small per-batch frame, where this removes one broadcast join +
+    interpreted fold per round.
 
     Rule semantics replicated exactly: per host, rules ordered by
     (prefix length DESC, allow-first); the first matching rule in that

@@ -30,10 +30,10 @@ from pyspark.sql import functions as F
 
 import os
 
-from mcp_crawl4ai_rag_spark.functions.urls import canonicalize_url, is_malformed
+from mcp_crawl4ai_rag_spark.functions.urls import admit_urls
 from mcp_crawl4ai_rag_spark.operators.crawl import merge_on_read_pending
 from mcp_crawl4ai_rag_spark.operators.dedup import BloomFilter, build_bloom, new_urls
-from mcp_crawl4ai_rag_spark.operators.politeness import robots_allowed, with_host_and_path
+from mcp_crawl4ai_rag_spark.operators.politeness import robots_allowed
 from mcp_crawl4ai_rag_spark.operators.ranking import with_global_rank
 from mcp_crawl4ai_rag_spark.plans.snapshots import CrawlCheckpoint, SnapshotTable
 
@@ -62,19 +62,20 @@ def admit_links_batch(
 
     Returns (rows, pinned); unpersist ``pinned`` after committing rows.
     """
+    # robots before the first-occurrence aggregate: its verdict, like the
+    # host carried in the struct, is a function of the url
     cand = (
-        batch.withColumn("url", canonicalize_url(F.col("href")))
-        .where(~is_malformed(F.col("url")))
+        robots_allowed(admit_urls(batch, "href"), robots)
         .groupBy("url")
-        .agg(F.min(F.struct("parent_url", "link_pos", "depth")).alias("f"))
+        .agg(F.min(F.struct("parent_url", "link_pos", "depth", "host")).alias("f"))
         .select(
             "url",
+            F.col("f.host").alias("host"),
             F.col("f.parent_url").alias("parent_url"),
             F.col("f.link_pos").alias("link_pos"),
             F.col("f.depth").alias("depth"),
         )
     )
-    cand = robots_allowed(with_host_and_path(cand), robots)
     fresh = new_urls(cand, seen)
     ranked, pinned = with_global_rank(
         fresh, ["parent_url", "link_pos", "url"], rank_col="__r"
@@ -115,9 +116,11 @@ def start_link_ingest(
     ``CrawlEngine.resume`` sees streamed links:
 
     - versions pointer + seq_counter advance to cover the admitted rows;
-    - the bloom state file absorbs the admitted url_hashes (a stale bloom
-      would let a re-discovered streamed URL skip the exact anti-join and
-      double-insert);
+    - the bloom state file, present once the engine has crossed its
+      probe_broadcast_threshold, absorbs the admitted url_hashes (a stale
+      bloom would let a re-discovered streamed URL skip the exact
+      anti-join and double-insert); below it there is no file, and a
+      resume above it rebuilds the bloom from the seen set;
     - a cuckoo state file, if present, is invalidated — resume then
       rebuilds it from the exact seen set (its documented recovery path).
     """

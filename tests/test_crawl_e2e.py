@@ -254,16 +254,20 @@ def test_resume_rebuilds_lost_filter_state(spark, tmp_path, web):
     full.seed(web.seeds)
     full.run(max_rounds=200)
 
+    # probe_broadcast_threshold=0: the bloom is live (and checkpointed)
+    # from round 1 on, so there is a filter file to lose
     part = CrawlEngine(
         spark, corpus_df, robots_df, hosts_df, str(tmp_path / "part"), batch_size=30,
-        max_attempts=3,
+        max_attempts=3, probe_broadcast_threshold=0,
     )
     part.seed(web.seeds)
     for _ in range(3):
         part.round()
     ck = json.load(open(str(tmp_path / "part" / "CHECKPOINT.json")))
     os.remove(ck["bloom_path"])  # simulate lost filter state
-    resumed = CrawlEngine.resume(spark, corpus_df, robots_df, str(tmp_path / "part"))
+    resumed = CrawlEngine.resume(
+        spark, corpus_df, robots_df, str(tmp_path / "part"), probe_broadcast_threshold=0
+    )
     assert resumed.max_attempts == 3  # retry semantics restored from checkpoint
     resumed.run(max_rounds=200)
     a = sorted(
