@@ -103,31 +103,20 @@ def _canonicalize_slow(u: str) -> str:
     return canonicalize_url_py(u)
 
 
-# with_host_and_path's scheme prefix, and its PATH_RE branch under Java
-# regex semantics: '.' stops at any of five line terminators and '$' also
-# matches before one final terminator (or a final CRLF)
+# with_host_and_path's scheme prefix
 _SCHEME_PREFIX_RE = _re.compile(r"[a-z][a-z0-9+.\-]*://")
-_LINE_TERMS = ("\n", "\r", "\u0085", "\u2028", "\u2029")
-_JAVA_PATH_RE = _re.compile(
-    r"[a-z][a-z0-9+.\-]*://[^/]*(/[^\n\r\u0085\u2028\u2029]*)?"
-    r"(?:\r\n|[\n\r\u0085\u2028\u2029])?\Z"
-)
 
 
 def host_and_path_py(url: str) -> tuple[str, str]:
     """Python twin of operators.politeness.with_host_and_path: host is the
-    text between the ``scheme://`` prefix and the next '/', path the rest;
-    rows holding a line terminator take the PATH_RE extraction. No
-    ``[a-z]``-led scheme prefix ⇒ ("", "")."""
+    text between the ``scheme://`` prefix and the next '/', path the rest.
+    No ``[a-z]``-led scheme prefix ⇒ ("", "")."""
     m = _SCHEME_PREFIX_RE.match(url)
     if m is None:
         return "", ""
     rest = url[m.end():]
     host = rest.partition("/")[0]
-    if not any(t in url for t in _LINE_TERMS):
-        return host, rest[len(host):]
-    pm = _JAVA_PATH_RE.match(url)
-    return host, (pm.group(1) or "") if pm else ""
+    return host, rest[len(host):]
 
 
 # byte-class lookup tables for the Arrow kernel

@@ -7,7 +7,8 @@ asyncio worker-pool loop (src/crawler/core.py:224-449; SURVEY.md §3.1):
   → fetch join (J5; sandbox stand-in for the HTTP fetch S10 — pushdown
     filter on the corpus scan + broadcast join back)
   → span cleaning (P6) + render
-  → error split (P4: dead / retry / fetched)
+  → error split (P4: dead / retry / fetched), collected as the round's
+    O(batch) stats — the one job that materializes the fetch
   → link explode (P5) → one Arrow admission pass: canonicalize (P1),
     malformed flag (P2), host/path
   → robots filter (J6, generalizing the scope filter P3)
@@ -20,6 +21,24 @@ Determinism contract (matched bit-for-bit by oracle/simulator.py):
 frontier order is (priority DESC, discovered_seq ASC); new URLs get
 discovered_seq by first occurrence in (pop_rank, link_pos) order.
 
+Files per commit: documents, frontier_fetched and frontier_pending_delta
+each append one parquet file per round (a version dir + its manifest; no
+``_SUCCESS``/``.crc`` sidecars, see plans/snapshots.py); hosts rewrites
+its small table and metrics appends one driver-written file. A steady
+round writes about a dozen files.
+
+Round frames: the popped batch and the fetched pages are local
+checkpoints (``_pin``), so the plans built on them stay small and the
+fetch runs exactly once; the stats collect is its one materializing job
+and also yields the popped count. A steady round runs 18 Spark jobs in 7
+SQL executions.
+
+Seen side of the link dedup: pending ∪ fetched as pinned at round start,
+minus this round's deaths — the pending view is the same merge-on-read
+read the pop scans; nothing of this round's fetch but the dead URLs
+enters it. The pending-delta commit is the link pipeline's only job; the
+new-link count comes from the written file's parquet footer.
+
 Scale notes (10^10 frontier / 1000 executors):
 - the pop shuffles pending rows by host once; hot hosts are budget-bounded
   so the global top-k after the window is tiny (TakeOrderedAndProject);
@@ -30,7 +49,8 @@ Scale notes (10^10 frontier / 1000 executors):
 - past probe_broadcast_threshold the seen set is scanned once with a
   broadcast candidate probe, never shuffled; the bloom prefilter (built
   once when the threshold is crossed, then maintained and checkpointed
-  each round) drops definitely-new candidates from that probe;
+  each round) drops definitely-new candidates from that probe; below it
+  Spark may auto-broadcast the (small) seen side;
 - the pending frontier is merge-on-read (Iceberg v2 shape): a host-bucket-
   partitioned base + an append-only add/del delta; per-round commits are
   O(batch) equality-deletes + appends, the base is rewritten only by the
@@ -71,7 +91,11 @@ from mcp_crawl4ai_rag_spark.operators.politeness import (
     compile_robots_predicate,
     robots_allowed,
 )
-from mcp_crawl4ai_rag_spark.plans.snapshots import CrawlCheckpoint, SnapshotTable
+from mcp_crawl4ai_rag_spark.plans.snapshots import (
+    CrawlCheckpoint,
+    SnapshotInfo,
+    SnapshotTable,
+)
 
 FETCH_RESULT_FIELDS = (
     "status_code int, "
@@ -116,12 +140,12 @@ def fetch_with_partition_sessions(
     The input should already be repartitioned by (host, salt) — politeness
     stays at host granularity while hot hosts spread across tasks.
 
-    Determinism: ``CrawlEngine.round`` runs several jobs over the cached
-    fetch output at once (stats, commits, link pipeline), and Spark may
-    compute a cached partition twice when two of them reach it first. A
-    session's result must therefore be a deterministic function of
-    (url, round), or the round's metrics and its committed rows can
-    describe different fetches.
+    Determinism: ``CrawlEngine.round`` computes the fetch output once (a
+    local checkpoint) and reads it from several jobs; a round that fails
+    is redone by ``CrawlEngine.resume``, which fetches the same URLs
+    again. A session's result must therefore be a deterministic function
+    of (url, round), or a resumed crawl is not bit-for-bit the crawl an
+    uninterrupted run would have made.
     """
     from pyspark.sql.types import StructType
 
@@ -218,6 +242,24 @@ def merge_on_read_pending(base: DataFrame, delta: DataFrame) -> DataFrame:
     return base.unionByName(adds).join(
         F.broadcast(dels), PENDING_DELETE_KEY, "left_anti"
     )
+
+
+def _pin(df: DataFrame) -> DataFrame:
+    """A round frame read by several later plans, as a plan leaf: a local
+    checkpoint. Every frame built on it analyses and plans a leaf instead
+    of the whole upstream tree. Its pre-result stages run now; the first
+    action computes the rows once and keeps them on the executors,
+    spilling to disk rather than dropping them — so a fetch is never
+    silently re-run, and a lost executor fails the round (resume redoes
+    it bit-for-bit) instead. Release with ``_unpin``."""
+    return df.localCheckpoint(eager=False)
+
+
+def _unpin(df: DataFrame | None) -> None:
+    """Drop a ``_pin`` frame's rows: they are the blocks of the RDD under
+    its LogicalRDD leaf, which DataFrame.unpersist does not reach."""
+    if df is not None:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 class CrawlEngine:
@@ -320,7 +362,7 @@ class CrawlEngine:
         self.seen_cuckoo = ShardedCuckoo() if use_cuckoo else None
         # opt-in phase timing: when True, round() adds a "phases" dict
         # (driver-side wall seconds per materialization point) to its
-        # metrics — the profiling hook behind scripts/crawl_bench.py
+        # metrics; perfbench's traced mode (--trace 1) reads it
         self.profile_rounds = False
         # Reusable unresolved Column trees for the round's fixed
         # expressions. Column objects are immutable, name-resolved
@@ -335,21 +377,23 @@ class CrawlEngine:
         x_status = F.coalesce(F.col("status_code"), F.lit(404))
         x_clean = clean_spans(F.coalesce(F.col("spans"), empty_spans))
         x_text = render_spans_text(F.col("clean_spans"))
+        # is_permanent_error is never NULL, so a blank page reaches the
+        # later branches only when it is not a permanent error
         x_dead = is_permanent_error(F.col("status"), F.col("text"))
-        x_empty = ~F.col("is_dead_err") & (
-            F.length(F.regexp_replace(F.col("text"), r"\s", "")) == 0
-        )
+        # whitespace-equivalent to the oracle's str.strip() (F.trim only
+        # strips ASCII spaces)
+        x_blank = F.length(F.regexp_replace(F.col("text"), r"\s", "")) == 0
         x_outcome = (
-            F.when(F.col("is_dead_err"), F.lit("dead"))
+            F.when(x_dead, F.lit("dead"))
             .when(
-                F.col("is_empty")
+                x_blank
                 & (
                     F.lit(max_attempts is not None)
                     & (F.col("attempts") + 1 >= F.lit(max_attempts or 0))
                 ),
                 F.lit("dead"),
             )
-            .when(F.col("is_empty"), F.lit("retry"))
+            .when(x_blank, F.lit("retry"))
             .otherwise(F.lit("fetched"))
         )
         self._rx = {
@@ -357,18 +401,13 @@ class CrawlEngine:
             "status": x_status,
             "clean_spans": x_clean,
             "text": x_text,
-            "is_dead_err": x_dead,
-            "is_empty": x_empty,
             "outcome": x_outcome,
             "seq_in_round": (F.col("pop_rank") - 1).cast("int"),
-            "links_agg": F.sum(
-                F.when(
-                    F.col("outcome") == "fetched",
-                    F.size(
-                        F.array_distinct(F.coalesce(F.col("out_links"), F.array()))
-                    ),
-                ).otherwise(F.lit(0))
-            ).alias("links"),
+            # distinct hrefs of a fetched page (0 otherwise)
+            "page_links": F.when(
+                F.col("outcome") == "fetched",
+                F.size(F.array_distinct(F.coalesce(F.col("out_links"), F.array()))),
+            ).otherwise(F.lit(0)),
         }
 
     # -- state I/O ----------------------------------------------------------
@@ -376,7 +415,7 @@ class CrawlEngine:
     def _read(self, tbl: SnapshotTable, name: str) -> DataFrame:
         return tbl.read(self.spark, self.versions.get(name))
 
-    def _commit(self, tbl: SnapshotTable, name: str, df: DataFrame, **kw) -> None:
+    def _commit(self, tbl: SnapshotTable, name: str, df: DataFrame, **kw) -> SnapshotInfo:
         # appends extend the engine's PINNED version, not the manifest's
         # current — orphan versions from a torn (crashed) round stay out of
         # the lineage after resume instead of being resurrected
@@ -384,6 +423,7 @@ class CrawlEngine:
             kw.setdefault("parent_version", self.versions.get(name))
         info = tbl.commit(df, **kw)
         self.versions[name] = info.version
+        return info
 
     def _commit_pool(self) -> "ThreadPoolExecutor":
         """Shared executor for overlapping independent table commits within
@@ -800,30 +840,30 @@ class CrawlEngine:
         if probe and self.use_bloom and self.seen_bloom is None:
             self.seen_bloom = self._build_seen_bloom(pending)
 
-        popped = budgeted_pop(pending, hosts, self.batch_size).cache()
-        n_popped = popped.count()
+        # the hosts table's row count (parquet footers, no job) bounds the
+        # binding set, so budgeted_pop needs no probe job while it fits.
+        # The pop's rows are computed by the fetch stage's first job.
+        popped = _pin(
+            budgeted_pop(
+                pending, hosts, self.batch_size,
+                hosts_rows=self.hosts_tbl.num_rows(self.versions.get("hosts")),
+            )
+        )
         _ph["pop"] = _time.perf_counter() - _t0
-        if n_popped == 0:
-            popped.unpersist()
-            self.round_id -= 1
-            return {"round": self.round_id + 1, "popped": 0}
 
         # Independent table commits overlap with the round's main-thread
-        # work (link pipeline, stats): each commit is a separate Spark job
-        # whose ~0.3-0.5 s of scheduling latency would otherwise serialize.
-        # Safe because every commit targets a distinct table (per-table
-        # version sequences — and thus all committed state — are identical
-        # to the serial schedule), all reads in this round pin versions
-        # captured before the corresponding submit, and the checkpoint is
-        # only written after every future is joined. Concurrent first
-        # actions may compute a cached `enriched` partition twice (Spark's
-        # cache doesn't block cross-job) — bounded by batch_size, never by
-        # frontier size, and harmless because a fetch is a deterministic
-        # function of (url, round): an injected ``fetcher`` must keep that
-        # contract, or the stats job and the commits could see different
-        # fetch results.
+        # work (link pipeline and the delta commit): each commit is a
+        # separate Spark job whose ~0.3-0.5 s of scheduling latency would
+        # otherwise serialize. Safe because every commit targets a
+        # distinct table (per-table version sequences — and thus all
+        # committed state — are identical to the serial schedule), all
+        # reads in this round pin versions captured before the
+        # corresponding submit, and the checkpoint is only written after
+        # every future is joined. The pooled commits read `enriched` only
+        # after the main thread has materialized it.
         pool = self._commit_pool()
         futures: list = []
+        enriched = cand = pinned = None
         try:
             # fetch stage. Default (sandbox): corpus restricted to the popped
             # batch via broadcast semi join (an IN-list of thousands of literals
@@ -832,6 +872,7 @@ class CrawlEngine:
             # the injected partition fetcher with per-partition session reuse.
             # Either way the salted repartition spreads hot hosts across tasks
             # (J5 skew note) first.
+            _t = _time.perf_counter()
             nparts = self.fetch_partitions or self.spark.sparkContext.defaultParallelism
             fetch_input = popped.repartition(nparts, F.col("host"), self._rx["salt"])
             if self.fetcher is not None:
@@ -843,32 +884,33 @@ class CrawlEngine:
                     F.broadcast(popped.select("url")), "url", "left_semi"
                 ).select("url", "status_code", "spans", "out_links")
                 joined = fetch_input.join(F.broadcast(pages), "url", "left")
-            # prebuilt trees (__init__ _rx): is_empty is whitespace-equivalent
-            # to the oracle's str.strip() — F.trim only strips ASCII spaces
-            enriched = (
-                joined
-                .withColumn("status", self._rx["status"])
-                .withColumn("clean_spans", self._rx["clean_spans"])
+            # prebuilt trees (__init__ _rx), one projection per dependency
+            # level: status + clean_spans, then text, then outcome
+            enriched = _pin(
+                joined.withColumns(
+                    {"status": self._rx["status"], "clean_spans": self._rx["clean_spans"]}
+                )
                 .withColumn("text", self._rx["text"])
-                .withColumn("is_dead_err", self._rx["is_dead_err"])
-                .withColumn("is_empty", self._rx["is_empty"])
                 .withColumn("outcome", self._rx["outcome"])
-                .cache()
             )
-
-            # one stats pass: per-(host, outcome) counts + per-page-deduped
-            # link totals (links_seen = Σ distinct hrefs of fetched pages —
-            # identical to counting the exploded first-occurrence rows,
-            # without a 2nd job). Submitted to the pool so its ~0.2-0.3 s
-            # job overlaps the main-thread link pipeline like the commits
-            # do (same bounded double-compute caveat on the enriched cache);
-            # the result is only consumed after the link materialization.
-            _stats_agg = (
-                enriched.groupBy("host", "outcome")
-                .agg(F.count("*").alias("n"), self._rx["links_agg"])
-            )
-            fut_stats = pool.submit(_stats_agg.collect)
-            futures.append(fut_stats)
+            # the stats pass materializes the fetch once, before any other
+            # job reads it: one (host, outcome, distinct hrefs) row per popped
+            # page, O(batch), summed here — no aggregation shuffle.
+            # links_seen = Σ distinct hrefs of fetched pages.
+            stats = enriched.select("host", "outcome", self._rx["page_links"]).collect()
+            _ph["fetch"] = _time.perf_counter() - _t
+            n_popped = len(stats)
+            if n_popped == 0:
+                self.round_id -= 1
+                return {"round": self.round_id + 1, "popped": 0}
+            outcome_counts: dict[str, int] = {}
+            host_popped: dict[str, int] = {}
+            n_links_seen = 0
+            for host, outcome, n_links in stats:
+                outcome_counts[outcome] = outcome_counts.get(outcome, 0) + 1
+                host_popped[host] = host_popped.get(host, 0) + 1
+                n_links_seen += n_links
+            n_retry = outcome_counts.get("retry", 0)
 
             # documents fast-append (S4 content sink)
             docs = enriched.where(F.col("outcome") == "fetched").select(
@@ -882,7 +924,32 @@ class CrawlEngine:
                 F.col("clean_spans").alias("spans"),
             )
             futures.append(
-                pool.submit(self._commit, self.documents_tbl, "documents", docs, mode="append")
+                pool.submit(
+                    self._commit, self.documents_tbl, "documents", docs,
+                    mode="append", single_file=True,
+                )
+            )
+            # fetched fast-append; the seen side below pins the PRE-append
+            # fetched version, so the append proceeds concurrently
+            fetched_old = self._read(self.fetched_tbl, "frontier_fetched")
+            fetched_now = enriched.where(F.col("outcome") == "fetched").select(
+                *[F.lit("fetched").alias(c) if c == "state" else c for c in FRONTIER_COLS]
+            )
+            futures.append(
+                pool.submit(
+                    self._commit, self.fetched_tbl, "frontier_fetched",
+                    fetched_now, mode="append", single_file=True,
+                )
+            )
+            # politeness charge
+            popped_counts = self.spark.createDataFrame(
+                list(host_popped.items()), "host string, popped long"
+            )
+            futures.append(
+                pool.submit(
+                    self._commit, self.hosts_tbl, "hosts",
+                    charge_hosts(hosts, popped_counts),
+                )
             )
 
             if self.track_link_graph:
@@ -905,6 +972,7 @@ class CrawlEngine:
             # link pipeline (P5→P1+P2→J6→J3): one admit_url pass yields the
             # canonical url, its malformed flag and the host/path columns the
             # compiled robots predicate reads
+            _t = _time.perf_counter()
             links = (
                 enriched.where(F.col("outcome") == "fetched")
                 .select(
@@ -930,10 +998,9 @@ class CrawlEngine:
             # the struct behind the unique (pop_rank, link_pos): it is a
             # function of url, and grouping by url alone keeps the url
             # partitioning new_urls' dedup reuses.
-            first = admitted.groupBy("url").agg(
+            cand = admitted.groupBy("url").agg(
                 F.min(F.struct("pop_rank", "link_pos", "depth", "host")).alias("f")
-            )
-            cand = first.select(
+            ).select(
                 "url",
                 F.col("f.host").alias("host"),
                 F.col("f.pop_rank").alias("pop_rank"),
@@ -946,42 +1013,16 @@ class CrawlEngine:
                 # anti-join); the plain anti-join reads it once
                 cand = cand.cache()
 
-            # seen set: pending' ∪ fetched ∪ this round's fetches — this round's
-            # deaths have already left the set (simulator order: deletes happen
-            # before link insertion); popped non-dead rows stay seen
+            # seen set: pending ∪ fetched as pinned at round start, minus
+            # this round's deaths (simulator order: deletes happen before
+            # link insertion). Popped rows that were fetched or retried stay
+            # seen, and they are in pending already.
             dead = enriched.where(F.col("outcome") == "dead").select("url", "url_hash")
-            untouched_pending = pending.join(
-                F.broadcast(popped.select("url")), "url", "left_anti"
-            )
-            retries = (
-                enriched.where(F.col("outcome") == "retry")
-                .withColumn("attempts", F.col("attempts") + 1)
-                .select(*FRONTIER_COLS_PENDING)
-            )
-            fetched_now = (
-                enriched.where(F.col("outcome") == "fetched")
-                .withColumn("state", F.lit("fetched"))
-                .select(*FRONTIER_COLS)
-            )
-            pending_base = untouched_pending.select(*FRONTIER_COLS_PENDING).unionByName(
-                retries
-            )
             seen_urls = (
-                pending_base.select("url")
-                .unionByName(fetched_now.select("url"))
-                .unionByName(
-                    self._read(self.fetched_tbl, "frontier_fetched").select("url")
-                )
+                pending.select("url")
+                .join(F.broadcast(dead.select("url")), "url", "left_anti")
+                .unionByName(fetched_old.select("url"))
             )
-            # seen_urls has pinned the PRE-append fetched version above, so the
-            # append can proceed concurrently with the link pipeline
-            futures.append(
-                pool.submit(
-                    self._commit, self.fetched_tbl, "frontier_fetched",
-                    fetched_now, mode="append",
-                )
-            )
-
             fresh = new_urls(
                 cand,
                 seen_urls,
@@ -1001,98 +1042,85 @@ class CrawlEngine:
                     "__rank",
                     F.row_number().over(Window.orderBy("pop_rank", "link_pos")) - 1,
                 )
-                pinned = None
             else:
                 ranked, pinned = with_global_rank(
                     fresh, ["pop_rank", "link_pos"], rank_col="__rank"
                 )
-            new_rows = (
-                ranked.select(
-                    "url",
-                    F.xxhash64("url").alias("url_hash"),
-                    "host",
-                    F.col("depth").cast("int").alias("depth"),
-                    F.lit(0).alias("priority"),
-                    (F.col("__rank") + F.lit(self.seq_counter)).cast("long").alias("seq"),
-                    F.lit("pending").alias("state"),
-                    F.lit(0).alias("attempts"),
-                )
-                .withColumn("bucket", self._bucket())
-                .cache()
+            seq0 = self.seq_counter
+            new_rows = ranked.select(
+                "url",
+                F.xxhash64("url").alias("url_hash"),
+                "host",
+                F.col("depth").cast("int").alias("depth"),
+                F.lit(0).alias("priority"),
+                (F.col("__rank") + F.lit(seq0)).cast("long").alias("seq"),
+                F.lit("pending").alias("state"),
+                F.lit(0).alias("attempts"),
+                self._bucket().alias("bucket"),
+                F.lit("add").alias("op"),
             )
-            _t = _time.perf_counter()
-            if self.seen_bloom is not None:
-                # fused materialize: the same job that counts (and populates
-                # the new_rows cache) builds this round's bloom delta —
-                # one job-scheduling round-trip instead of two. OR-merge is
-                # order-free, so merging here (instead of at the filter-
-                # maintenance point below) yields the identical bitmap.
-                _bf_delta, n_new = build_bloom_with_count(
-                    new_rows,
-                    "url_hash",
-                    self.seen_bloom.num_bits,
-                    self.seen_bloom.num_hashes,
-                )
-                self.seen_bloom = self.seen_bloom.merge(_bf_delta)
-            else:
-                n_new = new_rows.count()
-            _ph["links"] = _time.perf_counter() - _t
 
-            # merge-on-read delta commit, O(batch): every popped row version gets
-            # an equality 'del' on (url, attempts); retries re-append at
-            # attempts+1 and brand-new links append fresh. The base is untouched
-            # — no O(pending) rewrite in the round path. fetched stays a fast
-            # append of this round's rows.
-            dels = popped.select(*FRONTIER_COLS_PENDING).withColumn("op", F.lit("del"))
-            adds = (
-                retries.unionByName(new_rows.select(*FRONTIER_COLS_PENDING))
-            ).withColumn("op", F.lit("add"))
-            fut_delta = pool.submit(
-                self._commit,
+            # merge-on-read delta commit, O(batch): every popped row version
+            # gets an equality 'del' on (url, seq, attempts, priority);
+            # retries re-append at attempts+1 and brand-new links append
+            # fresh. The base is untouched — no O(pending) rewrite in the
+            # round path. This write is the link pipeline's only job: the
+            # new-link count comes from the written file's footer. One file
+            # unless the distributed rank ran (its last stage stays wide).
+            dels = popped.select(*FRONTIER_COLS_PENDING, F.lit("del").alias("op"))
+            retries = enriched.where(F.col("outcome") == "retry").select(
+                *[
+                    (F.col(c) + 1).alias(c) if c == "attempts" else c
+                    for c in FRONTIER_COLS_PENDING
+                ],
+                F.lit("add").alias("op"),
+            )
+            info = self._commit(
                 self.pending_delta_tbl,
                 "frontier_pending_delta",
-                dels.unionByName(adds),
+                dels.unionByName(retries).unionByName(new_rows),
                 mode="append",
+                single_file=pinned is None,
                 # per-commit lineage (north rule): which round produced this
-                # delta and its op cardinalities — time travel + audit
-                extra={"round": self.round_id, "dels": n_popped, "adds": n_new},
+                # delta; adds = rows - dels
+                extra={"round": self.round_id, "dels": n_popped},
             )
-            futures.append(fut_delta)
+            n_new = info.rows - n_popped - n_retry
             self.seq_counter += n_new
+            _ph["links"] = _time.perf_counter() - _t
+
+            # seen-filter maintenance (probe regime / opt-in cuckoo), over
+            # the new links as written: seq >= seq0 tells them from retries
+            if self.seen_bloom is not None or self.seen_cuckoo is not None:
+                _t = _time.perf_counter()
+                added = (
+                    self.spark.read.schema(self._delta_schema())
+                    .parquet(info.paths[-1])
+                    .where((F.col("op") == "add") & (F.col("seq") >= seq0))
+                    .select("url_hash")
+                )
+                if self.seen_bloom is not None:
+                    _bf_delta, _ = build_bloom_with_count(
+                        added, "url_hash", self.seen_bloom.num_bits,
+                        self.seen_bloom.num_hashes,
+                    )
+                    self.seen_bloom = self.seen_bloom.merge(_bf_delta)
+                if self.seen_cuckoo is not None:
+                    self.seen_cuckoo = maintain_sharded_cuckoo(
+                        self.spark, self.seen_cuckoo, added, dead.select("url_hash"),
+                    )
+                _ph["filters"] = _time.perf_counter() - _t
             if self.compact_every and self.round_id % self.compact_every == 0:
                 _t = _time.perf_counter()
-                fut_delta.result()  # compaction folds the delta it just wrote
-                self._compact_pending()
+                self._compact_pending()  # folds the delta just written
                 _ph["compact"] = _time.perf_counter() - _t
-
-            _t = _time.perf_counter()
-            stats = fut_stats.result()
-            _ph["stats"] = _time.perf_counter() - _t
-            outcome_counts: dict[str, int] = {}
-            host_popped: dict[str, int] = {}
-            n_links_seen = 0
-            for r in stats:
-                outcome_counts[r["outcome"]] = outcome_counts.get(r["outcome"], 0) + r["n"]
-                host_popped[r["host"]] = host_popped.get(r["host"], 0) + r["n"]
-                n_links_seen += r["links"]
-
-            # politeness charge + per-host lineage metrics
-            popped_counts = self.spark.createDataFrame(
-                list(host_popped.items()), "host string, popped long"
-            )
-            futures.append(
-                pool.submit(
-                    self._commit, self.hosts_tbl, "hosts",
-                    charge_hosts(hosts, popped_counts),
-                )
-            )
 
             m = {
                 "round": self.round_id,
                 "popped": n_popped,
                 "fetched": outcome_counts.get("fetched", 0),
                 "dead": outcome_counts.get("dead", 0),
-                "retried": outcome_counts.get("retry", 0),
+                "retried": n_retry,
                 "links_seen": int(n_links_seen),
                 "links_inserted": n_new,
             }
@@ -1111,19 +1139,6 @@ class CrawlEngine:
                 mode="append",
             )
             _ph["metrics"] = _time.perf_counter() - _t
-
-            _t = _time.perf_counter()
-            # a live bloom's delta is already folded in by the fused
-            # materialize above; only the (opt-in) cuckoo still needs its
-            # per-shard update pass
-            if self.seen_cuckoo is not None:
-                self.seen_cuckoo = maintain_sharded_cuckoo(
-                    self.spark,
-                    self.seen_cuckoo,
-                    new_rows.select("url_hash"),
-                    dead.select("url_hash"),
-                )
-            _ph["filters"] = _time.perf_counter() - _t
             # barrier: every commit must be durable (a raised CommitConflict or
             # write error surfaces here) before the checkpoint pointer advances
             _t = _time.perf_counter()
@@ -1137,6 +1152,14 @@ class CrawlEngine:
                 fut.cancel()
             wait(futures)
             raise
+        finally:
+            # every reader of these rows has been joined
+            _unpin(popped)
+            _unpin(enriched)
+            if probe and cand is not None:
+                cand.unpersist()
+            if pinned is not None:
+                pinned.unpersist()
         if self.compact_every and self.round_id % self.compact_every == 0:
             # bin-pack the append-only tables' per-round files (Iceberg
             # rewrite_data_files, SnapshotTable.compact_tail): each table
@@ -1182,12 +1205,6 @@ class CrawlEngine:
             if self.track_link_graph:
                 self.edges_tbl.expire_snapshots(keep=self.snapshot_keep)
             _ph["expire"] = _time.perf_counter() - _t
-        popped.unpersist()
-        enriched.unpersist()
-        new_rows.unpersist()
-        cand.unpersist()
-        if pinned is not None:
-            pinned.unpersist()
         if self.profile_rounds:
             _ph["total"] = _time.perf_counter() - _t0
             _ph["other"] = _ph["total"] - sum(

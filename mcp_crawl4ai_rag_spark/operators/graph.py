@@ -84,10 +84,13 @@ def connected_components(
 
             for r in probe:
                 a, b = r["src"], r["dst"]
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
+                parent.setdefault(a, a)
+                parent.setdefault(b, b)
+                if a is None or b is None:
+                    # as on the distributed path, whose equi-joins never
+                    # match NULL: a null id is a node labeled NULL and
+                    # its edges connect nothing
+                    continue
                 ra, rb = find(a), find(b)
                 if ra != rb:
                     # always hang the larger root under the smaller one:
@@ -96,7 +99,7 @@ def connected_components(
                         parent[rb] = ra
                     else:
                         parent[ra] = rb
-            rows = sorted((v, find(v)) for v in parent)
+            rows = sorted(((v, find(v)) for v in parent), key=lambda r: (r[0] is None, r[0]))
             dtype = edges.schema["src"].dataType
             edges.unpersist()
             return pairs.sparkSession.createDataFrame(

@@ -23,38 +23,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-HOST_RE = r"^[a-z][a-z0-9+.\-]*://([^/]*)"
-PATH_RE = r"^[a-z][a-z0-9+.\-]*://[^/]*(/.*)?$"
-
 
 def with_host_and_path(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Host/path extraction for *canonicalized* URLs (lowercased scheme and
     netloc) — no Python.
 
-    One short anchored regex matches the scheme prefix; host/path then
-    come from substring arithmetic (cheaper than running the two long
-    extraction regexes over the full URL twice). Rows containing line
-    terminators keep the original PATH_RE extraction, because Java's
-    ``$`` treats a trailing terminator specially and the substring
-    arithmetic would diverge there; all other rows are byte-equivalent
-    (pinned by tests/test_robots_source.py)."""
+    One short anchored regex matches the scheme prefix; the host is the
+    text up to the next '/', the path everything after the host (the
+    semantics of oracle.simulator.robots_allows, line terminators
+    included). No scheme prefix ⇒ host and path ""."""
     url = F.col(url_col)
     m = F.regexp_extract(url, r"^[a-z][a-z0-9+.\-]*://", 0)
     rest = F.substring(url, F.length(m) + F.lit(1), F.lit(1 << 30))
     host = F.when(m == "", F.lit("")).otherwise(F.substring_index(rest, "/", 1))
-    simple_path = F.substring(
-        rest, F.length(host) + F.lit(1), F.lit(1 << 30)
+    path = F.when(m == "", F.lit("")).otherwise(
+        F.substring(rest, F.length(host) + F.lit(1), F.lit(1 << 30))
     )
-    has_line_term = (
-        url.contains("\n") | url.contains("\r") | url.contains("\u0085")
-        | url.contains("\u2028") | url.contains("\u2029")
-    )
-    path = (
-        F.when(m == "", F.lit(""))
-        .when(has_line_term, F.regexp_extract(url, PATH_RE, 1))
-        .otherwise(simple_path)
-    )
-    return df.withColumn("host", host).withColumn("path", path)
+    return df.withColumns({"host": host, "path": path})
 
 
 def build_robots_rules(robots: DataFrame) -> DataFrame:
@@ -239,9 +224,11 @@ def refill_hosts(hosts: DataFrame) -> DataFrame:
 
 
 def charge_hosts(hosts: DataFrame, popped_counts: DataFrame) -> DataFrame:
-    """popped_counts: (host, popped) — subtract actual pops."""
+    """popped_counts: (host, popped) — subtract actual pops. popped_counts
+    is bounded by the batch, so it is broadcast: the hosts side is never
+    shuffled."""
     return (
-        hosts.join(popped_counts, "host", "left")
+        hosts.join(F.broadcast(popped_counts), "host", "left")
         .withColumn("tokens", F.col("tokens") - F.coalesce(F.col("popped"), F.lit(0)))
         .drop("popped")
     )
@@ -253,6 +240,7 @@ def budgeted_pop(
     batch_size: int,
     salt_buckets: int = 16,
     broadcast_binding_max: int = 65536,
+    hosts_rows: int | None = None,
 ) -> DataFrame:
     """W1: the frontier pop. Per-host window rank bounded by the token
     budget, then global (priority DESC, seq ASC) top-``batch_size``.
@@ -301,6 +289,14 @@ def budgeted_pop(
     doubles as the salted window's partitioning. No O(hosts) driver
     materialization on either path (tests/test_politeness_pop.py pins
     the bound).
+
+    ``hosts_rows`` — the row count of ``hosts``, when the caller knows it
+    without a job (the crawl engine reads it from the snapshot's parquet
+    footers). At or below ``broadcast_binding_max`` it bounds the binding
+    set, so the probe is skipped and the broadcast path broadcasts the
+    binding budgets straight from the plan: one job and one SQL execution
+    fewer, identical output (an empty binding set leaves every row on the
+    bypass).
     """
     budgets = hosts.select(
         "host", F.floor(F.col("tokens")).cast("long").alias("__budget")
@@ -325,16 +321,31 @@ def budgeted_pop(
     # the identical bypass semantics run as a plain (host)-keyed join:
     # budget row absent => bypass column, present => the same salted
     # pre-prune + exact window on the joined side only.
-    binding_df = budgets.where(F.col("__budget") < batch_size)
-    probe = binding_df.limit(broadcast_binding_max + 1).collect()
+    # the IS NOT NULL terms change nothing (a null host never joins, a null
+    # budget never binds) but are what the optimizer pushes into the
+    # budgeted arm's inner join: stating them keeps the broadcast side of
+    # both union arms identical, so the arms share one broadcast exchange
+    nonnull = F.col("host").isNotNull() & F.col("__budget").isNotNull()
+    binding_df = budgets.where((F.col("__budget") < batch_size) & nonnull)
     w_global = Window.orderBy(F.desc("priority"), F.asc("seq"))
-    if not probe:
-        # nothing binds: the pop IS the global top-k — one scan, no join,
-        # no union; compiles to TakeOrderedAndProject (per-partition heaps)
-        return (
-            pending.orderBy(F.desc("priority"), F.asc("seq"))
-            .limit(batch_size)
-            .withColumn("pop_rank", F.row_number().over(w_global))
+    if hosts_rows is not None and hosts_rows <= broadcast_binding_max:
+        bud = binding_df
+    else:
+        probe = binding_df.limit(broadcast_binding_max + 1).collect()
+        if not probe:
+            # nothing binds: the pop IS the global top-k — one scan, no
+            # join, no union; compiles to TakeOrderedAndProject
+            # (per-partition heaps)
+            return (
+                pending.orderBy(F.desc("priority"), F.asc("seq"))
+                .limit(batch_size)
+                .withColumn("pop_rank", F.row_number().over(w_global))
+            )
+        bud = (
+            pending.sparkSession.createDataFrame(probe, "host string, __budget long")
+            .where(nonnull)
+            if len(probe) <= broadcast_binding_max
+            else None
         )
     salt_col = F.pmod(F.xxhash64("url"), F.lit(salt_buckets)).cast("int")
     keep_k = F.least(F.col("__budget"), F.lit(batch_size))
@@ -342,14 +353,11 @@ def budgeted_pop(
         F.desc("priority"), F.asc("seq")
     )
     w_host = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("seq"))
-    if len(probe) <= broadcast_binding_max:
-        # small binding set (the probe returned it whole): driver
-        # round-trip is bounded by the threshold, broadcast join keeps
-        # bypass rows shuffle-free — they skip BOTH windows and flow
-        # straight into the TakeOrderedAndProject heap.
-        bud = pending.sparkSession.createDataFrame(
-            probe, "host string, __budget long"
-        )
+    if bud is not None:
+        # small binding set (bounded by hosts_rows, or the probe returned
+        # it whole): broadcast join keeps bypass rows shuffle-free — they
+        # skip BOTH windows and flow straight into the
+        # TakeOrderedAndProject heap.
         tagged = pending.join(F.broadcast(bud), "host", "left")
         bypass = tagged.where(F.col("__budget").isNull()).drop("__budget")
         pruned = (

@@ -16,6 +16,12 @@ sandbox, so this module implements the same *semantics* on plain parquet:
 
 The checkpoint manifest additionally pins the bloom/cuckoo filter state
 file and per-round metrics so a crawl resumes bit-for-bit (north rule).
+
+The manifest is the commit record, so data directories carry no
+``_SUCCESS`` marker and no ``.crc`` checksum sidecars (per-write Hadoop
+options, see ``WRITE_OPTIONS``; the session's other writes are
+unaffected). A ``single_file`` commit coalesces its rows into one
+parquet file, the layout for small per-round appends.
 """
 
 from __future__ import annotations
@@ -30,6 +36,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# Hadoop options set on every snapshot write (never in the session conf):
+# no _SUCCESS marker (the manifest swap is the commit) and the raw local
+# filesystem, which writes no .crc checksum sidecars. disable.cache keeps
+# the raw filesystem instance out of Hadoop's shared FileSystem cache, so
+# other file:// writers in the session still get the checksummed one.
+WRITE_OPTIONS = {
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs": "false",
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
+
+
+def parquet_rows(path: str) -> int:
+    """Rows in the parquet files directly under ``path``, read from their
+    footers on the driver (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
 class CommitConflict(RuntimeError):
     pass
 
@@ -39,6 +69,7 @@ class SnapshotInfo:
     version: int
     paths: list
     extra: dict
+    rows: int | None = None  # rows a flat commit() wrote
 
 
 class SnapshotTable:
@@ -89,6 +120,12 @@ class SnapshotTable:
             reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
         return reader.parquet(*m["paths"])
 
+    def num_rows(self, version: int | None = None) -> int:
+        """Row count of a flat snapshot from its parquet footers — no
+        Spark job."""
+        v = version if version is not None else self.current().version
+        return sum(parquet_rows(p) for p in self._manifest(v)["paths"])
+
     def _read_partitioned(
         self, spark: SparkSession, m: dict, partitions: list | None
     ) -> DataFrame:
@@ -137,6 +174,7 @@ class SnapshotTable:
         extra: dict | None = None,
         mode: str = "overwrite",
         parent_version: int | None = None,
+        single_file: bool = False,
     ) -> SnapshotInfo:
         """Write df as the next version; atomic manifest swap.
 
@@ -154,6 +192,13 @@ class SnapshotTable:
           resurrected by the next append. Version numbers stay monotonic
           (always current+1).
         - ``partition_by`` materializes partition pruning for readers.
+        - ``single_file``: coalesce to one parquet file — for O(batch)
+          appends. The coalesce has no shuffle, so everything up to the
+          last exchange above ``df`` runs in that one task: use it over
+          materialized caches or a single-partition plan.
+
+        The returned info (and the manifest) carry ``rows``, the rows
+        this commit wrote, read from the new files' footers.
         """
         cur = self.current()
         cur_v = cur.version if cur else 0
@@ -163,10 +208,11 @@ class SnapshotTable:
             )
         new_v = cur_v + 1
         path = os.path.join(self.dir, f"d{new_v}")
-        writer = df.write.mode("overwrite")
+        writer = (df.coalesce(1) if single_file else df).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        writer.options(**WRITE_OPTIONS).parquet(path)
+        rows = None if partition_by else parquet_rows(path)
         if mode == "append" and cur is not None:
             parent_m = self._manifest(
                 parent_version if parent_version is not None else cur.version
@@ -182,6 +228,7 @@ class SnapshotTable:
             "folded": folded,
             "schema": df.schema.json(),
             "committed_at": time.time(),
+            "rows": rows,
             "extra": extra or {},
         }
         mpath = os.path.join(self.dir, f"m{new_v}.json")
@@ -191,7 +238,7 @@ class SnapshotTable:
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, self.manifest_path)  # atomic pointer swap
-        return SnapshotInfo(new_v, paths, extra or {})
+        return SnapshotInfo(new_v, paths, extra or {}, rows)
 
     def compact_tail(
         self,
@@ -255,7 +302,7 @@ class SnapshotTable:
         df = spark.read.schema(schema).parquet(*read_paths).coalesce(target_files)
         new_v = cur_v + 1
         path = os.path.join(self.dir, f"d{new_v}")
-        df.write.mode("overwrite").parquet(path)
+        df.write.mode("overwrite").options(**WRITE_OPTIONS).parquet(path)
         new_paths = [path] if full else paths[:folded] + [path]
         manifest = {
             "version": new_v,
@@ -419,7 +466,7 @@ class SnapshotTable:
             )
         new_v = cur_v + 1
         path = os.path.join(self.dir, f"d{new_v}")
-        df.write.mode("overwrite").partitionBy(part_col).parquet(path)
+        df.write.mode("overwrite").partitionBy(part_col).options(**WRITE_OPTIONS).parquet(path)
         written = {
             entry.split("=", 1)[1]: os.path.join(path, entry)
             for entry in os.listdir(path)

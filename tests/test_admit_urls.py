@@ -11,12 +11,9 @@ the five Java line terminators, tab, over-long URLs and repeated
 - the compiled robots predicate over the UDF's host/path: the join+fold
   robots path over with_host_and_path's columns, and robots_allows.
 
-Known divergence, kept on purpose: for a URL holding U+0085, U+2028 or
-U+2029, with_host_and_path takes its PATH_RE branch, which follows Java's
-regex rules ('.' stops at a line terminator, so a non-final one makes the
-path ""). robots_allows takes the plain text after the host instead, so
-the two robots verdicts can differ on such URLs. admit_url reproduces
-with_host_and_path; robots_allows is asserted on every other URL.
+host/path follow the oracle's semantics (the path is the text after the
+host, line terminators included), so robots_allows is asserted on every
+URL, U+0085, U+2028 and U+2029 included.
 """
 
 from __future__ import annotations
@@ -122,8 +119,7 @@ def test_admit_arrow_equals_oracles(xs):
 def test_admit_url_equals_spark_chain_and_robots(spark, xs):
     """Spark: the UDF's fields equal canonicalize_url_det → is_malformed →
     with_host_and_path, and the compiled robots predicate over its
-    host/path columns equals the join+fold path and, outside the PATH_RE
-    branch (module docstring), robots_allows."""
+    host/path columns equals the join+fold path and robots_allows."""
     df = spark.createDataFrame(list(enumerate(xs)), "i long, href string")
     rules = build_robots_rules(
         spark.createDataFrame(
@@ -157,5 +153,4 @@ def test_admit_url_equals_spark_chain_and_robots(spark, xs):
         assert g["allowed"] == (i in kept_by_fold), u
         if url is not None:
             assert r["malformed"] == malformed, u
-            if not any(t in url for t in LINE_TERMS):
-                assert g["allowed"] == allowed, u
+            assert g["allowed"] == allowed, u

@@ -55,6 +55,26 @@ def test_connected_components_driver_vs_distributed(spark):
     assert {r["id"]: r["comp"] for r in tiny_cap.collect()} == drv
 
 
+def test_connected_components_null_ids_driver_vs_distributed(spark):
+    """Null ids: both paths return the same rows — a null id is one node
+    labeled NULL, and an edge touching it connects nothing."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (None, None), (4, 5), (5, None), (6, 6)],
+        "id_a long, id_b long",
+    )
+
+    def rows(df):
+        return sorted(
+            (tuple(r) for r in df.collect()), key=lambda t: (t[0] is None, t)
+        )
+
+    drv = rows(G.connected_components(pairs))
+    dist = rows(G.connected_components(pairs, driver_max_edges=0))
+    assert drv == dist == [
+        (1, 1), (2, 1), (3, 3), (4, 4), (5, 4), (6, 6), (None, None)
+    ]
+
+
 def test_dedup_groups_membership(spark):
     pairs = spark.createDataFrame([(4, 2), (2, 9), (7, 8)], ["id_a", "id_b"])
     groups = {r["comp"]: r for r in G.dedup_groups(pairs).collect()}

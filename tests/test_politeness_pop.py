@@ -92,6 +92,44 @@ def test_distributed_branch_exactness(spark):
     )
 
 
+def test_hosts_rows_hint_skips_probe_same_result(spark):
+    """hosts_rows within broadcast_binding_max: the binding budgets are
+    broadcast from the plan with no probe collect, across the same budget
+    regimes, including the one where nothing binds."""
+    for budgets, batch in [
+        ({"hot.h": 7, "a.h": 3, "b.h": 2, "c.h": 5}, 50),
+        ({"hot.h": 1000, "a.h": 1000}, 25),
+        ({"hot.h": 4}, 40),
+        ({"hot.h": 0, "a.h": -2.5, "b.h": 3}, 30),
+    ]:
+        run_case(spark, budgets, batch_size=batch, hosts_rows=len(budgets))
+    # a hint above the threshold falls back to the probe dispatch
+    run_case(
+        spark, {"hot.h": 7, "a.h": 3}, batch_size=50,
+        broadcast_binding_max=1, hosts_rows=2,
+    )
+    # building the hinted pop runs no job; the unhinted one probes
+    pending = spark.createDataFrame(
+        [("https://hot.h/1", "hot.h", 0, 1, 1)],
+        "url string, host string, depth int, priority int, seq long",
+    )
+    hosts = spark.createDataFrame(
+        [("hot.h", 3.0, 0.0, 3.0)],
+        "host string, capacity double, refill_rate double, tokens double",
+    )
+    sc = spark.sparkContext
+
+    def jobs_run_by(build):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        build()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None)) - before
+
+    assert not jobs_run_by(lambda: budgeted_pop(pending, hosts, 10, hosts_rows=1))
+    assert jobs_run_by(lambda: budgeted_pop(pending, hosts, 10))
+
+
 def test_all_hosts_budgeted_no_driver_materialization(spark):
     """The open-web regime (EVERY host rate-limited, binding set O(hosts)):
     above the dispatch threshold, budgeted_pop must never pull more than

@@ -266,3 +266,30 @@ def test_compiled_predicate_equals_join_fold(spark):
         "host string, rule_type string, path_prefix string, crawl_delay double",
     )
     assert compile_robots_predicate(build_robots_rules(many), max_hosts=64) is None
+
+
+def test_line_terminator_paths_follow_oracle(spark):
+    """U+0085, U+2028 and U+2029 are plain path characters: the path is the
+    text after the host, as oracle.simulator.robots_allows takes it."""
+    from mcp_crawl4ai_rag_spark.functions.urls import host_and_path_py
+    from mcp_crawl4ai_rag_spark.oracle.simulator import robots_allows
+
+    rules = [("a.example", "disallow", "/private/", 0.0)]
+    cases = {
+        "https://a.example/private/\u2028x": ("/private/\u2028x", False),
+        "https://a.example/x\u2029y/\u0085": ("/x\u2029y/\u0085", True),
+        "https://a.example/private/\u0085": ("/private/\u0085", False),
+        "https://a.example/\u2028private/": ("/\u2028private/", True),
+    }
+    urls = spark.createDataFrame([(u,) for u in cases], ["url"])
+    got = {r["url"]: r["path"] for r in with_host_and_path(urls).collect()}
+    robots_df = spark.createDataFrame(
+        rules, "host string, rule_type string, path_prefix string, crawl_delay double"
+    )
+    kept = {
+        r["url"] for r in robots_allowed(with_host_and_path(urls), robots_df).collect()
+    }
+    for u, (path, allowed) in cases.items():
+        assert got[u] == path == host_and_path_py(u)[1], u
+        assert robots_allows(rules, u) is allowed, u
+        assert (u in kept) is allowed, u
