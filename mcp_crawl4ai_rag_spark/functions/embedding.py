@@ -159,9 +159,3 @@ def make_cosine_batch_udf(query: list[float]):
         return pd.Series(m @ q / (norms * qn))
 
     return cos
-
-
-def l2_normalize(vec_col: Column) -> Column:
-    x = F.transform(vec_col, lambda v: v.cast("double"))
-    n = F.sqrt(F.aggregate(x, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.transform(x, lambda v: (v / n).cast("float"))

@@ -38,15 +38,6 @@ def token_count(col: Column) -> Column:
     )
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """Sub-word-ish token count: split on whitespace AND punctuation/camel
-    boundaries — a cheap proxy for BPE token budgeting."""
-    pieces = F.split(
-        F.trim(col), r"(\s+|(?<=[a-z])(?=[A-Z])|(?=[^\w\s])|(?<=[^\w\s]))", -1
-    )
-    return F.size(F.filter(pieces, lambda p: F.length(p) > 0))
-
-
 def punct_ratio(col: Column) -> Column:
     return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(
         F.regexp_count(col, F.lit(PUNCT_PATTERN)).cast("double") / F.length(col)

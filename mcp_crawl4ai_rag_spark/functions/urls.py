@@ -26,7 +26,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 APPLE_DOCS_PREFIX = "https://developer.apple.com/documentation/"
@@ -420,20 +420,6 @@ def admit_urls(df: DataFrame, raw_col: str) -> DataFrame:
     )
 
 
-@pandas_udf(StringType())
-def url_host(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: urlparse(u).netloc.lower() if u is not None else None)
-
-
-def count_occurrences(col: Column, token: str) -> Column:
-    """str.count(token) as a JVM expression: non-overlapping occurrence count."""
-    tok_len = len(token)
-    return (
-        (F.length(col) - F.length(F.replace(col, F.lit(token), F.lit(""))))
-        / F.lit(tok_len)
-    ).cast("int")
-
-
 def _occurs_twice(col: Column, token: str) -> Column:
     """str.count(token) > 1 (non-overlapping), as two allocation-free
     ``locate`` scans with early exit — replaces the length(replace(...))
@@ -459,11 +445,6 @@ def is_malformed(col: Column) -> Column:
         | (F.length(col) > 200)
         | _occurs_twice(col, "developer.apple.com")
     )
-
-
-def in_scope(col: Column, prefix: str = APPLE_DOCS_PREFIX) -> Column:
-    """Allow-prefix scope filter (core.py:75,444)."""
-    return col.startswith(prefix)
 
 
 def is_permanent_error(status: Column, content: Column) -> Column:

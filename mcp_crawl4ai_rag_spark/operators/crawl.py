@@ -12,7 +12,7 @@ asyncio worker-pool loop (src/crawler/core.py:224-449; SURVEY.md §3.1):
   → link explode (P5) → one Arrow admission pass: canonicalize (P1),
     malformed flag (P2), host/path
   → robots filter (J6, generalizing the scope filter P3)
-  → anti-join dedup (J3 / S2), bloom-prefiltered past
+  → anti-join dedup (J3 / S2), prefiltered by the seen filter past
     probe_broadcast_threshold
   → snapshot commits: documents fast-append, frontier rewrite (stand-in
     for Iceberg MERGE), hosts charge, metrics append, checkpoint.
@@ -47,10 +47,13 @@ Scale notes (10^10 frontier / 1000 executors):
   many tasks while politeness accounting stays at host granularity
   (tokens are charged from per-host counts, not per-task);
 - past probe_broadcast_threshold the seen set is scanned once with a
-  broadcast candidate probe, never shuffled; the bloom prefilter (built
-  once when the threshold is crossed, then maintained and checkpointed
-  each round) drops definitely-new candidates from that probe; below it
-  Spark may auto-broadcast the (small) seen side;
+  broadcast candidate probe, never shuffled; the seen filter drops
+  definitely-new candidates from that probe. It is a bloom, or a cuckoo
+  whose deletes let dead URLs leave it (``seen_filter_kind``); either is
+  built once where new_urls first reads it, then maintained and
+  checkpointed each round, and a cuckoo is rebuilt at double size before
+  it fills up. Below the threshold there is no filter, and Spark may
+  auto-broadcast the (small) seen side;
 - the pending frontier is merge-on-read (Iceberg v2 shape): a host-bucket-
   partitioned base + an append-only add/del delta; per-round commits are
   O(batch) equality-deletes + appends, the base is rewritten only by the
@@ -77,9 +80,9 @@ from mcp_crawl4ai_rag_spark.operators.dedup import (
     BloomFilter,
     ShardedCuckoo,
     build_bloom,
-    build_bloom_with_count,
     maintain_sharded_cuckoo,
     new_urls,
+    update_seen_filter,
 )
 from mcp_crawl4ai_rag_spark.operators.ranking import with_global_rank
 from mcp_crawl4ai_rag_spark.operators.politeness import (
@@ -244,6 +247,45 @@ def merge_on_read_pending(base: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
+# The seen-filter kinds: a bloom, which cannot forget (dead URLs stay in it
+# as false positives), or the deletable sharded cuckoo.
+SEEN_FILTERS = {"bloom": BloomFilter, "cuckoo": ShardedCuckoo}
+# A cuckoo is rebuilt, at double size, before seq_counter (an upper bound
+# on the keys it holds) passes this share of its slots: inserts into a
+# fuller table start to fail.
+CUCKOO_MAX_LOAD = 0.9
+
+
+def _filter_fits(
+    f: BloomFilter | ShardedCuckoo, bloom_bits: int, seq_counter: int
+) -> bool:
+    """Whether a seen filter still serves the crawl: a bloom of the
+    configured size, or a cuckoo that ``seq_counter`` fills to at most
+    CUCKOO_MAX_LOAD."""
+    if isinstance(f, BloomFilter):
+        return f.num_bits == bloom_bits
+    return seq_counter <= CUCKOO_MAX_LOAD * f.slots
+
+
+def load_seen_filter(ck: dict) -> BloomFilter | ShardedCuckoo | None:
+    """The seen filter a crawl checkpoint points to; None when it has
+    none, or its file is missing, torn, or no longer fits the checkpoint
+    (``_filter_fits``). A bad file gives None, never an empty filter,
+    which new_urls would read as "every candidate is new"; the engine
+    rebuilds the filter exactly, from pending ∪ fetched, where it next
+    reads it."""
+    path = ck.get("filter_path")
+    if not path or not os.path.exists(path):
+        return None
+    with open(path, "rb") as fh:
+        blob = fh.read()
+    try:
+        f = SEEN_FILTERS[ck["seen_filter_kind"]].from_bytes(blob)
+    except ValueError:
+        return None
+    return f if _filter_fits(f, ck["bloom_bits"], ck["seq_counter"]) else None
+
+
 def _pin(df: DataFrame) -> DataFrame:
     """A round frame read by several later plans, as a plan leaf: a local
     checkpoint. Every frame built on it analyses and plans a leaf instead
@@ -272,8 +314,7 @@ class CrawlEngine:
         workdir: str,
         batch_size: int = 20,
         max_attempts: int | None = 3,
-        use_bloom: bool = True,
-        use_cuckoo: bool = False,
+        seen_filter_kind: str = "bloom",
         bloom_bits: int = 1 << 20,
         salt_buckets: int = 8,
         fetch_partitions: int | None = None,
@@ -298,8 +339,10 @@ class CrawlEngine:
         self._robots_pred = compile_robots_predicate(self._robots_rules)
         self.batch_size = batch_size
         self.max_attempts = max_attempts
-        self.use_bloom = use_bloom
-        self.use_cuckoo = use_cuckoo
+        # the seen filter's kind, a key of SEEN_FILTERS; checkpointed
+        if seen_filter_kind not in SEEN_FILTERS:
+            raise ValueError(f"unknown seen_filter_kind {seen_filter_kind!r}")
+        self.seen_filter_kind = seen_filter_kind
         self.bloom_bits = bloom_bits
         self.salt_buckets = salt_buckets
         self.fetch_partitions = fetch_partitions
@@ -354,12 +397,11 @@ class CrawlEngine:
         self.seq_counter = 0
         self.versions: dict[str, int] = {}
         self._pool: ThreadPoolExecutor | None = None
-        # the bloom prefilter is read only in the probe-broadcast regime
+        # the seen filter is read only in the probe-broadcast regime
         # (seq_counter > probe_broadcast_threshold): it stays None below
-        # it, and round() builds it once from pending ∪ fetched when the
-        # threshold is first crossed (or after a resume above it)
-        self.seen_bloom: BloomFilter | None = None
-        self.seen_cuckoo = ShardedCuckoo() if use_cuckoo else None
+        # it, and round() builds it from pending ∪ fetched where it first
+        # reads it (_build_seen_filter)
+        self.seen_filter: BloomFilter | ShardedCuckoo | None = None
         # opt-in phase timing: when True, round() adds a "phases" dict
         # (driver-side wall seconds per materialization point) to its
         # metrics; perfbench's traced mode (--trace 1) reads it
@@ -488,15 +530,12 @@ class CrawlEngine:
             "versions": self.versions,
             "batch_size": self.batch_size,
             "bloom_bits": self.bloom_bits,
+            "seen_filter_kind": self.seen_filter_kind,
             "max_attempts": self.max_attempts,
         }
-        if self.seen_bloom is not None:
-            state["bloom_path"] = self.checkpoint.save_filter(
-                self.round_id, self.seen_bloom.to_bytes()
-            )
-        if self.seen_cuckoo is not None:
-            state["cuckoo_path"] = self.checkpoint.save_filter(
-                self.round_id, self.seen_cuckoo.to_bytes(), kind="cuckoo_filter"
+        if self.seen_filter is not None:
+            state["filter_path"] = self.checkpoint.save_filter(
+                self.round_id, self.seen_filter.to_bytes()
             )
         self.checkpoint.save(state)
         # bounded disk: old per-round filter files are unreachable once the
@@ -509,7 +548,7 @@ class CrawlEngine:
     ) -> "CrawlEngine":
         """Rebuild an engine bit-for-bit from the last checkpoint: table
         reads are pinned to the checkpointed snapshot versions, counters
-        restore, and above probe_broadcast_threshold the bloom bitmap
+        restore, and above probe_broadcast_threshold the seen filter
         reloads from its state file (north rule resume-mid-crawl)."""
         ck = CrawlCheckpoint(workdir).load()
         if ck is None:
@@ -528,42 +567,14 @@ class CrawlEngine:
             workdir,
             batch_size=ck["batch_size"],
             bloom_bits=ck["bloom_bits"],
+            seen_filter_kind=ck["seen_filter_kind"],
             **kw,
         )
         eng.round_id = ck["round_id"]
         eng.seq_counter = ck["seq_counter"]
         eng.versions = dict(ck["versions"])
-        if eng.use_bloom and eng.seq_counter > eng.probe_broadcast_threshold:
-            p = ck.get("bloom_path")
-            blob = None
-            if p and os.path.exists(p):
-                with open(p, "rb") as f:
-                    blob = f.read()
-            # missing/corrupt filter state must NOT silently degrade to an
-            # empty bloom (new_urls treats misses as definitely-new →
-            # re-fetch of already-seen URLs): leave it None, and the next
-            # round rebuilds it exactly from the checkpointed pending ∪
-            # fetched
-            if blob is not None and len(blob) * 8 == ck["bloom_bits"]:
-                eng.seen_bloom = BloomFilter.from_bytes(blob)
-        if eng.use_cuckoo:
-            p = ck.get("cuckoo_path")
-            if p and os.path.exists(p):
-                with open(p, "rb") as f:
-                    eng.seen_cuckoo = ShardedCuckoo.from_bytes(f.read())
-            else:
-                # same no-silent-degrade rule as the bloom: rebuild the
-                # deletable filter from the exact seen set (distributed)
-                seen_hashes = (
-                    eng._read_pending()
-                    .select("url_hash")
-                    .unionByName(
-                        eng._read(eng.fetched_tbl, "frontier_fetched").select("url_hash")
-                    )
-                )
-                eng.seen_cuckoo = maintain_sharded_cuckoo(
-                    spark, eng.seen_cuckoo, seen_hashes
-                )
+        if eng.seq_counter > eng.probe_broadcast_threshold:
+            eng.seen_filter = load_seen_filter(ck)
         return eng
 
     # -- seeding ------------------------------------------------------------
@@ -601,6 +612,10 @@ class CrawlEngine:
         driver-page-sized seed lists. No hint (or a large one) keeps the
         two-stage distributed rank so a 10^7-URL sitemap index never
         funnels through one task.
+
+        Seeding starts a crawl: it rewrites every table, and drops the
+        seen filter (the next read past probe_broadcast_threshold builds
+        it from the seeded frontier).
         """
         order_cols = order_cols or ["seed_idx"]
         cand = admit_urls(seeds_df, "raw_url")
@@ -638,15 +653,8 @@ class CrawlEngine:
         # materialize BEFORE fanning out: the two-stage rank's pinned
         # intermediate must be fully cached once so concurrent consumers
         # can't re-sample range boundaries into divergent seq orders.
-        # A live bloom (seeding an engine already past
-        # probe_broadcast_threshold) rides the same job, as in round().
-        if self.seen_bloom is not None:
-            _bf, n = build_bloom_with_count(
-                rows, "url_hash", self.seen_bloom.num_bits, self.seen_bloom.num_hashes
-            )
-            self.seen_bloom = self.seen_bloom.merge(_bf)
-        else:
-            n = rows.count()
+        n = rows.count()
+        self.seen_filter = None
         pool = self._commit_pool()
         futures = [
             pool.submit(self._commit_pending_base, rows),
@@ -684,10 +692,6 @@ class CrawlEngine:
             "round int, scope string, key string, value long",
         )
         self.seq_counter = n
-        if self.seen_cuckoo is not None:
-            self.seen_cuckoo = maintain_sharded_cuckoo(
-                self.spark, self.seen_cuckoo, rows.select("url_hash")
-            )
         for fut in futures:
             fut.result()
         if pinned is not None:
@@ -751,8 +755,9 @@ class CrawlEngine:
         The host's bucket is computed driver-side with a pure-Python
         XXH64 (functions/xxh.py, parity-pinned against the JVM's
         xxhash64 — no 1-row Spark job); only that one partition directory
-        is scanned (SnapshotTable.read(partitions=[bucket]) manifest
-        pruning) and only delta 'del' rows are written, O(matched).
+        of the base is scanned (SnapshotTable.read(partitions=[bucket])
+        manifest pruning) before the merge-on-read view applies the delta,
+        and only delta 'del' rows are written, O(matched).
         Fetched/documents history is untouched.
         Note: purged PENDING urls leave the seen set (the same delete
         semantics as dead URLs); to keep a purged host out permanently,
@@ -765,20 +770,7 @@ class CrawlEngine:
             self.spark, self.versions.get("frontier_pending"), partitions=[bucket]
         )
         delta = self._read(self.pending_delta_tbl, "frontier_pending_delta")
-        adds = delta.where((F.col("op") == "add") & (F.col("host") == host)).drop("op")
-        dels_existing = delta.where(F.col("op") == "del").select(
-            "url", "seq", "attempts", "priority"
-        )
-        live = (
-            base.where(F.col("host") == host)
-            .unionByName(adds)
-            .join(
-                F.broadcast(dels_existing),
-                ["url", "seq", "attempts", "priority"],
-                "left_anti",
-            )
-            .cache()
-        )
+        live = merge_on_read_pending(base, delta).where(F.col("host") == host).cache()
         n = live.count()
         if n:
             self._commit(
@@ -793,22 +785,27 @@ class CrawlEngine:
         return n
 
     # -- one BFS round --------------------------------------------------------
-    # (seen-filter maintenance is fused into each path's materializing job:
-    # a live bloom's delta rides the count job — build_bloom_with_count —
-    # and the opt-in cuckoo runs its per-shard update pass at the old
-    # maintenance point. Both stay fully distributed: per-partition bitmaps
-    # OR-merged on the driver / per-shard updates in executor tasks;
-    # deletes first, so dead URLs leave the seen set before link
-    # insertion. The bloom is live only past probe_broadcast_threshold.)
+    # (the seen filter lives only past probe_broadcast_threshold. Each round
+    # absorbs its new links and deaths after the delta commit, in one
+    # distributed job: update_seen_filter — per-partition bitmaps OR-merged
+    # on the driver for a bloom, per-shard deletes-then-inserts in executor
+    # tasks for a cuckoo, so dead URLs leave it before link insertion.)
 
-    def _build_seen_bloom(self, pending: DataFrame) -> BloomFilter:
-        """Bloom over the exact seen set, pending ∪ fetched — built once,
-        when new_urls first reads it (threshold crossed, or a resume above
-        it with its state file lost)."""
+    def _build_seen_filter(self, pending: DataFrame) -> BloomFilter | ShardedCuckoo:
+        """The seen filter over the exact seen set, pending ∪ fetched —
+        built where new_urls first reads it: when the threshold is
+        crossed, on a resume above it without a usable state file
+        (load_seen_filter), or after a cuckoo reached CUCKOO_MAX_LOAD. A
+        cuckoo is sized from seq_counter, an upper bound on the keys it
+        will hold, at most half full."""
         seen_hashes = pending.select("url_hash").unionByName(
             self._read(self.fetched_tbl, "frontier_fetched").select("url_hash")
         )
-        return build_bloom(seen_hashes, "url_hash", self.bloom_bits)
+        if self.seen_filter_kind == "bloom":
+            return build_bloom(seen_hashes, "url_hash", self.bloom_bits)
+        return maintain_sharded_cuckoo(
+            self.spark, ShardedCuckoo.for_keys(self.seq_counter), seen_hashes
+        )
 
     def round(self) -> dict:
         """Run one crawl round; returns the round's metrics dict
@@ -837,8 +834,8 @@ class CrawlEngine:
         # docstring measurements; ~0.85 s/round at bench batch sizes).
         # Output is exact on both paths, so dispatch never changes it.
         probe = self.seq_counter > self.probe_broadcast_threshold
-        if probe and self.use_bloom and self.seen_bloom is None:
-            self.seen_bloom = self._build_seen_bloom(pending)
+        if probe and self.seen_filter is None:
+            self.seen_filter = self._build_seen_filter(pending)
 
         # the hosts table's row count (parquet footers, no job) bounds the
         # binding set, so budgeted_pop needs no probe job while it fits.
@@ -1026,8 +1023,7 @@ class CrawlEngine:
             fresh = new_urls(
                 cand,
                 seen_urls,
-                bloom=self.seen_bloom if probe else None,
-                cuckoo=self.seen_cuckoo if probe else None,
+                bloom=self.seen_filter,
                 spark=self.spark,
                 probe_broadcast=probe,
             )
@@ -1089,26 +1085,24 @@ class CrawlEngine:
             self.seq_counter += n_new
             _ph["links"] = _time.perf_counter() - _t
 
-            # seen-filter maintenance (probe regime / opt-in cuckoo), over
-            # the new links as written: seq >= seq0 tells them from retries
-            if self.seen_bloom is not None or self.seen_cuckoo is not None:
+            # seen-filter maintenance (probe regime), over the new links as
+            # written (seq >= seq0 tells them from retries) and the deaths
+            if self.seen_filter is not None:
                 _t = _time.perf_counter()
-                added = (
-                    self.spark.read.schema(self._delta_schema())
-                    .parquet(info.paths[-1])
-                    .where((F.col("op") == "add") & (F.col("seq") >= seq0))
-                    .select("url_hash")
-                )
-                if self.seen_bloom is not None:
-                    _bf_delta, _ = build_bloom_with_count(
-                        added, "url_hash", self.seen_bloom.num_bits,
-                        self.seen_bloom.num_hashes,
+                if _filter_fits(self.seen_filter, self.bloom_bits, self.seq_counter):
+                    added = (
+                        self.spark.read.schema(self._delta_schema())
+                        .parquet(info.paths[-1])
+                        .where((F.col("op") == "add") & (F.col("seq") >= seq0))
+                        .select("url_hash")
                     )
-                    self.seen_bloom = self.seen_bloom.merge(_bf_delta)
-                if self.seen_cuckoo is not None:
-                    self.seen_cuckoo = maintain_sharded_cuckoo(
-                        self.spark, self.seen_cuckoo, added, dead.select("url_hash"),
+                    self.seen_filter = update_seen_filter(
+                        self.spark, self.seen_filter, added, dead.select("url_hash")
                     )
+                else:
+                    # a cuckoo these links would fill past CUCKOO_MAX_LOAD:
+                    # the next read rebuilds it, sized from seq_counter
+                    self.seen_filter = None
                 _ph["filters"] = _time.perf_counter() - _t
             if self.compact_every and self.round_id % self.compact_every == 0:
                 _t = _time.perf_counter()

@@ -14,8 +14,9 @@ src/database/operations.py:32-59). At 10^10-URL scale that becomes:
    reclamation (operations.py:108-122 deletes pages) shrink the filter
    instead of poisoning it.
 
-Both filters key on 64-bit hashes (xxhash64(url) on the JVM side; the
-Python-side double hashing derives from blake2b for independence).
+Both filters key on 64-bit hashes (xxhash64(url) on the JVM side); the
+Python side derives its two probe hashes from the key with two splitmix64
+rounds (``_hash_pair_vec``).
 
 Document dedup suite (training-data extensions): exact (fingerprint
 groupBy), MinHash+LSH banding, SimHash, n-gram Jaccard verification,
@@ -29,7 +30,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
@@ -37,12 +38,6 @@ from pyspark.sql.types import BooleanType
 # ---------------------------------------------------------------------------
 # Bloom filter (numpy bitmap, double hashing)
 # ---------------------------------------------------------------------------
-
-
-def _hash_pair(key: int) -> tuple[int, int]:
-    """Two independent 64-bit hashes from a 64-bit key."""
-    d = hashlib.blake2b(int(key).to_bytes(8, "little", signed=True), digest_size=16).digest()
-    return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little")
 
 
 def _hash_pair_vec(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -114,34 +109,16 @@ class BloomFilter:
 def build_bloom(df: DataFrame, key_col: str, num_bits: int = 1 << 23, num_hashes: int = 7) -> BloomFilter:
     """Distributed partitioned-bloom build: per-partition bitmaps in
     executors (mapInPandas), OR-merge on the driver."""
-    nb, nh = num_bits, num_hashes
-
-    def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter(nb, nh)
-        saw = False
-        for batch in batches:
-            keys = batch[key_col].to_numpy(dtype=np.int64)
-            bf.add_many(keys)
-            saw = saw or len(batch) > 0
-        if saw:
-            yield pd.DataFrame({"bits": [bf.to_bytes()]})
-
-    parts = df.select(key_col).mapInPandas(per_partition, "bits binary").collect()
-    out = BloomFilter(nb, nh)
-    for row in parts:
-        out = out.merge(BloomFilter.from_bytes(row["bits"], nh))
-    return out
+    return build_bloom_with_count(df, key_col, num_bits, num_hashes)[0]
 
 
 def build_bloom_with_count(
     df: DataFrame, key_col: str, num_bits: int = 1 << 23, num_hashes: int = 7
 ) -> tuple[BloomFilter, int]:
-    """build_bloom fused with a row count in the SAME job: per-partition
-    (bitmap, rowcount) pairs, OR-merge + sum on the driver. Identical
-    filter to build_bloom (bitwise OR is order-free); saves the separate
-    count() job on paths that need both — the crawl round's per-round
-    new-link materialization is one full job-scheduling round-trip
-    cheaper."""
+    """The partitioned-bloom build with the row count from the SAME job:
+    per-partition (bitmap, rowcount) pairs, OR-merge + sum on the driver
+    (bitwise OR is order-free). A caller that needs both saves a separate
+    count() job."""
     nb, nh = num_bits, num_hashes
 
     def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -161,32 +138,6 @@ def build_bloom_with_count(
         out = out.merge(BloomFilter.from_bytes(row["bits"], nh))
         total += row["n"]
     return out, total
-
-
-_WORKER_BLOOM_CACHE: dict = {}
-
-
-def make_bloom_contains_udf(spark, bloom: BloomFilter):
-    """Broadcast the bitmap; return a pandas UDF Column predicate.
-
-    The deserialized filter is memoized per (worker process, broadcast id)
-    so the bitmap copy happens once per worker, not once per Arrow batch.
-    """
-    import uuid
-
-    b = spark.sparkContext.broadcast((bloom.to_bytes(), bloom.num_hashes))
-    cache_key = uuid.uuid4().hex  # closure constant identifying this filter
-
-    @pandas_udf(BooleanType())
-    def might_contain(keys: pd.Series) -> pd.Series:
-        bf = _WORKER_BLOOM_CACHE.get(cache_key)
-        if bf is None:
-            bf = BloomFilter.from_bytes(b.value[0], b.value[1])
-            _WORKER_BLOOM_CACHE.clear()  # at most one live filter per worker
-            _WORKER_BLOOM_CACHE[cache_key] = bf
-        return pd.Series(bf.contains_many(keys.to_numpy(dtype=np.int64)))
-
-    return might_contain
 
 
 # ---------------------------------------------------------------------------
@@ -312,10 +263,33 @@ class ShardedCuckoo:
     their shard's task, each task rewrites one shard's bytes) — the driver
     only reassembles n_shards small blobs, never touches keys."""
 
-    def __init__(self, num_shards: int = 8, buckets_per_shard: int = 1 << 14):
+    # a lone 128-bucket table took keys past 94% load before its first
+    # failed insert in each of 200 random fills; at 16 buckets some
+    # failed below 90%, the load at which the crawl engine regrows it
+    MIN_BUCKETS = 1 << 7
+    SHARD_BUCKETS = 1 << 14
+
+    def __init__(self, num_shards: int = 8, buckets_per_shard: int = SHARD_BUCKETS):
         self.num_shards = num_shards
         self.buckets_per_shard = buckets_per_shard
         self.shards = [CuckooFilter(buckets_per_shard) for _ in range(num_shards)]
+
+    @classmethod
+    def for_keys(cls, n: int) -> "ShardedCuckoo":
+        """The smallest power-of-two layout that holds ``n`` keys at most
+        half full: one shard of at least MIN_BUCKETS buckets, split into
+        shards of SHARD_BUCKETS buckets once it outgrows one. Shards that
+        large hold within a fraction of a percent of their mean share of
+        the keys; small ones skew, and a skewed shard overflows first."""
+        buckets = cls.MIN_BUCKETS
+        while buckets * CuckooFilter.SLOTS < 2 * n:
+            buckets *= 2
+        shards = max(1, buckets // cls.SHARD_BUCKETS)
+        return cls(shards, buckets // shards)
+
+    @property
+    def slots(self) -> int:
+        return self.num_shards * self.buckets_per_shard * CuckooFilter.SLOTS
 
     def _shard(self, key: int) -> CuckooFilter:
         return self.shards[key % self.num_shards]
@@ -348,11 +322,13 @@ class ShardedCuckoo:
     def from_bytes(cls, data: bytes) -> "ShardedCuckoo":
         import struct
 
-        n, nb = struct.unpack("<II", data[:8])
+        n, nb = struct.unpack("<II", data[:8]) if len(data) >= 8 else (0, 0)
+        size = nb * CuckooFilter.SLOTS * 2
+        if n * size == 0 or len(data) != 8 + n * size:
+            raise ValueError("cuckoo filter state is not one whole filter")
         out = cls.__new__(cls)
         out.num_shards = n
         out.buckets_per_shard = nb
-        size = nb * CuckooFilter.SLOTS * 2
         out.shards = [
             CuckooFilter.from_bytes(data[8 + i * size : 8 + (i + 1) * size], nb)
             for i in range(n)
@@ -380,7 +356,7 @@ def maintain_sharded_cuckoo(
 
     Raises on shard overflow: a failed insert would be a silent false
     negative in the prefilter, which (unlike a false positive) breaks
-    dedup correctness — grow ``buckets_per_shard`` instead.
+    dedup correctness — size the filter with ``ShardedCuckoo.for_keys``.
     """
     n, nb = sc.num_shards, sc.buckets_per_shard
     blobs = spark.sparkContext.broadcast([s.to_bytes() for s in sc.shards])
@@ -428,22 +404,46 @@ def maintain_sharded_cuckoo(
     return out
 
 
-def make_cuckoo_contains_udf(spark, sc: ShardedCuckoo):
-    """Broadcast the sharded table; return a vectorized membership predicate
-    (memoized per worker like the bloom probe)."""
+def update_seen_filter(
+    spark,
+    f: BloomFilter | ShardedCuckoo,
+    new_keys: DataFrame,
+    dead_keys: DataFrame | None = None,
+    key_col: str = "url_hash",
+) -> BloomFilter | ShardedCuckoo:
+    """Absorb one batch of seen-set changes into either filter kind, in
+    one distributed job. A bloom ORs in the bitmap of ``new_keys``; it
+    cannot forget, so ``dead_keys`` stay in it as false positives. A
+    cuckoo deletes ``dead_keys`` then inserts ``new_keys``, shard by
+    shard (``maintain_sharded_cuckoo``)."""
+    if isinstance(f, BloomFilter):
+        return f.merge(build_bloom(new_keys, key_col, f.num_bits, f.num_hashes))
+    return maintain_sharded_cuckoo(spark, f, new_keys, dead_keys, key_col)
+
+
+_WORKER_FILTER_CACHE: dict = {}
+
+
+def make_contains_udf(spark, f: BloomFilter | ShardedCuckoo):
+    """Broadcast a membership filter (either kind); return a pandas UDF
+    Column predicate over its int64 keys.
+
+    The deserialized filter is memoized per (worker process, broadcast id)
+    so the copy happens once per worker, not once per Arrow batch.
+    """
     import uuid
 
-    b = spark.sparkContext.broadcast(sc.to_bytes())
-    cache_key = uuid.uuid4().hex
+    b = spark.sparkContext.broadcast(f)
+    cache_key = uuid.uuid4().hex  # closure constant identifying this filter
 
     @pandas_udf(BooleanType())
     def might_contain(keys: pd.Series) -> pd.Series:
-        f = _WORKER_BLOOM_CACHE.get(cache_key)
-        if f is None:
-            f = ShardedCuckoo.from_bytes(b.value)
-            _WORKER_BLOOM_CACHE.clear()  # at most one live filter per worker
-            _WORKER_BLOOM_CACHE[cache_key] = f
-        return pd.Series(f.contains_many(keys.to_numpy(dtype=np.int64)))
+        live = _WORKER_FILTER_CACHE.get(cache_key)
+        if live is None:
+            live = b.value
+            _WORKER_FILTER_CACHE.clear()  # at most one live filter per worker
+            _WORKER_FILTER_CACHE[cache_key] = live
+        return pd.Series(live.contains_many(keys.to_numpy(dtype=np.int64)))
 
     return might_contain
 
@@ -457,14 +457,14 @@ def new_urls(
     candidates: DataFrame,
     seen: DataFrame,
     url_col: str = "url",
-    bloom: BloomFilter | None = None,
-    cuckoo: ShardedCuckoo | None = None,
+    bloom: BloomFilter | ShardedCuckoo | None = None,
     spark=None,
     probe_broadcast: bool = False,
 ) -> DataFrame:
     """Exactly the set of candidate urls not in `seen` (operations.py:43-59
     batch-upsert semantics), with an optional approximate-membership
-    prefilter (bloom, or the deletable cuckoo variant).
+    prefilter ``bloom``: a BloomFilter, or its deletable ShardedCuckoo
+    variant, over xxhash64(url).
 
     candidates are deduped internally first (dropDuplicates) — the
     reference's executemany upsert keeps the first occurrence.
@@ -476,7 +476,7 @@ def new_urls(
       prefilter-miss branch skipping the join. The right shape when the
       candidate batch is itself huge (the bulk-ingest path): seen should
       then be pre-partitioned/bucketed on the join key so only the
-      candidates shuffle (bench.py does exactly that).
+      candidates shuffle.
     - ``probe_broadcast=True``: probe `seen` with a broadcast semi-join
       of the (prefiltered) candidate urls — ONE full seen scan, ZERO seen
       shuffle — then anti-join the candidates against the broadcast hit
@@ -487,9 +487,10 @@ def new_urls(
       through the driver. Callers should cache() the candidates frame —
       the probe build and the final anti-join both read it.
 
-    The prefilter only shrinks the probe/join: a bloom/cuckoo miss is
-    proof-of-new (no deletes / overflow-checked), a hit is resolved
-    exactly, so output is exact either way.
+    The prefilter only shrinks the probe/join: a miss is proof-of-new (a
+    bloom never forgets; a cuckoo deletes only keys it inserted and
+    raises on overflow), a hit is resolved exactly, so output is exact
+    either way.
 
     When to pass a prefilter (measured, pinned cores, steady state, 32M
     candidates vs 16M pre-partitioned+sorted cached seen): in the
@@ -498,19 +499,13 @@ def new_urls(
     Python/Arrow probe passes (the `tagged` split evaluates the UDF once
     per branch) outweigh the candidate shuffle volume they save once the
     seen side is pre-partitioned (no per-batch seen exchange either way).
-    Pass bloom/cuckoo only where the prefilter removes work the join
-    cannot avoid: the probe_broadcast crawl-round regime (shrinks the
-    broadcast probe set before the full seen scan), or when the seen side
-    is NOT pre-partitioned and hit-rate is low.
+    Pass a prefilter only where it removes work the join cannot avoid:
+    the probe_broadcast crawl-round regime (shrinks the broadcast probe
+    set before the full seen scan), or when the seen side is NOT
+    pre-partitioned and hit-rate is low.
     """
     cands = candidates.dropDuplicates([url_col])
-    might = None
-    if bloom is not None or cuckoo is not None:
-        might = (
-            make_bloom_contains_udf(spark, bloom)
-            if bloom is not None
-            else make_cuckoo_contains_udf(spark, cuckoo)
-        )
+    might = make_contains_udf(spark, bloom) if bloom is not None else None
     if probe_broadcast:
         probe = cands.select(url_col)
         if might is not None:

@@ -561,8 +561,8 @@ class CrawlCheckpoint:
             json.dump(state, f, indent=1)
         os.replace(tmp, self.path)
 
-    def save_filter(self, round_id: int, blob: bytes, kind: str = "seen_filter") -> str:
-        p = os.path.join(self.dir, f"{kind}_r{round_id}.bin")
+    def save_filter(self, round_id: int, blob: bytes) -> str:
+        p = os.path.join(self.dir, f"seen_filter_r{round_id}.bin")
         tmp = p + ".tmp"
         with open(tmp, "wb") as f:
             f.write(blob)

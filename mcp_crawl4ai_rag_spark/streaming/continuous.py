@@ -28,11 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import os
-
 from mcp_crawl4ai_rag_spark.functions.urls import admit_urls
-from mcp_crawl4ai_rag_spark.operators.crawl import merge_on_read_pending
-from mcp_crawl4ai_rag_spark.operators.dedup import BloomFilter, build_bloom, new_urls
+from mcp_crawl4ai_rag_spark.operators.crawl import (
+    load_seen_filter,
+    merge_on_read_pending,
+)
+from mcp_crawl4ai_rag_spark.operators.dedup import new_urls, update_seen_filter
 from mcp_crawl4ai_rag_spark.operators.politeness import robots_allowed
 from mcp_crawl4ai_rag_spark.operators.ranking import with_global_rank
 from mcp_crawl4ai_rag_spark.plans.snapshots import CrawlCheckpoint, SnapshotTable
@@ -116,13 +117,14 @@ def start_link_ingest(
     ``CrawlEngine.resume`` sees streamed links:
 
     - versions pointer + seq_counter advance to cover the admitted rows;
-    - the bloom state file, present once the engine has crossed its
-      probe_broadcast_threshold, absorbs the admitted url_hashes (a stale
-      bloom would let a re-discovered streamed URL skip the exact
-      anti-join and double-insert); below it there is no file, and a
-      resume above it rebuilds the bloom from the seen set;
-    - a cuckoo state file, if present, is invalidated — resume then
-      rebuilds it from the exact seen set (its documented recovery path).
+    - the seen-filter state file (bloom or cuckoo), present once the
+      engine has crossed its probe_broadcast_threshold, absorbs the
+      admitted url_hashes through the engine's own load and update path
+      (a stale filter would let a re-discovered streamed URL skip the
+      exact anti-join and double-insert). When the file does not load,
+      or a cuckoo would fill up, the checkpoint drops it instead; below
+      the threshold there is no file. Either way a resume above the
+      threshold rebuilds the filter from the seen set.
     """
     base_tbl = SnapshotTable(workdir, "frontier_pending")
     delta_tbl = SnapshotTable(workdir, "frontier_pending_delta")
@@ -171,19 +173,16 @@ def start_link_ingest(
         if ck is not None:
             ck["versions"]["frontier_pending_delta"] = info.version
             ck["seq_counter"] = max(int(ck.get("seq_counter", 0)), base_seq + n)
-            bp = ck.get("bloom_path")
-            if bp and os.path.exists(bp):
-                with open(bp, "rb") as f:
-                    bloom = BloomFilter.from_bytes(f.read())
-                delta_bloom = build_bloom(
-                    rows.select("url_hash"), "url_hash", bloom.num_bits, bloom.num_hashes
+            # fit-checked against the advanced seq_counter
+            seen_filter = load_seen_filter(ck)
+            ck.pop("filter_path", None)
+            if seen_filter is not None:
+                seen_filter = update_seen_filter(
+                    spark, seen_filter, rows.select("url_hash")
                 )
-                ck["bloom_path"] = ckp.save_filter(
-                    ck["round_id"], bloom.merge(delta_bloom).to_bytes()
+                ck["filter_path"] = ckp.save_filter(
+                    ck["round_id"], seen_filter.to_bytes()
                 )
-            cp = ck.pop("cuckoo_path", None)
-            if cp and os.path.exists(cp):
-                os.remove(cp)  # force exact rebuild on resume
             ckp.save(ck)
         pinned.unpersist()
 

@@ -199,38 +199,56 @@ def test_resume_bit_for_bit(spark, tmp_path, web):
     assert fa == fb
 
 
-def test_crawl_with_cuckoo_filter(spark, tmp_path):
-    """Cuckoo-filter variant (deletable seen-set, distributed shard
-    maintenance, wired as the new_urls prefilter) produces identical
-    results."""
-    web = generate_web(seed=7, n_hosts=4, n_pages=60, n_seeds=2)
-    budgets = {h: (1e9, 1e9) for h, _, _ in web.hosts}
-    sim, eng = run_pair(
-        spark,
-        tmp_path,
-        web,
-        batch_size=20,
-        host_budgets=budgets,
-        use_bloom=False,
-        use_cuckoo=True,
-    )
-    assert_equivalent(sim, eng)
-    # the deletable filter is live state: resumes from its checkpoint file
-    resumed = CrawlEngine.resume(
-        spark,
-        web.corpus_df(spark),
-        web.robots_df(spark),
-        str(tmp_path / "crawl"),
-        use_bloom=False,
-        use_cuckoo=True,
-    )
+def test_crawl_with_cuckoo_filter(spark, tmp_path, monkeypatch):
+    """The cuckoo seen filter (deletable, shard-maintained) in the probe
+    regime, where new_urls reads it: a crawl stopped after 3 rounds
+    resumes with the checkpointed kind and a loaded filter holding the
+    seen set, the filter grows past its build size without raising, and
+    the resumed crawl equals the uninterrupted oracle bit-for-bit."""
     import numpy as np
 
+    from mcp_crawl4ai_rag_spark.operators import crawl as crawl_mod
+
+    # about 500 URLs: past 90% of the smallest cuckoo's 512 slots
+    web = generate_web(seed=7, n_hosts=4, n_pages=600, n_seeds=2)
+    budgets = {h: (1e9, 1e9) for h, _, _ in web.hosts}
+    build_slots = []
+    real_build = crawl_mod.maintain_sharded_cuckoo
+
+    def recording_build(spark_, sc, *a, **k):
+        build_slots.append(sc.slots)
+        return real_build(spark_, sc, *a, **k)
+
+    monkeypatch.setattr(crawl_mod, "maintain_sharded_cuckoo", recording_build)
+    sim = CrawlSimulator(
+        web.corpus, web.seeds, robots=web.robots, host_budgets=budgets,
+        batch_size=120, max_attempts=3, max_rounds=200,
+    ).run()
+    corpus_df, robots_df = web.corpus_df(spark), web.robots_df(spark)
+    hosts_df = spark.createDataFrame(
+        [(h, c, r) for h, (c, r) in budgets.items()],
+        "host string, capacity double, refill_rate double",
+    )
+    workdir = str(tmp_path / "crawl")
+    part = CrawlEngine(
+        spark, corpus_df, robots_df, hosts_df, workdir, batch_size=120,
+        max_attempts=3, seen_filter_kind="cuckoo", probe_broadcast_threshold=0,
+    )
+    part.seed(web.seeds)
+    for _ in range(3):
+        part.round()
+    resumed = CrawlEngine.resume(
+        spark, corpus_df, robots_df, workdir, probe_broadcast_threshold=0
+    )
+    assert resumed.seen_filter_kind == "cuckoo"
     seen_hashes = np.array(
-        [r["url_hash"] for r in eng.frontier().select("url_hash").collect()],
+        [r["url_hash"] for r in resumed.frontier().select("url_hash").collect()],
         dtype=np.int64,
     )
-    assert resumed.seen_cuckoo.contains_many(seen_hashes).all()
+    assert resumed.seen_filter.contains_many(seen_hashes).all()
+    resumed.run(max_rounds=200)
+    assert_equivalent(sim, resumed)
+    assert build_slots[-1] > build_slots[0], build_slots
 
 
 def test_resume_rebuilds_lost_filter_state(spark, tmp_path, web):
@@ -264,7 +282,7 @@ def test_resume_rebuilds_lost_filter_state(spark, tmp_path, web):
     for _ in range(3):
         part.round()
     ck = json.load(open(str(tmp_path / "part" / "CHECKPOINT.json")))
-    os.remove(ck["bloom_path"])  # simulate lost filter state
+    os.remove(ck["filter_path"])  # simulate lost filter state
     resumed = CrawlEngine.resume(
         spark, corpus_df, robots_df, str(tmp_path / "part"), probe_broadcast_threshold=0
     )

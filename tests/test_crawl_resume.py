@@ -4,10 +4,10 @@
   leaves no Spark job of its own running, does not advance
   CHECKPOINT.json, and a resume then finishes bit-for-bit equal to an
   uninterrupted crawl.
-- Below probe_broadcast_threshold no bloom is built or checkpointed.
-  When a crawl crosses the threshold, the bloom is built once, from
-  pending ∪ fetched, and checkpointed every round from then on; the crawl
-  still equals the CrawlSimulator oracle.
+- Below probe_broadcast_threshold neither seen-filter kind runs a filter
+  job or writes a filter file. When a crawl crosses the threshold, the
+  bloom is built once, from pending ∪ fetched, and checkpointed every
+  round from then on; the crawl still equals the CrawlSimulator oracle.
 """
 
 from __future__ import annotations
@@ -82,8 +82,8 @@ def test_failed_round_leaves_no_job_and_resumes_bit_for_bit(
     before = ck_path.read_bytes()
     # below probe_broadcast_threshold the seen filter is neither built nor
     # checkpointed
-    assert eng.seen_bloom is None
-    assert "bloom_path" not in json.loads(before)
+    assert eng.seen_filter is None
+    assert "filter_path" not in json.loads(before)
 
     def boom(*_a, **_k):
         raise RuntimeError("injected fault")
@@ -106,7 +106,7 @@ def test_failed_round_leaves_no_job_and_resumes_bit_for_bit(
     assert resumed.round_id == 2
     resumed.run(max_rounds=200)
     assert _final_state(resumed) == uninterrupted
-    assert "bloom_path" not in CrawlCheckpoint(workdir).load()
+    assert "filter_path" not in CrawlCheckpoint(workdir).load()
 
 
 def test_seen_filter_built_once_when_threshold_crossed(spark, web, tmp_path, monkeypatch):
@@ -122,7 +122,7 @@ def test_seen_filter_built_once_when_threshold_crossed(spark, web, tmp_path, mon
     real_save = CrawlCheckpoint.save
 
     def recording_save(self, state):
-        saves.append((state["round_id"], state["seq_counter"], "bloom_path" in state))
+        saves.append((state["round_id"], state["seq_counter"], "filter_path" in state))
         return real_save(self, state)
 
     monkeypatch.setattr(crawl_mod, "build_bloom", counting_build)
@@ -146,4 +146,30 @@ def test_seen_filter_built_once_when_threshold_crossed(spark, web, tmp_path, mon
         spark, web.corpus_df(spark), web.robots_df(spark), str(tmp_path / "crawl"),
         probe_broadcast_threshold=threshold,
     )
-    assert np.array_equal(resumed.seen_bloom.bits, eng.seen_bloom.bits)
+    assert np.array_equal(resumed.seen_filter.bits, eng.seen_filter.bits)
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_no_seen_filter_below_threshold(spark, web, tmp_path, monkeypatch, kind):
+    def boom(*_a, **_k):
+        raise AssertionError("seen-filter job below the threshold")
+
+    for job in ("build_bloom", "maintain_sharded_cuckoo", "update_seen_filter"):
+        monkeypatch.setattr(crawl_mod, job, boom)
+    corpus_df, robots_df, hosts_df = _frames(spark, web)
+    workdir = tmp_path / "crawl"
+    eng = CrawlEngine(
+        spark, corpus_df, robots_df, hosts_df, str(workdir), batch_size=BATCH,
+        max_attempts=3, seen_filter_kind=kind,
+    )
+    eng.seed(web.seeds)
+    for _ in range(2):
+        eng.round()
+    assert eng.seen_filter is None
+    ck = CrawlCheckpoint(str(workdir)).load()
+    assert ck["seen_filter_kind"] == kind
+    assert "filter_path" not in ck
+    assert not list(workdir.glob("*.bin"))
+    resumed = CrawlEngine.resume(spark, corpus_df, robots_df, str(workdir))
+    assert resumed.seen_filter_kind == kind
+    assert resumed.seen_filter is None

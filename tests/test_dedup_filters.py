@@ -107,6 +107,25 @@ def test_sharded_cuckoo_distributed_maintenance(spark):
     assert (sc2.contains_many(sample) == seq.contains_many(sample)).all()
 
 
+def test_sharded_cuckoo_for_keys_sizing():
+    """Power-of-two layouts at most half full: one shard while small,
+    SHARD_BUCKETS-bucket shards once larger; state that is not one whole
+    filter is refused."""
+    S = D.ShardedCuckoo
+    small = S.for_keys(0)
+    assert (small.num_shards, small.buckets_per_shard) == (1, S.MIN_BUCKETS)
+    for n in (1, 256, 257, 100_000, 1_000_000):
+        sc = S.for_keys(n)
+        assert 2 * n <= sc.slots < max(4 * n, 2 * small.slots)
+        assert sc.buckets_per_shard <= S.SHARD_BUCKETS
+    assert S.for_keys(1_000_000).num_shards == 2_097_152 // 4 // S.SHARD_BUCKETS
+    blob = S.for_keys(10).to_bytes()
+    with pytest.raises(ValueError):
+        S.from_bytes(blob[:-2])
+    with pytest.raises(ValueError):
+        S.from_bytes(b"")
+
+
 def test_cuckoo_overflow_raises(spark):
     tiny = D.ShardedCuckoo(num_shards=2, buckets_per_shard=1 << 4)  # 128 slots
     many = spark.range(10_000).select(F.xxhash64("id").alias("url_hash"))
@@ -131,7 +150,7 @@ def test_new_urls_with_cuckoo(spark):
     )
     got = sorted(
         r["url"]
-        for r in D.new_urls(cands, seen, cuckoo=sc, spark=spark).select("url").collect()
+        for r in D.new_urls(cands, seen, bloom=sc, spark=spark).select("url").collect()
     )
     assert got == expected
 

@@ -254,6 +254,75 @@ def test_streaming_link_ingest(spark, tmp_path):
         assert u in fetched
 
 
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_streaming_ingest_absorbs_into_seen_filter(spark, tmp_path, kind):
+    """Past probe_broadcast_threshold the checkpoint points to a seen-filter
+    file. A streamed batch is absorbed into it, so a resume loads a filter
+    holding every admitted url_hash, and the resumed crawl fetches each
+    streamed URL exactly once although its pages link to them again."""
+    import numpy as np
+
+    from mcp_crawl4ai_rag_spark.operators.crawl import CrawlEngine
+    from mcp_crawl4ai_rag_spark.plans.snapshots import CrawlCheckpoint
+    from mcp_crawl4ai_rag_spark.sources.synthetic_web import generate_web
+    from mcp_crawl4ai_rag_spark.streaming.continuous import start_link_ingest
+
+    web = generate_web(seed=21, n_hosts=3, n_pages=40, n_seeds=2)
+    workdir = str(tmp_path / "wd")
+    hosts_df = spark.createDataFrame(
+        [(h, 1e9, 1e9) for h, _, _ in web.hosts],
+        "host string, capacity double, refill_rate double",
+    )
+    robots_df = web.robots_df(spark)
+    eng = CrawlEngine(
+        spark, web.corpus_df(spark), robots_df, hosts_df, workdir, batch_size=10,
+        max_attempts=3, seen_filter_kind=kind, probe_broadcast_threshold=0,
+    )
+    eng.seed(web.seeds)
+    eng.round()
+    filter_before = CrawlCheckpoint(workdir).load()["filter_path"]
+    assert os.path.exists(filter_before)
+
+    pre = {r["url"] for r in eng.frontier().collect()}
+    linked = {u for p in web.corpus.values() for u in p["out_links"]}
+    streamed_new = sorted(
+        u
+        for u, p in web.corpus.items()
+        if p["status_code"] == 200 and p["spans"] and u not in pre and u in linked
+    )[:3]
+    assert len(streamed_new) == 3
+    links_dir = tmp_path / "links"
+    links_dir.mkdir()
+    with open(links_dir / "batch1.json", "w") as f:
+        for i, href in enumerate(streamed_new + [sorted(pre)[0]]):
+            f.write(json.dumps(
+                {"href": href, "parent_url": "stream", "link_pos": i, "depth": 0}
+            ) + "\n")
+    q = start_link_ingest(
+        spark, str(links_dir), workdir, robots_df, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(60)
+    for _ in range(20):
+        if not q.isActive:
+            break
+        time.sleep(1)
+
+    resumed = CrawlEngine.resume(
+        spark, web.corpus_df(spark), robots_df, workdir, probe_broadcast_threshold=0
+    )
+    assert resumed.seen_filter_kind == kind
+    admitted = np.array(
+        [r["url_hash"] for r in resumed._read_pending().collect() if r["url"] in streamed_new],
+        dtype=np.int64,
+    )
+    assert len(admitted) == len(streamed_new)
+    assert resumed.seen_filter.contains_many(admitted).all()
+    resumed.run(max_rounds=50)
+    fetched = [r["url"] for r in resumed.crawl_order().collect()]
+    for u in streamed_new:
+        assert fetched.count(u) == 1, u
+
+
 def test_streaming_ingest_after_reprioritize(spark, tmp_path):
     """Regression for the delete-key divergence: reprioritize() emits an
     equality 'del' at the old priority plus an 'add' at the new one with
