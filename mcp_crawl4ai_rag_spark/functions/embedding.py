@@ -15,8 +15,10 @@ Query-mode embeddings prepend the instruction prefix the reference uses
 Cosine similarity has two paths:
 - ``cosine_sim`` — pure Column fold (zip_with + aggregate), JVM-side; exact
   sequential double-precision sum matching the DuckDB oracle.
-- ``cosine_topk_pandas`` — numpy matrix path for the brute-force ANN
-  baseline (one BLAS matmul per Arrow batch; the 100 TB scale path).
+- ``cosine_rows`` — the numpy kernel over a batch of rows: the same
+  sequential fold below ``BLAS_DIM_THRESHOLD``, one BLAS matvec at or
+  above it. ``make_cosine_batch_udf`` and ``search.rag_query``'s Arrow
+  pass both call it.
 """
 
 from __future__ import annotations
@@ -142,20 +144,43 @@ def cosine_sim(vec_col: Column, query: list[float] | Column) -> Column:
     return dot / (nx * ny)
 
 
+# Above this dimensionality the Catalyst zip_with/aggregate fold (which
+# expands to a per-element expression tree) loses to one BLAS matvec per
+# Arrow batch. The reference's production vectors are 2560-dim halfvec
+# (src/database/client.py:131, src/embedding/config.py:24) — firmly in
+# BLAS territory; the 64-dim oracle fixtures stay on the exact
+# sequential fold so the DuckDB hash gate remains bit-stable.
+BLAS_DIM_THRESHOLD = 256
+
+
+def cosine_rows(m: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Cosine of each row of the float64 matrix ``m`` against ``q``.
+
+    Below BLAS_DIM_THRESHOLD the sums are left-to-right cumsum folds, bit-
+    equal to ``cosine_sim``; at or above it, one BLAS matvec (pairwise
+    sums, equal to the fold within float rounding). A zero-norm row
+    scores 0.0 on both paths (``cosine_sim`` divides by zero there)."""
+    if m.shape[1] != q.shape[0]:
+        raise ValueError(
+            f"cosine: embedding dim {m.shape[1]} != query dim {q.shape[0]}"
+        )
+    if q.shape[0] >= BLAS_DIM_THRESHOLD:
+        norms = np.linalg.norm(m, axis=1)
+        norms[norms == 0] = 1.0
+        return m @ q / (norms * np.linalg.norm(q))
+    dot = np.cumsum(m * q, axis=1)[:, -1]
+    nx = np.sqrt(np.cumsum(m * m, axis=1)[:, -1])
+    nx[nx == 0] = 1.0
+    return dot / (nx * np.sqrt(np.cumsum(q * q)[-1]))
+
+
 def make_cosine_batch_udf(query: list[float]):
-    """Numpy-vectorized cosine vs a fixed query — one matmul per Arrow batch."""
+    """Numpy-vectorized cosine vs a fixed query, one ``cosine_rows`` call
+    per Arrow batch."""
     q = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(q)
 
     @pandas_udf("double")
     def cos(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)
-        if m.shape[1] != q.shape[0]:
-            raise ValueError(
-                f"cosine: embedding dim {m.shape[1]} != query dim {q.shape[0]}"
-            )
-        norms = np.linalg.norm(m, axis=1)
-        norms[norms == 0] = 1.0
-        return pd.Series(m @ q / (norms * qn))
+        return pd.Series(cosine_rows(np.vstack(vecs.to_numpy()).astype(np.float64), q))
 
     return cos

@@ -28,7 +28,7 @@ its small table and metrics appends one driver-written file. A steady
 round writes about a dozen files.
 
 Round frames: the popped batch and the fetched pages are local
-checkpoints (``_pin``), so the plans built on them stay small and the
+checkpoints (``pins.pin``), so the plans built on them stay small and the
 fetch runs exactly once; the stats collect is its one materializing job
 and also yields the popped count. A steady round runs 18 Spark jobs in 7
 SQL executions.
@@ -94,6 +94,7 @@ from mcp_crawl4ai_rag_spark.operators.politeness import (
     compile_robots_predicate,
     robots_allowed,
 )
+from mcp_crawl4ai_rag_spark.pins import pin, unpin
 from mcp_crawl4ai_rag_spark.plans.snapshots import (
     CrawlCheckpoint,
     SnapshotInfo,
@@ -284,24 +285,6 @@ def load_seen_filter(ck: dict) -> BloomFilter | ShardedCuckoo | None:
     except ValueError:
         return None
     return f if _filter_fits(f, ck["bloom_bits"], ck["seq_counter"]) else None
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """A round frame read by several later plans, as a plan leaf: a local
-    checkpoint. Every frame built on it analyses and plans a leaf instead
-    of the whole upstream tree. Its pre-result stages run now; the first
-    action computes the rows once and keeps them on the executors,
-    spilling to disk rather than dropping them — so a fetch is never
-    silently re-run, and a lost executor fails the round (resume redoes
-    it bit-for-bit) instead. Release with ``_unpin``."""
-    return df.localCheckpoint(eager=False)
-
-
-def _unpin(df: DataFrame | None) -> None:
-    """Drop a ``_pin`` frame's rows: they are the blocks of the RDD under
-    its LogicalRDD leaf, which DataFrame.unpersist does not reach."""
-    if df is not None:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 class CrawlEngine:
@@ -840,7 +823,7 @@ class CrawlEngine:
         # the hosts table's row count (parquet footers, no job) bounds the
         # binding set, so budgeted_pop needs no probe job while it fits.
         # The pop's rows are computed by the fetch stage's first job.
-        popped = _pin(
+        popped = pin(
             budgeted_pop(
                 pending, hosts, self.batch_size,
                 hosts_rows=self.hosts_tbl.num_rows(self.versions.get("hosts")),
@@ -883,7 +866,7 @@ class CrawlEngine:
                 joined = fetch_input.join(F.broadcast(pages), "url", "left")
             # prebuilt trees (__init__ _rx), one projection per dependency
             # level: status + clean_spans, then text, then outcome
-            enriched = _pin(
+            enriched = pin(
                 joined.withColumns(
                     {"status": self._rx["status"], "clean_spans": self._rx["clean_spans"]}
                 )
@@ -1148,8 +1131,8 @@ class CrawlEngine:
             raise
         finally:
             # every reader of these rows has been joined
-            _unpin(popped)
-            _unpin(enriched)
+            unpin(popped)
+            unpin(enriched)
             if probe and cand is not None:
                 cand.unpersist()
             if pinned is not None:

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from mcp_crawl4ai_rag_spark.functions.chunking import chunk_documents
 from mcp_crawl4ai_rag_spark.functions.embedding import DEFAULT_DIM, make_hash_embed_udf
+from mcp_crawl4ai_rag_spark.pins import pin, unpin
 
 
 def unprocessed_documents(
@@ -106,11 +107,18 @@ class ChunkStore:
         limit: int | None = None,
     ) -> int:
         """One processor micro-batch against the store; returns new-chunk
-        count (the reference's batch manager loop, processor/core.py:160-208)."""
-        new_chunks = process_documents(
-            documents, self.read(), embed_dim, scope_prefix, limit
+        count (the reference's batch manager loop, processor/core.py:160-208).
+
+        The new chunks are pinned, so the unprocessed scan, the chunker and
+        the embedder run once: the count computes them, the append writes
+        the pinned rows."""
+        new_chunks = pin(
+            process_documents(documents, self.read(), embed_dim, scope_prefix, limit)
         )
-        n = new_chunks.count()
-        if n:
-            self.append(new_chunks)
+        try:
+            n = new_chunks.count()
+            if n:
+                self.append(new_chunks)
+        finally:
+            unpin(new_chunks)
         return n

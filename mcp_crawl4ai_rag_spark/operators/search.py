@@ -16,26 +16,33 @@ Reference semantics:
 - rerank (src/local_reranker.py:96-145): a cross-encoder; stubbed as a
   deterministic hash score, sort desc (apple-dev-mcp.py:189-192 shape).
 - stats rollup: frontend/api.py:276-301.
+
+Two forms of the hybrid query. ``vector_topk``, ``keyword_search`` and
+``hybrid_merge`` are lazy Spark plans, one per contract query (each has a
+DuckDB oracle). ``rag_query`` serves the whole query eagerly in one pass:
+a single ``mapInArrow`` scan scores every chunk and keeps each
+partition's top-2k vector rows and top-2k keyword hits, at most 2·2k rows
+per partition reach the driver, and ``merge_tiers`` (the pure-Python
+twin of ``hybrid_merge``) merges them there. One Spark job, one stage,
+one read of the chunk table; the result is a local relation.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StructField, StructType
 
 from mcp_crawl4ai_rag_spark.functions.embedding import (
+    BLAS_DIM_THRESHOLD,
+    cosine_rows,
     cosine_sim,
     make_cosine_batch_udf,
 )
-
-# Above this dimensionality the Catalyst zip_with/aggregate fold (which
-# expands to a per-element expression tree) loses to one BLAS matvec per
-# Arrow batch. The reference's production vectors are 2560-dim halfvec
-# (src/database/client.py:131, src/embedding/config.py:24) — firmly in
-# BLAS territory; the 64-dim oracle fixtures stay on the exact
-# sequential fold so the DuckDB hash gate remains bit-stable.
-BLAS_DIM_THRESHOLD = 256
-
 
 def vector_topk(
     chunks: DataFrame,
@@ -155,6 +162,75 @@ def hybrid_merge(
     return ordered.limit(k).select("id", "url", "content", "similarity", "tier")
 
 
+# candidate order of each tier, as Arrow sort keys; nulls sort last, as
+# under Spark's DESC
+VECTOR_ORDER = [("similarity", "descending"), ("id", "ascending")]
+KEYWORD_ORDER = [("url", "descending"), ("id", "ascending")]
+
+
+def _top(t: pa.Table, n: int, order: list) -> pa.Table:
+    return t.take(pc.sort_indices(t, sort_keys=order, null_placement="at_end")[:n])
+
+
+def _similarity(emb: pa.Array, q: np.ndarray) -> pa.Array:
+    """Cosine of each embedding against q; null where the embedding is null."""
+    present = emb.filter(emb.is_valid())
+    lengths = present.value_lengths()
+    wrong = pc.not_equal(lengths, len(q))
+    if pc.any(wrong).as_py():
+        raise ValueError(
+            f"rag_query: embedding dim mismatch — query has {len(q)} dims, "
+            f"row has {pc.filter(lengths, wrong)[0]}"
+        )
+    m = present.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    valid = emb.is_valid().to_numpy(zero_copy_only=False)
+    sims = np.zeros(len(emb))
+    sims[valid] = cosine_rows(m.reshape(len(present), len(q)), q)
+    return pa.array(sims, mask=~valid)
+
+
+def _candidate_pass(qvec: list[float], n: int, keyword: bool):
+    """The mapInArrow body: one partition's top-n rows with an embedding
+    by VECTOR_ORDER (``vector`` true) and, when ``keyword``, its top-n
+    keyword hits by KEYWORD_ORDER (``vector`` false)."""
+    q = np.asarray(qvec, dtype=np.float64)
+
+    def run(batches):
+        vec, kw = [], []
+        for b in batches:
+            emb = b.column("embedding")
+            t = pa.Table.from_batches([b]).drop_columns(["embedding"])
+            t = t.append_column("similarity", _similarity(emb, q))
+            vec.append(_top(t.filter(emb.is_valid()), n, VECTOR_ORDER))
+            if keyword:
+                kw.append(_top(t.filter(t.column("__kw")), n, KEYWORD_ORDER))
+        for tops, order, flag in ((vec, VECTOR_ORDER, True), (kw, KEYWORD_ORDER, False)):
+            if tops:
+                top = _top(pa.concat_tables(tops), n, order).select(
+                    ["id", "url", "content", "similarity"]
+                )
+                yield from top.append_column(
+                    "vector", pa.array([flag] * len(top), pa.bool_())
+                ).to_batches()
+
+    return run
+
+
+def merge_tiers(vector_hits: list, keyword_hits: list, k: int) -> list:
+    """The tiered merge of hybrid_merge, in pure Python, for driver-sized
+    inputs. vector_hits: (id, url, content, similarity) in vector order;
+    keyword_hits: (id, url, content) in keyword order. Returns the first k
+    (id, url, content, similarity, tier): tier 0 = in both (min(1,
+    1.2·similarity), keyword order), tier 1 = vector only (vector order),
+    tier 2 = keyword only (0.5, keyword order)."""
+    sim = {h[0]: h[3] for h in vector_hits}
+    in_kw = {h[0] for h in keyword_hits}
+    both = [(i, u, c, min(1.0, sim[i] * 1.2), 0) for i, u, c in keyword_hits if i in sim]
+    vector_only = [(i, u, c, s, 1) for i, u, c, s in vector_hits if i not in in_kw]
+    keyword_only = [(i, u, c, 0.5, 2) for i, u, c in keyword_hits if i not in sim]
+    return (both + vector_only + keyword_only)[:k]
+
+
 def rag_query(
     chunks: DataFrame,
     query: str,
@@ -168,45 +244,72 @@ def rag_query(
     """The full RAG query pipeline (perform_rag_query,
     apple-dev-mcp.py:219-353): embed query (instruction prefix) → vector
     top-2k [∪ keyword top-2k → tiered merge] → optional rerank → top-k.
-    chunks needs (id, url, content, embedding).
+    chunks needs (id, url, content, embedding), ids unique and non-null.
+
+    Eager: the call runs one Spark job of one stage, a single mapInArrow
+    scan of chunks that computes the cosine (``cosine_rows``) and the
+    ILIKE flag of every row and keeps each partition's top-2k vector rows
+    and top-2k keyword hits, so at most 2·2k rows per partition reach the
+    driver. ``merge_tiers`` merges them there. Rows with a null embedding
+    are never vector candidates; an embedding whose length is not
+    embed_dim raises. The result is the same columns as the
+    ``vector_topk → keyword_search → hybrid_merge`` composition (id, url,
+    content, similarity, tier; without hybrid: id_col, url, content,
+    similarity), returned as a local relation: collecting it runs no job.
 
     keyword_ranker: 'ilike' = the reference's containment+url-order tier
     (exact parity); 'bm25' = relevance-ranked keyword tier (bm25_rank
-    over the query's whitespace terms) — same merge semantics, better
-    keyword ordering.
+    over the query's whitespace terms, run as its own Spark plan) — same
+    merge semantics, better keyword ordering. rerank applies
+    ``rerank_stub`` to the result.
 
     embed_dim MUST match the chunks table's embedding dimensionality (the
     default matches the 64-dim test fixtures; production is 2560 per
-    src/embedding/config.py:24). It is an explicit parameter — not probed
-    with .first() — so constructing the query plan launches no Spark job."""
+    src/embedding/config.py:24)."""
     from mcp_crawl4ai_rag_spark.functions.embedding import embed_query_py
 
     q = query.strip()
-    qvec = embed_query_py(q, embed_dim)
-    v = vector_topk(chunks, qvec, k=k * 2, id_col=id_col)
-    if hybrid:
-        if keyword_ranker == "bm25":
-            kw = (
-                bm25_rank(chunks, q.split(), k=k * 2, id_col=id_col)
-                .withColumn(
-                    "__kw_rank",
-                    F.row_number().over(
-                        Window.orderBy(F.desc("score"), F.asc(id_col))
-                    ),
-                )
-                .select(id_col, "url", "content", "__kw_rank")
-            )
-            merged = hybrid_merge(
-                v, kw, k=k, id_col=id_col, keyword_rank_col="__kw_rank"
-            )
-        else:
-            kw = keyword_search(chunks, q, k=k * 2, id_col=id_col)
-            merged = hybrid_merge(v, kw, k=k, id_col=id_col)
+    n = 2 * k
+    ilike = hybrid and keyword_ranker != "bm25"
+    src = chunks.select(F.col(id_col).alias("id"), "url", "content", "embedding")
+    if ilike:
+        src = src.withColumn("__kw", F.lower(F.col("content")).contains(q.lower()))
+    fields = {f.name: f for f in src.schema.fields}
+    cand_schema = StructType(
+        [fields["id"], fields["url"], fields["content"],
+         StructField("similarity", DoubleType()), StructField("vector", BooleanType())]
+    )
+    cand = src.mapInArrow(
+        _candidate_pass(embed_query_py(q, embed_dim), n, ilike), cand_schema
+    ).toArrow()
+
+    def driver_top(vector: bool, order: list, cols: tuple) -> list:
+        t = _top(cand.filter(pc.equal(cand.column("vector"), vector)), n, order)
+        return list(zip(*(t.column(c).to_pylist() for c in cols)))
+
+    vec = driver_top(True, VECTOR_ORDER, ("id", "url", "content", "similarity"))
+    out = [fields["id"], fields["url"], fields["content"], StructField("similarity", DoubleType())]
+    if not hybrid:
+        rows = vec[:k]
+        out[0] = StructField(id_col, fields["id"].dataType)
     else:
-        merged = v.limit(k).select(id_col, "url", "content", "similarity")
-    if rerank:
-        merged = rerank_stub(merged, q)
-    return merged
+        if keyword_ranker == "bm25":
+            kw = [
+                (r[id_col], r["url"], r["content"])
+                for r in bm25_rank(chunks, q.split(), k=n, id_col=id_col).collect()
+            ]
+        else:
+            kw = driver_top(False, KEYWORD_ORDER, ("id", "url", "content"))
+        rows = merge_tiers(vec, kw, k)
+        out.append(StructField("tier", IntegerType()))
+    schema = StructType(out)
+    result = chunks.sparkSession.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+        ),
+        schema,
+    )
+    return rerank_stub(result, q) if rerank else result
 
 
 def rerank_stub(results: DataFrame, query: str, content_col: str = "content") -> DataFrame:
