@@ -131,7 +131,9 @@ def cosine_sim(vec_col: Column, query: list[float] | Column) -> Column:
     Both vectors cast to double; sums fold left-to-right so the result is
     bit-stable and matches a sequential oracle. For unit vectors this equals
     the dot product, but we normalize anyway (operations.py:180-186 uses
-    pgvector cosine distance, which normalizes).
+    pgvector cosine distance, which normalizes). A zero-norm vector scores
+    0.0, as in ``cosine_rows``, instead of a DIVIDE_BY_ZERO error under
+    ANSI mode; every other row is the plain quotient.
     """
     q = F.lit(query) if isinstance(query, list) else query
     x = F.transform(vec_col, lambda v: v.cast("double"))
@@ -141,7 +143,8 @@ def cosine_sim(vec_col: Column, query: list[float] | Column) -> Column:
     )
     nx = F.sqrt(F.aggregate(x, F.lit(0.0), lambda acc, v: acc + v * v))
     ny = F.sqrt(F.aggregate(y, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (nx * ny)
+    norms = nx * ny
+    return F.when(norms == 0.0, F.lit(0.0)).otherwise(dot / norms)
 
 
 # Above this dimensionality the Catalyst zip_with/aggregate fold (which
@@ -159,7 +162,7 @@ def cosine_rows(m: np.ndarray, q: np.ndarray) -> np.ndarray:
     Below BLAS_DIM_THRESHOLD the sums are left-to-right cumsum folds, bit-
     equal to ``cosine_sim``; at or above it, one BLAS matvec (pairwise
     sums, equal to the fold within float rounding). A zero-norm row
-    scores 0.0 on both paths (``cosine_sim`` divides by zero there)."""
+    scores 0.0 on both paths, as in ``cosine_sim``."""
     if m.shape[1] != q.shape[0]:
         raise ValueError(
             f"cosine: embedding dim {m.shape[1]} != query dim {q.shape[0]}"

@@ -74,6 +74,7 @@ from concurrent.futures import ThreadPoolExecutor, wait
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mcp_crawl4ai_rag_spark.frames import local_frame
 from mcp_crawl4ai_rag_spark.functions.markdown import clean_spans, render_spans_text
 from mcp_crawl4ai_rag_spark.functions.urls import admit_urls, is_permanent_error
 from mcp_crawl4ai_rag_spark.operators.dedup import (
@@ -922,8 +923,8 @@ class CrawlEngine:
                 )
             )
             # politeness charge
-            popped_counts = self.spark.createDataFrame(
-                list(host_popped.items()), "host string, popped long"
+            popped_counts = local_frame(
+                self.spark, host_popped.items(), "host string, popped long"
             )
             futures.append(
                 pool.submit(

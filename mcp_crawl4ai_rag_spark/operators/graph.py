@@ -25,6 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from mcp_crawl4ai_rag_spark.frames import local_frame
 
 
 def _edges_undirected(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
@@ -50,17 +53,17 @@ def connected_components(
 
     Size-aware dispatch (the bounded-probe pattern of
     compile_robots_predicate / the engine's rank_window_threshold): a
-    ``limit(driver_max_edges + 1)`` collect on the cached edge list
-    checks whether the WHOLE graph is driver-page-sized. If so, a
-    union-find with union-by-min-root labels it in O(edges α) — by
-    induction the root of every tree is its set's minimum, so find(v)
-    IS the canonical min label, independent of edge order — replacing
-    ~2 Spark jobs per propagation round with the single probe job.
-    A larger graph falls through to the distributed path below with the
-    probe's partial work retained in the edge cache (the probe is one
-    truncated extra job, never a second full pass). Both paths produce
-    the identical (id, comp) labeling; tests pin equality with the
-    driver path disabled (``driver_max_edges=0``).
+    ``limit(driver_max_edges // 2 + 1)`` collect of the two id columns
+    checks whether the WHOLE undirected edge list (two edges per pair)
+    has at most ``driver_max_edges`` edges. If so, a union-find with
+    union-by-min-root labels it in O(edges α) — by induction the root
+    of every tree is its set's minimum, so find(v) IS the canonical min
+    label, independent of edge order — replacing ~2 Spark jobs per
+    propagation round with the single probe job, and the labels go back
+    as an Arrow-backed local frame. A larger graph falls through to the
+    distributed path below (the probe is one truncated extra job). Both
+    paths produce the identical (id, comp) labeling; tests pin equality
+    with the driver path disabled (``driver_max_edges=0``).
 
     Distributed path — iterative min-label propagation: each round every
     node takes the min of its own label and its neighbors' labels; stop
@@ -68,12 +71,10 @@ def connected_components(
     clusters are shallow); each round is one groupBy shuffle on node id.
     Labels are localCheckpointed each round to keep the plan tree flat.
     """
-    edges = _edges_undirected(pairs, id_a, id_b).cache()
+    edges = _edges_undirected(pairs, id_a, id_b)
     if driver_max_edges:
-        probe = edges.limit(driver_max_edges + 1).collect()
-        if len(probe) <= driver_max_edges:
-            from pyspark.sql.types import StructField, StructType
-
+        probe = pairs.select(id_a, id_b).limit(driver_max_edges // 2 + 1).collect()
+        if 2 * len(probe) <= driver_max_edges:
             parent: dict = {}
 
             def find(x):
@@ -82,8 +83,7 @@ def connected_components(
                     x = parent[x]
                 return x
 
-            for r in probe:
-                a, b = r["src"], r["dst"]
+            for a, b in probe:
                 parent.setdefault(a, a)
                 parent.setdefault(b, b)
                 if a is None or b is None:
@@ -101,13 +101,12 @@ def connected_components(
                         parent[ra] = rb
             rows = sorted(((v, find(v)) for v in parent), key=lambda r: (r[0] is None, r[0]))
             dtype = edges.schema["src"].dataType
-            edges.unpersist()
-            return pairs.sparkSession.createDataFrame(
+            return local_frame(
+                pairs.sparkSession,
                 rows,
-                StructType(
-                    [StructField("id", dtype), StructField("comp", dtype)]
-                ),
+                StructType([StructField("id", dtype), StructField("comp", dtype)]),
             )
+    edges = edges.cache()
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mcp_crawl4ai_rag_spark.frames import local_frame
+
 
 def with_host_and_path(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Host/path extraction for *canonicalized* URLs (lowercased scheme and
@@ -342,7 +344,7 @@ def budgeted_pop(
                 .withColumn("pop_rank", F.row_number().over(w_global))
             )
         bud = (
-            pending.sparkSession.createDataFrame(probe, "host string, __budget long")
+            local_frame(pending.sparkSession, probe, "host string, __budget long")
             .where(nonnull)
             if len(probe) <= broadcast_binding_max
             else None

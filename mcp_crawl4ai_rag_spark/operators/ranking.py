@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from mcp_crawl4ai_rag_spark.frames import local_frame
+
 
 def with_global_rank(
     df: DataFrame,
@@ -68,7 +70,7 @@ def with_global_rank(
         offsets.append((pid, acc))
         acc += counts[pid]
     if offsets:
-        off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+        off_df = local_frame(spark, offsets, "__pid int, __off long")
         ranked = (
             pinned.join(F.broadcast(off_df), "__pid")
             .withColumn(rank_col, F.col("__lidx") + F.col("__off"))
@@ -130,7 +132,7 @@ def with_global_cumsum(
         offsets.append((pid, acc))
         acc += int(totals[pid] or 0)
     if offsets:
-        off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+        off_df = local_frame(spark, offsets, "__pid int, __off long")
         summed = (
             pinned.join(F.broadcast(off_df), "__pid")
             .withColumn(cumsum_col, F.col("__lsum") + F.col("__off"))

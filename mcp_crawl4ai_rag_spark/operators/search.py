@@ -34,9 +34,9 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StructField, StructType
 
+from mcp_crawl4ai_rag_spark.frames import local_frame
 from mcp_crawl4ai_rag_spark.functions.embedding import (
     BLAS_DIM_THRESHOLD,
     cosine_rows,
@@ -303,12 +303,7 @@ def rag_query(
         rows = merge_tiers(vec, kw, k)
         out.append(StructField("tier", IntegerType()))
     schema = StructType(out)
-    result = chunks.sparkSession.createDataFrame(
-        pa.Table.from_pylist(
-            [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-        ),
-        schema,
-    )
+    result = local_frame(chunks.sparkSession, rows, schema)
     return rerank_stub(result, q) if rerank else result
 
 

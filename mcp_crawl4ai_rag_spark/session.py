@@ -7,6 +7,16 @@ tests run on local[*]:
 - Arrow on (all our Python UDFs are pandas UDFs / mapInPandas).
 - shuffle.partitions sized to cores locally; on a real cluster this is
   overridden to ~2-3x total cores by the submitter.
+- spark.python.daemon.module = ``worker_daemon``: every Python task
+  starts with ``importlib.invalidate_caches()``, which on CPython 3.11
+  makes each zipimporter re-read its whole archive; Spark's pyspark.zip,
+  py4j zip and spark-core jar cost about 0.25 s per task that way. The
+  daemon skips the zipimporters of the archives that were on its
+  ``sys.path`` at startup (they cannot change while it lives) and
+  invalidates every other finder as CPython does, so archives added
+  later with ``addPyFile`` are still re-read. The package must be
+  importable where the daemon starts (the driver's working directory or
+  ``PYTHONPATH``), or every Python stage fails.
 """
 
 from __future__ import annotations
@@ -51,6 +61,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.local.dir", _local_dir())
+        .config("spark.python.daemon.module", "mcp_crawl4ai_rag_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -75,6 +75,32 @@ def test_connected_components_null_ids_driver_vs_distributed(spark):
     ]
 
 
+def test_connected_components_driver_cap_boundary(spark, monkeypatch):
+    """The probe collects pairs, and each pair is two undirected edges: a
+    graph of exactly ``driver_max_edges`` edges takes the driver path, one
+    edge fewer in the cap sends it to the distributed path, and both label
+    it as ``driver_max_edges=0`` does."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 5), (9, 9), (4, None)], "id_a long, id_b long"
+    )
+    n_edges = 2 * pairs.count()
+    driver_calls = []
+    local_frame = G.local_frame
+    monkeypatch.setattr(
+        G, "local_frame", lambda *a: driver_calls.append(1) or local_frame(*a)
+    )
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=lambda t: (t[0] is None, t))
+
+    want = rows(G.connected_components(pairs, driver_max_edges=0))
+    assert not driver_calls
+    for cap, on_driver in [(n_edges, True), (n_edges + 1, True), (n_edges - 1, False)]:
+        driver_calls.clear()
+        assert rows(G.connected_components(pairs, driver_max_edges=cap)) == want
+        assert bool(driver_calls) is on_driver, cap
+
+
 def test_dedup_groups_membership(spark):
     pairs = spark.createDataFrame([(4, 2), (2, 9), (7, 8)], ["id_a", "id_b"])
     groups = {r["comp"]: r for r in G.dedup_groups(pairs).collect()}

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from mcp_crawl4ai_rag_spark.functions.embedding import embed_query_py, hash_embed_py
 from mcp_crawl4ai_rag_spark.operators import search as S
 
@@ -135,3 +137,30 @@ def test_vector_topk_blas_dispatch_2560_dim(spark):
     assert [r["id"] for r in got] == [r["id"] for r in fold]
     for a, b in zip(got, fold):
         assert abs(a["similarity"] - b["similarity"]) < 1e-9
+
+
+@pytest.mark.parametrize("dim", [4, S.BLAS_DIM_THRESHOLD])
+def test_vector_topk_zero_embedding_scores_zero(spark, dim):
+    """An all-zero embedding scores 0.0 on both kernel paths (below
+    BLAS_DIM_THRESHOLD the Column fold used to fail the whole query with
+    DIVIDE_BY_ZERO); the other rows keep the plain quotient, bit-equal to
+    the sequential fold below the threshold."""
+    q = [float(i % 3 + 1) for i in range(dim)]
+    embs = {
+        0: [0.0] * dim,
+        1: [float((i * 7) % 5) - 2.0 for i in range(dim)],
+        2: [1.0] * dim,
+        3: [0.5 - i % 2 for i in range(dim)],
+    }
+    chunks = spark.createDataFrame(
+        [(i, f"https://d/{i}", "c", e) for i, e in embs.items()],
+        "id int, url string, content string, embedding array<float>",
+    )
+    got = {r["id"]: r["similarity"] for r in S.vector_topk(chunks, q, k=10).collect()}
+    assert got[0] == 0.0
+    assert got.keys() == embs.keys()
+    for i in (1, 2, 3):
+        if dim < S.BLAS_DIM_THRESHOLD:
+            assert got[i] == cos(embs[i], q)
+        else:
+            assert abs(got[i] - cos(embs[i], q)) < 1e-12
