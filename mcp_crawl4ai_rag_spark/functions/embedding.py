@@ -16,8 +16,8 @@ Cosine similarity has two paths:
 - ``cosine_sim`` — pure Column fold (zip_with + aggregate), JVM-side; exact
   sequential double-precision sum matching the DuckDB oracle.
 - ``cosine_rows`` — the numpy kernel over a batch of rows: the same
-  sequential fold below ``BLAS_DIM_THRESHOLD``, one BLAS matvec at or
-  above it. ``make_cosine_batch_udf`` and ``search.rag_query``'s Arrow
+  sequential fold below ``BLAS_DIM_THRESHOLD``, vectorized pairwise row
+  sums at or above it. ``make_cosine_batch_udf`` and ``search.rag_query``'s Arrow
   pass both call it.
 """
 
@@ -148,8 +148,8 @@ def cosine_sim(vec_col: Column, query: list[float] | Column) -> Column:
 
 
 # Above this dimensionality the Catalyst zip_with/aggregate fold (which
-# expands to a per-element expression tree) loses to one BLAS matvec per
-# Arrow batch. The reference's production vectors are 2560-dim halfvec
+# expands to a per-element expression tree) loses to one vectorized numpy
+# pass per Arrow batch. The reference's production vectors are 2560-dim halfvec
 # (src/database/client.py:131, src/embedding/config.py:24) — firmly in
 # BLAS territory; the 64-dim oracle fixtures stay on the exact
 # sequential fold so the DuckDB hash gate remains bit-stable.
@@ -160,9 +160,12 @@ def cosine_rows(m: np.ndarray, q: np.ndarray) -> np.ndarray:
     """Cosine of each row of the float64 matrix ``m`` against ``q``.
 
     Below BLAS_DIM_THRESHOLD the sums are left-to-right cumsum folds, bit-
-    equal to ``cosine_sim``; at or above it, one BLAS matvec (pairwise
-    sums, equal to the fold within float rounding). A zero-norm row
-    scores 0.0 on both paths, as in ``cosine_sim``."""
+    equal to ``cosine_sim``; at or above it, numpy's pairwise row sums,
+    equal to the fold within float rounding. Either way each row's score
+    depends on that row alone, not on its position in ``m``, so equal
+    embeddings score bit-equal and tie (a BLAS matvec ``m @ q`` does not
+    guarantee that). A zero-norm row scores 0.0 on both paths, as in
+    ``cosine_sim``."""
     if m.shape[1] != q.shape[0]:
         raise ValueError(
             f"cosine: embedding dim {m.shape[1]} != query dim {q.shape[0]}"
@@ -170,7 +173,7 @@ def cosine_rows(m: np.ndarray, q: np.ndarray) -> np.ndarray:
     if q.shape[0] >= BLAS_DIM_THRESHOLD:
         norms = np.linalg.norm(m, axis=1)
         norms[norms == 0] = 1.0
-        return m @ q / (norms * np.linalg.norm(q))
+        return (m * q).sum(axis=1) / (norms * np.linalg.norm(q))
     dot = np.cumsum(m * q, axis=1)[:, -1]
     nx = np.sqrt(np.cumsum(m * m, axis=1)[:, -1])
     nx[nx == 0] = 1.0

@@ -3,7 +3,7 @@
 Spark computes ``xxhash64(col)`` as XXH64 (Yann Collet's public-domain
 xxHash spec, https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md)
 over the UTF-8 bytes with seed 42, returned as a SIGNED 64-bit long. The
-crawl engine buckets hosts by ``pmod(xxhash64(host), host_buckets)``;
+crawl engine buckets hosts by ``pmod(xxhash64(host), HOST_BUCKETS)``;
 maintenance paths (``CrawlEngine.purge_host``) need that same bucket for
 ONE host string, which previously cost a 1-row Spark job per call. This
 module computes it in pure Python — a few microseconds, no job.

@@ -1,21 +1,30 @@
 """The BFS-round crawl engine — frontier scheduler + fetch + link pipeline.
 
 One ``round()`` is one Spark job chain re-expressing the reference's
-asyncio worker-pool loop (src/crawler/core.py:224-449; SURVEY.md §3.1):
+asyncio worker-pool loop (src/crawler/core.py:224-449; SURVEY.md §3.1).
+It runs five phases, one method each, and reports each one's wall time
+in its ``phases``:
 
-  pop (budgeted window rank, W1)
-  → fetch join (J5; sandbox stand-in for the HTTP fetch S10 — pushdown
-    filter on the corpus scan + broadcast join back)
-  → span cleaning (P6) + render
-  → error split (P4: dead / retry / fetched), collected as the round's
-    O(batch) stats — the one job that materializes the fetch
-  → link explode (P5) → one Arrow admission pass: canonicalize (P1),
-    malformed flag (P2), host/path
-  → robots filter (J6, generalizing the scope filter P3)
-  → anti-join dedup (J3 / S2), prefiltered by the seen filter past
-    probe_broadcast_threshold
-  → snapshot commits: documents fast-append, frontier rewrite (stand-in
-    for Iceberg MERGE), hosts charge, metrics append, checkpoint.
+  pop (``_pop``): the merge-on-read pending view, host budgets refilled,
+    and the budgeted window rank (W1), pinned
+  → fetch (``_fetch``, ``_page_counts``): fetch join (J5; sandbox
+    stand-in for the HTTP fetch S10 — pushdown filter on the corpus scan
+    + broadcast join back), span cleaning (P6) + render, error split (P4:
+    dead / retry / fetched), pinned; the round's O(batch) stats collect
+    is the one job that materializes it
+  → page commits (``_submit_page_commits``): documents fast-append,
+    fetched fast-append, hosts charge (and link edges), on the commit
+    pool, overlapping the next phase
+  → links (``_links``): link explode (P5) → one Arrow admission pass:
+    canonicalize (P1), malformed flag (P2), host/path → robots filter
+    (J6, generalizing the scope filter P3) → anti-join dedup (J3 / S2),
+    prefiltered by the seen filter past probe_broadcast_threshold →
+    discovery-order seqs → the pending-delta commit (stand-in for an
+    Iceberg MERGE)
+  → maintain: seen-filter update (``_update_seen_filter``), pending
+    compaction, metrics append and the commit barrier
+    (``_finish_commits``), then tail fold, checkpoint and snapshot
+    expiry (``_fold_and_checkpoint``).
 
 Determinism contract (matched bit-for-bit by oracle/simulator.py):
 frontier order is (priority DESC, discovered_seq ASC); new URLs get
@@ -31,7 +40,9 @@ Round frames: the popped batch and the fetched pages are local
 checkpoints (``pins.pin``), so the plans built on them stay small and the
 fetch runs exactly once; the stats collect is its one materializing job
 and also yields the popped count. A steady round runs 18 Spark jobs in 7
-SQL executions.
+SQL executions (perfbench's crawl_loop sizes): the pop's checkpoint 4,
+the fetch's 3, the stats collect 1, the documents and fetched appends 1
+each, the hosts commit 2, the pending-delta commit (the link pipeline) 6.
 
 Seen side of the link dedup: pending ∪ fetched as pinned at round start,
 minus this round's deaths — the pending view is the same merge-on-read
@@ -43,7 +54,7 @@ Scale notes (10^10 frontier / 1000 executors):
 - the pop shuffles pending rows by host once; hot hosts are budget-bounded
   so the global top-k after the window is tiny (TakeOrderedAndProject);
 - the fetch stage repartitions the popped batch by (host, salt) —
-  ``salt = xxhash64(url) % salt_buckets`` — so one hot host spreads over
+  ``salt = xxhash64(url) % SALT_BUCKETS`` — so one hot host spreads over
   many tasks while politeness accounting stays at host granularity
   (tokens are charged from per-host counts, not per-task);
 - past probe_broadcast_threshold the seen set is scanned once with a
@@ -69,9 +80,13 @@ the surrounding plan is unchanged.
 from __future__ import annotations
 
 import os
+import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor, wait
+from contextlib import contextmanager
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mcp_crawl4ai_rag_spark.frames import local_frame
@@ -220,12 +235,49 @@ def fetch_with_partition_sessions(
 
 
 FRONTIER_COLS = ["url", "url_hash", "host", "depth", "priority", "seq", "state", "attempts"]
+FRONTIER_DDL = (
+    "url string, url_hash long, host string, depth int, priority int, "
+    "seq long, state string, attempts int"
+)
 # the pending table additionally carries its partition column: bucket =
-# pmod(xxhash64(host), host_buckets). Bucketing by host (not url) keeps a
+# pmod(xxhash64(host), HOST_BUCKETS). Bucketing by host (not url) keeps a
 # host's rows in one partition so host-scoped maintenance (recrawl, purge)
 # prunes to 1/N of the table; hot hosts stay safe because the pop itself
-# salt-spreads them (budgeted_pop).
+# salt-spreads them (budgeted_pop). The count is fixed, not a setting:
+# every writer (a round, a resumed engine, the stream ingest) and
+# purge_host's driver-side bucket must agree on it.
 FRONTIER_COLS_PENDING = FRONTIER_COLS + ["bucket"]
+HOST_BUCKETS = 16
+# the pending delta's rows: a pending row plus its op, 'add' or 'del'
+PENDING_DELTA_DDL = FRONTIER_DDL + ", bucket int, op string"
+# the fetch stage repartitions the popped batch by (host, url salt)
+SALT_BUCKETS = 8
+METRICS_DDL = "round int, scope string, key string, value long"
+
+
+def host_bucket_col(host_col: str = "host") -> Column:
+    """The pending table's partition value of a host (``functions.xxh.
+    host_bucket`` computes the same one on the driver)."""
+    return F.pmod(F.xxhash64(host_col), F.lit(HOST_BUCKETS)).cast("int")
+
+
+def new_pending_rows(
+    df: DataFrame, seq: Column, depth: Column, priority: Column | None = None
+) -> DataFrame:
+    """Newly admitted URLs (``df``'s url and host) as FRONTIER_COLS_PENDING
+    rows: state 'pending', no attempts, priority 0 unless given. The one
+    projection a seed, a round's new links and the stream ingest share."""
+    return df.select(
+        "url",
+        F.xxhash64("url").alias("url_hash"),
+        "host",
+        depth.cast("int").alias("depth"),
+        (F.lit(0) if priority is None else priority).alias("priority"),
+        seq.cast("long").alias("seq"),
+        F.lit("pending").alias("state"),
+        F.lit(0).alias("attempts"),
+        host_bucket_col().alias("bucket"),
+    )
 
 # Equality-delete key for the merge-on-read pending frontier. priority is
 # part of the key so a reprioritized row (same url/seq/attempts, new
@@ -288,6 +340,52 @@ def load_seen_filter(ck: dict) -> BloomFilter | ShardedCuckoo | None:
     return f if _filter_fits(f, ck["bloom_bits"], ck["seq_counter"]) else None
 
 
+def _round_exprs(max_attempts: int | None) -> dict[str, Column]:
+    """The round's fixed Column expressions, by name: the fetch salt, a
+    page's status, clean spans, text and outcome (dead / retry /
+    fetched), a page's 0-based position in the pop, and its distinct
+    hrefs."""
+    empty_spans = F.expr(
+        "CAST(array() AS array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>)"
+    )
+    x_status = F.coalesce(F.col("status_code"), F.lit(404))
+    x_clean = clean_spans(F.coalesce(F.col("spans"), empty_spans))
+    x_text = render_spans_text(F.col("clean_spans"))
+    # is_permanent_error is never NULL, so a blank page reaches the
+    # later branches only when it is not a permanent error
+    x_dead = is_permanent_error(F.col("status"), F.col("text"))
+    # whitespace-equivalent to the oracle's str.strip() (F.trim only
+    # strips ASCII spaces)
+    x_blank = F.length(F.regexp_replace(F.col("text"), r"\s", "")) == 0
+    x_outcome = (
+        F.when(x_dead, F.lit("dead"))
+        .when(
+            x_blank
+            & (
+                F.lit(max_attempts is not None)
+                & (F.col("attempts") + 1 >= F.lit(max_attempts or 0))
+            ),
+            F.lit("dead"),
+        )
+        .when(x_blank, F.lit("retry"))
+        .otherwise(F.lit("fetched"))
+    )
+    return {
+        "salt": F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS)),
+        "status": x_status,
+        "clean_spans": x_clean,
+        "text": x_text,
+        "outcome": x_outcome,
+        "seq_in_round": (F.col("pop_rank") - 1).cast("int"),
+        # distinct hrefs of a fetched page (0 otherwise)
+        "page_links": F.when(
+            F.col("outcome") == "fetched",
+            F.size(F.array_distinct(F.coalesce(F.col("out_links"), F.array()))),
+        ).otherwise(F.lit(0)),
+    }
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -300,10 +398,7 @@ class CrawlEngine:
         max_attempts: int | None = 3,
         seen_filter_kind: str = "bloom",
         bloom_bits: int = 1 << 20,
-        salt_buckets: int = 8,
-        fetch_partitions: int | None = None,
         snapshot_keep: int = 8,
-        host_buckets: int = 16,
         compact_every: int = 8,
         fetcher=None,
         rank_window_threshold: int = 10_000,
@@ -328,10 +423,7 @@ class CrawlEngine:
             raise ValueError(f"unknown seen_filter_kind {seen_filter_kind!r}")
         self.seen_filter_kind = seen_filter_kind
         self.bloom_bits = bloom_bits
-        self.salt_buckets = salt_buckets
-        self.fetch_partitions = fetch_partitions
         self.snapshot_keep = snapshot_keep
-        self.host_buckets = host_buckets
         self.compact_every = compact_every
         # S10 seam: None → sandbox corpus broadcast join; a factory →
         # fetch_with_partition_sessions (the production HTTP/browser shape;
@@ -374,6 +466,15 @@ class CrawlEngine:
         # per round, so off by default
         self.track_link_graph = track_link_graph
         self.edges_tbl = SnapshotTable(workdir, "link_edges")
+        # every table the engine commits to, for expiry: the ones
+        # rewritten in place, then the append-only ones, whose per-round
+        # files compact_tail folds every compact_every rounds
+        self._append_only = (self.fetched_tbl, self.documents_tbl, self.metrics_tbl)
+        if track_link_graph:
+            self._append_only += (self.edges_tbl,)
+        self._tables = (
+            self.pending_tbl, self.pending_delta_tbl, self.hosts_tbl
+        ) + self._append_only
         self.checkpoint = CrawlCheckpoint(workdir)
         self._hosts_init = hosts
 
@@ -386,69 +487,35 @@ class CrawlEngine:
         # it, and round() builds it from pending ∪ fetched where it first
         # reads it (_build_seen_filter)
         self.seen_filter: BloomFilter | ShardedCuckoo | None = None
-        # opt-in phase timing: when True, round() adds a "phases" dict
-        # (driver-side wall seconds per materialization point) to its
-        # metrics; perfbench's traced mode (--trace 1) reads it
-        self.profile_rounds = False
+        # wall seconds per phase of the running round (_phase); round()
+        # returns them as its "phases"
+        self._phases: dict[str, float] = {}
         # Reusable unresolved Column trees for the round's fixed
         # expressions. Column objects are immutable, name-resolved
         # per-plan, and safe to share across rounds; building them once
         # removes ~hundreds of py4j round-trips of driver-side plan
         # construction per round (measured ~1.5 s/round of the profile's
         # untimed 'other' at bench scale).
-        empty_spans = F.expr(
-            "CAST(array() AS array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>)"
-        )
-        x_status = F.coalesce(F.col("status_code"), F.lit(404))
-        x_clean = clean_spans(F.coalesce(F.col("spans"), empty_spans))
-        x_text = render_spans_text(F.col("clean_spans"))
-        # is_permanent_error is never NULL, so a blank page reaches the
-        # later branches only when it is not a permanent error
-        x_dead = is_permanent_error(F.col("status"), F.col("text"))
-        # whitespace-equivalent to the oracle's str.strip() (F.trim only
-        # strips ASCII spaces)
-        x_blank = F.length(F.regexp_replace(F.col("text"), r"\s", "")) == 0
-        x_outcome = (
-            F.when(x_dead, F.lit("dead"))
-            .when(
-                x_blank
-                & (
-                    F.lit(max_attempts is not None)
-                    & (F.col("attempts") + 1 >= F.lit(max_attempts or 0))
-                ),
-                F.lit("dead"),
-            )
-            .when(x_blank, F.lit("retry"))
-            .otherwise(F.lit("fetched"))
-        )
-        self._rx = {
-            "salt": F.pmod(F.xxhash64("url"), F.lit(salt_buckets)),
-            "status": x_status,
-            "clean_spans": x_clean,
-            "text": x_text,
-            "outcome": x_outcome,
-            "seq_in_round": (F.col("pop_rank") - 1).cast("int"),
-            # distinct hrefs of a fetched page (0 otherwise)
-            "page_links": F.when(
-                F.col("outcome") == "fetched",
-                F.size(F.array_distinct(F.coalesce(F.col("out_links"), F.array()))),
-            ).otherwise(F.lit(0)),
-        }
+        self._rx = _round_exprs(max_attempts)
 
     # -- state I/O ----------------------------------------------------------
 
-    def _read(self, tbl: SnapshotTable, name: str) -> DataFrame:
-        return tbl.read(self.spark, self.versions.get(name))
+    def _version(self, tbl: SnapshotTable) -> int | None:
+        """The table's version this engine has pinned (None before its
+        first commit)."""
+        return self.versions.get(tbl.name)
 
-    def _commit(self, tbl: SnapshotTable, name: str, df: DataFrame, **kw) -> SnapshotInfo:
+    def _read(self, tbl: SnapshotTable) -> DataFrame:
+        return tbl.read(self.spark, self._version(tbl))
+
+    def _commit(self, tbl: SnapshotTable, df: DataFrame, **kw) -> SnapshotInfo:
         # appends extend the engine's PINNED version, not the manifest's
         # current — orphan versions from a torn (crashed) round stay out of
         # the lineage after resume instead of being resurrected
         if kw.get("mode") == "append":
-            kw.setdefault("parent_version", self.versions.get(name))
+            kw.setdefault("parent_version", self._version(tbl))
         info = tbl.commit(df, **kw)
-        self.versions[name] = info.version
+        self.versions[tbl.name] = info.version
         return info
 
     def _commit_pool(self) -> "ThreadPoolExecutor":
@@ -462,31 +529,26 @@ class CrawlEngine:
             )
         return self._pool
 
-    def _commit_rows(
-        self, tbl: SnapshotTable, name: str, rows: list, schema: str, **kw
-    ) -> None:
+    def _commit_rows(self, tbl: SnapshotTable, rows: list, schema: str, **kw) -> None:
         """Driver-rows commit (no Spark job) — metrics/lineage side tables
         whose rows are O(hosts) and already live on the driver."""
         if kw.get("mode") == "append":
-            kw.setdefault("parent_version", self.versions.get(name))
+            kw.setdefault("parent_version", self._version(tbl))
         info = tbl.commit_rows(rows, schema, **kw)
-        self.versions[name] = info.version
-
-    def _bucket(self, host_col: str = "host"):
-        return F.pmod(F.xxhash64(host_col), F.lit(self.host_buckets)).cast("int")
+        self.versions[tbl.name] = info.version
 
     def _commit_pending_base(self, df: DataFrame) -> None:
         """Full rewrite of the pending BASE, partitioned by host bucket
         (seed + compaction only — never per round)."""
         info = self.pending_tbl.commit_partitioned(df, "bucket", changed=None)
-        self.versions["frontier_pending"] = info.version
+        self.versions[self.pending_tbl.name] = info.version
 
     def _read_pending(self) -> DataFrame:
         """Merge-on-read view of the pending frontier (see
         merge_on_read_pending for the key semantics)."""
-        base = self._read(self.pending_tbl, "frontier_pending")
-        delta = self._read(self.pending_delta_tbl, "frontier_pending_delta")
-        return merge_on_read_pending(base, delta)
+        return merge_on_read_pending(
+            self._read(self.pending_tbl), self._read(self.pending_delta_tbl)
+        )
 
     def _compact_pending(self) -> None:
         """Fold the delta into a fresh partitioned base (Iceberg rewrite/
@@ -495,16 +557,7 @@ class CrawlEngine:
         current = self._read_pending()
         self._commit_pending_base(current.select(*FRONTIER_COLS_PENDING))
         self._commit(
-            self.pending_delta_tbl,
-            "frontier_pending_delta",
-            self.spark.createDataFrame([], self._delta_schema()),
-        )
-
-    @staticmethod
-    def _delta_schema() -> str:
-        return (
-            "url string, url_hash long, host string, depth int, priority int, "
-            "seq long, state string, attempts int, bucket int, op string"
+            self.pending_delta_tbl, self.spark.createDataFrame([], PENDING_DELTA_DDL)
         )
 
     def _save_checkpoint(self) -> None:
@@ -619,21 +672,9 @@ class CrawlEngine:
             ranked, pinned = with_global_rank(
                 cand, order_cols, rank_col="__seed_rank"
             )
-        rows = (
-            ranked.withColumn("seq", F.col("__seed_rank").cast("long"))
-            .select(
-                "url",
-                F.xxhash64("url").alias("url_hash"),
-                "host",
-                F.lit(0).alias("depth"),
-                "priority",
-                "seq",
-                F.lit("pending").alias("state"),
-                F.lit(0).alias("attempts"),
-            )
-            .withColumn("bucket", self._bucket())
-        )
-        rows = rows.cache()
+        rows = new_pending_rows(
+            ranked, seq=F.col("__seed_rank"), depth=F.lit(0), priority=F.col("priority")
+        ).cache()
         # materialize BEFORE fanning out: the two-stage rank's pinned
         # intermediate must be fully cached once so concurrent consumers
         # can't re-sample range boundaries into divergent seq orders.
@@ -642,13 +683,10 @@ class CrawlEngine:
         pool = self._commit_pool()
         futures = [
             pool.submit(self._commit_pending_base, rows),
-            pool.submit(
-                self._commit, self.hosts_tbl, "hosts", init_hosts(self._hosts_init)
-            ),
+            pool.submit(self._commit, self.hosts_tbl, init_hosts(self._hosts_init)),
             pool.submit(
                 self._commit,
                 self.documents_tbl,
-                "documents",
                 self.spark.createDataFrame(
                     [],
                     "url string, host string, depth int, fetch_round int, "
@@ -659,22 +697,9 @@ class CrawlEngine:
             ),
         ]
         # empty flat-schema snapshots: driver fast path, no Spark job
-        self._commit_rows(
-            self.pending_delta_tbl, "frontier_pending_delta", [], self._delta_schema()
-        )
-        self._commit_rows(
-            self.fetched_tbl,
-            "frontier_fetched",
-            [],
-            "url string, url_hash long, host string, depth int, priority int, "
-            "seq long, state string, attempts int",
-        )
-        self._commit_rows(
-            self.metrics_tbl,
-            "metrics",
-            [],
-            "round int, scope string, key string, value long",
-        )
+        self._commit_rows(self.pending_delta_tbl, [], PENDING_DELTA_DDL)
+        self._commit_rows(self.fetched_tbl, [], FRONTIER_DDL)
+        self._commit_rows(self.metrics_tbl, [], METRICS_DDL)
         self.seq_counter = n
         for fut in futures:
             fut.result()
@@ -722,7 +747,6 @@ class CrawlEngine:
             )
             self._commit(
                 self.pending_delta_tbl,
-                "frontier_pending_delta",
                 dels.unionByName(adds),
                 mode="append",
                 extra={"round": self.round_id, "reprioritized": n},
@@ -749,17 +773,16 @@ class CrawlEngine:
         on robots BEFORE dedup. Resume-safe like any delta commit."""
         from mcp_crawl4ai_rag_spark.functions.xxh import host_bucket
 
-        bucket = host_bucket(host, self.host_buckets)
+        bucket = host_bucket(host, HOST_BUCKETS)
         base = self.pending_tbl.read(
-            self.spark, self.versions.get("frontier_pending"), partitions=[bucket]
+            self.spark, self._version(self.pending_tbl), partitions=[bucket]
         )
-        delta = self._read(self.pending_delta_tbl, "frontier_pending_delta")
+        delta = self._read(self.pending_delta_tbl)
         live = merge_on_read_pending(base, delta).where(F.col("host") == host).cache()
         n = live.count()
         if n:
             self._commit(
                 self.pending_delta_tbl,
-                "frontier_pending_delta",
                 live.select(*FRONTIER_COLS_PENDING).withColumn("op", F.lit("del")),
                 mode="append",
                 extra={"round": self.round_id, "purged_host": host, "dels": n},
@@ -783,7 +806,7 @@ class CrawlEngine:
         cuckoo is sized from seq_counter, an upper bound on the keys it
         will hold, at most half full."""
         seen_hashes = pending.select("url_hash").unionByName(
-            self._read(self.fetched_tbl, "frontier_fetched").select("url_hash")
+            self._read(self.fetched_tbl).select("url_hash")
         )
         if self.seen_filter_kind == "bloom":
             return build_bloom(seen_hashes, "url_hash", self.bloom_bits)
@@ -791,23 +814,77 @@ class CrawlEngine:
             self.spark, ShardedCuckoo.for_keys(self.seq_counter), seen_hashes
         )
 
+    @contextmanager
+    def _phase(self, name: str):
+        """Time the block as the running round's phase ``name``."""
+        t = time.perf_counter()
+        yield
+        self._phases[name] = time.perf_counter() - t
+
     def round(self) -> dict:
         """Run one crawl round; returns the round's metrics dict
         (popped == 0 ⇒ frontier drained).
 
+        The phases run in order: pop, fetch, page commits (submitted to
+        the commit pool), links (ending in the pending-delta commit), then
+        maintenance: seen filter, pending compaction, metrics, the commit
+        barrier, tail fold, checkpoint and expiry. ``phases`` maps each
+        timed phase to its wall seconds; ``other`` is the rest of the
+        round.
+
         A round that raises has joined every Spark job it submitted and
         has not advanced the checkpoint; its in-memory state is then
         stale, so continue with ``CrawlEngine.resume``."""
-        import time as _time
-
-        _t0 = _time.perf_counter()
-        _ph: dict[str, float] = {}
+        t0 = time.perf_counter()
+        self._phases = {}
         self.round_id += 1
+        compacts = bool(self.compact_every) and self.round_id % self.compact_every == 0
+        with self._phase("pop"):
+            pending, hosts, probe, popped = self._pop()
+        futures: list = []
+        release = [partial(unpin, popped)]
+        try:
+            with self._phase("fetch"):
+                enriched = self._fetch(popped)
+                release.append(partial(unpin, enriched))
+                m, host_popped = self._page_counts(enriched)
+            if m["popped"] == 0:
+                self.round_id -= 1
+                return {"round": self.round_id + 1, "popped": 0}
+            fetched_old = self._submit_page_commits(futures, enriched, hosts, host_popped)
+            seq0 = self.seq_counter
+            with self._phase("links"):
+                delta, dead = self._links(
+                    enriched, popped, pending, fetched_old, probe, m["popped"], release
+                )
+                m["links_inserted"] = delta.rows - m["popped"] - m["retried"]
+                self.seq_counter += m["links_inserted"]
+            self._update_seen_filter(delta, seq0, dead)
+            self._finish_commits(m, host_popped, futures, compacts)
+        except BaseException:
+            # a failed round leaves none of its jobs running on the shared
+            # pool: drop what has not started, wait out the rest
+            for fut in futures:
+                fut.cancel()
+            wait(futures)
+            raise
+        finally:
+            # every reader of these frames has been joined
+            for free in release:
+                free()
+        self._fold_and_checkpoint(compacts)
+        self._phases["other"] = time.perf_counter() - t0 - sum(self._phases.values())
+        m["phases"] = self._phases
+        return m
+
+    def _pop(self) -> tuple[DataFrame, DataFrame, bool, DataFrame]:
+        """Pop phase: the round's pending view and refilled hosts, the
+        seen filter where the probe regime first needs it, and the
+        budgeted pop, pinned. Returns (pending, hosts, probe, popped)."""
         pending = self._read_pending()
-        hosts = self._read(self.hosts_tbl, "hosts")
+        hosts = self._read(self.hosts_tbl)
         if self.round_id > 1:
             hosts = refill_hosts(hosts)
-
         # round candidates are bounded; once the frontier outgrows the
         # threshold, the seen-scan probe shape (no frontier shuffle or
         # driver broadcast) is the only safe plan. The approximate
@@ -820,376 +897,322 @@ class CrawlEngine:
         probe = self.seq_counter > self.probe_broadcast_threshold
         if probe and self.seen_filter is None:
             self.seen_filter = self._build_seen_filter(pending)
-
         # the hosts table's row count (parquet footers, no job) bounds the
         # binding set, so budgeted_pop needs no probe job while it fits.
         # The pop's rows are computed by the fetch stage's first job.
         popped = pin(
             budgeted_pop(
                 pending, hosts, self.batch_size,
-                hosts_rows=self.hosts_tbl.num_rows(self.versions.get("hosts")),
+                hosts_rows=self.hosts_tbl.num_rows(self._version(self.hosts_tbl)),
             )
         )
-        _ph["pop"] = _time.perf_counter() - _t0
+        return pending, hosts, probe, popped
 
-        # Independent table commits overlap with the round's main-thread
-        # work (link pipeline and the delta commit): each commit is a
-        # separate Spark job whose ~0.3-0.5 s of scheduling latency would
-        # otherwise serialize. Safe because every commit targets a
-        # distinct table (per-table version sequences — and thus all
-        # committed state — are identical to the serial schedule), all
-        # reads in this round pin versions captured before the
-        # corresponding submit, and the checkpoint is only written after
-        # every future is joined. The pooled commits read `enriched` only
-        # after the main thread has materialized it.
+    def _fetch(self, popped: DataFrame) -> DataFrame:
+        """Fetch phase: the popped rows with their pages' status, clean
+        spans, text and outcome (dead / retry / fetched), pinned.
+
+        Default (sandbox): corpus restricted to the popped batch via
+        broadcast semi join (an IN-list of thousands of literals would
+        bloat the plan; the broadcast side is bounded by batch_size), then
+        the matched pages broadcast back onto the batch. Production: the
+        injected partition fetcher with per-partition session reuse.
+        Either way the salted repartition spreads hot hosts across tasks
+        (J5 skew note) first."""
+        fetch_input = popped.repartition(
+            self.spark.sparkContext.defaultParallelism, F.col("host"), self._rx["salt"]
+        )
+        if self.fetcher is not None:
+            joined = fetch_with_partition_sessions(fetch_input, self.fetcher).drop(
+                "fetch_session", "fetch_error"
+            )
+        else:
+            pages = self.corpus.join(
+                F.broadcast(popped.select("url")), "url", "left_semi"
+            ).select("url", "status_code", "spans", "out_links")
+            joined = fetch_input.join(F.broadcast(pages), "url", "left")
+        # prebuilt trees (__init__ _rx), one projection per dependency
+        # level: status + clean_spans, then text, then outcome
+        return pin(
+            joined.withColumns(
+                {"status": self._rx["status"], "clean_spans": self._rx["clean_spans"]}
+            )
+            .withColumn("text", self._rx["text"])
+            .withColumn("outcome", self._rx["outcome"])
+        )
+
+    def _page_counts(self, enriched: DataFrame) -> tuple[dict, Counter]:
+        """The stats pass: it materializes the fetch once, before any other
+        job reads it — one (host, outcome, distinct hrefs) row per popped
+        page, O(batch), summed here with no aggregation shuffle. Returns
+        the round's metrics so far and the popped count per host."""
+        stats = enriched.select("host", "outcome", self._rx["page_links"]).collect()
+        outcomes = Counter(outcome for _, outcome, _ in stats)
+        m = {
+            "round": self.round_id,
+            "popped": len(stats),
+            "fetched": outcomes["fetched"],
+            "dead": outcomes["dead"],
+            "retried": outcomes["retry"],
+            # Σ distinct hrefs of fetched pages
+            "links_seen": sum(n for *_, n in stats),
+        }
+        return m, Counter(host for host, _, _ in stats)
+
+    def _submit_page_commits(
+        self, futures: list, enriched: DataFrame, hosts: DataFrame, host_popped: Counter
+    ) -> DataFrame:
+        """Page-commit phase: submit the documents, fetched, hosts (and
+        link-edge) commits to the pool, appending each future to
+        ``futures``. Returns fetched as pinned before its append, for the
+        link pipeline's seen side.
+
+        The commits overlap with the main thread's link pipeline and delta
+        commit: each is a separate Spark job whose ~0.3-0.5 s of
+        scheduling latency would otherwise serialize. Safe because every
+        commit targets a distinct table (per-table version sequences — and
+        thus all committed state — are identical to the serial schedule),
+        all reads in this round pin versions captured before the
+        corresponding submit, and the checkpoint is only written after
+        every future is joined. The pooled commits read ``enriched`` only
+        after the stats pass has materialized it."""
         pool = self._commit_pool()
-        futures: list = []
-        enriched = cand = pinned = None
-        try:
-            # fetch stage. Default (sandbox): corpus restricted to the popped
-            # batch via broadcast semi join (an IN-list of thousands of literals
-            # would bloat the plan; the broadcast side is bounded by batch_size),
-            # then the matched pages broadcast back onto the batch. Production:
-            # the injected partition fetcher with per-partition session reuse.
-            # Either way the salted repartition spreads hot hosts across tasks
-            # (J5 skew note) first.
-            _t = _time.perf_counter()
-            nparts = self.fetch_partitions or self.spark.sparkContext.defaultParallelism
-            fetch_input = popped.repartition(nparts, F.col("host"), self._rx["salt"])
-            if self.fetcher is not None:
-                joined = fetch_with_partition_sessions(fetch_input, self.fetcher).drop(
-                    "fetch_session", "fetch_error"
-                )
-            else:
-                pages = self.corpus.join(
-                    F.broadcast(popped.select("url")), "url", "left_semi"
-                ).select("url", "status_code", "spans", "out_links")
-                joined = fetch_input.join(F.broadcast(pages), "url", "left")
-            # prebuilt trees (__init__ _rx), one projection per dependency
-            # level: status + clean_spans, then text, then outcome
-            enriched = pin(
-                joined.withColumns(
-                    {"status": self._rx["status"], "clean_spans": self._rx["clean_spans"]}
-                )
-                .withColumn("text", self._rx["text"])
-                .withColumn("outcome", self._rx["outcome"])
+        fetched = enriched.where(F.col("outcome") == "fetched")
+        # documents fast-append (S4 content sink)
+        docs = fetched.select(
+            "url",
+            "host",
+            "depth",
+            F.lit(self.round_id).alias("fetch_round"),
+            self._rx["seq_in_round"].alias("seq_in_round"),
+            "status",
+            F.col("text").alias("content"),
+            F.col("clean_spans").alias("spans"),
+        )
+        futures.append(
+            pool.submit(
+                self._commit, self.documents_tbl, docs, mode="append", single_file=True
             )
-            # the stats pass materializes the fetch once, before any other
-            # job reads it: one (host, outcome, distinct hrefs) row per popped
-            # page, O(batch), summed here — no aggregation shuffle.
-            # links_seen = Σ distinct hrefs of fetched pages.
-            stats = enriched.select("host", "outcome", self._rx["page_links"]).collect()
-            _ph["fetch"] = _time.perf_counter() - _t
-            n_popped = len(stats)
-            if n_popped == 0:
-                self.round_id -= 1
-                return {"round": self.round_id + 1, "popped": 0}
-            outcome_counts: dict[str, int] = {}
-            host_popped: dict[str, int] = {}
-            n_links_seen = 0
-            for host, outcome, n_links in stats:
-                outcome_counts[outcome] = outcome_counts.get(outcome, 0) + 1
-                host_popped[host] = host_popped.get(host, 0) + 1
-                n_links_seen += n_links
-            n_retry = outcome_counts.get("retry", 0)
+        )
+        # fetched fast-append; the seen side pins the PRE-append fetched
+        # version, so the append proceeds concurrently
+        fetched_old = self._read(self.fetched_tbl)
+        fetched_now = fetched.select(
+            *[F.lit("fetched").alias(c) if c == "state" else c for c in FRONTIER_COLS]
+        )
+        futures.append(
+            pool.submit(
+                self._commit, self.fetched_tbl, fetched_now, mode="append", single_file=True
+            )
+        )
+        # politeness charge
+        popped_counts = local_frame(
+            self.spark, host_popped.items(), "host string, popped long"
+        )
+        futures.append(
+            pool.submit(self._commit, self.hosts_tbl, charge_hosts(hosts, popped_counts))
+        )
+        if self.track_link_graph:
+            edges = admit_urls(
+                fetched.select(
+                    F.col("url").alias("src"), F.explode_outer("out_links").alias("href")
+                ).where(F.col("href").isNotNull()),
+                "href",
+            ).select("src", F.col("url").alias("dst")).distinct()
+            futures.append(
+                pool.submit(self._commit, self.edges_tbl, edges, mode="append")
+            )
+        return fetched_old
 
-            # documents fast-append (S4 content sink)
-            docs = enriched.where(F.col("outcome") == "fetched").select(
-                "url",
-                "host",
+    def _links(
+        self,
+        enriched: DataFrame,
+        popped: DataFrame,
+        pending: DataFrame,
+        fetched_old: DataFrame,
+        probe: bool,
+        n_popped: int,
+        release: list,
+    ) -> tuple[SnapshotInfo, DataFrame]:
+        """Links phase: the link pipeline (P5→P1+P2→J6→J3) and the
+        merge-on-read delta commit, the pipeline's only job. Returns the
+        commit's info and this round's dead URLs; appends a release for
+        each frame it caches to ``release``."""
+        # one admit_url pass yields the canonical url, its malformed flag
+        # and the host/path columns the compiled robots predicate reads
+        links = (
+            enriched.where(F.col("outcome") == "fetched")
+            .select(
+                "pop_rank",
                 "depth",
-                F.lit(self.round_id).alias("fetch_round"),
-                self._rx["seq_in_round"].alias("seq_in_round"),
-                "status",
-                F.col("text").alias("content"),
-                F.col("clean_spans").alias("spans"),
+                F.posexplode_outer("out_links").alias("link_pos", "href"),
             )
-            futures.append(
-                pool.submit(
-                    self._commit, self.documents_tbl, "documents", docs,
-                    mode="append", single_file=True,
-                )
-            )
-            # fetched fast-append; the seen side below pins the PRE-append
-            # fetched version, so the append proceeds concurrently
-            fetched_old = self._read(self.fetched_tbl, "frontier_fetched")
-            fetched_now = enriched.where(F.col("outcome") == "fetched").select(
-                *[F.lit("fetched").alias(c) if c == "state" else c for c in FRONTIER_COLS]
-            )
-            futures.append(
-                pool.submit(
-                    self._commit, self.fetched_tbl, "frontier_fetched",
-                    fetched_now, mode="append", single_file=True,
-                )
-            )
-            # politeness charge
-            popped_counts = local_frame(
-                self.spark, host_popped.items(), "host string, popped long"
-            )
-            futures.append(
-                pool.submit(
-                    self._commit, self.hosts_tbl, "hosts",
-                    charge_hosts(hosts, popped_counts),
-                )
-            )
+            .where(F.col("href").isNotNull())
+        )
+        admitted = robots_allowed(
+            admit_urls(links, "href"), prebuilt_rules=self._robots_rules,
+            compiled=self._robots_pred, try_compile=False,
+        )
+        # Per-page link dedup (SO1) is algebraically FUSED into the global
+        # first-discovery aggregate below: keeping min link_pos per
+        # (pop_rank, href) then taking min(struct(pop_rank, link_pos))
+        # per url is identical to taking the min over the un-deduped rows
+        # (duplicates only add larger (pop_rank, link_pos) tuples, which
+        # can never win the min; same-page duplicates share depth). An
+        # explicit row_number window here would shuffle the whole exploded
+        # link set once more per round for no semantic effect — at 10^10
+        # scale that is the round's largest intermediate. host rides in
+        # the struct behind the unique (pop_rank, link_pos): it is a
+        # function of url, and grouping by url alone keeps the url
+        # partitioning new_urls' dedup reuses.
+        cand = admitted.groupBy("url").agg(
+            F.min(F.struct("pop_rank", "link_pos", "depth", "host")).alias("f")
+        ).select(
+            "url",
+            F.col("f.host").alias("host"),
+            F.col("f.pop_rank").alias("pop_rank"),
+            F.col("f.link_pos").alias("link_pos"),
+            (F.col("f.depth") + 1).alias("depth"),
+        )
+        if probe:
+            # bounded by batch x out-degree, and the probe shape reads it
+            # twice (the seen-probe broadcast build + the final
+            # anti-join); the plain anti-join reads it once
+            cand = cand.cache()
+            release.append(cand.unpersist)
 
-            if self.track_link_graph:
-                edges = admit_urls(
-                    enriched.where(F.col("outcome") == "fetched")
-                    .select(
-                        F.col("url").alias("src"),
-                        F.explode_outer("out_links").alias("href"),
-                    )
-                    .where(F.col("href").isNotNull()),
-                    "href",
-                ).select("src", F.col("url").alias("dst")).distinct()
-                futures.append(
-                    pool.submit(
-                        self._commit, self.edges_tbl, "link_edges", edges,
-                        mode="append",
-                    )
-                )
+        # seen set: pending ∪ fetched as pinned at round start, minus
+        # this round's deaths (simulator order: deletes happen before
+        # link insertion). Popped rows that were fetched or retried stay
+        # seen, and they are in pending already.
+        dead = enriched.where(F.col("outcome") == "dead").select("url", "url_hash")
+        seen_urls = (
+            pending.select("url")
+            .join(F.broadcast(dead.select("url")), "url", "left_anti")
+            .unionByName(fetched_old.select("url"))
+        )
+        fresh = new_urls(
+            cand, seen_urls, bloom=self.seen_filter, spark=self.spark, probe_broadcast=probe
+        )
+        # discovery-order seq assignment. Size-aware dispatch: a round's new
+        # links are bounded by batch_size × out_degree, so small batches use
+        # the bounded single-window rank (one fewer job — the window input
+        # is driver-page-sized); large batches use the two-stage distributed
+        # rank so 10^7 links never funnel through one task. Both produce the
+        # identical total order (pop_rank, link_pos).
+        pinned = None
+        if self.batch_size <= self.rank_window_threshold:
+            ranked = fresh.withColumn(
+                "__rank",
+                F.row_number().over(Window.orderBy("pop_rank", "link_pos")) - 1,
+            )
+        else:
+            ranked, pinned = with_global_rank(
+                fresh, ["pop_rank", "link_pos"], rank_col="__rank"
+            )
+            release.append(pinned.unpersist)
+        new_rows = new_pending_rows(
+            ranked, seq=F.col("__rank") + F.lit(self.seq_counter), depth=F.col("depth")
+        ).withColumn("op", F.lit("add"))
 
-            # link pipeline (P5→P1+P2→J6→J3): one admit_url pass yields the
-            # canonical url, its malformed flag and the host/path columns the
-            # compiled robots predicate reads
-            _t = _time.perf_counter()
-            links = (
-                enriched.where(F.col("outcome") == "fetched")
-                .select(
-                    "pop_rank",
-                    "depth",
-                    F.posexplode_outer("out_links").alias("link_pos", "href"),
-                )
-                .where(F.col("href").isNotNull())
-            )
-            admitted = robots_allowed(
-                admit_urls(links, "href"), prebuilt_rules=self._robots_rules,
-                compiled=self._robots_pred, try_compile=False,
-            )
-            # Per-page link dedup (SO1) is algebraically FUSED into the global
-            # first-discovery aggregate below: keeping min link_pos per
-            # (pop_rank, href) then taking min(struct(pop_rank, link_pos))
-            # per url is identical to taking the min over the un-deduped rows
-            # (duplicates only add larger (pop_rank, link_pos) tuples, which
-            # can never win the min; same-page duplicates share depth). An
-            # explicit row_number window here would shuffle the whole exploded
-            # link set once more per round for no semantic effect — at 10^10
-            # scale that is the round's largest intermediate. host rides in
-            # the struct behind the unique (pop_rank, link_pos): it is a
-            # function of url, and grouping by url alone keeps the url
-            # partitioning new_urls' dedup reuses.
-            cand = admitted.groupBy("url").agg(
-                F.min(F.struct("pop_rank", "link_pos", "depth", "host")).alias("f")
-            ).select(
-                "url",
-                F.col("f.host").alias("host"),
-                F.col("f.pop_rank").alias("pop_rank"),
-                F.col("f.link_pos").alias("link_pos"),
-                (F.col("f.depth") + 1).alias("depth"),
-            )
-            if probe:
-                # bounded by batch x out-degree, and the probe shape reads it
-                # twice (the seen-probe broadcast build + the final
-                # anti-join); the plain anti-join reads it once
-                cand = cand.cache()
+        # merge-on-read delta commit, O(batch): every popped row version
+        # gets an equality 'del' on (url, seq, attempts, priority);
+        # retries re-append at attempts+1 and brand-new links append
+        # fresh. The base is untouched — no O(pending) rewrite in the
+        # round path. The new-link count comes from the written file's
+        # footer. One file unless the distributed rank ran (its last
+        # stage stays wide).
+        dels = popped.select(*FRONTIER_COLS_PENDING, F.lit("del").alias("op"))
+        retries = enriched.where(F.col("outcome") == "retry").select(
+            *[
+                (F.col(c) + 1).alias(c) if c == "attempts" else c
+                for c in FRONTIER_COLS_PENDING
+            ],
+            F.lit("add").alias("op"),
+        )
+        delta = self._commit(
+            self.pending_delta_tbl,
+            dels.unionByName(retries).unionByName(new_rows),
+            mode="append",
+            single_file=pinned is None,
+            # per-commit lineage (north rule): which round produced this
+            # delta; adds = rows - dels
+            extra={"round": self.round_id, "dels": n_popped},
+        )
+        return delta, dead
 
-            # seen set: pending ∪ fetched as pinned at round start, minus
-            # this round's deaths (simulator order: deletes happen before
-            # link insertion). Popped rows that were fetched or retried stay
-            # seen, and they are in pending already.
-            dead = enriched.where(F.col("outcome") == "dead").select("url", "url_hash")
-            seen_urls = (
-                pending.select("url")
-                .join(F.broadcast(dead.select("url")), "url", "left_anti")
-                .unionByName(fetched_old.select("url"))
-            )
-            fresh = new_urls(
-                cand,
-                seen_urls,
-                bloom=self.seen_filter,
-                spark=self.spark,
-                probe_broadcast=probe,
-            )
-            # discovery-order seq assignment. Size-aware dispatch: a round's new
-            # links are bounded by batch_size × out_degree, so small batches use
-            # the bounded single-window rank (one fewer job — the window input
-            # is driver-page-sized); large batches use the two-stage distributed
-            # rank so 10^7 links never funnel through one task. Both produce the
-            # identical total order (pop_rank, link_pos).
-            if self.batch_size <= self.rank_window_threshold:
-                ranked = fresh.withColumn(
-                    "__rank",
-                    F.row_number().over(Window.orderBy("pop_rank", "link_pos")) - 1,
+    def _update_seen_filter(self, delta: SnapshotInfo, seq0: int, dead: DataFrame) -> None:
+        """Seen-filter maintenance (probe regime only): absorb the new
+        links as written (seq >= seq0 tells them from retries) and drop
+        the deaths. A cuckoo these links would fill past CUCKOO_MAX_LOAD
+        is dropped instead; the next read rebuilds it, sized from
+        seq_counter."""
+        if self.seen_filter is None:
+            return
+        with self._phase("filters"):
+            if _filter_fits(self.seen_filter, self.bloom_bits, self.seq_counter):
+                added = (
+                    self.spark.read.schema(PENDING_DELTA_DDL)
+                    .parquet(delta.paths[-1])
+                    .where((F.col("op") == "add") & (F.col("seq") >= seq0))
+                    .select("url_hash")
+                )
+                self.seen_filter = update_seen_filter(
+                    self.spark, self.seen_filter, added, dead.select("url_hash")
                 )
             else:
-                ranked, pinned = with_global_rank(
-                    fresh, ["pop_rank", "link_pos"], rank_col="__rank"
-                )
-            seq0 = self.seq_counter
-            new_rows = ranked.select(
-                "url",
-                F.xxhash64("url").alias("url_hash"),
-                "host",
-                F.col("depth").cast("int").alias("depth"),
-                F.lit(0).alias("priority"),
-                (F.col("__rank") + F.lit(seq0)).cast("long").alias("seq"),
-                F.lit("pending").alias("state"),
-                F.lit(0).alias("attempts"),
-                self._bucket().alias("bucket"),
-                F.lit("add").alias("op"),
-            )
+                self.seen_filter = None
 
-            # merge-on-read delta commit, O(batch): every popped row version
-            # gets an equality 'del' on (url, seq, attempts, priority);
-            # retries re-append at attempts+1 and brand-new links append
-            # fresh. The base is untouched — no O(pending) rewrite in the
-            # round path. This write is the link pipeline's only job: the
-            # new-link count comes from the written file's footer. One file
-            # unless the distributed rank ran (its last stage stays wide).
-            dels = popped.select(*FRONTIER_COLS_PENDING, F.lit("del").alias("op"))
-            retries = enriched.where(F.col("outcome") == "retry").select(
-                *[
-                    (F.col(c) + 1).alias(c) if c == "attempts" else c
-                    for c in FRONTIER_COLS_PENDING
-                ],
-                F.lit("add").alias("op"),
-            )
-            info = self._commit(
-                self.pending_delta_tbl,
-                "frontier_pending_delta",
-                dels.unionByName(retries).unionByName(new_rows),
-                mode="append",
-                single_file=pinned is None,
-                # per-commit lineage (north rule): which round produced this
-                # delta; adds = rows - dels
-                extra={"round": self.round_id, "dels": n_popped},
-            )
-            n_new = info.rows - n_popped - n_retry
-            self.seq_counter += n_new
-            _ph["links"] = _time.perf_counter() - _t
-
-            # seen-filter maintenance (probe regime), over the new links as
-            # written (seq >= seq0 tells them from retries) and the deaths
-            if self.seen_filter is not None:
-                _t = _time.perf_counter()
-                if _filter_fits(self.seen_filter, self.bloom_bits, self.seq_counter):
-                    added = (
-                        self.spark.read.schema(self._delta_schema())
-                        .parquet(info.paths[-1])
-                        .where((F.col("op") == "add") & (F.col("seq") >= seq0))
-                        .select("url_hash")
-                    )
-                    self.seen_filter = update_seen_filter(
-                        self.spark, self.seen_filter, added, dead.select("url_hash")
-                    )
-                else:
-                    # a cuckoo these links would fill past CUCKOO_MAX_LOAD:
-                    # the next read rebuilds it, sized from seq_counter
-                    self.seen_filter = None
-                _ph["filters"] = _time.perf_counter() - _t
-            if self.compact_every and self.round_id % self.compact_every == 0:
-                _t = _time.perf_counter()
+    def _finish_commits(
+        self, m: dict, host_popped: Counter, futures: list, compacts: bool
+    ) -> None:
+        """Compaction of pending (on compaction rounds), the metrics
+        commit, and the barrier: every pooled commit must be durable (a
+        raised CommitConflict or write error surfaces here) before the
+        checkpoint pointer advances."""
+        if compacts:
+            with self._phase("compact"):
                 self._compact_pending()  # folds the delta just written
-                _ph["compact"] = _time.perf_counter() - _t
-
-            m = {
-                "round": self.round_id,
-                "popped": n_popped,
-                "fetched": outcome_counts.get("fetched", 0),
-                "dead": outcome_counts.get("dead", 0),
-                "retried": n_retry,
-                "links_seen": int(n_links_seen),
-                "links_inserted": n_new,
-            }
-            metric_rows = [
-                (self.round_id, "round", k, int(v)) for k, v in m.items() if k != "round"
-            ] + [
-                (self.round_id, f"host:{h}", "popped", int(n))
-                for h, n in sorted(host_popped.items())
-            ]
-            _t = _time.perf_counter()
-            self._commit_rows(
-                self.metrics_tbl,
-                "metrics",
-                metric_rows,
-                "round int, scope string, key string, value long",
-                mode="append",
-            )
-            _ph["metrics"] = _time.perf_counter() - _t
-            # barrier: every commit must be durable (a raised CommitConflict or
-            # write error surfaces here) before the checkpoint pointer advances
-            _t = _time.perf_counter()
+        metric_rows = [
+            (self.round_id, "round", k, int(v)) for k, v in m.items() if k != "round"
+        ] + [
+            (self.round_id, f"host:{h}", "popped", int(n))
+            for h, n in sorted(host_popped.items())
+        ]
+        with self._phase("metrics"):
+            self._commit_rows(self.metrics_tbl, metric_rows, METRICS_DDL, mode="append")
+        with self._phase("commits_join"):
             for fut in futures:
                 fut.result()
-            _ph["commits_join"] = _time.perf_counter() - _t
-        except BaseException:
-            # a failed round leaves none of its jobs running on the shared
-            # pool: drop what has not started, wait out the rest
-            for fut in futures:
-                fut.cancel()
-            wait(futures)
-            raise
-        finally:
-            # every reader of these rows has been joined
-            unpin(popped)
-            unpin(enriched)
-            if probe and cand is not None:
-                cand.unpersist()
-            if pinned is not None:
-                pinned.unpersist()
-        if self.compact_every and self.round_id % self.compact_every == 0:
-            # bin-pack the append-only tables' per-round files (Iceberg
-            # rewrite_data_files, SnapshotTable.compact_tail): each table
-            # gains one small file per round, and fetched is re-read every
-            # round by the seen-side union — unfolded, reader file counts
-            # grow O(rounds) (the late-round drift measured in
-            # BENCH/BASELINE.md's 200k-page run). Tail-only fold ⇒
-            # amortized O(batch) per round; runs after the commit barrier
-            # so this round's appends are durable, before the checkpoint
-            # so the folded versions are the pinned ones.
-            _t = _time.perf_counter()
-            fold = [
-                (self.fetched_tbl, "frontier_fetched"),
-                (self.documents_tbl, "documents"),
-                (self.metrics_tbl, "metrics"),
-            ]
-            if self.track_link_graph:
-                fold.append((self.edges_tbl, "link_edges"))
-            for tbl, name in fold:
-                info = tbl.compact_tail(
-                    self.spark, parent_version=self.versions.get(name)
-                )
-                if info is not None:
-                    self.versions[name] = info.version
-            _ph["compact_tail"] = _time.perf_counter() - _t
-        _t = _time.perf_counter()
-        self._save_checkpoint()
-        _ph["ckpt"] = _time.perf_counter() - _t
-        # long crawls would otherwise accumulate O(rounds) pending-table
-        # rewrites; keep a bounded time-travel window (checkpoint pins the
-        # current version, which is always retained)
+
+    def _fold_and_checkpoint(self, compacts: bool) -> None:
+        """After the barrier: on compaction rounds, bin-pack the
+        append-only tables' per-round files (Iceberg rewrite_data_files,
+        SnapshotTable.compact_tail); then the checkpoint, then snapshot
+        expiry.
+
+        Each append-only table gains one small file per round, and
+        fetched is re-read every round by the seen-side union — unfolded,
+        reader file counts grow O(rounds) (the late-round drift measured
+        in BENCH/BASELINE.md's 200k-page run). Tail-only fold ⇒ amortized
+        O(batch) per round; it runs after the barrier so this round's
+        appends are durable, before the checkpoint so the folded versions
+        are the pinned ones. Expiry keeps a bounded time-travel window of
+        every table (the checkpoint pins the current version, which is
+        always retained); on the append-only tables it collects the
+        folded-away per-round files."""
+        if compacts:
+            with self._phase("compact_tail"):
+                for tbl in self._append_only:
+                    info = tbl.compact_tail(self.spark, parent_version=self._version(tbl))
+                    if info is not None:
+                        self.versions[tbl.name] = info.version
+        with self._phase("ckpt"):
+            self._save_checkpoint()
         if self.snapshot_keep:
-            _t = _time.perf_counter()
-            self.pending_tbl.expire_snapshots(keep=self.snapshot_keep)
-            self.pending_delta_tbl.expire_snapshots(keep=self.snapshot_keep)
-            self.hosts_tbl.expire_snapshots(keep=self.snapshot_keep)
-            # append-only tables: before compact_tail existed, expiry was a
-            # no-op here (every dir stayed referenced by the current
-            # manifest); now it GCs the folded-away per-round files
-            self.fetched_tbl.expire_snapshots(keep=self.snapshot_keep)
-            self.documents_tbl.expire_snapshots(keep=self.snapshot_keep)
-            self.metrics_tbl.expire_snapshots(keep=self.snapshot_keep)
-            if self.track_link_graph:
-                self.edges_tbl.expire_snapshots(keep=self.snapshot_keep)
-            _ph["expire"] = _time.perf_counter() - _t
-        if self.profile_rounds:
-            _ph["total"] = _time.perf_counter() - _t0
-            _ph["other"] = _ph["total"] - sum(
-                v for k, v in _ph.items() if k != "total"
-            )
-            m["phases"] = {k: round(v, 3) for k, v in _ph.items()}
-        return m
+            with self._phase("expire"):
+                for tbl in self._tables:
+                    tbl.expire_snapshots(keep=self.snapshot_keep)
 
     def run(
         self,
@@ -1229,7 +1252,7 @@ class CrawlEngine:
     def link_graph(self) -> DataFrame:
         """Accumulated distinct (src, dst) edges of fetched pages
         (``track_link_graph=True``); input to operators/graph.pagerank."""
-        return self._read(self.edges_tbl, "link_edges").dropDuplicates(
+        return self._read(self.edges_tbl).dropDuplicates(
             ["src", "dst"]
         )
 
@@ -1255,7 +1278,7 @@ class CrawlEngine:
     # -- result accessors ------------------------------------------------------
 
     def documents(self) -> DataFrame:
-        return self._read(self.documents_tbl, "documents")
+        return self._read(self.documents_tbl)
 
     def frontier(self) -> DataFrame:
         """Logical frontier view: pending ∪ fetched (dead rows are gone).
@@ -1264,11 +1287,11 @@ class CrawlEngine:
         return (
             self._read_pending()
             .select(*FRONTIER_COLS)
-            .unionByName(self._read(self.fetched_tbl, "frontier_fetched"))
+            .unionByName(self._read(self.fetched_tbl))
         )
 
     def metrics(self) -> DataFrame:
-        return self._read(self.metrics_tbl, "metrics")
+        return self._read(self.metrics_tbl)
 
     def crawl_order(self) -> DataFrame:
         """(url, fetch_round, seq_in_round) for every *fetched* page —

@@ -55,14 +55,14 @@ def vector_topk(
     TakeOrderedAndProject — per-partition heaps, no global sort.
     Similarity kernel dispatches on dimensionality: Column fold (JVM,
     whole-stage codegen) below BLAS_DIM_THRESHOLD, Arrow-batched numpy
-    matvec above (both exact double-precision cosine)."""
+    row sums above (both exact double-precision cosine)."""
     if len(query_vec) >= BLAS_DIM_THRESHOLD:
         sim = make_cosine_batch_udf(list(query_vec))(F.col(vec_col))
     else:
         # fail LOUDLY on a dimension mismatch: below the BLAS threshold the
         # zip_with fold would otherwise pad with nulls and return null
-        # similarities — silently garbage top-k (the BLAS path already
-        # raises on shape mismatch inside the matvec)
+        # similarities — silently garbage top-k (the numpy path already
+        # raises on a shape mismatch, in cosine_rows)
         sim = F.when(
             F.size(F.col(vec_col)) == F.lit(len(query_vec)),
             cosine_sim(F.col(vec_col), query_vec),

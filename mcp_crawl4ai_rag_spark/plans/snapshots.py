@@ -77,6 +77,9 @@ class SnapshotTable:
 
     def __init__(self, base: str, name: str):
         self.dir = os.path.join(base, name)
+        # the directory basename; a crawl checkpoint keys its pinned
+        # versions by it
+        self.name = os.path.basename(self.dir)
         os.makedirs(self.dir, exist_ok=True)
         self.manifest_path = os.path.join(self.dir, "MANIFEST.json")
 
@@ -90,6 +93,47 @@ class SnapshotTable:
     def _manifest(self, version: int) -> dict:
         with open(os.path.join(self.dir, f"m{version}.json")) as f:
             return json.load(f)
+
+    def _next_version(
+        self, expected_version: int | None
+    ) -> tuple[SnapshotInfo | None, int]:
+        """The current snapshot and the version a commit writes; raises
+        CommitConflict when ``expected_version`` is given and not current."""
+        cur = self.current()
+        cur_v = cur.version if cur else 0
+        if expected_version is not None and cur_v != expected_version:
+            raise CommitConflict(
+                f"{self.dir}: expected v{expected_version}, found v{cur_v}"
+            )
+        return cur, cur_v + 1
+
+    def _lineage(
+        self,
+        cur: SnapshotInfo | None,
+        mode: str,
+        parent_version: int | None,
+        path: str,
+    ) -> tuple[list, int]:
+        """(paths, folded) of a flat commit writing ``path``: an append
+        extends its parent's file list (``parent_version``, else the
+        current one) and keeps its folded prefix; anything else starts a
+        new lineage."""
+        if mode == "append" and cur is not None:
+            parent_m = self._manifest(
+                parent_version if parent_version is not None else cur.version
+            )
+            return list(parent_m["paths"]) + [path], parent_m.get("folded", 1)
+        return [path], 1
+
+    def _publish(self, manifest: dict) -> None:
+        """Write the version's manifest, then swap it in as current."""
+        mpath = os.path.join(self.dir, f"m{manifest['version']}.json")
+        with open(mpath, "w") as f:
+            json.dump(manifest, f)
+        tmp = self.manifest_path + f".tmp.{os.getpid()}.{time.time_ns()}"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, self.manifest_path)  # atomic pointer swap
 
     def read(
         self,
@@ -200,28 +244,14 @@ class SnapshotTable:
         The returned info (and the manifest) carry ``rows``, the rows
         this commit wrote, read from the new files' footers.
         """
-        cur = self.current()
-        cur_v = cur.version if cur else 0
-        if expected_version is not None and cur_v != expected_version:
-            raise CommitConflict(
-                f"{self.dir}: expected v{expected_version}, found v{cur_v}"
-            )
-        new_v = cur_v + 1
+        cur, new_v = self._next_version(expected_version)
         path = os.path.join(self.dir, f"d{new_v}")
         writer = (df.coalesce(1) if single_file else df).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.options(**WRITE_OPTIONS).parquet(path)
         rows = None if partition_by else parquet_rows(path)
-        if mode == "append" and cur is not None:
-            parent_m = self._manifest(
-                parent_version if parent_version is not None else cur.version
-            )
-            paths = list(parent_m["paths"]) + [path]
-            folded = parent_m.get("folded", 1)
-        else:
-            paths = [path]
-            folded = 1
+        paths, folded = self._lineage(cur, mode, parent_version, path)
         manifest = {
             "version": new_v,
             "paths": paths,
@@ -231,13 +261,7 @@ class SnapshotTable:
             "rows": rows,
             "extra": extra or {},
         }
-        mpath = os.path.join(self.dir, f"m{new_v}.json")
-        with open(mpath, "w") as f:
-            json.dump(manifest, f)
-        tmp = self.manifest_path + f".tmp.{os.getpid()}.{time.time_ns()}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self.manifest_path)  # atomic pointer swap
+        self._publish(manifest)
         return SnapshotInfo(new_v, paths, extra or {}, rows)
 
     def compact_tail(
@@ -315,13 +339,7 @@ class SnapshotTable:
                 "folded_dirs": len(read_paths),
             },
         }
-        mpath = os.path.join(self.dir, f"m{new_v}.json")
-        with open(mpath, "w") as f:
-            json.dump(manifest, f)
-        tmp = self.manifest_path + f".tmp.{os.getpid()}.{time.time_ns()}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self.manifest_path)  # atomic pointer swap
+        self._publish(manifest)
         return SnapshotInfo(new_v, new_paths, manifest["extra"])
 
     def commit_rows(
@@ -346,83 +364,34 @@ class SnapshotTable:
         scheduling latency) per round per table at any scale, since these
         rows never live on executors in the first place.
 
-        schema: a pyspark StructType, or a simple DDL string
-        ("round int, scope string, key string, value long").
+        schema: a pyspark StructType, or a DDL string ("round int, scope
+        string, key string, value long"), of atomic column types only.
         """
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from pyspark.sql.types import (
-            BooleanType,
-            DoubleType,
-            FloatType,
-            IntegerType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import AtomicType, DataType
 
-        _DDL = {
-            "int": IntegerType(),
-            "integer": IntegerType(),
-            "long": LongType(),
-            "bigint": LongType(),
-            "string": StringType(),
-            "double": DoubleType(),
-            "float": FloatType(),
-            "boolean": BooleanType(),
-        }
-        _PA = {
-            "integer": pa.int32(),
-            "long": pa.int64(),
-            "string": pa.string(),
-            "double": pa.float64(),
-            "float": pa.float32(),
-            "boolean": pa.bool_(),
-        }
-        if isinstance(schema, str):
-            fields = []
-            for part in schema.split(","):
-                name, typ = part.strip().rsplit(" ", 1)
-                if typ.lower() not in _DDL:
-                    raise ValueError(f"commit_rows: unsupported DDL type {typ!r}")
-                fields.append(StructField(name.strip(), _DDL[typ.lower()]))
-            struct = StructType(fields)
-        else:
-            struct = schema
-        try:
-            pa_fields = [
-                pa.field(f.name, _PA[f.dataType.typeName()]) for f in struct.fields
-            ]
-        except KeyError as e:  # nested/complex types stay on the Spark path
-            raise ValueError(f"commit_rows: unsupported type {e}") from None
-        pa_schema = pa.schema(pa_fields)
-        cols = list(zip(*rows)) if rows else [[] for _ in pa_fields]
+        struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+        for f in struct.fields:
+            if not isinstance(f.dataType, AtomicType):
+                # nested/complex types stay on the Spark path
+                raise ValueError(
+                    f"commit_rows: unsupported type {f.dataType.simpleString()!r}"
+                )
+        pa_schema = to_arrow_schema(struct)
+        cols = list(zip(*rows)) if rows else [[] for _ in pa_schema]
         table = pa.Table.from_arrays(
-            [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_fields)],
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
             schema=pa_schema,
         )
 
-        cur = self.current()
-        cur_v = cur.version if cur else 0
-        if expected_version is not None and cur_v != expected_version:
-            raise CommitConflict(
-                f"{self.dir}: expected v{expected_version}, found v{cur_v}"
-            )
-        new_v = cur_v + 1
+        cur, new_v = self._next_version(expected_version)
         path = os.path.join(self.dir, f"d{new_v}")
         os.makedirs(path, exist_ok=True)
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-        if mode == "append" and cur is not None:
-            parent_m = self._manifest(
-                parent_version if parent_version is not None else cur.version
-            )
-            paths = list(parent_m["paths"]) + [path]
-            folded = parent_m.get("folded", 1)
-        else:
-            paths = [path]
-            folded = 1
+        paths, folded = self._lineage(cur, mode, parent_version, path)
         manifest = {
             "version": new_v,
             "paths": paths,
@@ -431,13 +400,7 @@ class SnapshotTable:
             "committed_at": time.time(),
             "extra": extra or {},
         }
-        mpath = os.path.join(self.dir, f"m{new_v}.json")
-        with open(mpath, "w") as f:
-            json.dump(manifest, f)
-        tmp = self.manifest_path + f".tmp.{os.getpid()}.{time.time_ns()}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self.manifest_path)  # atomic pointer swap
+        self._publish(manifest)
         return SnapshotInfo(new_v, paths, extra or {})
 
     def commit_partitioned(
@@ -458,13 +421,7 @@ class SnapshotTable:
         surviving rows disappears from the map. Per-commit write cost is
         O(changed rows), never O(table).
         """
-        cur = self.current()
-        cur_v = cur.version if cur else 0
-        if expected_version is not None and cur_v != expected_version:
-            raise CommitConflict(
-                f"{self.dir}: expected v{expected_version}, found v{cur_v}"
-            )
-        new_v = cur_v + 1
+        cur, new_v = self._next_version(expected_version)
         path = os.path.join(self.dir, f"d{new_v}")
         df.write.mode("overwrite").partitionBy(part_col).options(**WRITE_OPTIONS).parquet(path)
         written = {
@@ -500,13 +457,7 @@ class SnapshotTable:
                 else "all",
             },
         }
-        mpath = os.path.join(self.dir, f"m{new_v}.json")
-        with open(mpath, "w") as f:
-            json.dump(manifest, f)
-        tmp = self.manifest_path + f".tmp.{os.getpid()}.{time.time_ns()}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self.manifest_path)  # atomic pointer swap
+        self._publish(manifest)
         return SnapshotInfo(new_v, manifest["paths"], extra or {})
 
     def expire_snapshots(self, keep: int = 3) -> None:

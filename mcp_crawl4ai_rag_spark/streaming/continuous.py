@@ -32,6 +32,7 @@ from mcp_crawl4ai_rag_spark.functions.urls import admit_urls
 from mcp_crawl4ai_rag_spark.operators.crawl import (
     load_seen_filter,
     merge_on_read_pending,
+    new_pending_rows,
 )
 from mcp_crawl4ai_rag_spark.operators.dedup import new_urls, update_seen_filter
 from mcp_crawl4ai_rag_spark.operators.politeness import robots_allowed
@@ -57,9 +58,9 @@ def admit_links_batch(
     seen: DataFrame,
     robots: DataFrame,
     base_seq: int,
-    host_buckets: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
-    """One micro-batch of raw links → frontier delta 'add' rows.
+    """One micro-batch of raw links → frontier delta 'add' rows, in the
+    projection (and host buckets) of the crawl engine's own new links.
 
     Returns (rows, pinned); unpersist ``pinned`` after committing rows.
     """
@@ -81,18 +82,9 @@ def admit_links_batch(
     ranked, pinned = with_global_rank(
         fresh, ["parent_url", "link_pos", "url"], rank_col="__r"
     )
-    rows = ranked.select(
-        "url",
-        F.xxhash64("url").alias("url_hash"),
-        "host",
-        (F.col("depth") + 1).cast("int").alias("depth"),
-        F.lit(0).alias("priority"),
-        (F.col("__r") + F.lit(base_seq)).cast("long").alias("seq"),
-        F.lit("pending").alias("state"),
-        F.lit(0).alias("attempts"),
-        F.pmod(F.xxhash64("host"), F.lit(host_buckets)).cast("int").alias("bucket"),
-        F.lit("add").alias("op"),
-    )
+    rows = new_pending_rows(
+        ranked, seq=F.col("__r") + F.lit(base_seq), depth=F.col("depth") + 1
+    ).withColumn("op", F.lit("add"))
     return rows, pinned
 
 
@@ -103,7 +95,6 @@ def start_link_ingest(
     robots: DataFrame,
     checkpoint_dir: str,
     trigger_once: bool = True,
-    host_buckets: int = 16,
 ):
     """readStream(json files) → foreachBatch(admit + MOR delta append).
 
@@ -158,9 +149,7 @@ def start_link_ingest(
                 .collect()[0][0]
             )
             base_seq = int(max_seq) + 1 if max_seq is not None else 0
-        rows, pinned = admit_links_batch(
-            batch, seen, robots, base_seq, host_buckets=host_buckets
-        )
+        rows, pinned = admit_links_batch(batch, seen, robots, base_seq)
         n = rows.count()
         info = delta_tbl.commit(
             rows,
@@ -171,7 +160,7 @@ def start_link_ingest(
         ckp = CrawlCheckpoint(workdir)
         ck = ckp.load()
         if ck is not None:
-            ck["versions"]["frontier_pending_delta"] = info.version
+            ck["versions"][delta_tbl.name] = info.version
             ck["seq_counter"] = max(int(ck.get("seq_counter", 0)), base_seq + n)
             # fit-checked against the advanced seq_counter
             seen_filter = load_seen_filter(ck)

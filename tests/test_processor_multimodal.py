@@ -467,3 +467,8 @@ def test_streamed_seqs_not_reused_after_purge(spark, tmp_path):
     # allocated at/above the engine's counter — never a purged seq
     assert row[0]["seq"] >= ck_seq
     assert resumed.seq_counter > ck_seq
+    # the streamed row sits in its host's bucket: once compaction moves it
+    # from the delta into the bucketed base, purging the host finds it
+    resumed._compact_pending()
+    assert resumed.purge_host(row[0]["host"]) >= 1
+    assert new_url not in {r["url"] for r in resumed._read_pending().collect()}

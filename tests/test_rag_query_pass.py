@@ -223,3 +223,29 @@ def test_rag_query_dim_mismatch_raises(spark):
     )
     with pytest.raises(Exception, match="dim mismatch"):
         S.rag_query(chunks, "metal", k=2, embed_dim=32)
+
+
+def test_duplicate_embeddings_tie_on_id_at_any_batch_position(spark):
+    """Equal embeddings at different positions of one Arrow batch score
+    bit-equal on the numpy path (at or above BLAS_DIM_THRESHOLD), so they
+    tie and break on id, in rag_query and vector_topk alike. The
+    duplicates sit at every other row of a 15-row batch, their ids
+    falling as their position rises; a matvec ``m @ q`` scores the last
+    rows of an odd-sized batch differently from the others."""
+    dim, query = 2560, "metal"
+    dup = embed_query_py(query, dim)  # the query's own: every duplicate leads
+    rows = []
+    for pos in range(8):
+        rows.append((100 - pos, f"https://a/dup{pos}", "swift", dup))
+        if pos < 7:
+            rows.append((pos, f"https://a/o{pos}", "swift", hash_embed_py(f"v{pos}", dim)))
+    dup_ids = sorted(100 - pos for pos in range(8))
+    chunks = spark.createDataFrame(rows, SCHEMA).coalesce(1).cache()
+    try:
+        served = S.rag_query(chunks, query, k=8, hybrid=False, embed_dim=dim).collect()
+        topk = S.vector_topk(chunks, embed_query_py(query, dim), k=8).collect()
+    finally:
+        chunks.unpersist()
+    for got in (served, topk):
+        assert [r["id"] for r in got] == dup_ids
+        assert len({r["similarity"].hex() for r in got}) == 1

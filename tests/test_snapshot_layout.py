@@ -10,6 +10,7 @@ round keeps no persisted rows behind.
 from __future__ import annotations
 
 import os
+import time
 
 from mcp_crawl4ai_rag_spark.operators.crawl import CrawlEngine
 from mcp_crawl4ai_rag_spark.oracle.simulator import CrawlSimulator
@@ -66,7 +67,15 @@ def test_round_appends_one_file_no_sidecars(spark, tmp_path):
     assert docs_tbl.num_rows() == fetched
 
     # round 3 passes compact_every: the tails fold into one file each
-    eng.round()
+    t0 = time.perf_counter()
+    phases = eng.round()["phases"]
+    wall = time.perf_counter() - t0
+    # the phase report comes with every round, no flag set: each timed
+    # phase the benchmark reads, disjoint, inside the round's wall time
+    read = ["pop", "links", "commits_join", "compact", "compact_tail"]
+    assert set(read + ["other"]) <= set(phases), phases
+    assert all(phases[k] >= 0 for k in read + ["other"]), phases
+    assert sum(phases[k] for k in read) <= wall, (phases, wall)
     fetched_tbl = SnapshotTable(workdir, "frontier_fetched")
     assert fetched_tbl.current().extra.get("compacted") == "tail"
     for t in ["documents", "frontier_fetched"]:
