@@ -50,6 +50,11 @@ read the pop scans; nothing of this round's fetch but the dead URLs
 enters it. The pending-delta commit is the link pipeline's only job; the
 new-link count comes from the written file's parquet footer.
 
+The engine is the frontier's only writer. The continuous-mode stream
+(streaming/continuous.py) admits its links through ``ingest_links``: the
+round's admission (``_admit_links``) over the checkpoint's pinned
+versions, the same pinned-parent delta commit and the same checkpoint.
+
 Scale notes (10^10 frontier / 1000 executors):
 - the pop shuffles pending rows by host once; hot hosts are budget-bounded
   so the global top-k after the window is tiny (TakeOrderedAndProject);
@@ -244,7 +249,7 @@ FRONTIER_DDL = (
 # host's rows in one partition so host-scoped maintenance (recrawl, purge)
 # prunes to 1/N of the table; hot hosts stay safe because the pop itself
 # salt-spreads them (budgeted_pop). The count is fixed, not a setting:
-# every writer (a round, a resumed engine, the stream ingest) and
+# every writer (a round, a resumed engine, a streamed micro-batch) and
 # purge_host's driver-side bucket must agree on it.
 FRONTIER_COLS_PENDING = FRONTIER_COLS + ["bucket"]
 HOST_BUCKETS = 16
@@ -266,7 +271,7 @@ def new_pending_rows(
 ) -> DataFrame:
     """Newly admitted URLs (``df``'s url and host) as FRONTIER_COLS_PENDING
     rows: state 'pending', no attempts, priority 0 unless given. The one
-    projection a seed, a round's new links and the stream ingest share."""
+    projection a seed and admitted links (a round's or a stream's) share."""
     return df.select(
         "url",
         F.xxhash64("url").alias("url_hash"),
@@ -283,8 +288,6 @@ def new_pending_rows(
 # part of the key so a reprioritized row (same url/seq/attempts, new
 # priority) is not killed by its own delete; seq is never reused, so a dead
 # URL re-discovered later (attempts restart at 0) cannot collide either.
-# SHARED between the batch engine and streaming/continuous — one definition
-# so the two views cannot drift.
 PENDING_DELETE_KEY = ["url", "seq", "attempts", "priority"]
 
 
@@ -292,8 +295,7 @@ def merge_on_read_pending(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Merge-on-read view of the pending frontier: base ∪ delta-adds, minus
     equality deletes on PENDING_DELETE_KEY. The delete set is bounded by
     compact_every × batch rows → broadcast anti-join, no shuffle of the
-    base. Used by CrawlEngine._read_pending and the streaming ingest's
-    _pending_view — identical semantics by construction."""
+    base. CrawlEngine._read_pending reads it at the pinned versions."""
     adds = delta.where(F.col("op") == "add").drop("op")
     dels = delta.where(F.col("op") == "del").select(*PENDING_DELETE_KEY)
     return base.unionByName(adds).join(
@@ -484,9 +486,12 @@ class CrawlEngine:
         self._pool: ThreadPoolExecutor | None = None
         # the seen filter is read only in the probe-broadcast regime
         # (seq_counter > probe_broadcast_threshold): it stays None below
-        # it, and round() builds it from pending ∪ fetched where it first
-        # reads it (_build_seen_filter)
+        # it, and link admission builds it from pending ∪ fetched where it
+        # first reads it (_admit_links)
         self.seen_filter: BloomFilter | ShardedCuckoo | None = None
+        # the last streamed epoch admitted (ingest_links), None before any;
+        # checkpointed with the versions it admitted
+        self.stream_epoch: int | None = None
         # wall seconds per phase of the running round (_phase); round()
         # returns them as its "phases"
         self._phases: dict[str, float] = {}
@@ -569,6 +574,8 @@ class CrawlEngine:
             "bloom_bits": self.bloom_bits,
             "seen_filter_kind": self.seen_filter_kind,
             "max_attempts": self.max_attempts,
+            "probe_broadcast_threshold": self.probe_broadcast_threshold,
+            "stream_epoch": self.stream_epoch,
         }
         if self.seen_filter is not None:
             state["filter_path"] = self.checkpoint.save_filter(
@@ -593,9 +600,13 @@ class CrawlEngine:
         hosts_placeholder = spark.createDataFrame(
             [], "host string, capacity double, refill_rate double"
         )
-        # retry semantics are part of the checkpointed contract — a resume
-        # must not silently change them unless the caller overrides
-        kw.setdefault("max_attempts", ck.get("max_attempts", 3))
+        # retry semantics and the seen-filter regime are part of the
+        # checkpointed contract — a resume must not silently change them
+        # unless the caller overrides (a checkpoint that predates a key
+        # leaves the constructor's default)
+        for key in ("max_attempts", "probe_broadcast_threshold"):
+            if key in ck:
+                kw.setdefault(key, ck[key])
         eng = cls(
             spark,
             corpus,
@@ -607,12 +618,23 @@ class CrawlEngine:
             seen_filter_kind=ck["seen_filter_kind"],
             **kw,
         )
-        eng.round_id = ck["round_id"]
-        eng.seq_counter = ck["seq_counter"]
-        eng.versions = dict(ck["versions"])
-        if eng.seq_counter > eng.probe_broadcast_threshold:
-            eng.seen_filter = load_seen_filter(ck)
+        eng._restore(ck)
         return eng
+
+    def _restore(self, ck: dict) -> None:
+        """Take the crawl state of checkpoint ``ck``: round id, seq
+        counter, pinned versions, the last streamed epoch (none when ``ck``
+        has no ``stream_epoch``) and, above probe_broadcast_threshold, the
+        seen filter from its state file."""
+        self.round_id = ck["round_id"]
+        self.seq_counter = ck["seq_counter"]
+        self.versions = dict(ck["versions"])
+        self.stream_epoch = ck.get("stream_epoch")
+        self.seen_filter = (
+            load_seen_filter(ck)
+            if self.seq_counter > self.probe_broadcast_threshold
+            else None
+        )
 
     # -- seeding ------------------------------------------------------------
 
@@ -791,6 +813,42 @@ class CrawlEngine:
         live.unpersist()
         return n
 
+    def ingest_links(self, batch: DataFrame, epoch: int) -> None:
+        """Admit one micro-batch of streamed links (href, parent_url,
+        link_pos, depth) into the pending frontier and checkpoint it
+        (streaming/continuous.py).
+
+        The round's admission (``_admit_links``) runs in discovery order
+        (parent_url, link_pos, url) against pending ∪ fetched at the
+        pinned versions, and the delta append extends the pinned version:
+        the orphans of a torn round, or of a micro-batch that failed
+        before its checkpoint, drop out of the lineage. The append raises
+        CommitConflict when another writer committed to the delta since
+        the call began. The checkpoint records ``epoch`` as
+        ``stream_epoch`` in the same atomic swap as the versions it
+        admitted; an epoch at or below it is a replay and admits nothing."""
+        if self.stream_epoch is not None and epoch <= self.stream_epoch:
+            return
+        expected = self.pending_delta_tbl.current().version
+        release: list = []
+        try:
+            rows, _ = self._admit_links(
+                batch, ["parent_url", "link_pos", "url"], None,
+                self._read_pending(), self._read(self.fetched_tbl), release,
+            )
+            delta = self._commit(
+                self.pending_delta_tbl, rows, mode="append",
+                expected_version=expected, extra={"stream_epoch": epoch},
+            )
+        finally:
+            for free in release:
+                free()
+        seq0 = self.seq_counter
+        self.seq_counter += delta.rows
+        self._update_seen_filter(delta, seq0)
+        self.stream_epoch = epoch
+        self._save_checkpoint()
+
     # -- one BFS round --------------------------------------------------------
     # (the seen filter lives only past probe_broadcast_threshold. Each round
     # absorbs its new links and deaths after the delta commit, in one
@@ -798,15 +856,17 @@ class CrawlEngine:
     # on the driver for a bloom, per-shard deletes-then-inserts in executor
     # tasks for a cuckoo, so dead URLs leave it before link insertion.)
 
-    def _build_seen_filter(self, pending: DataFrame) -> BloomFilter | ShardedCuckoo:
+    def _build_seen_filter(
+        self, pending: DataFrame, fetched: DataFrame
+    ) -> BloomFilter | ShardedCuckoo:
         """The seen filter over the exact seen set, pending ∪ fetched —
-        built where new_urls first reads it: when the threshold is
-        crossed, on a resume above it without a usable state file
-        (load_seen_filter), or after a cuckoo reached CUCKOO_MAX_LOAD. A
-        cuckoo is sized from seq_counter, an upper bound on the keys it
+        built where new_urls first reads it (_admit_links): when the
+        threshold is crossed, on a resume above it without a usable state
+        file (load_seen_filter), or after a cuckoo reached CUCKOO_MAX_LOAD.
+        A cuckoo is sized from seq_counter, an upper bound on the keys it
         will hold, at most half full."""
         seen_hashes = pending.select("url_hash").unionByName(
-            self._read(self.fetched_tbl).select("url_hash")
+            fetched.select("url_hash")
         )
         if self.seen_filter_kind == "bloom":
             return build_bloom(seen_hashes, "url_hash", self.bloom_bits)
@@ -840,7 +900,7 @@ class CrawlEngine:
         self.round_id += 1
         compacts = bool(self.compact_every) and self.round_id % self.compact_every == 0
         with self._phase("pop"):
-            pending, hosts, probe, popped = self._pop()
+            pending, hosts, popped = self._pop()
         futures: list = []
         release = [partial(unpin, popped)]
         try:
@@ -855,11 +915,11 @@ class CrawlEngine:
             seq0 = self.seq_counter
             with self._phase("links"):
                 delta, dead = self._links(
-                    enriched, popped, pending, fetched_old, probe, m["popped"], release
+                    enriched, popped, pending, fetched_old, m["popped"], release
                 )
                 m["links_inserted"] = delta.rows - m["popped"] - m["retried"]
                 self.seq_counter += m["links_inserted"]
-            self._update_seen_filter(delta, seq0, dead)
+            self._update_seen_filter(delta, seq0, dead.select("url_hash"))
             self._finish_commits(m, host_popped, futures, compacts)
         except BaseException:
             # a failed round leaves none of its jobs running on the shared
@@ -877,26 +937,13 @@ class CrawlEngine:
         m["phases"] = self._phases
         return m
 
-    def _pop(self) -> tuple[DataFrame, DataFrame, bool, DataFrame]:
-        """Pop phase: the round's pending view and refilled hosts, the
-        seen filter where the probe regime first needs it, and the
-        budgeted pop, pinned. Returns (pending, hosts, probe, popped)."""
+    def _pop(self) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """Pop phase: the round's pending view and refilled hosts, and the
+        budgeted pop, pinned. Returns (pending, hosts, popped)."""
         pending = self._read_pending()
         hosts = self._read(self.hosts_tbl)
         if self.round_id > 1:
             hosts = refill_hosts(hosts)
-        # round candidates are bounded; once the frontier outgrows the
-        # threshold, the seen-scan probe shape (no frontier shuffle or
-        # driver broadcast) is the only safe plan. The approximate
-        # prefilter follows the same dispatch: it pays only in that
-        # probe regime (shrinks the broadcast probe set before the full
-        # seen scan) — against a small anti-joinable seen set its two
-        # Python/Arrow probe passes are pure added stages (new_urls
-        # docstring measurements; ~0.85 s/round at bench batch sizes).
-        # Output is exact on both paths, so dispatch never changes it.
-        probe = self.seq_counter > self.probe_broadcast_threshold
-        if probe and self.seen_filter is None:
-            self.seen_filter = self._build_seen_filter(pending)
         # the hosts table's row count (parquet footers, no job) bounds the
         # binding set, so budgeted_pop needs no probe job while it fits.
         # The pop's rows are computed by the fetch stage's first job.
@@ -906,7 +953,7 @@ class CrawlEngine:
                 hosts_rows=self.hosts_tbl.num_rows(self._version(self.hosts_tbl)),
             )
         )
-        return pending, hosts, probe, popped
+        return pending, hosts, popped
 
     def _fetch(self, popped: DataFrame) -> DataFrame:
         """Fetch phase: the popped rows with their pages' status, clean
@@ -1024,22 +1071,118 @@ class CrawlEngine:
             )
         return fetched_old
 
+    def _admit_links(
+        self,
+        links: DataFrame,
+        order: list[str],
+        bound: int | None,
+        pending: DataFrame,
+        fetched: DataFrame,
+        release: list,
+        dead: DataFrame | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """Link admission, the one pipeline a round and a streamed
+        micro-batch share: raw links (``href``, ``link_pos``, the parent's
+        ``depth`` and the other ``order`` columns) → canonical url,
+        malformed flag and robots (one admit_url pass) → first occurrence
+        per url in ``order`` → the urls new against the seen set → seqs
+        from seq_counter in ``order`` → pending-delta 'add' rows at the
+        parent's depth + 1.
+
+        The seen set is ``pending`` minus ``dead`` (a round's deaths),
+        ∪ ``fetched``. ``bound`` bounds the parent pages (a round's
+        batch_size; None for a stream): at or below rank_window_threshold
+        the seqs come from one bounded window, else from the two-stage
+        distributed rank. Appends a release for each frame it caches to
+        ``release``. Returns the rows and whether the window rank ran
+        (the rows then come out of one task)."""
+        # round candidates are bounded; once the frontier outgrows the
+        # threshold, the seen-scan probe shape (no frontier shuffle or
+        # driver broadcast) is the only safe plan. The approximate
+        # prefilter follows the same dispatch: it pays only in that
+        # probe regime (shrinks the broadcast probe set before the full
+        # seen scan) — against a small anti-joinable seen set its two
+        # Python/Arrow probe passes are pure added stages (new_urls
+        # docstring measurements; ~0.85 s/round at bench batch sizes).
+        # Output is exact on both paths, so dispatch never changes it.
+        probe = self.seq_counter > self.probe_broadcast_threshold
+        if probe and self.seen_filter is None:
+            self.seen_filter = self._build_seen_filter(pending, fetched)
+        # one admit_url pass yields the canonical url, its malformed flag
+        # and the host/path columns the compiled robots predicate reads
+        admitted = robots_allowed(
+            admit_urls(links, "href"), prebuilt_rules=self._robots_rules,
+            compiled=self._robots_pred, try_compile=False,
+        )
+        # Per-page link dedup (SO1) is algebraically FUSED into the global
+        # first-discovery aggregate below: keeping min link_pos per
+        # (parent, href) then taking min(struct(*order)) per url is
+        # identical to taking the min over the un-deduped rows
+        # (duplicates only add larger order tuples, which can never win
+        # the min; same-page duplicates share depth). An explicit
+        # row_number window here would shuffle the whole exploded link
+        # set once more per round for no semantic effect — at 10^10 scale
+        # that is the round's largest intermediate. host rides in the
+        # struct behind the unique order: it is a function of url, and
+        # grouping by url alone keeps the url partitioning new_urls'
+        # dedup reuses (url, the group key, leaves the struct).
+        first = [c for c in order if c != "url"]
+        cand = admitted.groupBy("url").agg(
+            F.min(F.struct(*first, "depth", "host")).alias("f")
+        ).select(
+            "url",
+            F.col("f.host").alias("host"),
+            *[F.col(f"f.{c}").alias(c) for c in first],
+            (F.col("f.depth") + 1).alias("depth"),
+        )
+        if probe:
+            # bounded by batch x out-degree, and the probe shape reads it
+            # twice (the seen-probe broadcast build + the final
+            # anti-join); the plain anti-join reads it once
+            cand = cand.cache()
+            release.append(cand.unpersist)
+        seen_pending = pending.select("url")
+        if dead is not None:
+            seen_pending = seen_pending.join(
+                F.broadcast(dead.select("url")), "url", "left_anti"
+            )
+        seen_urls = seen_pending.unionByName(fetched.select("url"))
+        fresh = new_urls(
+            cand, seen_urls, bloom=self.seen_filter, spark=self.spark, probe_broadcast=probe
+        )
+        # discovery-order seq assignment. Size-aware dispatch: a round's new
+        # links are bounded by batch_size × out_degree, so small batches use
+        # the bounded single-window rank (one fewer job — the window input
+        # is driver-page-sized); large batches and streams use the
+        # two-stage distributed rank so 10^7 links never funnel through one
+        # task. Both produce the identical total order.
+        windowed = bound is not None and bound <= self.rank_window_threshold
+        if windowed:
+            ranked = fresh.withColumn(
+                "__rank", F.row_number().over(Window.orderBy(*order)) - 1
+            )
+        else:
+            ranked, pinned = with_global_rank(fresh, order, rank_col="__rank")
+            release.append(pinned.unpersist)
+        rows = new_pending_rows(
+            ranked, seq=F.col("__rank") + F.lit(self.seq_counter), depth=F.col("depth")
+        ).withColumn("op", F.lit("add"))
+        return rows, windowed
+
     def _links(
         self,
         enriched: DataFrame,
         popped: DataFrame,
         pending: DataFrame,
         fetched_old: DataFrame,
-        probe: bool,
         n_popped: int,
         release: list,
     ) -> tuple[SnapshotInfo, DataFrame]:
-        """Links phase: the link pipeline (P5→P1+P2→J6→J3) and the
-        merge-on-read delta commit, the pipeline's only job. Returns the
-        commit's info and this round's dead URLs; appends a release for
-        each frame it caches to ``release``."""
-        # one admit_url pass yields the canonical url, its malformed flag
-        # and the host/path columns the compiled robots predicate reads
+        """Links phase: the fetched pages' links through link admission
+        (``_admit_links``) and the merge-on-read delta commit, the
+        pipeline's only job. Returns the commit's info and this round's
+        dead URLs; appends a release for each frame it caches to
+        ``release``."""
         links = (
             enriched.where(F.col("outcome") == "fetched")
             .select(
@@ -1049,71 +1192,14 @@ class CrawlEngine:
             )
             .where(F.col("href").isNotNull())
         )
-        admitted = robots_allowed(
-            admit_urls(links, "href"), prebuilt_rules=self._robots_rules,
-            compiled=self._robots_pred, try_compile=False,
-        )
-        # Per-page link dedup (SO1) is algebraically FUSED into the global
-        # first-discovery aggregate below: keeping min link_pos per
-        # (pop_rank, href) then taking min(struct(pop_rank, link_pos))
-        # per url is identical to taking the min over the un-deduped rows
-        # (duplicates only add larger (pop_rank, link_pos) tuples, which
-        # can never win the min; same-page duplicates share depth). An
-        # explicit row_number window here would shuffle the whole exploded
-        # link set once more per round for no semantic effect — at 10^10
-        # scale that is the round's largest intermediate. host rides in
-        # the struct behind the unique (pop_rank, link_pos): it is a
-        # function of url, and grouping by url alone keeps the url
-        # partitioning new_urls' dedup reuses.
-        cand = admitted.groupBy("url").agg(
-            F.min(F.struct("pop_rank", "link_pos", "depth", "host")).alias("f")
-        ).select(
-            "url",
-            F.col("f.host").alias("host"),
-            F.col("f.pop_rank").alias("pop_rank"),
-            F.col("f.link_pos").alias("link_pos"),
-            (F.col("f.depth") + 1).alias("depth"),
-        )
-        if probe:
-            # bounded by batch x out-degree, and the probe shape reads it
-            # twice (the seen-probe broadcast build + the final
-            # anti-join); the plain anti-join reads it once
-            cand = cand.cache()
-            release.append(cand.unpersist)
-
-        # seen set: pending ∪ fetched as pinned at round start, minus
-        # this round's deaths (simulator order: deletes happen before
-        # link insertion). Popped rows that were fetched or retried stay
+        # simulator order: this round's deaths leave the seen set before
+        # link insertion. Popped rows that were fetched or retried stay
         # seen, and they are in pending already.
         dead = enriched.where(F.col("outcome") == "dead").select("url", "url_hash")
-        seen_urls = (
-            pending.select("url")
-            .join(F.broadcast(dead.select("url")), "url", "left_anti")
-            .unionByName(fetched_old.select("url"))
+        new_rows, windowed = self._admit_links(
+            links, ["pop_rank", "link_pos"], self.batch_size,
+            pending, fetched_old, release, dead=dead,
         )
-        fresh = new_urls(
-            cand, seen_urls, bloom=self.seen_filter, spark=self.spark, probe_broadcast=probe
-        )
-        # discovery-order seq assignment. Size-aware dispatch: a round's new
-        # links are bounded by batch_size × out_degree, so small batches use
-        # the bounded single-window rank (one fewer job — the window input
-        # is driver-page-sized); large batches use the two-stage distributed
-        # rank so 10^7 links never funnel through one task. Both produce the
-        # identical total order (pop_rank, link_pos).
-        pinned = None
-        if self.batch_size <= self.rank_window_threshold:
-            ranked = fresh.withColumn(
-                "__rank",
-                F.row_number().over(Window.orderBy("pop_rank", "link_pos")) - 1,
-            )
-        else:
-            ranked, pinned = with_global_rank(
-                fresh, ["pop_rank", "link_pos"], rank_col="__rank"
-            )
-            release.append(pinned.unpersist)
-        new_rows = new_pending_rows(
-            ranked, seq=F.col("__rank") + F.lit(self.seq_counter), depth=F.col("depth")
-        ).withColumn("op", F.lit("add"))
 
         # merge-on-read delta commit, O(batch): every popped row version
         # gets an equality 'del' on (url, seq, attempts, priority);
@@ -1134,19 +1220,21 @@ class CrawlEngine:
             self.pending_delta_tbl,
             dels.unionByName(retries).unionByName(new_rows),
             mode="append",
-            single_file=pinned is None,
+            single_file=windowed,
             # per-commit lineage (north rule): which round produced this
             # delta; adds = rows - dels
             extra={"round": self.round_id, "dels": n_popped},
         )
         return delta, dead
 
-    def _update_seen_filter(self, delta: SnapshotInfo, seq0: int, dead: DataFrame) -> None:
+    def _update_seen_filter(
+        self, delta: SnapshotInfo, seq0: int, dead_hashes: DataFrame | None = None
+    ) -> None:
         """Seen-filter maintenance (probe regime only): absorb the new
         links as written (seq >= seq0 tells them from retries) and drop
-        the deaths. A cuckoo these links would fill past CUCKOO_MAX_LOAD
-        is dropped instead; the next read rebuilds it, sized from
-        seq_counter."""
+        the deaths' url_hashes, if any. A cuckoo these links would fill past
+        CUCKOO_MAX_LOAD is dropped instead; the next read rebuilds it,
+        sized from seq_counter."""
         if self.seen_filter is None:
             return
         with self._phase("filters"):
@@ -1158,7 +1246,7 @@ class CrawlEngine:
                     .select("url_hash")
                 )
                 self.seen_filter = update_seen_filter(
-                    self.spark, self.seen_filter, added, dead.select("url_hash")
+                    self.spark, self.seen_filter, added, dead_hashes
                 )
             else:
                 self.seen_filter = None

@@ -51,15 +51,18 @@ def build_robots_rules(robots: DataFrame) -> DataFrame:
     table: a long-running crawl re-evaluates robots every round, and the
     tiny groupBy shuffle + regex translation need not repeat."""
     # ^-anchored regex for wildcard rules: escape specials, * -> .*,
-    # a trailing $ (escaped to \$ by the first pass) becomes the anchor
+    # a trailing $ (escaped to \$ by the first pass) becomes the anchor.
+    # U+0085/U+2028/U+2029 survive canonicalization and are line
+    # terminators to Java, so the regex is DOTALL ((?s): * matches them)
+    # and ends in \z, not $ (which also matches before a final one).
     esc = F.regexp_replace(
         F.col("path_prefix"), r"([.\\+?\[\](){}|^$])", r"\\$1"
     )
     body = F.replace(esc, F.lit("*"), F.lit(".*"))
     anchored = F.when(
         F.col("path_prefix").endswith("$"),
-        F.concat(F.lit("^"), F.regexp_replace(body, r"\\\$$", ""), F.lit("$")),
-    ).otherwise(F.concat(F.lit("^"), body))
+        F.concat(F.lit("(?s)^"), F.regexp_replace(body, r"\\\$$", ""), F.lit(r"\z")),
+    ).otherwise(F.concat(F.lit("(?s)^"), body))
     is_re = F.col("path_prefix").contains("*") | F.col("path_prefix").endswith("$")
     return robots.groupBy("host").agg(
         F.collect_list(

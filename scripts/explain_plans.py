@@ -193,8 +193,8 @@ def main() -> None:
     # 8. merge-on-read pending view: base ∪ delta-adds, broadcast anti dels
     import tempfile
 
+    from mcp_crawl4ai_rag_spark.operators.crawl import merge_on_read_pending
     from mcp_crawl4ai_rag_spark.plans.snapshots import SnapshotTable
-    from mcp_crawl4ai_rag_spark.streaming.continuous import _pending_view
 
     wd = tempfile.mkdtemp(prefix="plans-mor-")
     base_tbl = SnapshotTable(wd, "frontier_pending")
@@ -226,7 +226,7 @@ def main() -> None:
             "reprioritized row versions survive their own delete. The "
             "manifest's bucket→path map gives partition-pruned scans for "
             "host-scoped maintenance.",
-            grab(_pending_view(spark, base_tbl, delta_tbl)),
+            grab(merge_on_read_pending(base_tbl.read(spark), delta_tbl.read(spark))),
         )
     )
 

@@ -80,6 +80,9 @@ EDGE_CASES = [
     "https://a.example\u2028/private/",
     "https://a.example/\tprivate/",
     "https://a.example/q.php",
+    # a '$' rule must not match before a final NEL, and '*' spans one
+    "https://a.example/.php\u0085",
+    "https://a.example/\u0085.php",
     "https://developer.apple.com/documentation/documentation/a",
     "https://developer.apple.com/documentation/x" + "y" * 200,
     "https://a.example/https://a.example/",
