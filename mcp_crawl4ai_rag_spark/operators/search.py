@@ -19,15 +19,30 @@ Reference semantics:
 
 Two forms of the hybrid query. ``vector_topk``, ``keyword_search`` and
 ``hybrid_merge`` are lazy Spark plans, one per contract query (each has a
-DuckDB oracle). ``rag_query`` serves the whole query eagerly in one pass:
-a single ``mapInArrow`` scan scores every chunk and keeps each
-partition's top-2k vector rows and top-2k keyword hits, at most 2·2k rows
-per partition reach the driver, and ``merge_tiers`` (the pure-Python
-twin of ``hybrid_merge``) merges them there. One Spark job, one stage,
-one read of the chunk table; the result is a local relation.
+DuckDB oracle). ``rag_query`` serves the whole query eagerly, on one of
+two sides that give the same rows:
+
+- the scan: a single ``mapInArrow`` pass scores every chunk and keeps
+  each partition's top-2k vector rows and top-2k keyword hits, at most
+  2·2k rows per partition reach the driver, and ``merge_tiers`` (the
+  pure-Python twin of ``hybrid_merge``) merges them there. One Spark job,
+  one stage, one read of the chunk table.
+- the driver view: when the chunk plan is deterministic, reads only local
+  parquet files, and those hold at most ``DRIVER_VIEW_MAX_BYTES``
+  uncompressed bytes, the same candidate pass runs on the driver over an
+  Arrow copy of the chunk columns. The copy sits in one module-level
+  slot, keyed by the session, the plan (``sameSemantics``) and the input
+  files with their sizes and mtimes. A repeat query runs no Spark job;
+  the first query after a commit (new version directories, so new input
+  files) rebuilds the copy with one JVM-only ``toArrow``.
+
+Either way the result is a local relation.
 """
 
 from __future__ import annotations
+
+import os
+from urllib.parse import unquote, urlsplit
 
 import numpy as np
 import pyarrow as pa
@@ -231,6 +246,107 @@ def merge_tiers(vector_hits: list, keyword_hits: list, k: int) -> list:
     return (both + vector_only + keyword_only)[:k]
 
 
+# The largest chunk table, in uncompressed parquet bytes (the footers'
+# total_byte_size), that rag_query copies to the driver and serves there.
+DRIVER_VIEW_MAX_BYTES = 256 << 20
+
+# The driver view: None, or (session, src, stamp, nbytes, table), where
+# table is src's rows plus Spark's lower(content) as __lc. Replaced whole
+# by one assignment and never mutated, so readers take no lock.
+_VIEW = None
+
+
+def _file_stamp(src: DataFrame) -> tuple | None:
+    """(path, size, st_mtime_ns) of each of src's input files, sorted; None
+    when there are none or one is not a local file."""
+    stamp = []
+    for uri in src.inputFiles():
+        parts = urlsplit(uri)
+        if parts.scheme != "file":
+            return None
+        path = unquote(parts.path)
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        stamp.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stamp)) or None
+
+
+def _parquet_plan(src: DataFrame) -> bool:
+    """Whether src's analyzed plan is deterministic and every leaf of it
+    is a parquet file relation (so its rows are a function of the plan
+    and the files' bytes)."""
+    plan = src._jdf.queryExecution().analyzed()
+    if not plan.deterministic():
+        return False
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            return False
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation" or (
+            rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        ):
+            return False
+    return True
+
+
+def _uncompressed_bytes(stamp: tuple) -> int:
+    import pyarrow.parquet as pq
+
+    total = 0
+    for path, _, _ in stamp:
+        md = pq.read_metadata(path)
+        total += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    return total
+
+
+def _driver_view(src: DataFrame) -> pa.Table | None:
+    """The driver-resident copy of src, from the slot or built now with one
+    toArrow; None when src is not eligible or exceeds the bound."""
+    global _VIEW
+    stamp = _file_stamp(src)
+    if stamp is None:
+        return None
+    spark = src.sparkSession
+    entry = _VIEW
+    if entry is not None:
+        session, cached_src, cached_stamp, nbytes, table = entry
+        if (
+            session is spark
+            and cached_stamp == stamp
+            and nbytes <= DRIVER_VIEW_MAX_BYTES
+            and src.sameSemantics(cached_src)
+        ):
+            return table
+    if not _parquet_plan(src):
+        return None
+    nbytes = _uncompressed_bytes(stamp)
+    if nbytes > DRIVER_VIEW_MAX_BYTES:
+        return None
+    # stamped before the read: a file rewritten meanwhile only costs a miss
+    table = src.withColumn("__lc", F.lower(F.col("content"))).toArrow().combine_chunks()
+    _VIEW = (spark, src, stamp, nbytes, table)
+    return table
+
+
+def _view_candidates(view: pa.Table, qvec: list[float], n: int, needle: str | None) -> pa.Table:
+    """``_candidate_pass`` over the driver view: the top-n vector rows and,
+    when ``needle`` is given, the top-n rows whose Spark-lowered content
+    contains it."""
+    t = view.drop_columns(["__lc"])
+    if needle is not None:
+        t = t.append_column("__kw", pc.match_substring(view.column("__lc"), needle))
+    schema = pa.schema(
+        [view.field("id"), view.field("url"), view.field("content"),
+         pa.field("similarity", pa.float64()), pa.field("vector", pa.bool_())]
+    )
+    run = _candidate_pass(qvec, n, needle is not None)
+    return pa.Table.from_batches(list(run(t.to_batches())), schema=schema)
+
+
 def rag_query(
     chunks: DataFrame,
     query: str,
@@ -246,16 +362,36 @@ def rag_query(
     top-2k [∪ keyword top-2k → tiered merge] → optional rerank → top-k.
     chunks needs (id, url, content, embedding), ids unique and non-null.
 
-    Eager: the call runs one Spark job of one stage, a single mapInArrow
-    scan of chunks that computes the cosine (``cosine_rows``) and the
-    ILIKE flag of every row and keeps each partition's top-2k vector rows
-    and top-2k keyword hits, so at most 2·2k rows per partition reach the
-    driver. ``merge_tiers`` merges them there. Rows with a null embedding
-    are never vector candidates; an embedding whose length is not
-    embed_dim raises. The result is the same columns as the
-    ``vector_topk → keyword_search → hybrid_merge`` composition (id, url,
-    content, similarity, tier; without hybrid: id_col, url, content,
-    similarity), returned as a local relation: collecting it runs no job.
+    Eager. The candidate pass computes the cosine (``cosine_rows``) and
+    the ILIKE flag of every row and keeps the top-2k vector rows and
+    top-2k keyword hits; ``merge_tiers`` merges them on the driver. It
+    runs on one of two sides, which agree bit for bit:
+
+    - driver view: when ``chunks.select(id, url, content, embedding)`` is
+      deterministic, every leaf of its plan is a parquet relation, its
+      input files are local, and their footers count at most
+      ``DRIVER_VIEW_MAX_BYTES`` uncompressed bytes. The pass runs over a
+      driver-resident Arrow copy of those columns plus Spark's
+      ``lower(content)`` (Java's case mapping, which pyarrow's
+      ``utf8_lower`` does not match). The copy is reused while the
+      session is the same object, the sorted input files with their
+      sizes and ``st_mtime_ns`` are equal, and the plans have the same
+      semantics; a hit runs 0 Spark jobs. A snapshot commit writes a
+      new version directory, so the file list changes and the next query
+      rebuilds the copy: 1 job, 1 stage, no Python stage. One copy is held
+      at a time, about the table's uncompressed size plus its lowered
+      content.
+    - scan: any other chunks (an RDD or local source, a table over the
+      bound) run one Spark job of one stage, a mapInArrow scan that keeps
+      each partition's top-2k of each, so at most 2·2k rows per
+      partition reach the driver.
+
+    Rows with a null embedding are never vector candidates; an embedding
+    whose length is not embed_dim raises. The result is the same columns
+    as the ``vector_topk → keyword_search → hybrid_merge`` composition
+    (id, url, content, similarity, tier; without hybrid: id_col, url,
+    content, similarity), returned as a local relation: collecting it
+    runs no job.
 
     keyword_ranker: 'ilike' = the reference's containment+url-order tier
     (exact parity); 'bm25' = relevance-ranked keyword tier (bm25_rank
@@ -271,17 +407,20 @@ def rag_query(
     q = query.strip()
     n = 2 * k
     ilike = hybrid and keyword_ranker != "bm25"
+    qvec = embed_query_py(q, embed_dim)
     src = chunks.select(F.col(id_col).alias("id"), "url", "content", "embedding")
-    if ilike:
-        src = src.withColumn("__kw", F.lower(F.col("content")).contains(q.lower()))
     fields = {f.name: f for f in src.schema.fields}
-    cand_schema = StructType(
-        [fields["id"], fields["url"], fields["content"],
-         StructField("similarity", DoubleType()), StructField("vector", BooleanType())]
-    )
-    cand = src.mapInArrow(
-        _candidate_pass(embed_query_py(q, embed_dim), n, ilike), cand_schema
-    ).toArrow()
+    view = _driver_view(src)
+    if view is not None:
+        cand = _view_candidates(view, qvec, n, q.lower() if ilike else None)
+    else:
+        if ilike:
+            src = src.withColumn("__kw", F.lower(F.col("content")).contains(q.lower()))
+        cand_schema = StructType(
+            [fields["id"], fields["url"], fields["content"],
+             StructField("similarity", DoubleType()), StructField("vector", BooleanType())]
+        )
+        cand = src.mapInArrow(_candidate_pass(qvec, n, ilike), cand_schema).toArrow()
 
     def driver_top(vector: bool, order: list, cols: tuple) -> list:
         t = _top(cand.filter(pc.equal(cand.column("vector"), vector)), n, order)

@@ -1,21 +1,33 @@
-"""rag_query's one-pass form against the Spark composition it replaces.
+"""rag_query's two sides against the Spark composition they replace.
 
-rag_query scores every chunk in one mapInArrow scan, keeps each
-partition's top-2k vector rows and keyword hits, and merges them on the
-driver (merge_tiers). The reference here is the lazy composition of the
-contract operators: vector_topk → keyword_search (or bm25_rank) →
-hybrid_merge → rerank_stub. Both must give the same (id, tier) sequence,
-with similarity bit-equal on the sequential fold (below
-BLAS_DIM_THRESHOLD) and within 1e-12 on the matvec, on dirty tables:
-duplicate and null urls, null content and embeddings, non-ASCII and
-mixed-case text, duplicate embeddings (ties break on id), and 1-4 input
-partitions, some of them empty.
+rag_query runs one candidate pass, which scores every chunk and keeps the
+top-2k vector rows and keyword hits, and merges them on the driver
+(merge_tiers). The pass runs either in one mapInArrow scan (the scan
+side) or over a driver-resident Arrow copy of a parquet chunk table below
+DRIVER_VIEW_MAX_BYTES (the driver side). The reference is the lazy
+composition of the contract operators: vector_topk → keyword_search (or
+bm25_rank) → hybrid_merge → rerank_stub. Every form must give the same
+(id, tier, url, content) sequence and schema, with similarity bit-equal
+between the two sides, and against the composition bit-equal on the
+sequential fold (below BLAS_DIM_THRESHOLD) and within 1e-12 on the
+matvec, on dirty tables: duplicate and null urls, null content and
+embeddings, non-ASCII and mixed-case text (Spark's case mapping, not
+Arrow's), duplicate embeddings (ties break on id), empty tables, and 1-4
+input partitions, some of them empty.
+
+The driver copy is keyed by session, plan and input files: a repeat
+query runs no Spark job, and a commit, another plan, another store,
+another session or a file rewritten in place is never served a stale
+copy.
 """
 
 from __future__ import annotations
 
+import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
@@ -103,6 +115,18 @@ def chunk_frame(spark, parts, dim):
     return spark.createDataFrame(rdd, SCHEMA).cache()
 
 
+def parquet_copy(spark, chunks, base):
+    """chunks written to a fresh parquet directory under base, read back."""
+    path = os.path.join(str(base), uuid.uuid4().hex)
+    chunks.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def on_driver(frame) -> bool:
+    """Whether the driver view now holds frame's input files."""
+    return S._VIEW is not None and S._VIEW[2] == S._file_stamp(frame)
+
+
 EDGE = [
     # matvec; every row a keyword hit (more than 2k), duplicate embeddings
     # and urls, an empty partition
@@ -135,6 +159,26 @@ EDGE = [
     # the query's own embedding on a keyword hit: tier 0 at the 1.0 cap
     {"dim": 16, "query": "metal", "k": 2, "hybrid": True, "ranker": "ilike", "rerank": False,
      "parts": [[(1, "https://a/x", "metal", 4), (2, "https://a/y", "swift", 0)]]},
+    # Spark's lower is Java's: final sigma, and İ to i + U+0307, where
+    # pyarrow's utf8_lower gives σ and a bare i
+    {"dim": 16, "query": "\u03bf\u03b4\u03bf\u03c2", "k": 2, "hybrid": True, "ranker": "ilike",
+     "rerank": False,
+     "parts": [[(1, "https://a/x", "\u039f\u0394\u039f\u03a3", None),
+                (2, "https://a/y", "\u0130stanbul", None), (3, "https://B/z", "swift", 0)]]},
+    {"dim": 2560, "query": "i\u0307stanbul", "k": 2, "hybrid": True, "ranker": "ilike",
+     "rerank": False,
+     "parts": [[(1, "https://a/x", "\u039f\u0394\u039f\u03a3", None),
+                (2, "https://a/y", "\u0130stanbul", None)], [(3, "https://B/z", "swift", 0)]]},
+    # null content only: no keyword hit anywhere
+    {"dim": 16, "query": "metal", "k": 2, "hybrid": True, "ranker": "ilike", "rerank": False,
+     "parts": [[(1, "https://a/x", None, 0), (2, None, None, 1)], [(3, "https://a/y", None, None)]]},
+    # null embeddings only: no vector candidate
+    {"dim": 2560, "query": "swift", "k": 2, "hybrid": True, "ranker": "ilike", "rerank": False,
+     "parts": [[(1, "https://a/x", "swift", None), (2, "https://B/z", "metal", None)],
+               [(3, "https://a/y", "SWIFT", None)]]},
+    # an empty table
+    {"dim": 16, "query": "metal", "k": 2, "hybrid": True, "ranker": "ilike", "rerank": False,
+     "parts": [[], []]},
 ]
 
 
@@ -147,30 +191,49 @@ EDGE = [
 @example(EDGE[4])
 @example(EDGE[5])
 @example(EDGE[6])
-def test_rag_query_equals_composition(spark, case):
+@example(EDGE[7])
+@example(EDGE[8])
+@example(EDGE[9])
+@example(EDGE[10])
+@example(EDGE[11])
+def test_rag_query_equals_composition(spark, tmp_path_factory, case):
     chunks = chunk_frame(spark, case["parts"], case["dim"])
     opts = {"k": case["k"], "hybrid": case["hybrid"], "rerank": case["rerank"],
             "embed_dim": case["dim"], "keyword_ranker": case["ranker"]}
     try:
-        got = S.rag_query(chunks, case["query"], **opts)
-        want = composition(chunks, case["query"], **opts)
-        assert [(f.name, f.dataType) for f in got.schema] == [
-            (f.name, f.dataType) for f in want.schema
-        ]
-        g, w = got.collect(), want.collect()
+        disk = parquet_copy(spark, chunks, tmp_path_factory.getbasetemp())
+        served = {"driver": S.rag_query(disk, case["query"], **opts)}
+        assert on_driver(disk)
+        with pytest.MonkeyPatch.context() as mp:
+            # below any table's size, an empty one's included
+            mp.setattr(S, "DRIVER_VIEW_MAX_BYTES", -1)
+            served["scan"] = S.rag_query(disk, case["query"], **opts)
+        # an RDD source keeps its 1-4 partitions on the scan side
+        served["partitions"] = S.rag_query(chunks, case["query"], **opts)
+        want = composition(disk, case["query"], **opts)
+        w = want.collect()
+        got = {side: res.collect() for side, res in served.items()}
     finally:
         chunks.unpersist()
-    key = [c for c in ("id", "tier", "rerank_score", "url", "content") if c in got.columns]
-    assert [tuple(r[c] for c in key) for r in g] == [tuple(r[c] for c in key) for r in w]
-    for a, b in zip(g, w):
+    key = [c for c in ("id", "tier", "rerank_score", "url", "content") if c in want.columns]
+    for side, res in served.items():
+        assert [(f.name, f.dataType) for f in res.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ], side
+        assert [tuple(r[c] for c in key) for r in got[side]] == [
+            tuple(r[c] for c in key) for r in w
+        ], side
+        sims = [r["similarity"].hex() for r in got[side]]
+        assert sims == [r["similarity"].hex() for r in got["driver"]], side
+    for a, b in zip(got["driver"], w):
         if case["dim"] < S.BLAS_DIM_THRESHOLD:
             assert a["similarity"].hex() == b["similarity"].hex()
         else:
             assert abs(a["similarity"] - b["similarity"]) <= 1e-12
 
 
-def jobs_and_stages(spark, fn):
-    """Run fn under a fresh job group; (result, jobs, stages) it ran."""
+def in_job_group(spark, fn):
+    """Run fn under a fresh job group; (result, ids of the jobs it ran)."""
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
     group = f"probe-{uuid.uuid4().hex}"
@@ -182,8 +245,13 @@ def jobs_and_stages(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     bus.waitUntilEmpty(10_000)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_and_stages(spark, fn):
+    """Run fn under a fresh job group; (result, jobs, stages) it ran."""
+    out, jobs = in_job_group(spark, fn)
+    tracker = spark.sparkContext.statusTracker()
     return out, len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
 
 
@@ -225,11 +293,11 @@ def test_rag_query_dim_mismatch_raises(spark):
         S.rag_query(chunks, "metal", k=2, embed_dim=32)
 
 
-def test_duplicate_embeddings_tie_on_id_at_any_batch_position(spark):
+def test_duplicate_embeddings_tie_on_id_at_any_batch_position(spark, tmp_path):
     """Equal embeddings at different positions of one Arrow batch score
     bit-equal on the numpy path (at or above BLAS_DIM_THRESHOLD), so they
-    tie and break on id, in rag_query and vector_topk alike. The
-    duplicates sit at every other row of a 15-row batch, their ids
+    tie and break on id, in rag_query's two sides and vector_topk alike.
+    The duplicates sit at every other row of a 15-row batch, their ids
     falling as their position rises; a matvec ``m @ q`` scores the last
     rows of an odd-sized batch differently from the others."""
     dim, query = 2560, "metal"
@@ -242,10 +310,148 @@ def test_duplicate_embeddings_tie_on_id_at_any_batch_position(spark):
     dup_ids = sorted(100 - pos for pos in range(8))
     chunks = spark.createDataFrame(rows, SCHEMA).coalesce(1).cache()
     try:
+        disk = parquet_copy(spark, chunks, tmp_path)
+        on_disk = S.rag_query(disk, query, k=8, hybrid=False, embed_dim=dim).collect()
+        assert on_driver(disk)
         served = S.rag_query(chunks, query, k=8, hybrid=False, embed_dim=dim).collect()
         topk = S.vector_topk(chunks, embed_query_py(query, dim), k=8).collect()
     finally:
         chunks.unpersist()
-    for got in (served, topk):
+    for got in (on_disk, served, topk):
         assert [r["id"] for r in got] == dup_ids
         assert len({r["similarity"].hex() for r in got}) == 1
+    assert on_disk[0]["similarity"].hex() == served[0]["similarity"].hex()
+
+
+def python_plans(spark, jobs) -> list[bool]:
+    """For each of the latest SQL executions that ran one of ``jobs``:
+    whether its physical plan has a Python operator. Only the tail of the
+    status store is read: walking all of it costs py4j calls per
+    execution."""
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    out = []
+    for e in conv.asJava(store.executionsList(max(0, n - 10), 10)):
+        if {int(j) for j in conv.asJava(e.jobs().keySet())} & set(jobs):
+            plan = e.physicalPlanDescription()
+            out.append("Python" in plan or "MapInArrow" in plan)
+    return out
+
+
+def query_jobs(spark, chunks, query, **opts):
+    """rag_query(chunks, query) run and collected under a job group:
+    (rows, jobs, stages, whether each execution had a Python operator)."""
+    rows, jobs = in_job_group(
+        spark, lambda: S.rag_query(chunks, query, embed_dim=16, **opts).collect()
+    )
+    tracker = spark.sparkContext.statusTracker()
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    return rows, len(jobs), stages, python_plans(spark, jobs)
+
+
+def ids(rows) -> list:
+    return [(r["id"], r["tier"]) for r in rows]
+
+
+def scanned(chunks, query, **opts) -> list:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(S, "DRIVER_VIEW_MAX_BYTES", -1)
+        return S.rag_query(chunks, query, embed_dim=16, **opts).collect()
+
+
+def test_driver_view_follows_commits(spark, tmp_path):
+    """A repeat query on one ChunkStore runs no job; the first query after
+    each commit rebuilds the copy in 1 JVM-only job and sees the commit.
+    Above the bound, or on a source with no input files, the query is
+    the scan's 1 job of 1 stage with a Python operator."""
+    store = ChunkStore(spark, str(tmp_path))
+    store.process_round(docs(spark), embed_dim=16)
+
+    def view():
+        return store.read().withColumn("id", F.xxhash64("url", "chunk_index"))
+
+    first, jobs, stages, py = query_jobs(spark, view(), "metal shader", k=3)
+    assert (jobs, stages, py) == (1, 1, [False])
+    again, jobs, _, _ = query_jobs(spark, view(), "metal shader", k=3)
+    assert jobs == 0 and ids(again) == ids(first) == ids(scanned(view(), "metal shader", k=3))
+
+    # process_round: a new url with a word no other chunk has
+    fresh = spark.createDataFrame(
+        [("https://a/4", 3, 0, "# Quokka\nquokka habitat notes.")],
+        "url string, fetch_round int, seq_in_round int, content string",
+    )
+    assert store.process_round(fresh, embed_dim=16) > 0
+    # replace_urls: a/2's chunks become one row that says quokka
+    repl = spark.createDataFrame(
+        [("https://a/2", 0, "c", "quokka swift", "{}", [1.0] * 16)],
+        "url string, chunk_index int, context string, content string, "
+        "chunk_json string, embedding array<float>",
+    )
+    urls = {}
+    for commit in (lambda: None, lambda: store.replace_urls(repl),
+                   lambda: store.delete_urls(spark.createDataFrame([("https://a/4",)], ["url"]))):
+        commit()
+        rows, jobs, stages, py = query_jobs(spark, view(), "quokka", k=4)
+        assert (jobs, stages, py) == (1, 1, [False])
+        assert ids(rows) == ids(scanned(view(), "quokka", k=4))
+        urls[len(urls)] = {r["url"] for r in rows if r["tier"] != 1}
+        assert query_jobs(spark, view(), "quokka", k=4)[1] == 0
+    assert urls == {0: {"https://a/4"}, 1: {"https://a/4", "https://a/2"}, 2: {"https://a/2"}}
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(S, "DRIVER_VIEW_MAX_BYTES", -1)
+        _, jobs, stages, py = query_jobs(spark, view(), "quokka", k=4)
+    assert (jobs, stages, py) == (1, 1, [True])
+    local = spark.createDataFrame(view().collect(), view().schema)
+    assert local.inputFiles() == []
+    _, jobs, stages, py = query_jobs(spark, local, "quokka", k=4)
+    assert (jobs, stages, py) == (1, 1, [True])
+
+
+def test_driver_view_never_serves_another_input(spark, tmp_path):
+    """The copy built for one input is not served for a filtered plan over
+    the same files, another store with equal rows, the same store in
+    another session, or a parquet file rewritten in place."""
+    store = ChunkStore(spark, str(tmp_path / "a"))
+    store.process_round(docs(spark), embed_dim=16)
+
+    def view(s=store):
+        return s.read().withColumn("id", F.xxhash64("url", "chunk_index"))
+
+    def fill_then(chunks):
+        """Fill the slot from store, then query chunks: (rows, jobs)."""
+        query_jobs(spark, view(), "metal", k=3)
+        assert query_jobs(spark, view(), "metal", k=3)[1] == 0
+        rows, jobs, _, _ = query_jobs(spark, chunks, "metal", k=3)
+        return rows, jobs
+
+    filtered = view().where(F.col("url") != "https://a/1")
+    rows, jobs = fill_then(filtered)
+    assert jobs == 1 and ids(rows) == ids(scanned(filtered, "metal", k=3))
+    assert "https://a/1" not in {r["url"] for r in rows}
+
+    twin = ChunkStore(spark, str(tmp_path / "b"))
+    twin.process_round(docs(spark), embed_dim=16)
+    assert fill_then(view(twin))[1] == 1
+
+    other = spark.newSession()
+    rows, jobs = fill_then(view(ChunkStore(other, str(tmp_path / "a"))))
+    assert jobs == 1 and S._VIEW[0] is other
+
+    path = tmp_path / "t" / "part-0.parquet"
+    path.parent.mkdir()
+
+    def write(content):
+        pq.write_table(pa.table({
+            "id": pa.array([1, 2], pa.int64()), "url": ["https://a/x", "https://a/y"],
+            "content": content, "embedding": pa.array([[1.0] * 16, [0.5] * 16],
+                                                     pa.list_(pa.float32())),
+        }), str(path))
+
+    write(["metal", "swift"])
+    first, jobs, _, _ = query_jobs(spark, spark.read.parquet(str(path.parent)), "metal", k=2)
+    assert jobs == 1 and [r["tier"] for r in first] == [0, 1]
+    write(["swift", "metal shader"])
+    rows, jobs, _, _ = query_jobs(spark, spark.read.parquet(str(path.parent)), "metal", k=2)
+    assert jobs == 1 and [(r["id"], r["tier"]) for r in rows] == [(2, 0), (1, 1)]
