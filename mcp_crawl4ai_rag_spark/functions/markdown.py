@@ -35,9 +35,22 @@ TERMINATOR_HEADINGS = ("## Topics", "## See Also")
 # Java-regex equivalents of the reference's per-line patterns. Because we
 # apply them per *span* (which may hold several lines) we forbid newlines
 # wherever the reference's per-line application made them impossible.
+# Python's ``\s`` and ``str.strip()`` are ``str.isspace()``; within a line
+# that is this class (the set minus ``\n``). Java's own ``\s`` and
+# Spark's ``trim`` are narrower.
+_WS_JAVA = (
+    r"[\t\x0B\f\r\x1C-\x1F \x85\xA0\u1680\u2000-\u200A\u2028\u2029\u202F"
+    r"\u205F\u3000]"
+)
 _IMG_PATTERN_JAVA = r"!\[[^\n]*?\]\([^)\n]+\)"
+# (?d): only \n ends a line, as in the reference's split("\n"); Java's
+# ^ would otherwise also match after \r, U+0085, U+2028 and U+2029
 _HEADING_PATTERN_JAVA = (
-    r"(?m)^([ \t\x0B\f\r]*)(#{1,6})[ \t\x0B\f\r]*\[([^\n]*?)\]\(([^\n]*?)\)[^\n]*$"
+    rf"(?md)^({_WS_JAVA}*)(#{{1,6}}){_WS_JAVA}*\[([^\n]*?)\]\(([^\n]*?)\)[^\n]*$"
+)
+# a cleaned line whose strip() is a terminator heading
+_TERMINATOR_PATTERN_JAVA = (
+    rf"^{_WS_JAVA}*(?:{'|'.join(TERMINATOR_HEADINGS)}){_WS_JAVA}*\z"
 )
 _INLINE_PATTERN_JAVA = r"\[([^\]\n]+)\]\((?:[^)\\\n]|\\[^\n])*\)"
 
@@ -78,10 +91,11 @@ def clean_spans_py(spans: list[dict]) -> list[dict]:
     """
     out = []
     for span in spans:
-        if span["kind"] == "media":
+        # a null text stays null, as in the Column form
+        if span["kind"] == "media" or span["text"] is None:
             out.append(dict(span))
             continue
-        text = span["text"] or ""
+        text = span["text"]
         cleaned_lines = []
         terminated = False
         for line in text.split("\n"):
@@ -121,7 +135,7 @@ def _truncate_at_terminator(text: Column) -> Column:
     sequence.
     """
     lines = F.split(text, "\n", -1)
-    is_term = lambda line: F.trim(line).isin(*TERMINATOR_HEADINGS)  # noqa: E731
+    is_term = lambda line: line.rlike(_TERMINATOR_PATTERN_JAVA)  # noqa: E731
     # 1-based index of the first terminator line, NULL if none.
     idx = F.array_min(
         F.zip_with(
@@ -188,4 +202,10 @@ def render_spans_text(spans_col: Column) -> Column:
 
 
 def render_spans_text_py(spans: list[dict]) -> str:
-    return "\n".join(s["text"] or "" for s in spans if s["kind"] != "media")
+    """Oracle of render_spans_text: like ``array_join``, it skips null
+    texts, and like its ``filter``, spans of null kind."""
+    return "\n".join(
+        s["text"]
+        for s in spans
+        if s["kind"] is not None and s["kind"] != "media" and s["text"] is not None
+    )

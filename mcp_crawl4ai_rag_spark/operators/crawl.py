@@ -1,9 +1,29 @@
 """The BFS-round crawl engine — frontier scheduler + fetch + link pipeline.
 
-One ``round()`` is one Spark job chain re-expressing the reference's
-asyncio worker-pool loop (src/crawler/core.py:224-449; SURVEY.md §3.1).
-It runs five phases, one method each, and reports each one's wall time
-in its ``phases``:
+One ``round()`` re-expresses one pass of the reference's asyncio
+worker-pool loop (src/crawler/core.py:224-449; SURVEY.md §3.1). Each
+round picks one of two regimes, which produce the same rows and commits:
+
+- **Driver regime** (``_driver_round``), while ``seq_counter`` — an upper
+  bound on pending ∪ fetched — is at most
+  min(DRIVER_FRONTIER_MAX_URLS, probe_broadcast_threshold) and the robots
+  rules compiled. The engine, the frontier's only writer, keeps the
+  merged pending rows, the seen urls and the hosts table on the driver as
+  Arrow tables, and updates them with every delta a driver round commits.
+  The pop, page cleaning, link admission and seq assignment run in
+  Arrow/Python (the twins of the Column trees below); the fetch is the
+  round's one Spark job (the corpus filtered to the popped urls, or the
+  injected fetcher over a local relation, then ``toArrow``); every commit
+  is a pyarrow write through ``SnapshotTable.commit``. A steady round
+  runs 1 Spark job. A compaction round adds the Spark jobs of the
+  pending compaction and ``compact_tail``. Any other writer (seeding,
+  ``reprioritize``, ``purge_host``, ``ingest_links``, a Spark round) or a
+  resumed engine leaves the copy's version stamp stale, and the next
+  driver round rebuilds it with one ``toArrow`` per table.
+- **Spark regime** (``_spark_round``), otherwise: the pipeline below.
+
+The Spark regime runs five phases, one method each, and reports each
+one's wall time in its ``phases``:
 
   pop (``_pop``): the merge-on-read pending view, host budgets refilled,
     and the budgeted window rank (W1), pinned
@@ -36,13 +56,14 @@ each append one parquet file per round (a version dir + its manifest; no
 its small table and metrics appends one driver-written file. A steady
 round writes about a dozen files.
 
-Round frames: the popped batch and the fetched pages are local
-checkpoints (``pins.pin``), so the plans built on them stay small and the
-fetch runs exactly once; the stats collect is its one materializing job
-and also yields the popped count. A steady round runs 18 Spark jobs in 7
-SQL executions (perfbench's crawl_loop sizes): the pop's checkpoint 4,
-the fetch's 3, the stats collect 1, the documents and fetched appends 1
-each, the hosts commit 2, the pending-delta commit (the link pipeline) 6.
+Round frames (Spark regime): the popped batch and the fetched pages are
+local checkpoints (``pins.pin``), so the plans built on them stay small
+and the fetch runs exactly once; the stats collect is its one
+materializing job and also yields the popped count. A steady round runs
+18 Spark jobs in 7 SQL executions (perfbench's crawl_loop sizes): the
+pop's checkpoint 4, the fetch's 3, the stats collect 1, the documents and
+fetched appends 1 each, the hosts commit 2, the pending-delta commit (the
+link pipeline) 6.
 
 Seen side of the link dedup: pending ∪ fetched as pinned at round start,
 minus this round's deaths — the pending view is the same merge-on-read
@@ -89,14 +110,31 @@ import time
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
+from dataclasses import dataclass
 from functools import partial
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructField, StructType
 
 from mcp_crawl4ai_rag_spark.frames import local_frame
-from mcp_crawl4ai_rag_spark.functions.markdown import clean_spans, render_spans_text
-from mcp_crawl4ai_rag_spark.functions.urls import admit_urls, is_permanent_error
+from mcp_crawl4ai_rag_spark.functions.markdown import (
+    clean_spans,
+    clean_spans_py,
+    render_spans_text,
+    render_spans_text_py,
+)
+from mcp_crawl4ai_rag_spark.functions.urls import (
+    admit_arrow,
+    admit_urls,
+    is_error_page_py,
+    is_permanent_error,
+)
+from mcp_crawl4ai_rag_spark.functions.xxh import host_bucket, spark_xxhash64_str
 from mcp_crawl4ai_rag_spark.operators.dedup import (
     BloomFilter,
     ShardedCuckoo,
@@ -108,12 +146,17 @@ from mcp_crawl4ai_rag_spark.operators.dedup import (
 from mcp_crawl4ai_rag_spark.operators.ranking import with_global_rank
 from mcp_crawl4ai_rag_spark.operators.politeness import (
     budgeted_pop,
+    budgeted_pop_arrow,
     charge_hosts,
+    charge_hosts_arrow,
     init_hosts,
     refill_hosts,
+    refill_hosts_arrow,
     build_robots_rules,
     compile_robots_predicate,
     robots_allowed,
+    robots_evaluator,
+    robots_rule_rows,
 )
 from mcp_crawl4ai_rag_spark.pins import pin, unpin
 from mcp_crawl4ai_rag_spark.plans.snapshots import (
@@ -258,6 +301,22 @@ PENDING_DELTA_DDL = FRONTIER_DDL + ", bucket int, op string"
 # the fetch stage repartitions the popped batch by (host, url salt)
 SALT_BUCKETS = 8
 METRICS_DDL = "round int, scope string, key string, value long"
+DOCUMENTS_DDL = (
+    "url string, host string, depth int, fetch_round int, seq_in_round int, "
+    "status int, content string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+EDGES_DDL = "src string, dst string"
+# Java's \s, the engine's blank-page test (_round_exprs' x_blank)
+JAVA_WHITESPACE = " \t\n\x0b\f\r"
+# The driver regime's bound on seq_counter, an upper bound on the URLs in
+# pending ∪ fetched: at or below it (and below probe_broadcast_threshold)
+# a round runs on a driver-resident Arrow copy of the frontier
+# (CrawlEngine._driver_round). Measured at crawl_loop's sizes the copy
+# costs 116 B per pending row and 53 B per seen url, so this many URLs,
+# every one pending and seen at worst, hold about 170 MB: inside a
+# 256 MiB budget, with room for longer urls.
+DRIVER_FRONTIER_MAX_URLS = 1_000_000
 
 
 def host_bucket_col(host_col: str = "host") -> Column:
@@ -342,6 +401,21 @@ def load_seen_filter(ck: dict) -> BloomFilter | ShardedCuckoo | None:
     return f if _filter_fits(f, ck["bloom_bits"], ck["seq_counter"]) else None
 
 
+def _url_in(spark: SparkSession, urls: list) -> Column:
+    """``url IN urls`` built on the JVM in one call: ``Column.isin`` makes
+    one py4j literal per value, about 80 ms for a 128-url batch."""
+    from pyspark.sql.classic.column import Column as ClassicColumn
+
+    return ClassicColumn(
+        spark._jvm.org.apache.spark.sql.functions.col("url").isInCollection(urls)
+    )
+
+
+def _with_op(rows: pa.Table, op: str) -> pa.Table:
+    """Pending rows as pending-delta rows of ``op`` ('add' or 'del')."""
+    return rows.append_column("op", pa.array([op] * rows.num_rows, pa.string()))
+
+
 def _round_exprs(max_attempts: int | None) -> dict[str, Column]:
     """The round's fixed Column expressions, by name: the fetch salt, a
     page's status, clean spans, text and outcome (dead / retry /
@@ -388,6 +462,30 @@ def _round_exprs(max_attempts: int | None) -> dict[str, Column]:
     }
 
 
+@dataclass
+class DriverFrontier:
+    """The driver regime's copy of the frontier, as of the pinned versions
+    ``stamp`` of (pending, pending delta, fetched, hosts): the merged
+    pending rows (FRONTIER_COLS_PENDING), the seen urls (pending ∪
+    fetched) and the hosts table with its Spark schema."""
+
+    stamp: tuple
+    pending: pa.Table
+    seen: pa.ChunkedArray
+    hosts: pa.Table
+    hosts_schema: StructType
+
+    @property
+    def nbytes(self) -> int:
+        """Driver memory the copy's buffers hold."""
+        return self.pending.nbytes + self.seen.nbytes + self.hosts.nbytes
+
+
+def _nullable(schema: StructType) -> StructType:
+    """``schema`` with every top-level field nullable."""
+    return StructType([StructField(f.name, f.dataType, True) for f in schema])
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -417,7 +515,12 @@ class CrawlEngine:
         # too-large table leaves _robots_pred None and every round takes
         # the join+fold path with no re-probing.
         self._robots_rules = build_robots_rules(robots).cache()
-        self._robots_pred = compile_robots_predicate(self._robots_rules)
+        rule_rows = robots_rule_rows(self._robots_rules)
+        self._robots_pred = (
+            None if rule_rows is None else compile_robots_predicate(rule_rows)
+        )
+        # the same rules for the driver regime, which needs them compiled
+        self._robots_ok = None if rule_rows is None else robots_evaluator(rule_rows)
         self.batch_size = batch_size
         self.max_attempts = max_attempts
         # the seen filter's kind, a key of SEEN_FILTERS; checkpointed
@@ -502,6 +605,19 @@ class CrawlEngine:
         # construction per round (measured ~1.5 s/round of the profile's
         # untimed 'other' at bench scale).
         self._rx = _round_exprs(max_attempts)
+        # the driver regime's frontier copy (None until a driver round
+        # builds it) and the Spark schemas of the tables it commits
+        self._frontier: DriverFrontier | None = None
+        self._schemas = {
+            name: DataType.fromDDL(ddl)
+            for name, ddl in (
+                ("pending", FRONTIER_DDL + ", bucket int"),
+                ("delta", PENDING_DELTA_DDL),
+                ("fetched", FRONTIER_DDL),
+                ("documents", DOCUMENTS_DDL),
+                ("edges", EDGES_DDL),
+            )
+        }
 
     # -- state I/O ----------------------------------------------------------
 
@@ -561,9 +677,7 @@ class CrawlEngine:
         per-round cost stays O(pending / compact_every) + O(batch)."""
         current = self._read_pending()
         self._commit_pending_base(current.select(*FRONTIER_COLS_PENDING))
-        self._commit(
-            self.pending_delta_tbl, self.spark.createDataFrame([], PENDING_DELTA_DDL)
-        )
+        self._commit_rows(self.pending_delta_tbl, [], PENDING_DELTA_DDL)
 
     def _save_checkpoint(self) -> None:
         state = {
@@ -709,13 +823,7 @@ class CrawlEngine:
             pool.submit(
                 self._commit,
                 self.documents_tbl,
-                self.spark.createDataFrame(
-                    [],
-                    "url string, host string, depth int, fetch_round int, "
-                    "seq_in_round int, status int, content string, "
-                    "spans array<struct<kind:string,text:string,"
-                    "media_ref:string,offset:int>>",
-                ),
+                self.spark.createDataFrame([], DOCUMENTS_DDL),
             ),
         ]
         # empty flat-schema snapshots: driver fast path, no Spark job
@@ -885,12 +993,16 @@ class CrawlEngine:
         """Run one crawl round; returns the round's metrics dict
         (popped == 0 ⇒ frontier drained).
 
-        The phases run in order: pop, fetch, page commits (submitted to
-        the commit pool), links (ending in the pending-delta commit), then
-        maintenance: seen filter, pending compaction, metrics, the commit
-        barrier, tail fold, checkpoint and expiry. ``phases`` maps each
-        timed phase to its wall seconds; ``other`` is the rest of the
-        round.
+        The round runs in one of two regimes, chosen per round
+        (``_driver_regime``): on the driver-resident Arrow frontier
+        (``_driver_round``) while the frontier is small, else as the Spark
+        pipeline (``_spark_round``). Both produce the same rows and
+        commits. The phases run in order: pop, fetch, page commits
+        (submitted to the commit pool), links (ending in the pending-delta
+        commit), then maintenance: seen filter, pending compaction,
+        metrics, the commit barrier, tail fold, checkpoint and expiry.
+        ``phases`` maps each timed phase to its wall seconds; ``other`` is
+        the rest of the round.
 
         A round that raises has joined every Spark job it submitted and
         has not advanced the checkpoint; its in-memory state is then
@@ -899,27 +1011,17 @@ class CrawlEngine:
         self._phases = {}
         self.round_id += 1
         compacts = bool(self.compact_every) and self.round_id % self.compact_every == 0
-        with self._phase("pop"):
-            pending, hosts, popped = self._pop()
+        driver = self._driver_regime()
+        if not driver:
+            self._frontier = None  # frees the copy; a later driver round rebuilds
         futures: list = []
-        release = [partial(unpin, popped)]
+        release: list = []
         try:
-            with self._phase("fetch"):
-                enriched = self._fetch(popped)
-                release.append(partial(unpin, enriched))
-                m, host_popped = self._page_counts(enriched)
-            if m["popped"] == 0:
+            out = (self._driver_round if driver else self._spark_round)(futures, release)
+            if out is None:
                 self.round_id -= 1
                 return {"round": self.round_id + 1, "popped": 0}
-            fetched_old = self._submit_page_commits(futures, enriched, hosts, host_popped)
-            seq0 = self.seq_counter
-            with self._phase("links"):
-                delta, dead = self._links(
-                    enriched, popped, pending, fetched_old, m["popped"], release
-                )
-                m["links_inserted"] = delta.rows - m["popped"] - m["retried"]
-                self.seq_counter += m["links_inserted"]
-            self._update_seen_filter(delta, seq0, dead.select("url_hash"))
+            m, host_popped, copy = out
             self._finish_commits(m, host_popped, futures, compacts)
         except BaseException:
             # a failed round leaves none of its jobs running on the shared
@@ -933,9 +1035,301 @@ class CrawlEngine:
             for free in release:
                 free()
         self._fold_and_checkpoint(compacts)
+        if copy is not None:
+            # every commit of the round has landed; compaction and the
+            # tail fold change versions, not rows
+            copy.stamp = self._stamp()
+            self._frontier = copy
         self._phases["other"] = time.perf_counter() - t0 - sum(self._phases.values())
         m["phases"] = self._phases
         return m
+
+    def _spark_round(self, futures: list, release: list) -> tuple | None:
+        """The Spark regime's pop, fetch, page commits and links, up to the
+        seen-filter update. Returns (metrics, popped per host, None), or
+        None when nothing was popped."""
+        with self._phase("pop"):
+            pending, hosts, popped = self._pop()
+        release.append(partial(unpin, popped))
+        with self._phase("fetch"):
+            enriched = self._fetch(popped)
+            release.append(partial(unpin, enriched))
+            m, host_popped = self._page_counts(enriched)
+        if m["popped"] == 0:
+            return None
+        fetched_old = self._submit_page_commits(futures, enriched, hosts, host_popped)
+        seq0 = self.seq_counter
+        with self._phase("links"):
+            delta, dead = self._links(
+                enriched, popped, pending, fetched_old, m["popped"], release
+            )
+            m["links_inserted"] = delta.rows - m["popped"] - m["retried"]
+            self.seq_counter += m["links_inserted"]
+        self._update_seen_filter(delta, seq0, dead.select("url_hash"))
+        return m, host_popped, None
+
+    # -- the driver regime ----------------------------------------------------
+    # (below DRIVER_FRONTIER_MAX_URLS the round's rows are computed on the
+    # driver from an Arrow copy of the frontier that the engine, the
+    # frontier's only writer, carries from round to round; the fetch is
+    # the round's one Spark job. Compaction rounds add the Spark jobs of
+    # the pending compaction and compact_tail.)
+
+    def _driver_regime(self) -> bool:
+        """Whether this round runs on the driver: seq_counter, an upper
+        bound on pending ∪ fetched, is within DRIVER_FRONTIER_MAX_URLS and
+        probe_broadcast_threshold (so no seen filter exists and the
+        checkpoints of both regimes are alike), and the robots rules
+        compiled."""
+        bound = min(DRIVER_FRONTIER_MAX_URLS, self.probe_broadcast_threshold)
+        return self._robots_ok is not None and self.seq_counter <= bound
+
+    def _stamp(self) -> tuple:
+        """The pinned versions a driver copy is valid for."""
+        return tuple(
+            self._version(t)
+            for t in (self.pending_tbl, self.pending_delta_tbl, self.fetched_tbl, self.hosts_tbl)
+        )
+
+    def _driver_frontier(self) -> DriverFrontier:
+        """The frontier copy at the pinned versions. A commit by any other
+        writer (seeding, reprioritize, purge_host, ingest_links, a Spark
+        round) or a resumed engine leaves the stamp stale, and the copy is
+        rebuilt with one toArrow per table."""
+        if self._frontier is not None and self._frontier.stamp == self._stamp():
+            return self._frontier
+        self._frontier = None
+        pending = (
+            self._read_pending().select(*FRONTIER_COLS_PENDING).toArrow()
+            .cast(to_arrow_schema(self._schemas["pending"]))
+        )
+        fetched = self._read(self.fetched_tbl).select("url").toArrow()
+        hosts_df = self._read(self.hosts_tbl)
+        hosts_schema = _nullable(hosts_df.schema)
+        hosts = hosts_df.toArrow().cast(to_arrow_schema(hosts_schema))
+        seen = pa.chunked_array(
+            pending["url"].chunks + fetched["url"].cast(pa.string()).chunks, pa.string()
+        )
+        return DriverFrontier(self._stamp(), pending, seen, hosts, hosts_schema)
+
+    def _driver_round(self, futures: list, release: list) -> tuple | None:
+        """A round on the driver copy: the same rows as budgeted_pop,
+        _fetch and _admit_links, and the same commits, written by pyarrow.
+        Returns (metrics, popped per host, the next copy, unstamped), or
+        None when nothing was popped."""
+        with self._phase("pop"):
+            fr = self._driver_frontier()
+            hosts = refill_hosts_arrow(fr.hosts) if self.round_id > 1 else fr.hosts
+            order = budgeted_pop_arrow(fr.pending, hosts, self.batch_size)
+            popped = fr.pending.take(order)
+        if not len(order):
+            return None
+        with self._phase("fetch"):
+            pages = self._fetch_pages(popped)
+        rows = popped.to_pylist()
+        m = {"round": self.round_id, "popped": len(rows), "fetched": 0, "dead": 0,
+             "retried": 0, "links_seen": 0}
+        docs, dead, retries = [], [], []
+        links: dict = {"depth": [], "href": []}
+        for rank, (row, page) in enumerate(zip(rows, pages)):
+            outcome = page["outcome"]
+            m["retried" if outcome == "retry" else outcome] += 1
+            if outcome == "dead":
+                dead.append(row["url"])
+            elif outcome == "retry":
+                a = row["attempts"]
+                retries.append({**row, "attempts": None if a is None else a + 1})
+            else:
+                out_links = page["out_links"] or []
+                m["links_seen"] += len(set(out_links))
+                docs.append((row, rank, page))
+                # posexplode order: (pop_rank, link_pos)
+                for href in out_links:
+                    if href is not None:
+                        links["depth"].append(row["depth"])
+                        links["href"].append(href)
+        retried = pa.Table.from_pylist(retries, schema=popped.schema)
+        host_popped = Counter(r["host"] for r in rows)
+        hosts_next = charge_hosts_arrow(hosts, host_popped)
+        self._submit_driver_commits(futures, docs, hosts_next, fr.hosts_schema)
+        with self._phase("links"):
+            seen = fr.seen
+            if dead:
+                seen = pc.filter(seen, pc.invert(pc.is_in(seen, value_set=pa.array(dead))))
+            fresh = self._admit_links_arrow(
+                pa.table(links, schema=pa.schema([("depth", pa.int32()), ("href", pa.string())])),
+                seen,
+            )
+            delta = self._commit(
+                self.pending_delta_tbl,
+                pa.concat_tables(
+                    [_with_op(popped, "del"), _with_op(retried, "add"), _with_op(fresh, "add")]
+                ),
+                mode="append",
+                schema=self._schemas["delta"],
+                extra={"round": self.round_id, "dels": m["popped"]},
+            )
+            m["links_inserted"] = delta.rows - m["popped"] - m["retried"]
+            self.seq_counter += m["links_inserted"]
+        keep = np.ones(fr.pending.num_rows, dtype=bool)
+        keep[order] = False
+        pending_next = pa.concat_tables([fr.pending.filter(pa.array(keep)), retried, fresh])
+        seen_next = pa.chunked_array(seen.chunks + fresh["url"].chunks, pa.string())
+        if pending_next["url"].num_chunks > 16:
+            pending_next = pending_next.combine_chunks()
+        if seen_next.num_chunks > 16:
+            seen_next = pa.chunked_array([seen_next.combine_chunks()])
+        return m, host_popped, DriverFrontier(
+            None, pending_next, seen_next, hosts_next, fr.hosts_schema
+        )
+
+    def _fetch_pages(self, popped: pa.Table) -> list[dict]:
+        """The driver round's fetch, its one Spark job, and each popped
+        page's status, clean spans, text and outcome, computed with the
+        Python twins of _round_exprs' Column trees.
+
+        Sandbox: the corpus filtered to the popped urls. A fetcher: the
+        popped rows as a local relation through the (host, salt)
+        repartition and fetch_with_partition_sessions."""
+        urls = popped["url"].to_pylist()
+        if self.fetcher is None:
+            got = (
+                self.corpus.where(_url_in(self.spark, urls))
+                .select("url", "status_code", "spans", "out_links").toArrow()
+            )
+            by_url = {r["url"]: r for r in got.to_pylist()}
+            fetched = [by_url.get(u) for u in urls]
+        else:
+            batch = local_frame(
+                self.spark, zip(range(len(urls)), urls, popped["host"].to_pylist()),
+                "i int, url string, host string",
+            )
+            fetch_input = batch.repartition(
+                self.spark.sparkContext.defaultParallelism, F.col("host"), self._rx["salt"]
+            )
+            got = fetch_with_partition_sessions(fetch_input, self.fetcher).select(
+                "i", "status_code", "spans", "out_links"
+            ).toArrow()
+            fetched = [None] * len(urls)
+            for r in got.to_pylist():
+                fetched[r["i"]] = r
+        pages = []
+        for page, attempts in zip(fetched, popped["attempts"].to_pylist()):
+            page = page or {}
+            status = page.get("status_code")
+            status = 404 if status is None else status
+            spans = clean_spans_py(page.get("spans") or [])
+            text = render_spans_text_py(spans)
+            if is_error_page_py(text, status):
+                outcome = "dead"
+            elif text.strip(JAVA_WHITESPACE):
+                outcome = "fetched"
+            elif (
+                self.max_attempts is not None
+                and attempts is not None
+                and attempts + 1 >= self.max_attempts
+            ):
+                outcome = "dead"
+            else:
+                outcome = "retry"
+            pages.append({
+                "status": status, "spans": spans, "text": text, "outcome": outcome,
+                "out_links": page.get("out_links"),
+            })
+        return pages
+
+    def _submit_driver_commits(
+        self, futures: list, docs: list, hosts: pa.Table, hosts_schema: StructType
+    ) -> None:
+        """The driver round's page commits — documents, fetched, hosts (and
+        link edges) — submitted to the commit pool like
+        _submit_page_commits'. ``docs`` holds (popped row, 0-based pop
+        position, page) of each fetched page."""
+        pool = self._commit_pool()
+        documents = pa.Table.from_pylist(
+            [
+                {"url": r["url"], "host": r["host"], "depth": r["depth"],
+                 "fetch_round": self.round_id, "seq_in_round": rank,
+                 "status": p["status"], "content": p["text"], "spans": p["spans"]}
+                for r, rank, p in docs
+            ],
+            schema=to_arrow_schema(self._schemas["documents"]),
+        )
+        futures.append(pool.submit(
+            self._commit, self.documents_tbl, documents, mode="append",
+            schema=self._schemas["documents"],
+        ))
+        fetched = pa.Table.from_pylist(
+            [{**r, "state": "fetched"} for r, _, _ in docs],
+            schema=to_arrow_schema(self._schemas["fetched"]),
+        )
+        futures.append(pool.submit(
+            self._commit, self.fetched_tbl, fetched, mode="append",
+            schema=self._schemas["fetched"],
+        ))
+        futures.append(pool.submit(self._commit, self.hosts_tbl, hosts, schema=hosts_schema))
+        if self.track_link_graph:
+            src, hrefs = [], []
+            for r, _, p in docs:
+                for href in p["out_links"] or []:
+                    if href is not None:
+                        src.append(r["url"])
+                        hrefs.append(href)
+            adm = admit_arrow(pa.array(hrefs, pa.string()))
+            edges = (
+                pa.table({"src": pa.array(src, pa.string()), "dst": adm.field("url")})
+                .filter(pc.invert(adm.field("malformed")))
+                .group_by(["src", "dst"]).aggregate([])
+            )
+            futures.append(pool.submit(
+                self._commit, self.edges_tbl, edges, mode="append",
+                schema=self._schemas["edges"],
+            ))
+
+    def _admit_links_arrow(self, links: pa.Table, seen: pa.ChunkedArray) -> pa.Table:
+        """_admit_links on the driver, for a round's links (``href`` and
+        the parent's ``depth``, in (pop_rank, link_pos) order): admit_arrow
+        → malformed and robots filter → the urls new against ``seen``
+        (new_urls' Arrow form; each url keeps its first occurrence) →
+        FRONTIER_COLS_PENDING rows with seqs from seq_counter in that
+        order, at the parent's depth + 1."""
+        adm = admit_arrow(links["href"].combine_chunks())
+        ok = self._robots_ok
+        keep = [
+            not bad and ok(h, p)
+            for bad, h, p in zip(
+                adm.field("malformed").to_pylist(),
+                adm.field("host").to_pylist(),
+                adm.field("path").to_pylist(),
+            )
+        ]
+        cand = pa.table({
+            "url": adm.field("url"), "host": adm.field("host"), "depth": links["depth"],
+        }).filter(pa.array(keep, pa.bool_()))
+        fresh = new_urls(cand, seen)
+        urls = fresh["url"].to_pylist()
+        buckets: dict = {}
+        n = len(urls)
+        return pa.table(
+            {
+                "url": fresh["url"],
+                "url_hash": pa.array([spark_xxhash64_str(u) for u in urls], pa.int64()),
+                "host": fresh["host"],
+                "depth": pc.add(fresh["depth"], 1),
+                "priority": pa.array(np.zeros(n, np.int32)),
+                "seq": pa.array(np.arange(self.seq_counter, self.seq_counter + n, dtype=np.int64)),
+                "state": pa.array(["pending"] * n, pa.string()),
+                "attempts": pa.array(np.zeros(n, np.int32)),
+                "bucket": pa.array(
+                    [
+                        buckets.setdefault(h, host_bucket(h, HOST_BUCKETS))
+                        for h in fresh["host"].to_pylist()
+                    ],
+                    pa.int32(),
+                ),
+            },
+            schema=to_arrow_schema(self._schemas["pending"]),
+        )
 
     def _pop(self) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Pop phase: the round's pending view and refilled hosts, and the

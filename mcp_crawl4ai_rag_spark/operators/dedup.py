@@ -30,6 +30,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -453,18 +455,34 @@ def make_contains_udf(spark, f: BloomFilter | ShardedCuckoo):
 # ---------------------------------------------------------------------------
 
 
+def first_occurrences(values: "pa.Array | pa.ChunkedArray") -> np.ndarray:
+    """Ascending positions of the first occurrence of each distinct value
+    (nulls are one value)."""
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    codes = pc.fill_null(pc.dictionary_encode(values).indices, -1)
+    _, first = np.unique(codes.to_numpy(), return_index=True)
+    return np.sort(first)
+
+
 def new_urls(
-    candidates: DataFrame,
-    seen: DataFrame,
+    candidates: "DataFrame | pa.Table",
+    seen: "DataFrame | pa.Array | pa.ChunkedArray",
     url_col: str = "url",
     bloom: BloomFilter | ShardedCuckoo | None = None,
     spark=None,
     probe_broadcast: bool = False,
-) -> DataFrame:
+) -> "DataFrame | pa.Table":
     """Exactly the set of candidate urls not in `seen` (operations.py:43-59
     batch-upsert semantics), with an optional approximate-membership
     prefilter ``bloom``: a BloomFilter, or its deletable ShardedCuckoo
     variant, over xxhash64(url).
+
+    Arrow form: ``candidates`` a driver-side ``pyarrow.Table`` and
+    ``seen`` the seen urls as an Arrow array. Each url keeps its first
+    row, in table order, and the seen set is probed with the candidate
+    urls (the probe_broadcast shape: one pass over seen, hashing only the
+    candidates); no filter or Spark job.
 
     candidates are deduped internally first (dropDuplicates) — the
     reference's executemany upsert keeps the first occurrence.
@@ -504,6 +522,12 @@ def new_urls(
     set before the full seen scan), or when the seen side is NOT
     pre-partitioned and hit-rate is low.
     """
+    if isinstance(candidates, pa.Table):
+        cands = candidates.take(first_occurrences(candidates[url_col]))
+        hits = pc.filter(seen, pc.is_in(seen, value_set=cands[url_col], skip_nulls=True))
+        return cands.filter(
+            pc.invert(pc.is_in(cands[url_col], value_set=hits, skip_nulls=True))
+        )
     cands = candidates.dropDuplicates([url_col])
     might = make_contains_udf(spark, bloom) if bloom is not None else None
     if probe_broadcast:

@@ -15,11 +15,19 @@ rule generalizes this to explicit DataFrame state:
   special case of a single allow rule.
 
 All pure DataFrame ops — the rules join is a broadcast hash join, the
-budget is a window rank, nothing leaves the JVM.
+budget is a window rank, nothing leaves the JVM. The crawl engine's driver
+regime uses their driver-side twins over Arrow tables (refill_hosts_arrow,
+charge_hosts_arrow, budgeted_pop_arrow, robots_evaluator), which give the
+same rows.
 """
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -76,15 +84,76 @@ def build_robots_rules(robots: DataFrame) -> DataFrame:
     )
 
 
-def compile_robots_predicate(
+def robots_rule_rows(
     rules: DataFrame, max_hosts: int = 64, max_rules: int = 256
-) -> "F.Column | None":
-    """Compile a SMALL prebuilt rules table into a literal keep-predicate.
+) -> list | None:
+    """A SMALL prebuilt rules table (build_robots_rules) collected once
+    (bounded probe, the budgeted_pop precedent): one (host, rules) row per
+    host, each host's rules in evaluation order — prefix length DESC,
+    allow first. The first matching rule in that order IS the
+    lexicographic max the join fold's array_max picks (longest match
+    wins, equal-length conflicts resolve to allow). None when the table
+    has more than ``max_hosts`` hosts or ``max_rules`` rules."""
+    rows = rules.limit(max_hosts + 1).collect()
+    if len(rows) > max_hosts:
+        return None
+    if sum(len(r["__rules"]) for r in rows) > max_rules:
+        return None
+    return [
+        (
+            r["host"],
+            sorted(
+                r["__rules"], key=lambda x: (-len(x["prefix"]), x["rtype"] != "allow")
+            ),
+        )
+        for r in rows
+    ]
 
-    When the whole rules table is tiny, collect it once (bounded probe,
-    the budgeted_pop precedent) and emit a chained CASE over literal
-    startswith/rlike probes — whole-stage codegen, regexes compiled once,
-    and no per-batch broadcast join.
+
+def robots_evaluator(rule_rows: list):
+    """The robots_rule_rows as a driver-side ``allowed(host, path)``, the
+    Python twin of compile_robots_predicate: the first matching rule
+    decides; no matching rule, an unknown or null host, or a null path
+    allow. A wildcard rule's Java regex ``(?s)^…`` / ``(?s)^…\\z`` is the
+    same Python regex with ``re.DOTALL`` and ``\\Z``."""
+    by_host = {}
+    for host, ordered in rule_rows:
+        compiled = []
+        for x in ordered:
+            if x["is_re"]:
+                pat = x["pattern"]
+                if x["prefix"].endswith("$"):
+                    pat = pat[: -len(r"\z")] + r"\Z"
+                probe = re.compile(pat, re.DOTALL).match
+                compiled.append((probe, True, x["rtype"] == "allow"))
+            else:
+                compiled.append((x["prefix"], False, x["rtype"] == "allow"))
+        # a host listed twice: the compiled CASE takes its first branch;
+        # a null host's branch never matches
+        if host is not None:
+            by_host.setdefault(host, compiled)
+
+    def allowed(host: str | None, path: str | None) -> bool:
+        if path is None:
+            return True
+        for probe, is_re, verdict in by_host.get(host, ()):
+            if (probe(path) is not None) if is_re else path.startswith(probe):
+                return verdict
+        return True
+
+    return allowed
+
+
+def compile_robots_predicate(
+    rules: "DataFrame | list", max_hosts: int = 64, max_rules: int = 256
+) -> "F.Column | None":
+    """Compile a SMALL prebuilt rules table — or its robots_rule_rows —
+    into a literal keep-predicate.
+
+    When the whole rules table is tiny, collect it once (robots_rule_rows)
+    and emit a chained CASE over literal startswith/rlike probes —
+    whole-stage codegen, regexes compiled once, and no per-batch broadcast
+    join.
 
     Inlining trap: the predicate reads ``host`` and ``path`` once per
     CASE branch, and Catalyst inlines whatever expressions define those
@@ -107,24 +176,22 @@ def compile_robots_predicate(
     rule / unknown host / NULL path ⇒ allow. Returns None when the table
     exceeds the bounds — callers fall back to the join+fold path, which
     is the right shape for a genuinely large rules corpus."""
-    rows = rules.limit(max_hosts + 1).collect()
-    if len(rows) > max_hosts:
-        return None
-    if sum(len(r["__rules"]) for r in rows) > max_rules:
+    rows = (
+        rules if isinstance(rules, list)
+        else robots_rule_rows(rules, max_hosts, max_rules)
+    )
+    if rows is None:
         return None
     path = F.col("path")
     host_pred = None
-    for r in rows:
-        ordered = sorted(
-            r["__rules"], key=lambda x: (-len(x["prefix"]), x["rtype"] != "allow")
-        )
+    for host, ordered in rows:
         chain = None
         for x in ordered:
             m = path.rlike(x["pattern"]) if x["is_re"] else path.startswith(x["prefix"])
             verdict = F.lit(x["rtype"] == "allow")
             chain = F.when(m, verdict) if chain is None else chain.when(m, verdict)
         keep = chain.otherwise(F.lit(True)) if chain is not None else F.lit(True)
-        cond = F.col("host") == r["host"]
+        cond = F.col("host") == host
         host_pred = (
             F.when(cond, keep) if host_pred is None else host_pred.when(cond, keep)
         )
@@ -225,6 +292,27 @@ def hosts_from_robots(
 def refill_hosts(hosts: DataFrame) -> DataFrame:
     return hosts.withColumn(
         "tokens", F.least(F.col("capacity"), F.col("tokens") + F.col("refill_rate"))
+    )
+
+
+def refill_hosts_arrow(hosts: pa.Table) -> pa.Table:
+    """refill_hosts on a driver-side hosts table. Like Spark's ``least``,
+    min_element_wise skips a null operand and ranks NaN above numbers."""
+    tokens = pc.min_element_wise(
+        hosts["capacity"], pc.add(hosts["tokens"], hosts["refill_rate"])
+    )
+    return hosts.set_column(hosts.schema.get_field_index("tokens"), "tokens", tokens)
+
+
+def charge_hosts_arrow(hosts: pa.Table, popped: dict) -> pa.Table:
+    """charge_hosts on a driver-side hosts table: ``popped`` maps a host
+    to its pops; a null host is never charged."""
+    charge = pa.array(
+        [popped.get(h, 0) if h is not None else 0 for h in hosts["host"].to_pylist()],
+        pa.float64(),
+    )
+    return hosts.set_column(
+        hosts.schema.get_field_index("tokens"), "tokens", pc.subtract(hosts["tokens"], charge)
     )
 
 
@@ -433,3 +521,49 @@ def budgeted_pop(
         .limit(batch_size)
         .withColumn("pop_rank", F.row_number().over(w_global))
     )
+
+
+def budgeted_pop_arrow(pending: pa.Table, hosts: pa.Table, batch_size: int) -> np.ndarray:
+    """budgeted_pop on driver-side tables: the indices of the popped
+    ``pending`` rows, in pop order (pop_rank = position + 1).
+
+    Rows sort by (priority DESC nulls last, seq ASC nulls first), Spark's
+    ``desc``/``asc``. A row's budget is floor(tokens) of its host's row in
+    ``hosts`` (a NaN floors to 0, as the JVM's double-to-long cast does);
+    a row binds when that budget is below ``batch_size`` and keeps its
+    place while its rank among its host's rows is within the budget. A
+    null host, a host with no row or a null budget never binds. The first
+    ``batch_size`` rows that keep their place are popped."""
+    n = pending.num_rows
+    if n == 0 or batch_size <= 0:
+        return np.zeros(0, dtype=np.int64)
+    # keys of one np.lexsort: priority is an int, so -2**40 sorts below
+    # every value (nulls last once negated); seq nulls go first
+    prio = pc.fill_null(pending["priority"].cast(pa.int64()), -(1 << 40)).to_numpy()
+    seq = pc.fill_null(
+        pending["seq"].cast(pa.int64()), np.iinfo(np.int64).min
+    ).to_numpy()
+    order = np.lexsort((seq, -prio))
+    hidx = pc.index_in(pending["host"], value_set=hosts["host"], skip_nulls=True)
+    has = hidx.is_valid().to_numpy(zero_copy_only=False)
+    hi = pc.fill_null(hidx, 0).to_numpy()
+    tokens = hosts["tokens"].cast(pa.float64())
+    t = pc.fill_null(tokens, 0.0).to_numpy(zero_copy_only=False)
+    budget = np.where(np.isnan(t), 0.0, np.floor(t))
+    valid = tokens.is_valid().to_numpy(zero_copy_only=False)
+    if not len(budget):  # no hosts: nothing binds
+        return order[:batch_size]
+    binding = (has & valid[hi] & (budget[hi] < batch_size))[order]
+    keep = np.ones(n, dtype=bool)
+    sel = np.flatnonzero(binding)
+    if len(sel):
+        # rank of each binding row among its host's rows, in pop order
+        codes = hi[order][sel]
+        g = np.argsort(codes, kind="stable")
+        sc = codes[g]
+        starts = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
+        sizes = np.diff(np.r_[starts, len(sc)])
+        rank = np.empty(len(sel), dtype=np.int64)
+        rank[g] = np.arange(len(sc)) - np.repeat(starts, sizes) + 1
+        keep[sel] = rank <= budget[codes]
+    return order[keep][:batch_size]

@@ -21,7 +21,9 @@ The manifest is the commit record, so data directories carry no
 ``_SUCCESS`` marker and no ``.crc`` checksum sidecars (per-write Hadoop
 options, see ``WRITE_OPTIONS``; the session's other writes are
 unaffected). A ``single_file`` commit coalesces its rows into one
-parquet file, the layout for small per-round appends.
+parquet file, the layout for small per-round appends. A commit of a
+driver-side ``pyarrow.Table`` writes that one file with pyarrow and no
+Spark job; readers cannot tell the two writers' files apart.
 """
 
 from __future__ import annotations
@@ -32,8 +34,12 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import AtomicType, DataType, StructType
 
 
 # Hadoop options set on every snapshot write (never in the session conf):
@@ -51,8 +57,6 @@ WRITE_OPTIONS = {
 def parquet_rows(path: str) -> int:
     """Rows in the parquet files directly under ``path``, read from their
     footers on the driver (no Spark job)."""
-    import pyarrow.parquet as pq
-
     return sum(
         pq.read_metadata(os.path.join(path, f)).num_rows
         for f in os.listdir(path)
@@ -159,8 +163,6 @@ class SnapshotTable:
         reader = spark.read
         # explicit schema: lets empty snapshots (no data files) read back
         if m.get("schema"):
-            from pyspark.sql.types import StructType
-
             reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
         return reader.parquet(*m["paths"])
 
@@ -178,8 +180,6 @@ class SnapshotTable:
         the partition column). The manifest's partition→path map IS the
         pruning index — Iceberg's manifest-level partition pruning on plain
         parquet."""
-        from pyspark.sql.types import StructType
-
         schema = StructType.fromJson(json.loads(m["schema"]))
         part_col = m["part_col"]
         cols = [f.name for f in schema]
@@ -212,15 +212,22 @@ class SnapshotTable:
 
     def commit(
         self,
-        df: DataFrame,
+        df: "DataFrame | pa.Table",
         expected_version: int | None = None,
         partition_by: list[str] | None = None,
         extra: dict | None = None,
         mode: str = "overwrite",
         parent_version: int | None = None,
         single_file: bool = False,
+        schema: "StructType | str | None" = None,
     ) -> SnapshotInfo:
         """Write df as the next version; atomic manifest swap.
+
+        ``df`` is a DataFrame, or a driver-side ``pyarrow.Table`` together
+        with its Spark ``schema`` (a StructType or DDL string): pyarrow
+        then writes the version's one parquet file, with no Spark job,
+        nested columns as they are, and the manifest records ``schema``,
+        so a reader sees the types a Spark write of the same rows gives.
 
         - ``mode='overwrite'``: new snapshot = just the new data dir.
         - ``mode='append'``: Iceberg-style fast append — write ONLY the new
@@ -246,17 +253,32 @@ class SnapshotTable:
         """
         cur, new_v = self._next_version(expected_version)
         path = os.path.join(self.dir, f"d{new_v}")
-        writer = (df.coalesce(1) if single_file else df).write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.options(**WRITE_OPTIONS).parquet(path)
-        rows = None if partition_by else parquet_rows(path)
+        if isinstance(df, pa.Table):
+            if partition_by or schema is None:
+                raise ValueError(
+                    "commit: a pyarrow.Table commit takes its Spark schema and "
+                    "is not partitioned"
+                )
+            struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+            os.makedirs(path, exist_ok=True)
+            pq.write_table(
+                df.select(struct.names).cast(to_arrow_schema(struct)),
+                os.path.join(path, "part-00000.parquet"),
+            )
+            rows = df.num_rows
+        else:
+            struct = df.schema
+            writer = (df.coalesce(1) if single_file else df).write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.options(**WRITE_OPTIONS).parquet(path)
+            rows = None if partition_by else parquet_rows(path)
         paths, folded = self._lineage(cur, mode, parent_version, path)
         manifest = {
             "version": new_v,
             "paths": paths,
             "folded": folded,
-            "schema": df.schema.json(),
+            "schema": struct.json(),
             "committed_at": time.time(),
             "rows": rows,
             "extra": extra or {},
@@ -298,8 +320,6 @@ class SnapshotTable:
         ``target_files`` sizes the fold output; at cluster scale derive it
         from tail bytes / target file size rather than the default 1.
         """
-        from pyspark.sql.types import StructType
-
         cur = self.current()
         if cur is None:
             return None
@@ -353,30 +373,21 @@ class SnapshotTable:
     ) -> SnapshotInfo:
         """Driver-rows fast path: commit a small driver-local row list
         (per-round metrics, lineage rows) as the next version WITHOUT a
-        Spark job — pyarrow writes the parquet file directly, then the same
-        atomic manifest swap as commit(). Readback is unchanged: the
-        manifest carries the equivalent Spark schema and spark.read.parquet
-        sees identical types (int→INT32, long→INT64, ...).
+        Spark job, through commit()'s pyarrow form.
 
         Use only for O(driver-memory) side tables — a crawl round's metric
-        rows are O(hosts + constants) by construction; data tables keep the
-        distributed writers. Cuts one full Spark job (~0.3-0.5 s of driver
-        scheduling latency) per round per table at any scale, since these
-        rows never live on executors in the first place.
+        rows are O(hosts + constants) by construction. Cuts one full Spark
+        job (~0.3-0.5 s of driver scheduling latency) per round per table
+        at any scale, since these rows never live on executors in the
+        first place.
 
         schema: a pyspark StructType, or a DDL string ("round int, scope
         string, key string, value long"), of atomic column types only.
         """
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import AtomicType, DataType
-
         struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
         for f in struct.fields:
             if not isinstance(f.dataType, AtomicType):
-                # nested/complex types stay on the Spark path
+                # nested/complex types go through commit() as a pyarrow.Table
                 raise ValueError(
                     f"commit_rows: unsupported type {f.dataType.simpleString()!r}"
                 )
@@ -386,22 +397,14 @@ class SnapshotTable:
             [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
             schema=pa_schema,
         )
-
-        cur, new_v = self._next_version(expected_version)
-        path = os.path.join(self.dir, f"d{new_v}")
-        os.makedirs(path, exist_ok=True)
-        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-        paths, folded = self._lineage(cur, mode, parent_version, path)
-        manifest = {
-            "version": new_v,
-            "paths": paths,
-            "folded": folded,
-            "schema": struct.json(),
-            "committed_at": time.time(),
-            "extra": extra or {},
-        }
-        self._publish(manifest)
-        return SnapshotInfo(new_v, paths, extra or {})
+        return self.commit(
+            table,
+            expected_version=expected_version,
+            extra=extra,
+            mode=mode,
+            parent_version=parent_version,
+            schema=struct,
+        )
 
     def commit_partitioned(
         self,

@@ -64,6 +64,21 @@ def main() -> None:
         )
     )
 
+    # 2b. the driver regime's fetch: the round's one Spark job
+    from mcp_crawl4ai_rag_spark.operators.crawl import _url_in
+
+    corpus = docs.select(F.col("source").alias("url"), "text")
+    sections.append(
+        (
+            "Driver-regime fetch (J5): the round's one job",
+            "Below DRIVER_FRONTIER_MAX_URLS the popped urls arrive as one "
+            "JVM-built IN set (InSet) that reaches the parquet reader "
+            "(PushedFilters: In); the rows go to the driver by toArrow, "
+            "with no join and no exchange.",
+            grab(corpus.where(_url_in(spark, [f"src{i}" for i in range(128)]))),
+        )
+    )
+
     # 3. robots broadcast join — shuffle-free
     from mcp_crawl4ai_rag_spark.operators.politeness import (
         robots_allowed,

@@ -268,19 +268,24 @@ def test_compiled_predicate_equals_join_fold(spark):
     assert compile_robots_predicate(build_robots_rules(many), max_hosts=64) is None
 
 
+LINE_TERMINATOR_RULES = [("a.example", "disallow", "/private/", 0.0)]
+# url -> (its robots path, allowed)
+LINE_TERMINATOR_CASES = {
+    "https://a.example/private/\u2028x": ("/private/\u2028x", False),
+    "https://a.example/x\u2029y/\u0085": ("/x\u2029y/\u0085", True),
+    "https://a.example/private/\u0085": ("/private/\u0085", False),
+    "https://a.example/\u2028private/": ("/\u2028private/", True),
+}
+
+
 def test_line_terminator_paths_follow_oracle(spark):
     """U+0085, U+2028 and U+2029 are plain path characters: the path is the
     text after the host, as oracle.simulator.robots_allows takes it."""
     from mcp_crawl4ai_rag_spark.functions.urls import host_and_path_py
     from mcp_crawl4ai_rag_spark.oracle.simulator import robots_allows
 
-    rules = [("a.example", "disallow", "/private/", 0.0)]
-    cases = {
-        "https://a.example/private/\u2028x": ("/private/\u2028x", False),
-        "https://a.example/x\u2029y/\u0085": ("/x\u2029y/\u0085", True),
-        "https://a.example/private/\u0085": ("/private/\u0085", False),
-        "https://a.example/\u2028private/": ("/\u2028private/", True),
-    }
+    rules = LINE_TERMINATOR_RULES
+    cases = LINE_TERMINATOR_CASES
     urls = spark.createDataFrame([(u,) for u in cases], ["url"])
     got = {r["url"]: r["path"] for r in with_host_and_path(urls).collect()}
     robots_df = spark.createDataFrame(
@@ -293,3 +298,68 @@ def test_line_terminator_paths_follow_oracle(spark):
         assert got[u] == path == host_and_path_py(u)[1], u
         assert robots_allows(rules, u) is allowed, u
         assert (u in kept) is allowed, u
+
+
+def _three_evaluators(spark, rules, urls):
+    """The urls each robots evaluator keeps: the compiled predicate, the
+    join fold and the driver-side Python evaluator."""
+    from mcp_crawl4ai_rag_spark.functions.urls import host_and_path_py
+    from mcp_crawl4ai_rag_spark.operators.politeness import (
+        build_robots_rules,
+        compile_robots_predicate,
+        robots_evaluator,
+        robots_rule_rows,
+    )
+
+    robots_df = spark.createDataFrame(
+        rules, "host string, rule_type string, path_prefix string, crawl_delay double"
+    )
+    rules_tbl = build_robots_rules(robots_df)
+    rows = robots_rule_rows(rules_tbl)
+    assert rows is not None
+    df = with_host_and_path(spark.createDataFrame([(u,) for u in urls], ["url"]))
+    compiled = {r["url"] for r in df.where(compile_robots_predicate(rows)).collect()}
+    fold = {
+        r["url"]
+        for r in robots_allowed(df, prebuilt_rules=rules_tbl, try_compile=False).collect()
+    }
+    allowed = robots_evaluator(rows)
+    driver = {u for u in urls if allowed(*host_and_path_py(u))}
+    return compiled, fold, driver
+
+
+def test_python_evaluator_equals_compiled_and_fold(spark):
+    """robots_evaluator (the driver regime's robots filter) decides like
+    the compiled predicate and the join fold: '*' and '$' rules, ties,
+    zero-length rules, U+0085/U+2028 and non-ASCII paths, regex
+    metacharacters in rules, unknown hosts."""
+    import random
+
+    rng = random.Random(23)
+    prefixes = [
+        "/", "/a", "/a/", "/fish*", "/*.php$", "/x$", "", "/a*b/", "/é", "/é*$",
+        "/p\u0085", "/*\u2028", "/q(1)+[", "/w.*$", "/\\z$", "/s$",
+    ]
+    rules = [
+        (h, rng.choice(["allow", "disallow", "crawl-delay"]), rng.choice(prefixes), 0.0)
+        for h in ["h1.com", "h2.com", "é.com"]
+        for _ in range(rng.randint(2, 7))
+    ]
+    paths = [
+        "/", "/a", "/a/b", "/fish", "/fishing", "/x", "/xx", "/q.php", "/q.phpx",
+        "/axxb/", "/é", "/éé", "/p\u0085", "/p\u0085x", "/x\u2028", "/\u2028",
+        "/x.php\u2028", "/s\u0085", "/s\u2029", "/q(1)+[", "/w.x", "/\\z", "",
+        "/a?q=1",
+    ]
+    urls = [f"https://{h}{p}" for h in ["h1.com", "h2.com", "é.com", "h9.com"] for p in paths]
+    compiled, fold, driver = _three_evaluators(spark, rules, urls)
+    assert compiled == fold == driver
+    assert 0 < len(driver) < len(urls)
+
+
+def test_python_evaluator_on_line_terminator_paths(spark):
+    compiled, fold, driver = _three_evaluators(
+        spark, LINE_TERMINATOR_RULES, list(LINE_TERMINATOR_CASES)
+    )
+    want = {u for u, (_, ok) in LINE_TERMINATOR_CASES.items() if ok}
+    assert compiled == fold == driver == want

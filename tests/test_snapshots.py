@@ -235,3 +235,84 @@ def test_compact_tail_time_travel_and_commit_rows_lineage(spark, tmp_path):
     assert got == [(1, "a"), (2, "b"), (3, "c")]
     # pre-fold version still time-travels (until expiry)
     assert t.read(spark, version=info.version - 1).count() == 3
+
+
+DOCS_DDL = (
+    "url string, depth int, content string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+DOC_ROWS = [
+    ("https://a/1", 0, "x\ny", [("text", "x", None, 0), ("media", None, "m://1", 1),
+                                ("text", "y", None, 2)]),
+    ("https://a/é", 1, "", []),
+    ("https://a/2", None, None, None),
+]
+
+
+def _doc_tuples(rows) -> list:
+    return sorted(
+        (r["url"], r["depth"], r["content"],
+         None if r["spans"] is None else [tuple(s) for s in r["spans"]])
+        for r in rows
+    )
+
+
+def _arrow_docs(schema, rows=DOC_ROWS):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.Table.from_pylist(
+        [
+            {"url": u, "depth": d, "content": c,
+             "spans": None if sp is None else [
+                 dict(zip(["kind", "text", "media_ref", "offset"], s)) for s in sp
+             ]}
+            for u, d, c, sp in rows
+        ],
+        schema=to_arrow_schema(schema),
+    )
+
+
+def test_arrow_commit_reads_back_like_a_spark_commit(spark, tmp_path):
+    """A pyarrow.Table commit of nested rows: one file, no sidecars, and
+    the same manifest schema, read-back schema and rows as a Spark write
+    of the same rows."""
+    import os
+
+    df = spark.createDataFrame(DOC_ROWS, DOCS_DDL)
+    by_spark = SnapshotTable(str(tmp_path), "spark_docs")
+    by_spark.commit(df, single_file=True)
+    by_arrow = SnapshotTable(str(tmp_path), "arrow_docs")
+    info = by_arrow.commit(_arrow_docs(df.schema), schema=df.schema)
+    assert info.rows == 3
+    assert os.listdir(info.paths[0]) == ["part-00000.parquet"]
+    assert (by_arrow._manifest(info.version)["schema"]
+            == by_spark._manifest(by_spark.current().version)["schema"])
+    a, b = by_arrow.read(spark), by_spark.read(spark)
+    assert a.schema.json() == b.schema.json()
+    assert _doc_tuples(a.collect()) == _doc_tuples(b.collect()) == _doc_tuples(df.collect())
+
+
+def test_compact_tail_and_expiry_over_mixed_writers(spark, tmp_path):
+    """Spark-written and pyarrow-written appends in one lineage: the tail
+    fold reads both kinds of file, and expiry collects both."""
+    import os
+
+    df = spark.createDataFrame(DOC_ROWS, DOCS_DDL)
+    t = SnapshotTable(str(tmp_path), "docs")
+    t.commit(df)
+    t.commit(_arrow_docs(df.schema), mode="append", schema=DOCS_DDL)
+    t.commit(df, mode="append", single_file=True)
+    t.commit(_arrow_docs(df.schema), mode="append", schema=df.schema)
+    before = set(t.current().paths)
+    info = t.compact_tail(spark, min_tail=2)
+    assert info is not None and len(info.paths) == 2
+    got = _doc_tuples(t.read(spark).collect())
+    assert got == sorted(_doc_tuples(df.collect()) * 4)
+    t.commit(_arrow_docs(df.schema), mode="append", schema=DOCS_DDL)
+    t.expire_snapshots(keep=1)
+    live = set(t.current().paths)
+    dirs = {os.path.join(t.dir, d) for d in os.listdir(t.dir) if d.startswith("d")}
+    assert dirs == live
+    assert not (before - set(info.paths)) & dirs  # folded dirs of both kinds gone
+    assert len(_doc_tuples(t.read(spark).collect())) == 15
