@@ -312,10 +312,15 @@ JAVA_WHITESPACE = " \t\n\x0b\f\r"
 # The driver regime's bound on seq_counter, an upper bound on the URLs in
 # pending ∪ fetched: at or below it (and below probe_broadcast_threshold)
 # a round runs on a driver-resident Arrow copy of the frontier
-# (CrawlEngine._driver_round). Measured at crawl_loop's sizes the copy
-# costs 116 B per pending row and 53 B per seen url, so this many URLs,
-# every one pending and seen at worst, hold about 170 MB: inside a
-# 256 MiB budget, with room for longer urls.
+# (CrawlEngine._driver_round). Measured with scripts/frontier_scale.py
+# at the bound (generate_web's 3,000-page corpus seeded with filler urls
+# up to 999,747 pending rows, batch 128, local[4] on 4 cores): the copy
+# holds 172 MB, inside a 256 MiB budget, and a steady driver round takes
+# 0.52 s against 5.7 s for a Spark-regime round on the same frontier
+# (0.17 s against 3.1 s at 100k urls). The driver round's pop sort, seen
+# probe and copy update grow with the frontier, not the batch. At the
+# default probe_broadcast_threshold (also 1M) this bound binds only when
+# a caller raises that threshold.
 DRIVER_FRONTIER_MAX_URLS = 1_000_000
 
 
@@ -347,18 +352,25 @@ def new_pending_rows(
 # part of the key so a reprioritized row (same url/seq/attempts, new
 # priority) is not killed by its own delete; seq is never reused, so a dead
 # URL re-discovered later (attempts restart at 0) cannot collide either.
+# The keys compare null-safe: a seed may carry a null priority, and its
+# popped row's delete must kill it (the driver regime drops it by position).
 PENDING_DELETE_KEY = ["url", "seq", "attempts", "priority"]
 
 
 def merge_on_read_pending(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Merge-on-read view of the pending frontier: base ∪ delta-adds, minus
-    equality deletes on PENDING_DELETE_KEY. The delete set is bounded by
-    compact_every × batch rows → broadcast anti-join, no shuffle of the
-    base. CrawlEngine._read_pending reads it at the pinned versions."""
+    null-safe equality deletes on PENDING_DELETE_KEY. The delete set is
+    bounded by compact_every × batch rows → broadcast anti-join, no
+    shuffle of the base. CrawlEngine._read_pending reads it at the pinned
+    versions."""
     adds = delta.where(F.col("op") == "add").drop("op")
-    dels = delta.where(F.col("op") == "del").select(*PENDING_DELETE_KEY)
+    dels = delta.where(F.col("op") == "del").select(
+        *(F.col(k).alias(f"__del_{k}") for k in PENDING_DELETE_KEY)
+    )
     return base.unionByName(adds).join(
-        F.broadcast(dels), PENDING_DELETE_KEY, "left_anti"
+        F.broadcast(dels),
+        [F.col(k).eqNullSafe(F.col(f"__del_{k}")) for k in PENDING_DELETE_KEY],
+        "left_anti",
     )
 
 

@@ -237,7 +237,8 @@ def main() -> None:
             "broadcast anti-join deletes",
             "Per-round commits are O(batch) delta appends; the read-side "
             "equality-delete resolution is a BroadcastHashJoin LeftAnti on "
-            "(url, seq, attempts, priority) — the base never shuffles, and "
+            "(url, seq, attempts, priority), null-safe (each key becomes a "
+            "coalesce + isnull pair) — the base never shuffles, and "
             "reprioritized row versions survive their own delete. The "
             "manifest's bucket→path map gives partition-pruned scans for "
             "host-scoped maintenance.",

@@ -10,6 +10,8 @@ Arrow frontier; with the bound at 0 every round runs the Spark pipeline.
 - A streamed micro-batch (``ingest_links``) between two driver rounds
   leaves the copy stale; the next round rebuilds it and the crawl still
   matches the Spark regime's.
+- A null-priority seed is popped once in either regime and across a
+  resume (the merged view's deletes are null-safe).
 - Hypothesis differentials of the driver pop against ``budgeted_pop``
   and of the driver link admission against ``_admit_links`` on dirty
   input.
@@ -180,6 +182,39 @@ def test_ingest_between_driver_rounds_rebuilds_the_copy(spark, web, tmp_path, mo
     ref.seed(web.seeds)
     ref.round()
     ref.ingest_links(_stream_batch(spark, web, ref), epoch=0)
+    ref.run(max_rounds=200)
+    assert _final_state(ref) == state
+
+
+def test_null_priority_seed_pops_once_in_every_regime(spark, web, tmp_path, monkeypatch):
+    """A seed with a null priority: its popped row's delete kills it in
+    the merged view just as the driver copy drops it, so a driver crawl,
+    one resumed from a driver round's checkpoint and a Spark-regime crawl
+    end alike, each fetching the url once."""
+    seeds = [(web.seeds[0][0], None), *web.seeds[1:]]
+
+    def engine(name):
+        eng = _engine(spark, web, str(tmp_path / name))
+        eng.seed(seeds)
+        return eng
+
+    cut = engine("cut")
+    cut.round()
+    view = sorted(r["url"] for r in cut._read_pending().select("url").collect())
+    assert sorted(cut._frontier.pending["url"].to_pylist()) == view
+    resumed = CrawlEngine.resume(
+        spark, web.corpus_df(spark), web.robots_df(spark), str(tmp_path / "cut"),
+        max_attempts=3,
+    )
+    resumed.run(max_rounds=200)
+    full = engine("full")
+    full.run(max_rounds=200)
+    state = _final_state(full)
+    fetched = [u for u, *_ in state[0]]
+    assert seeds[0][0] in fetched and len(fetched) == len(set(fetched))
+    assert _final_state(resumed) == state
+    _spark_only(monkeypatch)
+    ref = engine("spark")
     ref.run(max_rounds=200)
     assert _final_state(ref) == state
 
