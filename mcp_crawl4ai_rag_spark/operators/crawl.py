@@ -14,9 +14,11 @@ round picks one of two regimes, which produce the same rows and commits:
   Arrow/Python (the twins of the Column trees below); the fetch is the
   round's one Spark job (the corpus filtered to the popped urls, or the
   injected fetcher over a local relation, then ``toArrow``); every commit
-  is a pyarrow write through ``SnapshotTable.commit``. A steady round
-  runs 1 Spark job. A compaction round adds the Spark jobs of the
-  pending compaction and ``compact_tail``. Any other writer (seeding,
+  is a pyarrow write through ``SnapshotTable.commit``. Every round runs
+  1 Spark job, a compaction round included: the pending compaction
+  writes the round's new copy, which has already folded the delta, as
+  the partitioned base through ``commit_partitioned``'s pyarrow form,
+  and ``compact_tail`` is a pyarrow rewrite. Any other writer (seeding,
   ``reprioritize``, ``purge_host``, ``ingest_links``, a Spark round) or a
   resumed engine leaves the copy's version stamp stale, and the next
   driver round rebuilds it with one ``toArrow`` per table.
@@ -318,9 +320,12 @@ JAVA_WHITESPACE = " \t\n\x0b\f\r"
 # holds 172 MB, inside a 256 MiB budget, and a steady driver round takes
 # 0.52 s against 5.7 s for a Spark-regime round on the same frontier
 # (0.17 s against 3.1 s at 100k urls). The driver round's pop sort, seen
-# probe and copy update grow with the frontier, not the batch. At the
-# default probe_broadcast_threshold (also 1M) this bound binds only when
-# a caller raises that threshold.
+# probe and copy update grow with the frontier, not the batch. A
+# compaction round (round 8) is 1 job, like a steady one: 1.37 s at the
+# bound, most of it the pyarrow write of the partitioned base (0.25 s at
+# 100k), and the Python process peaks at 593 MB (VmHWM over 9 rounds;
+# 235 MB at 100k). At the default probe_broadcast_threshold (also 1M)
+# this bound binds only when a caller raises that threshold.
 DRIVER_FRONTIER_MAX_URLS = 1_000_000
 
 
@@ -670,10 +675,13 @@ class CrawlEngine:
         info = tbl.commit_rows(rows, schema, **kw)
         self.versions[tbl.name] = info.version
 
-    def _commit_pending_base(self, df: DataFrame) -> None:
+    def _commit_pending_base(self, rows: DataFrame | pa.Table) -> None:
         """Full rewrite of the pending BASE, partitioned by host bucket
-        (seed + compaction only — never per round)."""
-        info = self.pending_tbl.commit_partitioned(df, "bucket", changed=None)
+        (seed + compaction only — never per round): a DataFrame, or the
+        driver copy's pending rows, which pyarrow writes."""
+        info = self.pending_tbl.commit_partitioned(
+            rows, "bucket", changed=None, schema=self._schemas["pending"]
+        )
         self.versions[self.pending_tbl.name] = info.version
 
     def _read_pending(self) -> DataFrame:
@@ -683,12 +691,18 @@ class CrawlEngine:
             self._read(self.pending_tbl), self._read(self.pending_delta_tbl)
         )
 
-    def _compact_pending(self) -> None:
+    def _compact_pending(self, copy: DriverFrontier | None = None) -> None:
         """Fold the delta into a fresh partitioned base (Iceberg rewrite/
         compaction). Amortized: runs every ``compact_every`` rounds, so the
-        per-round cost stays O(pending / compact_every) + O(batch)."""
-        current = self._read_pending()
-        self._commit_pending_base(current.select(*FRONTIER_COLS_PENDING))
+        per-round cost stays O(pending / compact_every) + O(batch).
+
+        The merged rows are a driver round's next ``copy``, which has
+        already folded the delta, written by pyarrow with no Spark job;
+        without a copy (the Spark regime) they are the merge-on-read view,
+        read and rewritten by Spark."""
+        self._commit_pending_base(
+            self._read_pending().select(*FRONTIER_COLS_PENDING) if copy is None else copy.pending
+        )
         self._commit_rows(self.pending_delta_tbl, [], PENDING_DELTA_DDL)
 
     def _save_checkpoint(self) -> None:
@@ -1034,7 +1048,7 @@ class CrawlEngine:
                 self.round_id -= 1
                 return {"round": self.round_id + 1, "popped": 0}
             m, host_popped, copy = out
-            self._finish_commits(m, host_popped, futures, compacts)
+            self._finish_commits(m, host_popped, futures, compacts, copy)
         except BaseException:
             # a failed round leaves none of its jobs running on the shared
             # pool: drop what has not started, wait out the rest
@@ -1084,8 +1098,8 @@ class CrawlEngine:
     # (below DRIVER_FRONTIER_MAX_URLS the round's rows are computed on the
     # driver from an Arrow copy of the frontier that the engine, the
     # frontier's only writer, carries from round to round; the fetch is
-    # the round's one Spark job. Compaction rounds add the Spark jobs of
-    # the pending compaction and compact_tail.)
+    # the round's one Spark job, on compaction rounds too: the pending
+    # base is written from the copy and the tail fold is pyarrow.)
 
     def _driver_regime(self) -> bool:
         """Whether this round runs on the driver: seq_counter, an upper
@@ -1658,15 +1672,21 @@ class CrawlEngine:
                 self.seen_filter = None
 
     def _finish_commits(
-        self, m: dict, host_popped: Counter, futures: list, compacts: bool
+        self,
+        m: dict,
+        host_popped: Counter,
+        futures: list,
+        compacts: bool,
+        copy: DriverFrontier | None,
     ) -> None:
-        """Compaction of pending (on compaction rounds), the metrics
-        commit, and the barrier: every pooled commit must be durable (a
-        raised CommitConflict or write error surfaces here) before the
-        checkpoint pointer advances."""
+        """Compaction of pending (on compaction rounds; from the driver
+        round's next ``copy`` when there is one), the metrics commit, and
+        the barrier: every pooled commit must be durable (a raised
+        CommitConflict or write error surfaces here) before the checkpoint
+        pointer advances."""
         if compacts:
             with self._phase("compact"):
-                self._compact_pending()  # folds the delta just written
+                self._compact_pending(copy)  # folds the delta just written
         metric_rows = [
             (self.round_id, "round", k, int(v)) for k, v in m.items() if k != "round"
         ] + [
@@ -1682,7 +1702,8 @@ class CrawlEngine:
     def _fold_and_checkpoint(self, compacts: bool) -> None:
         """After the barrier: on compaction rounds, bin-pack the
         append-only tables' per-round files (Iceberg rewrite_data_files,
-        SnapshotTable.compact_tail); then the checkpoint, then snapshot
+        SnapshotTable.compact_tail: a pyarrow rewrite on the driver, no
+        Spark job, in either regime); then the checkpoint, then snapshot
         expiry.
 
         Each append-only table gains one small file per round, and
@@ -1698,7 +1719,7 @@ class CrawlEngine:
         if compacts:
             with self._phase("compact_tail"):
                 for tbl in self._append_only:
-                    info = tbl.compact_tail(self.spark, parent_version=self._version(tbl))
+                    info = tbl.compact_tail(parent_version=self._version(tbl))
                     if info is not None:
                         self.versions[tbl.name] = info.version
         with self._phase("ckpt"):

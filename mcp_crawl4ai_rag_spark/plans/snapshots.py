@@ -22,8 +22,11 @@ The manifest is the commit record, so data directories carry no
 options, see ``WRITE_OPTIONS``; the session's other writes are
 unaffected). A ``single_file`` commit coalesces its rows into one
 parquet file, the layout for small per-round appends. A commit of a
-driver-side ``pyarrow.Table`` writes that one file with pyarrow and no
-Spark job; readers cannot tell the two writers' files apart.
+driver-side ``pyarrow.Table`` — flat (``commit``) or partitioned
+(``commit_partitioned``) — writes its files with pyarrow and no Spark
+job; readers cannot tell the two writers' files apart. The tail fold of
+an append-only lineage (``compact_tail``) is a pyarrow rewrite too, so
+only a DataFrame commit runs Spark jobs.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ import time
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,14 +58,27 @@ WRITE_OPTIONS = {
 }
 
 
-def parquet_rows(path: str) -> int:
-    """Rows in the parquet files directly under ``path``, read from their
-    footers on the driver (no Spark job)."""
-    return sum(
-        pq.read_metadata(os.path.join(path, f)).num_rows
+# the directory name Spark gives a null partition value
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def parquet_files(path: str) -> list[str]:
+    """The parquet data files directly under ``path``, sorted."""
+    return sorted(
+        os.path.join(path, f)
         for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     )
+
+
+def parquet_rows(path: str) -> int:
+    """Rows in the parquet files directly under ``path``, read from their
+    footers on the driver (no Spark job)."""
+    return sum(pq.read_metadata(f).num_rows for f in parquet_files(path))
+
+
+def _struct(schema: "StructType | str") -> StructType:
+    return DataType.fromDDL(schema) if isinstance(schema, str) else schema
 
 
 class CommitConflict(RuntimeError):
@@ -259,7 +276,7 @@ class SnapshotTable:
                     "commit: a pyarrow.Table commit takes its Spark schema and "
                     "is not partitioned"
                 )
-            struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+            struct = _struct(schema)
             os.makedirs(path, exist_ok=True)
             pq.write_table(
                 df.select(struct.names).cast(to_arrow_schema(struct)),
@@ -288,10 +305,8 @@ class SnapshotTable:
 
     def compact_tail(
         self,
-        spark: SparkSession,
         min_tail: int = 2,
         max_base: int = 8,
-        target_files: int = 1,
         parent_version: int | None = None,
     ) -> SnapshotInfo | None:
         """Bin-pack trailing fast-append files — Iceberg's
@@ -302,10 +317,10 @@ class SnapshotTable:
         (fetched, documents, link edges, metrics) that is one file per
         round, read back each round by the seen-side union — the file-count
         drift measured in BENCH/BASELINE.md's 200k-page run. This folds
-        ONLY the dirs appended since the last fold (the tail) into
-        ``target_files`` coalesced files: amortized O(tail rows), never a
-        full-table rewrite. The manifest's ``folded`` counter marks how
-        many leading paths are fold outputs; appends carry it forward.
+        ONLY the dirs appended since the last fold (the tail) into one
+        file: amortized O(tail rows), never a full-table rewrite. The
+        manifest's ``folded`` counter marks how many leading paths are fold
+        outputs; appends carry it forward.
 
         Geometric escalation (LSM-style): when the folded prefix itself
         reaches ``max_base`` dirs, the whole lineage is folded once —
@@ -313,12 +328,16 @@ class SnapshotTable:
         life and the live file count stays bounded at
         ``max_base + compact-interval`` dirs regardless of round count.
 
+        The fold runs on the driver with pyarrow and no Spark job: it
+        streams each file's record batches, in lineage order, cast to the
+        manifest's schema, into one ``part-00000.parquet``, so it holds
+        one batch at a time, the full fold included. Files of either
+        writer (Spark or pyarrow) fold alike.
+
         Content-preserving (same row multiset ⇒ resume/time-travel
         semantics hold); returns None (no new version) when the tail is
         shorter than ``min_tail``. ``parent_version`` pins the lineage to
         fold, like ``commit`` — orphan commits from a torn round stay out.
-        ``target_files`` sizes the fold output; at cluster scale derive it
-        from tail bytes / target file size rather than the default 1.
         """
         cur = self.current()
         if cur is None:
@@ -342,11 +361,17 @@ class SnapshotTable:
         if (not full and len(tail) < min_tail) or len(paths) <= 1:
             return None
         read_paths = paths if full else tail
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        df = spark.read.schema(schema).parquet(*read_paths).coalesce(target_files)
+        struct = StructType.fromJson(json.loads(m["schema"]))
+        arrow_schema = to_arrow_schema(struct)
         new_v = cur_v + 1
         path = os.path.join(self.dir, f"d{new_v}")
-        df.write.mode("overwrite").options(**WRITE_OPTIONS).parquet(path)
+        os.makedirs(path, exist_ok=True)
+        with pq.ParquetWriter(os.path.join(path, "part-00000.parquet"), arrow_schema) as out:
+            for read_path in read_paths:
+                for f in parquet_files(read_path):
+                    with pq.ParquetFile(f) as src:
+                        for batch in src.iter_batches(columns=struct.names):
+                            out.write_batch(batch.cast(arrow_schema))
         new_paths = [path] if full else paths[:folded] + [path]
         manifest = {
             "version": new_v,
@@ -384,7 +409,7 @@ class SnapshotTable:
         schema: a pyspark StructType, or a DDL string ("round int, scope
         string, key string, value long"), of atomic column types only.
         """
-        struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+        struct = _struct(schema)
         for f in struct.fields:
             if not isinstance(f.dataType, AtomicType):
                 # nested/complex types go through commit() as a pyarrow.Table
@@ -408,11 +433,12 @@ class SnapshotTable:
 
     def commit_partitioned(
         self,
-        df: DataFrame,
+        df: "DataFrame | pa.Table",
         part_col: str,
         changed: list | None = None,
         expected_version: int | None = None,
         extra: dict | None = None,
+        schema: "StructType | str | None" = None,
     ) -> SnapshotInfo:
         """Partition-level MERGE commit (the Iceberg replace-partitions op).
 
@@ -423,15 +449,35 @@ class SnapshotTable:
         point into the new version directory. A changed partition with no
         surviving rows disappears from the map. Per-commit write cost is
         O(changed rows), never O(table).
+
+        ``df`` is a DataFrame, or a driver-side ``pyarrow.Table`` together
+        with its Spark ``schema``, as in ``commit``; its ``part_col`` must
+        then be an integer column. pyarrow writes each partition's rows as
+        one ``part-00000.parquet`` under ``{part_col}=K/``, without the
+        partition column — the layout of a Spark ``partitionBy`` write —
+        taking one partition's rows at a time from a single sort of the
+        partition column.
         """
         cur, new_v = self._next_version(expected_version)
         path = os.path.join(self.dir, f"d{new_v}")
-        df.write.mode("overwrite").partitionBy(part_col).options(**WRITE_OPTIONS).parquet(path)
-        written = {
-            entry.split("=", 1)[1]: os.path.join(path, entry)
-            for entry in os.listdir(path)
-            if entry.startswith(f"{part_col}=")
-        }
+        if isinstance(df, pa.Table):
+            if schema is None:
+                raise ValueError(
+                    "commit_partitioned: a pyarrow.Table commit takes its Spark schema"
+                )
+            struct = _struct(schema)
+            written = _write_partitions(
+                df.select(struct.names).cast(to_arrow_schema(struct)), part_col, path
+            )
+        else:
+            struct = df.schema
+            writer = df.write.mode("overwrite").partitionBy(part_col)
+            writer.options(**WRITE_OPTIONS).parquet(path)
+            written = {
+                entry.split("=", 1)[1]: os.path.join(path, entry)
+                for entry in os.listdir(path)
+                if entry.startswith(f"{part_col}=")
+            }
         old_parts: dict = {}
         if cur is not None and changed is not None:
             old_m = self._manifest(cur.version)
@@ -448,7 +494,7 @@ class SnapshotTable:
             "paths": sorted(partitions.values()),
             "part_col": part_col,
             "partitions": partitions,
-            "schema": df.schema.json(),
+            "schema": struct.json(),
             "committed_at": time.time(),
             # per-partition lineage: which partitions this commit rewrote
             # (the partitions map itself records each partition's data dir,
@@ -492,6 +538,30 @@ class SnapshotTable:
                         shutil.rmtree(subfull, ignore_errors=True)
                 continue
             shutil.rmtree(full, ignore_errors=True)
+
+
+def _write_partitions(table: pa.Table, part_col: str, path: str) -> dict:
+    """Write ``table`` partitioned by its integer column ``part_col`` under
+    ``path`` (created even when the table is empty), one file per value;
+    returns the partition → directory map. The rows are taken from one
+    stable sort of the partition column, a partition at a time."""
+    if not pa.types.is_integer(table.schema.field(part_col).type):
+        raise ValueError(f"commit_partitioned: {part_col!r} is not an integer column")
+    os.makedirs(path, exist_ok=True)
+    order = pc.sort_indices(table[part_col])
+    runs = pc.value_counts(table[part_col].take(order))
+    rows = table.drop_columns([part_col])
+    written, start = {}, 0
+    for value, n in zip(runs.field("values").to_pylist(), runs.field("counts").to_pylist()):
+        key = NULL_PARTITION if value is None else str(value)
+        part_dir = os.path.join(path, f"{part_col}={key}")
+        os.makedirs(part_dir)
+        pq.write_table(
+            rows.take(order.slice(start, n)), os.path.join(part_dir, "part-00000.parquet")
+        )
+        written[key] = part_dir
+        start += n
+    return written
 
 
 class CrawlCheckpoint:

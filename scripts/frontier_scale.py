@@ -11,7 +11,10 @@ shape). ``driver`` lifts crawl.DRIVER_FRONTIER_MAX_URLS above N (the
 default probe_broadcast_threshold, 1M, still caps the regime); ``spark``
 sets it to 0. Prints one JSON line per round (wall seconds, Spark jobs,
 phases, the driver copy's MB and the processes' RSS) and a summary whose
-``steady_median_s`` is the median of rounds 2-7.
+``steady_median_s`` is the median of rounds 2-7 and whose
+``compact_median_s`` / ``compact_jobs`` are the median wall seconds and
+the Spark jobs of the compaction rounds (every 8th; run 9 rounds or more
+to see one).
 """
 
 from __future__ import annotations
@@ -79,7 +82,7 @@ def main() -> None:
     seeded = eng.seed_df(real.unionByName(filler))
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
-    walls = []
+    walls, compacts = [], []
     for _ in range(rounds):
         bus.waitUntilEmpty(10_000)
         j0 = max(sc.statusTracker().getJobIdsForGroup(None) or [-1])
@@ -88,9 +91,12 @@ def main() -> None:
         walls.append(time.perf_counter() - t)
         bus.waitUntilEmpty(10_000)
         fr = eng._frontier
+        jobs = max(sc.statusTracker().getJobIdsForGroup(None)) - j0
+        if m["round"] % eng.compact_every == 0:
+            compacts.append((walls[-1], jobs))
         print(json.dumps({
             "round": m["round"], "popped": m["popped"], "wall_s": round(walls[-1], 3),
-            "jobs": max(sc.statusTracker().getJobIdsForGroup(None)) - j0,
+            "jobs": jobs,
             "phases": {k: round(v, 3) for k, v in m.get("phases", {}).items()},
             "copy_mb": None if fr is None else round(fr.nbytes / 1e6, 1),
             "py_rss_mb": status_mb(os.getpid(), "VmRSS"),
@@ -99,6 +105,10 @@ def main() -> None:
     print(json.dumps({
         "n": n, "regime": regime, "seeded": seeded, "seq_counter": eng.seq_counter,
         "steady_median_s": round(statistics.median(walls[1:7]), 3),
+        "compact_median_s": (
+            round(statistics.median(w for w, _ in compacts), 3) if compacts else None
+        ),
+        "compact_jobs": [j for _, j in compacts],
         "py_hwm_mb": status_mb(os.getpid(), "VmHWM"),
         "jvm_hwm_mb": status_mb(jvm_pid, "VmHWM"),
     }), flush=True)

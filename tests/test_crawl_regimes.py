@@ -12,6 +12,9 @@ Arrow frontier; with the bound at 0 every round runs the Spark pipeline.
   matches the Spark regime's.
 - A null-priority seed is popped once in either regime and across a
   resume (the merged view's deletes are null-safe).
+- A driver compaction round runs only the fetch's Spark job; the base
+  it writes from the copy reads back as the copy and as the merged view
+  it replaces, and its checkpoint resumes in either regime.
 - Hypothesis differentials of the driver pop against ``budgeted_pop``
   and of the driver link admission against ``_admit_links`` on dirty
   input.
@@ -20,6 +23,7 @@ Arrow frontier; with the bound at 0 every round runs the Spark pipeline.
 from __future__ import annotations
 
 import inspect
+from collections import Counter
 
 import pyarrow as pa
 import pytest
@@ -30,6 +34,7 @@ from mcp_crawl4ai_rag_spark.operators import crawl as crawl_mod
 from mcp_crawl4ai_rag_spark.operators.crawl import (
     FRONTIER_COLS_PENDING,
     CrawlEngine,
+    _nullable,
 )
 from mcp_crawl4ai_rag_spark.operators.politeness import (
     budgeted_pop,
@@ -106,11 +111,11 @@ def test_default_crawl_runs_driver_rounds(spark, tmp_path, monkeypatch, web):
     assert eng._frontier.nbytes > 0
 
 
-def _engine(spark, web, workdir: str) -> CrawlEngine:
+def _engine(spark, web, workdir: str, **kw) -> CrawlEngine:
     hosts_df = spark.createDataFrame([(h, 1e9, 1e9) for h, _, _ in web.hosts], HOSTS_DDL)
     return CrawlEngine(
         spark, web.corpus_df(spark), web.robots_df(spark), hosts_df, workdir,
-        batch_size=BATCH, max_attempts=3,
+        batch_size=BATCH, max_attempts=3, **kw,
     )
 
 
@@ -217,6 +222,104 @@ def test_null_priority_seed_pops_once_in_every_regime(spark, web, tmp_path, monk
     ref = engine("spark")
     ref.run(max_rounds=200)
     assert _final_state(ref) == state
+
+
+def _round_jobs(spark, eng) -> tuple[dict, int]:
+    """One round of ``eng`` and the Spark jobs it ran."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(10_000)
+    j0 = max(sc.statusTracker().getJobIdsForGroup(None))
+    m = eng.round()
+    bus.waitUntilEmpty(10_000)
+    return m, max(sc.statusTracker().getJobIdsForGroup(None)) - j0
+
+
+def _pending_multiset(df) -> Counter:
+    return Counter(tuple(r) for r in df.select(*FRONTIER_COLS_PENDING).collect())
+
+
+def test_driver_compaction_round_runs_one_job(spark, web, tmp_path, monkeypatch):
+    """With compact_every=2, rounds 2 and 4 compact on the driver: each
+    runs only the fetch's job, folds the append-only tails and rewrites
+    the base, and keeps the copy current."""
+    calls = _count_driver_rounds(monkeypatch)
+    eng = _engine(spark, web, str(tmp_path / "crawl"), compact_every=2)
+    eng.seed(web.seeds)
+    eng.round()  # round 1 rebuilds the copy
+    for round_id in (2, 3, 4):
+        base_v = eng._version(eng.pending_tbl)
+        m, jobs = _round_jobs(spark, eng)
+        assert m["popped"] > 0 and jobs == 1, (round_id, jobs)
+        compacted = round_id % 2 == 0
+        assert ("compact" in m["phases"]) == compacted
+        assert (eng._version(eng.pending_tbl) != base_v) == compacted
+        assert eng._frontier.stamp == eng._stamp()
+    assert calls == [1, 2, 3, 4]
+    m = eng.fetched_tbl._manifest(eng._version(eng.fetched_tbl))
+    assert m["extra"]["compacted"] == "tail" and m["folded"] == 3
+
+
+def test_arrow_base_equals_copy_and_merged_view(spark, web, tmp_path, monkeypatch):
+    """The base a driver compaction writes from the copy (a null-priority
+    seed among its rows) reads back through _read_pending() as the same
+    row multiset and schema as the copy and as the merged view it
+    replaced, which the Spark regime's compaction would have written."""
+    seen: dict = {}
+    real = CrawlEngine._compact_pending
+
+    def spying(self, copy=None):
+        assert copy is not None
+        seen["view"] = self._read_pending()
+        seen["view_rows"] = _pending_multiset(seen["view"])
+        seen["copy"] = copy.pending
+        real(self, copy)
+
+    monkeypatch.setattr(CrawlEngine, "_compact_pending", spying)
+    eng = _engine(spark, web, str(tmp_path / "crawl"), compact_every=2)
+    # every corpus url, one at a null priority: it pops last, so it is
+    # still pending at round 2
+    urls = sorted(web.corpus)
+    eng.seed([(urls[0], None)] + [(u, 0) for u in urls[1:]])
+    eng.round()
+    eng.round()
+    base = eng._read_pending()
+    rows = _pending_multiset(base)
+    assert any(r[FRONTIER_COLS_PENDING.index("priority")] is None for r in rows)
+    assert rows == seen["view_rows"]
+    assert rows == Counter(
+        tuple(r[c] for c in FRONTIER_COLS_PENDING) for r in seen["copy"].to_pylist()
+    )
+    cols = list(FRONTIER_COLS_PENDING)
+    assert base.select(*cols).schema == _nullable(seen["view"].select(*cols).schema)
+    assert eng.pending_delta_tbl.num_rows() == 0
+
+
+@pytest.mark.parametrize("first", ["driver", "spark"])
+def test_compaction_checkpoint_resumes_in_the_other_regime(
+    spark, web, tmp_path, monkeypatch, uninterrupted, first
+):
+    """A checkpoint taken right after a compaction round (round 2, with
+    compact_every=2) resumes in the other regime, which compacts again at
+    round 4, and the crawl ends equal to the uninterrupted one."""
+    bound = crawl_mod.DRIVER_FRONTIER_MAX_URLS
+    calls = _count_driver_rounds(monkeypatch)
+    workdir = str(tmp_path / "crawl")
+    monkeypatch.setattr(crawl_mod, "DRIVER_FRONTIER_MAX_URLS", bound if first == "driver" else 0)
+    eng = _engine(spark, web, workdir, compact_every=2)
+    eng.seed(web.seeds)
+    eng.round()
+    assert "compact" in eng.round()["phases"]
+    monkeypatch.setattr(crawl_mod, "DRIVER_FRONTIER_MAX_URLS", 0 if first == "driver" else bound)
+    resumed = CrawlEngine.resume(
+        spark, web.corpus_df(spark), web.robots_df(spark), workdir,
+        max_attempts=3, compact_every=2,
+    )
+    assert resumed.round_id == 2
+    resumed.run(max_rounds=200)
+    assert resumed.round_id >= 4
+    assert calls == [1, 2] if first == "driver" else calls[:2] == [3, 4]
+    assert _final_state(resumed) == uninterrupted
 
 
 # -- Hypothesis differentials -------------------------------------------------

@@ -189,7 +189,7 @@ def test_compact_tail_folds_tail_preserving_content(spark, tmp_path):
     for lo in range(5, 25, 5):
         t.commit(spark.range(lo, lo + 5), mode="append")
     assert len(t.current().paths) == 5
-    info = t.compact_tail(spark)
+    info = t.compact_tail()
     assert info is not None and len(info.paths) == 2  # base + one fold dir
     assert sorted(r["id"] for r in t.read(spark).collect()) == list(range(25))
     # manifest marks the folded prefix; appends carry it forward
@@ -202,9 +202,9 @@ def test_compact_tail_folds_tail_preserving_content(spark, tmp_path):
 def test_compact_tail_noop_below_min_tail(spark, tmp_path):
     t = SnapshotTable(str(tmp_path), "t")
     t.commit(spark.range(3))
-    assert t.compact_tail(spark) is None  # no tail at all
+    assert t.compact_tail() is None  # no tail at all
     t.commit(spark.range(3, 4), mode="append")
-    assert t.compact_tail(spark, min_tail=2) is None  # tail of 1 < min_tail
+    assert t.compact_tail(min_tail=2) is None  # tail of 1 < min_tail
     assert t.read(spark).count() == 4
 
 
@@ -216,7 +216,7 @@ def test_compact_tail_geometric_full_fold(spark, tmp_path):
         for _ in range(2):
             t.commit(spark.range(n, n + 2), mode="append")
             n += 2
-        info = t.compact_tail(spark, min_tail=2, max_base=3)
+        info = t.compact_tail(min_tail=2, max_base=3)
         assert info is not None
     m = t._manifest(t.current().version)
     # third fold saw folded == max_base → full fold down to a single dir
@@ -229,7 +229,7 @@ def test_compact_tail_time_travel_and_commit_rows_lineage(spark, tmp_path):
     t.commit_rows([(1, "a")], "k int, v string")
     t.commit_rows([(2, "b")], "k int, v string", mode="append")
     t.commit_rows([(3, "c")], "k int, v string", mode="append")
-    info = t.compact_tail(spark, min_tail=2)
+    info = t.compact_tail(min_tail=2)
     assert info is not None
     got = sorted((r["k"], r["v"]) for r in t.read(spark).collect())
     assert got == [(1, "a"), (2, "b"), (3, "c")]
@@ -305,7 +305,7 @@ def test_compact_tail_and_expiry_over_mixed_writers(spark, tmp_path):
     t.commit(df, mode="append", single_file=True)
     t.commit(_arrow_docs(df.schema), mode="append", schema=df.schema)
     before = set(t.current().paths)
-    info = t.compact_tail(spark, min_tail=2)
+    info = t.compact_tail(min_tail=2)
     assert info is not None and len(info.paths) == 2
     got = _doc_tuples(t.read(spark).collect())
     assert got == sorted(_doc_tuples(df.collect()) * 4)
@@ -316,3 +316,92 @@ def test_compact_tail_and_expiry_over_mixed_writers(spark, tmp_path):
     assert dirs == live
     assert not (before - set(info.paths)) & dirs  # folded dirs of both kinds gone
     assert len(_doc_tuples(t.read(spark).collect())) == 15
+
+
+PART_DDL = "url string, priority int, seq long, bucket int"
+PART_ROWS = [
+    ("https://a/1", 2, 0, 1), ("https://a/é", None, 1, 1), ("https://b/1", 0, 2, 0),
+    ("https://c/1", 1, 3, 3), (None, 1, 4, 3), ("https://d/1", 0, 5, None),
+]
+
+
+def _part_tuples(rows) -> list:
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize("rows", [PART_ROWS, []], ids=["rows", "empty"])
+def test_arrow_partitioned_commit_matches_spark_form(spark, tmp_path, rows):
+    """commit_partitioned of a pyarrow.Table and of a DataFrame holding
+    the same rows (a null partition value included, or none at all):
+    equal reads, equal partition-map keys, one file per partition, and
+    the version directory exists even when it holds no partition."""
+    import os
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    df = spark.createDataFrame(rows, PART_DDL)
+    by_spark = SnapshotTable(str(tmp_path), "spark_p")
+    by_spark.commit_partitioned(df, "bucket")
+    by_arrow = SnapshotTable(str(tmp_path), "arrow_p")
+    struct = DataType.fromDDL(PART_DDL)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    info = by_arrow.commit_partitioned(table, "bucket", schema=PART_DDL)
+    assert os.path.isdir(os.path.join(by_arrow.dir, f"d{info.version}"))
+    ms, ma = (t._manifest(t.current().version) for t in (by_spark, by_arrow))
+    assert ma["partitions"].keys() == ms["partitions"].keys()
+    assert ma["schema"] == ms["schema"]
+    for part_dir in ma["partitions"].values():
+        assert os.listdir(part_dir) == ["part-00000.parquet"]
+    a, b = by_arrow.read(spark), by_spark.read(spark)
+    assert a.schema == b.schema
+    assert _part_tuples(a.collect()) == _part_tuples(b.collect()) == _part_tuples(rows)
+    # a partition-level replace over the Arrow-written base carries the
+    # other partitions over
+    by_arrow.commit_partitioned(
+        table.slice(0, 0), "bucket", changed=[1], schema=struct
+    )
+    assert _part_tuples(by_arrow.read(spark).collect()) == _part_tuples(
+        r for r in rows if r[3] != 1
+    )
+
+
+def test_compact_tail_folds_a_mixed_lineage_like_a_spark_read(spark, tmp_path):
+    """The pyarrow tail fold over a lineage of Spark-written (multi-file
+    and single-file) and pyarrow-written appends with nested spans and
+    empty files, then the geometric full fold: after each, the table reads
+    the same rows and schema as a Spark read of the folded paths did."""
+    import os
+
+    df = spark.createDataFrame(DOC_ROWS, DOCS_DDL)
+    t = SnapshotTable(str(tmp_path), "docs")
+    t.commit(df.repartition(2))
+    t.commit(_arrow_docs(df.schema), mode="append", schema=DOCS_DDL)
+    t.commit(_arrow_docs(df.schema, rows=[]), mode="append", schema=DOCS_DDL)
+    t.commit(spark.createDataFrame([], DOCS_DDL), mode="append", single_file=True)
+    t.commit(df, mode="append", single_file=True)
+
+    def spark_read():
+        paths = t.current().paths
+        got = spark.read.schema(DOCS_DDL).parquet(*paths)
+        return got.schema, _doc_tuples(got.collect())
+
+    schema, want = spark_read()
+    assert len(want) == 9
+    info = t.compact_tail(min_tail=2, max_base=3)
+    assert info.extra == {"compacted": "tail", "folded_dirs": 4}
+    assert len(info.paths) == 2
+    assert (t.read(spark).schema, _doc_tuples(t.read(spark).collect())) == (schema, want)
+    # two more folds: the second one sees folded == max_base and folds all
+    for _ in range(2):
+        t.commit(_arrow_docs(df.schema), mode="append", schema=df.schema)
+        t.commit(df, mode="append")
+        schema, want = spark_read()
+        info = t.compact_tail(min_tail=2, max_base=3)
+    assert info.extra == {"compacted": "full", "folded_dirs": 5}
+    assert len(info.paths) == 1 and len(want) == 21
+    assert (t.read(spark).schema, _doc_tuples(t.read(spark).collect())) == (schema, want)
+    assert os.listdir(info.paths[0]) == ["part-00000.parquet"]
