@@ -321,10 +321,11 @@ JAVA_WHITESPACE = " \t\n\x0b\f\r"
 # 0.52 s against 5.7 s for a Spark-regime round on the same frontier
 # (0.17 s against 3.1 s at 100k urls). The driver round's pop sort, seen
 # probe and copy update grow with the frontier, not the batch. A
-# compaction round (round 8) is 1 job, like a steady one: 1.37 s at the
-# bound, most of it the pyarrow write of the partitioned base (0.25 s at
-# 100k), and the Python process peaks at 593 MB (VmHWM over 9 rounds;
-# 235 MB at 100k). At the default probe_broadcast_threshold (also 1M)
+# compaction round (round 8) is 1 job, like a steady one: 0.61-0.73 s at
+# the bound, 0.17 s of it the pyarrow write of the partitioned base
+# (0.26 s at 100k), and the Python process peaks at 708 MB (VmHWM over 9
+# rounds; 263 MB at 100k), of which about 115 MB is that write's queued
+# copy of the base. At the default probe_broadcast_threshold (also 1M)
 # this bound binds only when a caller raises that threshold.
 DRIVER_FRONTIER_MAX_URLS = 1_000_000
 

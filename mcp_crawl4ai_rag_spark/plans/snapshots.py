@@ -38,7 +38,7 @@ import time
 from dataclasses import dataclass
 
 import pyarrow as pa
-import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,10 +58,6 @@ WRITE_OPTIONS = {
 }
 
 
-# the directory name Spark gives a null partition value
-NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
-
 def parquet_files(path: str) -> list[str]:
     """The parquet data files directly under ``path``, sorted."""
     return sorted(
@@ -75,6 +71,16 @@ def parquet_rows(path: str) -> int:
     """Rows in the parquet files directly under ``path``, read from their
     footers on the driver (no Spark job)."""
     return sum(pq.read_metadata(f).num_rows for f in parquet_files(path))
+
+
+def _fresh_dir(path: str) -> None:
+    """Create ``path`` empty for a pyarrow write of the next version.
+
+    No published manifest names the version being written, so anything
+    already there is left by a torn earlier attempt at it; clear it the
+    way a Spark ``mode("overwrite")`` write does."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
 
 
 def _struct(schema: "StructType | str") -> StructType:
@@ -231,7 +237,6 @@ class SnapshotTable:
         self,
         df: "DataFrame | pa.Table",
         expected_version: int | None = None,
-        partition_by: list[str] | None = None,
         extra: dict | None = None,
         mode: str = "overwrite",
         parent_version: int | None = None,
@@ -259,7 +264,6 @@ class SnapshotTable:
           checkpointed — drop out of the lineage instead of being silently
           resurrected by the next append. Version numbers stay monotonic
           (always current+1).
-        - ``partition_by`` materializes partition pruning for readers.
         - ``single_file``: coalesce to one parquet file — for O(batch)
           appends. The coalesce has no shuffle, so everything up to the
           last exchange above ``df`` runs in that one task: use it over
@@ -271,13 +275,10 @@ class SnapshotTable:
         cur, new_v = self._next_version(expected_version)
         path = os.path.join(self.dir, f"d{new_v}")
         if isinstance(df, pa.Table):
-            if partition_by or schema is None:
-                raise ValueError(
-                    "commit: a pyarrow.Table commit takes its Spark schema and "
-                    "is not partitioned"
-                )
+            if schema is None:
+                raise ValueError("commit: a pyarrow.Table commit takes its Spark schema")
             struct = _struct(schema)
-            os.makedirs(path, exist_ok=True)
+            _fresh_dir(path)
             pq.write_table(
                 df.select(struct.names).cast(to_arrow_schema(struct)),
                 os.path.join(path, "part-00000.parquet"),
@@ -286,10 +287,8 @@ class SnapshotTable:
         else:
             struct = df.schema
             writer = (df.coalesce(1) if single_file else df).write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
             writer.options(**WRITE_OPTIONS).parquet(path)
-            rows = None if partition_by else parquet_rows(path)
+            rows = parquet_rows(path)
         paths, folded = self._lineage(cur, mode, parent_version, path)
         manifest = {
             "version": new_v,
@@ -365,7 +364,7 @@ class SnapshotTable:
         arrow_schema = to_arrow_schema(struct)
         new_v = cur_v + 1
         path = os.path.join(self.dir, f"d{new_v}")
-        os.makedirs(path, exist_ok=True)
+        _fresh_dir(path)
         with pq.ParquetWriter(os.path.join(path, "part-00000.parquet"), arrow_schema) as out:
             for read_path in read_paths:
                 for f in parquet_files(read_path):
@@ -452,11 +451,10 @@ class SnapshotTable:
 
         ``df`` is a DataFrame, or a driver-side ``pyarrow.Table`` together
         with its Spark ``schema``, as in ``commit``; its ``part_col`` must
-        then be an integer column. pyarrow writes each partition's rows as
-        one ``part-00000.parquet`` under ``{part_col}=K/``, without the
-        partition column — the layout of a Spark ``partitionBy`` write —
-        taking one partition's rows at a time from a single sort of the
-        partition column.
+        then be an integer column. pyarrow's hive-partitioned dataset
+        writer lays its rows out as a Spark ``partitionBy`` write does:
+        ``{part_col}=K/`` directories (``__HIVE_DEFAULT_PARTITION__`` for
+        null) of files without the partition column.
         """
         cur, new_v = self._next_version(expected_version)
         path = os.path.join(self.dir, f"d{new_v}")
@@ -466,18 +464,30 @@ class SnapshotTable:
                     "commit_partitioned: a pyarrow.Table commit takes its Spark schema"
                 )
             struct = _struct(schema)
-            written = _write_partitions(
-                df.select(struct.names).cast(to_arrow_schema(struct)), part_col, path
+            table = df.select(struct.names).cast(to_arrow_schema(struct))
+            if not pa.types.is_integer(table.schema.field(part_col).type):
+                raise ValueError(
+                    f"commit_partitioned: {part_col!r} is not an integer column"
+                )
+            # the directory exists even when the table is empty
+            _fresh_dir(path)
+            ds.write_dataset(
+                table,
+                path,
+                format="parquet",
+                partitioning=[part_col],
+                partitioning_flavor="hive",
+                basename_template="part-{i}.parquet",
             )
         else:
             struct = df.schema
             writer = df.write.mode("overwrite").partitionBy(part_col)
             writer.options(**WRITE_OPTIONS).parquet(path)
-            written = {
-                entry.split("=", 1)[1]: os.path.join(path, entry)
-                for entry in os.listdir(path)
-                if entry.startswith(f"{part_col}=")
-            }
+        written = {
+            entry.split("=", 1)[1]: os.path.join(path, entry)
+            for entry in os.listdir(path)
+            if entry.startswith(f"{part_col}=")
+        }
         old_parts: dict = {}
         if cur is not None and changed is not None:
             old_m = self._manifest(cur.version)
@@ -538,30 +548,6 @@ class SnapshotTable:
                         shutil.rmtree(subfull, ignore_errors=True)
                 continue
             shutil.rmtree(full, ignore_errors=True)
-
-
-def _write_partitions(table: pa.Table, part_col: str, path: str) -> dict:
-    """Write ``table`` partitioned by its integer column ``part_col`` under
-    ``path`` (created even when the table is empty), one file per value;
-    returns the partition → directory map. The rows are taken from one
-    stable sort of the partition column, a partition at a time."""
-    if not pa.types.is_integer(table.schema.field(part_col).type):
-        raise ValueError(f"commit_partitioned: {part_col!r} is not an integer column")
-    os.makedirs(path, exist_ok=True)
-    order = pc.sort_indices(table[part_col])
-    runs = pc.value_counts(table[part_col].take(order))
-    rows = table.drop_columns([part_col])
-    written, start = {}, 0
-    for value, n in zip(runs.field("values").to_pylist(), runs.field("counts").to_pylist()):
-        key = NULL_PARTITION if value is None else str(value)
-        part_dir = os.path.join(path, f"{part_col}={key}")
-        os.makedirs(part_dir)
-        pq.write_table(
-            rows.take(order.slice(start, n)), os.path.join(part_dir, "part-00000.parquet")
-        )
-        written[key] = part_dir
-        start += n
-    return written
 
 
 class CrawlCheckpoint:

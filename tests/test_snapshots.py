@@ -355,7 +355,7 @@ def test_arrow_partitioned_commit_matches_spark_form(spark, tmp_path, rows):
     assert ma["partitions"].keys() == ms["partitions"].keys()
     assert ma["schema"] == ms["schema"]
     for part_dir in ma["partitions"].values():
-        assert os.listdir(part_dir) == ["part-00000.parquet"]
+        assert os.listdir(part_dir) == ["part-0.parquet"]
     a, b = by_arrow.read(spark), by_spark.read(spark)
     assert a.schema == b.schema
     assert _part_tuples(a.collect()) == _part_tuples(b.collect()) == _part_tuples(rows)
@@ -367,6 +367,55 @@ def test_arrow_partitioned_commit_matches_spark_form(spark, tmp_path, rows):
     assert _part_tuples(by_arrow.read(spark).collect()) == _part_tuples(
         r for r in rows if r[3] != 1
     )
+
+
+def test_pyarrow_commits_clear_a_torn_attempt_at_their_version(spark, tmp_path):
+    """A crash mid-write leaves files in the next version's directory
+    while the manifest still names the previous version; the retried
+    pyarrow commit (flat, partitioned, or tail fold) overwrites that
+    directory the way a Spark overwrite does, so neither a stale partition
+    nor a stale file is read."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(PART_DDL)
+    arrow_schema = to_arrow_schema(struct)
+    rows = PART_ROWS[:4]
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=arrow_schema
+    )
+    stale = pa.table({"url": ["https://stale/"], "priority": pa.array([9], pa.int32()),
+                      "seq": [99]})
+
+    def torn(t, sub):
+        d = os.path.join(t.dir, "d1", *sub)
+        os.makedirs(d)
+        pq.write_table(stale, os.path.join(d, "part-00007.parquet"))
+
+    parts = SnapshotTable(str(tmp_path), "parts")
+    torn(parts, ["bucket=1"])
+    torn(parts, ["bucket=5"])  # a partition the retried commit does not have
+    parts.commit_partitioned(table, "bucket", schema=PART_DDL)
+    assert sorted(parts._manifest(1)["partitions"]) == ["0", "1", "3"]
+    assert _part_tuples(parts.read(spark).collect()) == _part_tuples(rows)
+
+    flat = SnapshotTable(str(tmp_path), "flat")
+    torn(flat, [])
+    flat.commit(table, schema=PART_DDL)
+    assert _part_tuples(flat.read(spark).collect()) == _part_tuples(rows)
+
+    flat.commit(table, mode="append", schema=PART_DDL)
+    flat.commit(table, mode="append", schema=PART_DDL)
+    d4 = os.path.join(flat.dir, "d4")
+    os.makedirs(d4)
+    pq.write_table(table, os.path.join(d4, "part-00001.parquet"))
+    flat.compact_tail(min_tail=2)
+    assert flat.current().version == 4
+    assert _part_tuples(flat.read(spark).collect()) == _part_tuples(rows * 3)
 
 
 def test_compact_tail_folds_a_mixed_lineage_like_a_spark_read(spark, tmp_path):
